@@ -25,11 +25,26 @@ package graft
   * Round 22: bounded contention re-run — after the main pass, any query
   * whose med/min spread exceeds 1.5 gets up to SPARK_GRAFT_EXTRA_REPS
   * (default 2) more samples; its reported median is recomputed over all
-  * its samples and its pre-re-run median is preserved in the
-  * `remeasured` map. Quiet runs re-run nothing; contended artifacts
-  * self-correct instead of needing external adjudication.
+  * its successful samples and its pre-re-run median is preserved in the
+  * `remeasured` map. A failed extra rep is dropped ([[mergeSamples]]);
+  * its error goes to the `extra_rep_errors` map, not `errors`. Quiet
+  * runs re-run nothing; contended artifacts self-correct instead of
+  * needing external adjudication.
   */
 object Bench {
+
+  /** Lower median of sorted samples; any failed (−1) sample poisons the
+    * query. */
+  def median(ts: Seq[Double]): Double =
+    if (ts.head < 0) -1.0 else ts((ts.size - 1) / 2)
+
+  /** A query's sorted main-pass samples merged with its contention
+    * re-run: only the extra reps that succeeded (`Some`) join, so a
+    * failed extra rep can never turn a query that passed every main rep
+    * into an error. */
+  def mergeSamples(main: Seq[Double], extra: Seq[Option[Double]]): Seq[Double] =
+    (main ++ extra.flatten).sorted
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
@@ -72,14 +87,16 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.filterNot(skip)
       .filter(n => only.isEmpty || only.exists(n.contains)).sorted
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def once(name: String, dir: String): Double = {
+    // one timed run: its seconds, or its error
+    def attempt(name: String, dir: String): Either[String, Double] = {
       val t0 = System.nanoTime()
-      try { SparkEntry.queries(name)(spark, dir).count(); (System.nanoTime() - t0) / 1e9 }
+      try { SparkEntry.queries(name)(spark, dir).count(); Right((System.nanoTime() - t0) / 1e9) }
       catch { case e: Throwable =>
-        errors(name) = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(300)}"
-        -1.0
+        Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(300)}")
       }
     }
+    def once(name: String, dir: String): Double =
+      attempt(name, dir).fold(e => { errors(name) = e; -1.0 }, identity)
     // Release operator-persisted blocks between runs (the near-dup /
     // similarity operators persist signature tables and the caller owns
     // the lifetime): bounds cache accumulation across (1+reps)×N query
@@ -91,9 +108,6 @@ object Bench {
         val t = once(n, sfDir); spark.catalog.clearCache(); t
       }.sorted
     }
-    def median(ts: Seq[Double]): Double =
-      if (ts.head < 0) -1.0                     // any failed rep poisons the query
-      else ts((ts.size - 1) / 2)                // lower median of the sorted reps
     // Contention-robust bounded re-run (the r20/r21 verdicts' open ask:
     // two driver artifacts in a row were contended — med_over_min_p95
     // 1.54/1.56, untouched queries inflated up to 35× — and adjudicating
@@ -111,23 +125,27 @@ object Bench {
     val spreadBound = 1.5
     val extraReps = sys.env.getOrElse("SPARK_GRAFT_EXTRA_REPS", "2").toInt.max(0)
     val remeasured = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    // a failed extra rep is recorded here, never merged into the samples
+    val extraErrors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val samples = mainPass.map { case (n, ts) =>
       if (extraReps > 0 && ts.head > 0.05 && median(ts) / ts.head > spreadBound) {
         remeasured(n) = median(ts)
         val more = (1 to extraReps).map { _ =>
-          val t = once(n, sfDir); spark.catalog.clearCache(); t
+          val t = attempt(n, sfDir); spark.catalog.clearCache(); t
         }
-        n -> (ts ++ more).sorted
+        more.collect { case Left(e) => e }.lastOption.foreach(extraErrors(n) = _)
+        n -> mergeSamples(ts, more.map(_.toOption))
       } else n -> ts
     }
     val med = samples.map { case (n, ts) => n -> median(ts) }
     val mins = samples.map { case (n, ts) => n -> (if (ts.head < 0) -1.0 else ts.head) }
     def jm(m: Seq[(String, Double)]): String =
       m.map { case (k, v) => "\"" + esc(k) + "\":" + v }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }
-      .mkString("{", ",", "}")
+    def jsonStrings(m: Seq[(String, String)]): String =
+      m.map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }.mkString("{", ",", "}")
+    val es = jsonStrings(errors.toSeq)
     val total = med.filter(_._2 >= 0).map(_._2).sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":${jm(med)},"queries_min":${jm(mins)},"remeasured":${jm(remeasured.toSeq)},"reps":$reps,"errors":$es,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":${jm(med)},"queries_min":${jm(mins)},"remeasured":${jm(remeasured.toSeq)},"reps":$reps,"errors":$es,"extra_rep_errors":${jsonStrings(extraErrors.toSeq)},"sf":"$sfDir"}""")
     // A second, SHORT summary line that survives the driver's 2000-char
     // artifact tail (round 6's big line lost its leading total to the
     // truncation). Splits the real streaming executions — whose ~1-5 s

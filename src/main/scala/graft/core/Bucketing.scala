@@ -81,27 +81,58 @@ object Bucketing {
       .saveAsTable(table)
   }
 
-  /** Run two INDEPENDENT store side effects as concurrent driver-thread
-    * jobs (guide §2.6 — actions are only sequential because the driver
-    * calls them sequentially; the second write's tasks back-fill the
-    * executor slots the first one's tail leaves idle). Used for the
-    * store + count-delta double appends, whose crash contract is
-    * order-free by construction: the reconcile path
-    * ([[Reconcile.appendExact]]) converges store and counts from ANY
-    * committed subset via a touched-key recount, so which append
-    * commits first never mattered. Both thunks are awaited; the first
-    * failure propagates after both have settled (a half-committed pair
-    * is exactly the state the intent marker already brackets). */
-  def inParallel(a: => Unit, b: => Unit): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fa = Future(a)
-    val fb = Future(b)
-    // settle both before propagating either failure
-    val ra = scala.util.Try(Await.result(fa, Duration.Inf))
-    val rb = scala.util.Try(Await.result(fb, Duration.Inf))
-    ra.get; rb.get
+  /** Run two INDEPENDENT driver-side computations as concurrent jobs
+    * (guide §2.6 — actions are only sequential because the driver
+    * calls them sequentially; the second side's tasks back-fill the
+    * executor slots the first one's tail leaves idle) and return both
+    * results. Used for the store + count-delta double appends, whose
+    * crash contract is order-free by construction: the reconcile path
+    * ([[StoreLifecycle.ingestVerdicts]]) converges store and counts from
+    * ANY committed subset via a touched-key recount, so which append
+    * commits first never mattered.
+    *
+    * Each call runs on its own pool of two daemon threads (a nested
+    * call cannot starve a shared pool), and both sides' Spark jobs carry
+    * a per-call job tag: the first side to fail cancels the tag, so its
+    * sibling's running jobs stop instead of burning the cluster for a
+    * result nobody will read. Both sides settle before anything is
+    * rethrown; the first failure propagates with the other attached as
+    * a suppressed exception (a half-committed pair is exactly the state
+    * the intent marker already brackets). */
+  def inParallel[A, B](a: => A, b: => B): (A, B) = {
+    import java.util.concurrent.{Callable, ExecutionException, Executors}
+    val sc = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+    val tag = s"graft-inParallel-${java.util.UUID.randomUUID()}"
+    val first = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val pool = Executors.newFixedThreadPool(2, (r: Runnable) => {
+      val t = new Thread(r, "graft-inParallel")
+      t.setDaemon(true)
+      t
+    })
+    def side[T](body: => T) = pool.submit(new Callable[T] {
+      def call(): T = {
+        sc.foreach(_.addJobTag(tag))
+        try body
+        catch { case e: Throwable =>
+          if (first.compareAndSet(null, e)) sc.foreach(_.cancelJobsWithTag(tag))
+          throw e
+        } finally sc.foreach(_.removeJobTag(tag))
+      }
+    })
+    def settle[T](f: java.util.concurrent.Future[T]) =
+      try Right(f.get()) catch { case e: ExecutionException => Left(e.getCause) }
+    try {
+      val (fa, fb) = (side(a), side(b))
+      (settle(fa), settle(fb)) match {
+        case (Right(ra), Right(rb)) => (ra, rb)
+        case (ra, rb) =>
+          val failures = Seq(ra, rb).collect { case Left(e) => e }
+          val primary = Option(first.get).getOrElse(failures.head)
+          failures.filterNot(_ eq primary).foreach(primary.addSuppressed)
+          throw primary
+      }
+    } finally pool.shutdown()
   }
 
   /** Staging-table name used by the swap-based rewrites. */
@@ -188,17 +219,12 @@ object Bucketing {
     dataFileCount(spark, table) > buckets * maxFilesPerBucket
   }
 
-  /** Shared in-loop maintenance cadence for the streaming ingest loops
-    * (signature / vector / fingerprint stores — one policy, one place):
-    * `compactEvery = N` compacts unconditionally every N batches (the
-    * coverage cadence the checked streaming queries use at N = 1);
-    * otherwise `maxFilesPerBucket = M > 0` compacts only when the
-    * store's measured file decay passes the bound (the PRODUCTION
-    * cadence — [[needsCompaction]]). Runs AFTER the batch's ledger
-    * record, outside the exactly-once contract: compaction is
-    * best-effort, idempotent under replay, and a crash inside its
-    * staging swap self-heals at the next maintenance/ingest entry
-    * ([[recoverSwap]]). */
+  /** The in-loop maintenance cadence of every streamed store
+    * ([[StoreLifecycle.stream]]): `compactEvery = N` compacts every N
+    * batches (the coverage cadence the checked streaming queries use at
+    * N = 1); otherwise `maxFilesPerBucket = M > 0` compacts only when
+    * the store's measured file decay passes the bound (the PRODUCTION
+    * cadence — [[needsCompaction]]). */
   def maintainInLoop(batchId: Long, compactEvery: Int, maxFilesPerBucket: Int)
                     (compact: => Unit)(compactIfNeeded: Int => Unit): Unit =
     if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) compact

@@ -3,80 +3,50 @@ package graft.core
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Applied-batch ledger for the incremental-store ingest loops
-  * ([[graft.ext.IncrementalDedup.ingestBatch]] /
-  * [[graft.ext.VectorStore.ingestBatch]]).
+/** Applied-batch ledger of a persisted store — the marker half of
+  * [[StoreLifecycle]]'s exactly-once ingest.
   *
   * `foreachBatch` is AT-LEAST-ONCE: a crash between a micro-batch's
-  * side effects and the checkpoint commit replays the whole batch. The
-  * verdict sink is already idempotent (dynamic partition overwrite on
+  * side effects and the checkpoint commit replays the whole batch. A
+  * verdict sink is idempotent (dynamic partition overwrite on
   * `batch_id`), but a store append is not — a replayed append would
-  * duplicate the survivors' store rows AND double-merge their count
-  * deltas, permanently inflating the hot-key counts the cap filters on.
-  * The ledger closes that: each fully-committed batch id is recorded,
-  * and a replayed batch whose id is already recorded is skipped
-  * outright (its verdicts and append both committed before the record
-  * was written — recording is the LAST step of a batch).
+  * duplicate rows AND double-merge count deltas. The ledger is
+  * TWO-PHASE, so there is no residual window: an INTENT marker is
+  * written before a batch's store append begins, and the COMMIT marker
+  * LAST, after every side effect has committed. A replayed batch with a
+  * commit marker is skipped outright; one with only an intent marker
+  * crashed inside its append and takes its family's resume path
+  * ([[StoreLifecycle.Replay]]); one with neither never started its
+  * append and re-runs.
   *
-  * Implementation: empty MARKER FILES (one intent + one commit per
-  * applied batch) under `<warehouse>/<table>_applied/` — the same
-  * commit-log shape as Spark's own file-sink `_spark_metadata`. A
-  * lookup is a filesystem `exists`, a record is an atomic empty-file
-  * create: ZERO Spark jobs, no catalog entries, and the markers live
-  * on the same storage (and with the same durability) as the store's
-  * data files. A lookup never lists the directory.
-  *
-  * Unpruned, the directory grows two empty files per batch forever —
-  * years of one-batch-per-file ingest would mean millions of entries
-  * in one directory (FS metadata pressure, object-store LIST cost).
-  * [[prune]] (called from the stores' `compactStore` — the natural
-  * amortized-maintenance moment) collapses all markers at or below the
-  * highest CONTIGUOUS applied batch id into one WATERMARK file holding
-  * that id; [[applied]] answers `id ≤ watermark` from the watermark
-  * and later ids from their markers, so replay-skip keeps working on
-  * both sides of the prune. Ledger size after a prune is O(gap): the
-  * watermark plus markers for ids above the first hole.
-  *
-  * The ledger is TWO-PHASE, so there is no residual window: an INTENT
-  * marker is written after a batch's verdicts commit but before its
-  * store append begins, and the COMMIT marker after every side effect
-  * has committed. A replayed batch with a commit marker is skipped
-  * outright. A replayed batch with only an intent marker crashed
-  * somewhere inside its append — the caller takes the RECONCILE path
-  * ([[Reconcile.appendExact]]): it reuses the already-committed
-  * verdicts (re-running the dedup would let the shard see its own
-  * appended rows — two surviving near-dup siblings would each match
-  * the other's store row and flip from kept to dropped), appends only
-  * the store rows that are not already present, and lands corrective
-  * count deltas computed against a fresh in-bucket recount of the
-  * touched keys. Every step of the reconcile path is itself
-  * idempotent, so a crash DURING recovery just reconciles again.
-  * No intent marker means the append never started: the normal path
-  * re-runs (the verdict rewrite is deterministic — the store is
-  * unchanged — and dynamic partition overwrite replaces the partition).
+  * Implementation: empty MARKER FILES (`batch-<id>.intent`,
+  * `batch-<id>`) under `<warehouse>/<table>_applied/` — the shape of
+  * Spark's own file-sink `_spark_metadata`. A lookup is a filesystem
+  * `exists`, a record an atomic empty-file create: ZERO Spark jobs, no
+  * catalog entries, the same storage and durability as the store's data
+  * files, and no lookup ever lists the directory. Unpruned, the
+  * directory would grow two files per batch forever; [[prune]] (run at
+  * compaction, the amortized-maintenance moment) collapses all markers
+  * at or below the highest CONTIGUOUS applied id into one WATERMARK
+  * file, and [[applied]] answers ids at or below it from the watermark,
+  * so replay-skip works on both sides of a prune. Ledger size after a
+  * prune is O(gap): the watermark plus markers above the first hole.
   *
   * Batch ids must be unique per logical shard and APPLIED IN
   * INCREASING ORDER; `foreachBatch` guarantees both for streaming
-  * callers (ids are monotonic per checkpoint), and loop-driving
-  * callers own the contract. The order half is what lets [[prune]]
-  * seed its watermark from the lowest committed id when none exists —
-  * out-of-order application could mask a lower id as applied. NOTE
-  * this is a TIGHTENING over the original unique-only contract: a
-  * caller-driven loop that deliberately applies ids out of order
-  * (none of the engine's loops do) must not interleave [[prune]] —
-  * once a prune runs, [[applied]] answers true for EVERY id at or
-  * below the watermark, so a lower id applied later would silently
-  * skip.
+  * callers, and loop-driving callers own the contract. The order half
+  * lets [[prune]] seed its watermark from the lowest marker id when
+  * none exists: a caller-driven loop that applies ids out of order
+  * (none of the engine's loops do) must not interleave [[prune]], or a
+  * lower id applied later would silently skip.
   *
   * Upgrade note (pre-two-phase ledgers): a loop that crashed mid-append
   * under the OLD single-marker protocol left no intent marker, so its
-  * replay under this code takes the normal path and re-runs the dedup
-  * against a store already holding its own appended rows — exactly the
-  * sibling kept→dropped flip the two-phase protocol prevents, exposed
-  * ONCE, at upgrade time. Before resuming a loop that predates the
-  * intent markers, run the store's `compactStore`: its full-row
-  * distinct collapses whatever duplicate rows the old crash left, and
-  * the recount restores exact counts, after which the replay is safe.
+  * replay re-runs the dedup against a store already holding its own
+  * appended rows — the sibling kept→dropped flip the two-phase protocol
+  * prevents, exposed ONCE, at upgrade time. Before resuming such a
+  * loop, run the store's `compactStore`: its distinct collapses the old
+  * crash's duplicate rows and the recount restores exact counts.
   */
 object IngestLedger {
 

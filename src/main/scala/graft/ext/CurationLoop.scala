@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.core.Bucketing
+import graft.core.StoreLifecycle
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -287,34 +287,17 @@ object CurationLoop {
   }
 
   /** The CONTINUOUS form: shards stream through [[ingestShard]], with
-    * in-loop maintenance on each MUTATED store (the shared
-    * [[graft.core.Bucketing.maintainInLoop]] cadence policy applied
-    * per store — the read-only benchmark/model stores need none). */
+    * in-loop maintenance of each MUTATED store on the shared cadence
+    * ([[graft.core.StoreLifecycle.stream]] — the read-only
+    * benchmark/model stores need none). */
   def streamIngest(shards: DataFrame, idCol: String, textCol: String,
                    embCol: String, stores: Stores, params: Params,
                    outRoot: String, checkpoint: String,
                    compactEvery: Int = 0, maxFilesPerBucket: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    shards.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestShard(batch, batchId, idCol, textCol, embCol, stores,
-          params, outRoot)
-        val s = batch.sparkSession
-        Bucketing.maintainInLoop(batchId, compactEvery, maxFilesPerBucket)({
-          ExactDedup.compactStore(s, stores.fpTable, stores.buckets)
-          IncrementalDedup.compactStore(s, stores.sigTable, stores.buckets)
-          VectorStore.compactStore(s, stores.vecTable, stores.buckets)
-        })({ m =>
-          ExactDedup.compactStoreIfNeeded(s, stores.fpTable,
-            stores.buckets, m)
-          IncrementalDedup.compactStoreIfNeeded(s, stores.sigTable,
-            stores.buckets, m)
-          VectorStore.compactStoreIfNeeded(s, stores.vecTable,
-            stores.buckets, m)
-          ()
-        })
-      }
-      .start()
+    StoreLifecycle.stream(shards, checkpoint, compactEvery, maxFilesPerBucket,
+        ExactDedup.store(stores.fpTable, stores.buckets),
+        IncrementalDedup.store(stores.sigTable, stores.buckets),
+        VectorStore.store(stores.vecTable, stores.buckets))(
+      ingestShard(_, _, idCol, textCol, embCol, stores, params, outRoot))
 }

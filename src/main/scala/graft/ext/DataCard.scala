@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.core.{Bucketing, IngestLedger}
+import graft.core.StoreLifecycle
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -190,7 +190,19 @@ object DataCard {
     * everywhere in the store family, the meta is the build's COMMIT
     * MARKER: dropped first, written last, so a crashed (re)build
     * serves nothing rather than a half-written card. */
-  def cardMeta(table: String): String = s"${table}_meta"
+  def cardMeta(table: String): String = StoreLifecycle.metaTable(table)
+
+  /** The card store family: bucketed by the source column, counter
+    * deltas folded by (source, lang)
+    * ([[graft.core.StoreLifecycle.CountDelta]] — count folds, unlike
+    * the dedup stores' min-id folds, are not idempotent). */
+  private def store(table: String, buckets: Int, langCol: String,
+                    sourceCol: String) =
+    StoreLifecycle.Store(table, Seq(sourceCol), buckets,
+      fold = _.groupBy(sourceCol, langCol)
+        .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"),
+          sum("score_sum_q").as("score_sum_q")),
+      replay = StoreLifecycle.CountDelta)
 
   /** Store grain: one `(source, lang, n_docs, n_tokens, score_sum_q,
     * batch_id)` delta row per shard stratum — generations stay
@@ -210,18 +222,14 @@ object DataCard {
     * can touch them). A fresh store restarts its batch-id space. */
   def writeCardStore(docs: DataFrame, idCol: String, textCol: String,
                      langCol: String, sourceCol: String,
-                     table: String, buckets: Int): Unit = {
-    val spark = docs.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS `${cardMeta(table)}`")
-    Bucketing.writeBucketed(
-      cardRows(docs, idCol, textCol, langCol, sourceCol, batchId = -1L),
-      table, Seq(sourceCol), buckets)
-    IngestLedger.reset(spark, table)
-    spark.range(1)
-      .select(lit(QualityScale).as("q_scale"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(cardMeta(table))
-  }
+                     table: String, buckets: Int): Unit =
+    StoreLifecycle.writeCommitted(
+        cardRows(docs, idCol, textCol, langCol, sourceCol, batchId = -1L),
+        store(table, buckets, langCol, sourceCol)) {
+      StoreLifecycle.saveTable(
+        docs.sparkSession.range(1).select(lit(QualityScale).as("q_scale")),
+        cardMeta(table))
+    }
 
   /** Grow the card with a shard's counter deltas at O(shard-strata)
     * cost — never a recount of anything already ingested. Caller-driven
@@ -231,9 +239,9 @@ object DataCard {
                        langCol: String, sourceCol: String,
                        table: String, buckets: Int,
                        batchId: Long = -1L): Unit =
-    Bucketing.appendBucketed(
+    StoreLifecycle.append(
       cardRows(docs, idCol, textCol, langCol, sourceCol, batchId),
-      table, Seq(sourceCol), buckets)
+      store(table, buckets, langCol, sourceCol))
 
   /** The card served FROM the store: delta generations summed by
     * (source, lang) — an in-bucket aggregation (the store is bucketed
@@ -245,13 +253,8 @@ object DataCard {
   def serveCard(spark: SparkSession, table: String,
                 langCol: String = "lang",
                 sourceCol: String = "source"): DataFrame = {
-    require(spark.catalog.tableExists(cardMeta(table)),
-      s"card store '$table' has no meta table — a (re)build crashed " +
-        "before committing; re-run writeCardStore before serving")
-    val scale = spark.table(cardMeta(table)).head().getAs[Long]("q_scale")
-    require(scale == QualityScale,
-      s"card store '$table' was built with quantizer scale $scale, this " +
-        s"engine serves at $QualityScale — rebuild the store")
+    StoreLifecycle.committedMeta(spark, table, "card", "writeCardStore",
+      Some(QualityScale))
     val counts = spark.table(table)
       .groupBy(sourceCol, langCol)
       .agg(sum("n_docs").as("__ln"), sum("n_tokens").as("__lt"),
@@ -281,93 +284,35 @@ object DataCard {
   }
 
   /** Collapse accumulated delta generations to one (source, lang) row
-    * and one file per bucket; folded rows carry the −1 sentinel. Rows
-    * of a DANGLING batch (intent without commit record — a crash
-    * mid-append awaiting replay) pass through UNFOLDED, still tagged:
-    * the crash repair removes a partial append by `batch_id` filter
-    * ([[ingestCardBatch]]), so folding those counters into the
-    * sentinel would double-count the batch after its re-append (the
-    * [[LmScore.compactModelStore]] guard — count folds, unlike the
-    * dedup stores' min-id folds, are not idempotent). */
+    * and one file per bucket; folded rows carry the −1 sentinel, rows of
+    * a dangling-intent batch pass through unfolded, still tagged. */
   def compactCardStore(spark: SparkSession, table: String, buckets: Int,
                        langCol: String = "lang",
-                       sourceCol: String = "source"): Unit = {
-    val dangling = IngestLedger.danglingIntents(spark, table)
-    Bucketing.compact(spark, table, Seq(sourceCol), buckets,
-      prepare = df => {
-        val fold = (if (dangling.isEmpty) df
-          else df.filter(!col("batch_id").isin(dangling: _*)))
-          .groupBy(sourceCol, langCol)
-          .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"),
-            sum("score_sum_q").as("score_sum_q"))
-          .withColumn("batch_id", lit(-1L))
-          .select(sourceCol, langCol, "n_docs", "n_tokens", "score_sum_q",
-            "batch_id")
-        if (dangling.isEmpty) fold
-        else fold.unionByName(df.filter(col("batch_id").isin(dangling: _*))
-          .select(sourceCol, langCol, "n_docs", "n_tokens", "score_sum_q",
-            "batch_id"))
-      })
-    IngestLedger.prune(spark, table)
-  }
+                       sourceCol: String = "source"): Unit =
+    StoreLifecycle.compact(spark, store(table, buckets, langCol, sourceCol))
 
-  /** [[compactCardStore]] behind the files-per-bucket decay trigger. */
-  def compactCardStoreIfNeeded(spark: SparkSession, table: String,
-                               buckets: Int, maxFilesPerBucket: Int,
-                               langCol: String = "lang",
-                               sourceCol: String = "source"): Boolean = {
-    Bucketing.recoverSwap(spark, table)
-    val due = Bucketing.needsCompaction(spark, table, buckets,
-      maxFilesPerBucket)
-    if (due) compactCardStore(spark, table, buckets, langCol, sourceCol)
-    due
-  }
-
-  /** One exactly-once micro-batch ([[LmScore.ingestModelBatch]]'s
-    * pattern): committed batches skip; a batch that crashed mid-append
-    * repairs exactly by dropping its tagged delta rows and
-    * re-appending deterministically. */
+  /** One exactly-once micro-batch
+    * ([[graft.core.StoreLifecycle.ingestDeltas]]): committed batches
+    * skip; a batch that crashed mid-append repairs exactly by dropping
+    * its tagged delta rows and re-appending deterministically. */
   def ingestCardBatch(batch: DataFrame, batchId: Long,
                       idCol: String, textCol: String,
                       langCol: String, sourceCol: String,
-                      table: String, buckets: Int): Unit = {
-    require(batchId >= 0,
-      s"ingestCardBatch: batchId must be >= 0 (got $batchId) — negative " +
-        "ids are the base-build/compacted sentinel and a repair keyed on " +
-        "one would delete the folded rows")
-    val spark = batch.sparkSession
-    Bucketing.recoverSwap(spark, table)
-    if (IngestLedger.applied(spark, table, batchId)) return
-    if (IngestLedger.intended(spark, table, batchId)) {
-      Bucketing.replaceBucketed(
-        spark.table(table).filter(col("batch_id") =!= batchId),
-        table, Seq(sourceCol), buckets)
-    } else {
-      IngestLedger.intent(spark, table, batchId)
-    }
-    appendCardDeltas(batch, idCol, textCol, langCol, sourceCol,
-      table, buckets, batchId)
-    IngestLedger.record(spark, table, batchId)
-  }
+                      table: String, buckets: Int): Unit =
+    StoreLifecycle.ingestDeltas(batch.sparkSession,
+        store(table, buckets, langCol, sourceCol), batchId)(
+      cardRows(batch, idCol, textCol, langCol, sourceCol, batchId))
 
   /** The CONTINUOUS form: every micro-batch's counters land
-    * exactly-once; in-loop maintenance on the shared cadence policy. */
+    * exactly-once; in-loop maintenance per
+    * [[graft.core.StoreLifecycle.stream]]. */
   def streamIngestCard(shards: DataFrame, idCol: String, textCol: String,
                        langCol: String, sourceCol: String,
                        table: String, buckets: Int, checkpoint: String,
                        compactEvery: Int = 0, maxFilesPerBucket: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    shards.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestCardBatch(batch, batchId, idCol, textCol, langCol,
-          sourceCol, table, buckets)
-        Bucketing.maintainInLoop(batchId, compactEvery, maxFilesPerBucket)(
-          compactCardStore(batch.sparkSession, table, buckets, langCol,
-            sourceCol))(
-          m => compactCardStoreIfNeeded(batch.sparkSession, table,
-            buckets, m, langCol, sourceCol))
-      }
-      .start()
+    StoreLifecycle.stream(shards, checkpoint, compactEvery, maxFilesPerBucket,
+        store(table, buckets, langCol, sourceCol))(
+      ingestCardBatch(_, _, idCol, textCol, langCol, sourceCol, table,
+        buckets))
 }

@@ -1,5 +1,7 @@
 package graft.ext
 
+import graft.core.StoreLifecycle
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -119,9 +121,9 @@ object Decontaminate {
     * A missing stripe (no benchmark grams hashed there) is a definite
     * miss; a null fp never matches.
     *
-    * PROBE-FORM DECISION (measured round 17, `graft.BloomBench`,
-    * 20M-probe stream, 1M-item / ~1.2 MiB filters, local[32]): the
-    * original multi-stripe form — a foldable-literal CASE chain
+    * PROBE-FORM DECISION (measured round 17 with a one-off probe
+    * harness, 20M-probe stream, 1M-item / ~1.2 MiB filters, local[32]):
+    * the original multi-stripe form — a foldable-literal CASE chain
     * selecting the fp's stripe map-side (`BloomFilterMightContain`
     * requires a constant filter per branch) — embeds EVERY stripe's
     * filter bytes in the plan, and every task pays to deserialize all
@@ -305,7 +307,15 @@ object Decontaminate {
     * lifetime), and each stripe's serialized filter. Benchmarks up to
     * one stripe's capacity get exactly the old 1-row shape plus the
     * layout columns. */
-  def benchmarkMeta(table: String): String = s"${table}_meta"
+  def benchmarkMeta(table: String): String = StoreLifecycle.metaTable(table)
+
+  /** The benchmark store family: the gram table bucketed by `gram_fp`,
+    * folded to distinct (the append's anti-join keeps it one row per fp;
+    * distinct also collapses what a crashed append's partial files may
+    * have duplicated). Compaction changes file layout, never the gram
+    * set, so the trained blooms in the meta stay valid. */
+  private def store(table: String, buckets: Int) =
+    StoreLifecycle.Store(table, Seq("gram_fp"), buckets, fold = _.distinct())
 
   /** Persist a held-out benchmark's decontamination state — the
     * PRODUCTION shape of [[contaminatedBloom]]: the benchmark (eval
@@ -319,15 +329,14 @@ object Decontaminate {
     * re-aggregating the benchmark per run). Bloom sizing is exact
     * (measured gram count), striped past one filter's expression cap
     * ([[stripePlan]]); only past [[MaxBloomStripes]] stripes does it
-    * clamp — loudly, with the `clamped` flag persisted in the meta. */
-  /** Crash-consistency: the meta table is the COMMIT MARKER of a store
-    * (re)build — it is DROPPED first and written LAST, so a crash
-    * anywhere inside the rebuild leaves a store with NO meta table and
-    * [[contaminatedAgainstStore]] fails loudly instead of silently
-    * checking shards against a gram table / bloom pair from two
-    * different benchmark versions (a stale bloom over fresh grams would
-    * false-negative exactly the newly-added benchmark grams). The
-    * repair is to re-run this method. */
+    * clamp — loudly, with the `clamped` flag persisted in the meta.
+    *
+    * The meta is the build's COMMIT MARKER
+    * ([[graft.core.StoreLifecycle.writeCommitted]]): a crashed rebuild
+    * leaves no meta and [[contaminatedAgainstStore]] refuses loudly
+    * instead of pairing a gram table and bloom from two benchmark
+    * versions (a stale bloom over fresh grams would false-negative
+    * exactly the new grams); the repair is to re-run this method. */
   def writeBenchmarkStore(evalDocs: DataFrame, textCol: String, n: Int,
                           table: String, buckets: Int,
                           fpp: Double = 0.01,
@@ -335,21 +344,12 @@ object Decontaminate {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
     require(maxItemsPerBloom > 0,
       s"maxItemsPerBloom must be > 0, got $maxItemsPerBloom")
-    val spark = evalDocs.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS `${benchmarkMeta(table)}`")
-    graft.core.Bucketing.writeBucketed(grams(evalDocs, textCol, n),
-      table, Seq("gram_fp"), buckets)
-    // a fresh store restarts its batch-id space and carries no pending
-    // append — drop the stale ledger + crash marker BEFORE the meta
-    // commits, so the commit marker also covers the ledger state. The
-    // old order (meta first, reset last) had a crash window that left a
-    // fully-serving store with the previous ledger's applied batch ids:
-    // a stream resumed with a fresh checkpoint (ids restarting at 0)
-    // silently skipped its first batches via the applied() check
-    // (review finding, round 17). Now that crash leaves a meta-less
-    // store that refuses loudly until the rebuild is re-run.
-    graft.core.IngestLedger.reset(spark, table)
-    trainAndCommitMeta(spark, table, n, fpp, maxItemsPerBloom)
+    // the ledger (and its append crash marker) resets BEFORE the meta
+    // commits: stale applied ids would skip a fresh stream's batches
+    StoreLifecycle.writeCommitted(grams(evalDocs, textCol, n),
+        store(table, buckets)) {
+      trainAndCommitMeta(evalDocs.sparkSession, table, n, fpp, maxItemsPerBloom)
+    }
   }
 
   /** Retrain the stripe blooms over the CURRENT gram table and commit
@@ -488,82 +488,43 @@ object Decontaminate {
     spark.sql(s"DROP TABLE IF EXISTS `${benchmarkMeta(table)}`")
     val missing = grams(evalDocs, textCol, n)
       .join(spark.table(table), Seq("gram_fp"), "left_anti")
-    graft.core.Bucketing.appendBucketed(missing, table, Seq("gram_fp"),
-      buckets)
+    StoreLifecycle.append(missing, store(table, buckets))
     trainAndCommitMeta(spark, table, n, fpp, maxItemsPerBloom)
     fs.delete(marker, false)
   }
 
   /** [[appendToBenchmark]] under the applied-batch ledger — the
-    * exactly-once streamed form (the [[graft.ext.ExactDedup]] loop
-    * convention): a replayed committed batch skips outright; a batch
-    * that crashed mid-append re-enters [[appendToBenchmark]], whose
-    * pending-marker + anti-join + meta-last protocol makes the replay
-    * converge. No intent marker is needed — unlike the count-delta
-    * stores, every step here is idempotent on its own. */
+    * exactly-once streamed form ([[graft.core.StoreLifecycle.ingestSet]]):
+    * a replayed committed batch skips outright; a batch that crashed
+    * mid-append re-enters [[appendToBenchmark]], whose pending-marker +
+    * anti-join + meta-last protocol makes the replay converge. */
   def ingestBenchmarkBatch(evalDocs: DataFrame, batchId: Long,
                            textCol: String, table: String, buckets: Int,
-                           maxItemsPerBloom: Long = MaxBloomItems): Unit = {
-    val spark = evalDocs.sparkSession
-    if (graft.core.IngestLedger.applied(spark, table, batchId)) return
-    appendToBenchmark(evalDocs, textCol, table, buckets, maxItemsPerBloom)
-    graft.core.IngestLedger.record(spark, table, batchId)
-  }
+                           maxItemsPerBloom: Long = MaxBloomItems): Unit =
+    StoreLifecycle.ingestSet(evalDocs.sparkSession, store(table, buckets),
+      batchId)(appendToBenchmark(evalDocs, textCol, table, buckets,
+        maxItemsPerBloom))
 
   /** Collapse the gram table's accumulated append generations back to
-    * one file per bucket and prune the append ledger. The fold is a
-    * plain `distinct` (the append's anti-join keeps the table
-    * one-row-per-fp; distinct additionally collapses rows a crashed
-    * append's partially-committed files may have duplicated — the
-    * [[graft.ext.IncrementalDedup]] convention). The meta is untouched:
-    * compaction changes file layout, never the gram set, so the trained
-    * blooms stay valid. */
+    * one file per bucket and prune the append ledger; the meta is
+    * untouched. */
   def compactBenchmarkStore(spark: SparkSession, table: String,
-                            buckets: Int): Unit = {
-    graft.core.Bucketing.compact(spark, table, Seq("gram_fp"), buckets,
-      prepare = _.distinct())
-    graft.core.IngestLedger.prune(spark, table)
-  }
-
-  /** [[compactBenchmarkStore]] behind the files-per-bucket decay
-    * trigger — the production cadence. Returns whether a compaction
-    * ran. */
-  def compactBenchmarkStoreIfNeeded(spark: SparkSession, table: String,
-                                    buckets: Int,
-                                    maxFilesPerBucket: Int): Boolean = {
-    graft.core.Bucketing.recoverSwap(spark, table)
-    val due = graft.core.Bucketing.needsCompaction(spark, table, buckets,
-      maxFilesPerBucket)
-    if (due) compactBenchmarkStore(spark, table, buckets)
-    due
-  }
+                            buckets: Int): Unit =
+    StoreLifecycle.compact(spark, store(table, buckets))
 
   /** The CONTINUOUS form — eval suites arrive as a stream of doc
     * micro-batches (a new benchmark lands, the store grows, every later
-    * training shard is checked against the union), with in-loop
-    * maintenance on the shared cadence policy
-    * ([[graft.core.Bucketing.maintainInLoop]]). Completes the
-    * batch + streamed ingest symmetry the other four stores already
-    * have. `foreachBatch` is at-least-once; [[ingestBenchmarkBatch]]'s
-    * ledger + the append's own idempotence make it exactly-once. */
+    * training shard is checked against the union), exactly-once through
+    * [[ingestBenchmarkBatch]], with in-loop maintenance per
+    * [[graft.core.StoreLifecycle.stream]]. */
   def streamIngestBenchmark(shards: DataFrame, textCol: String,
                             table: String, buckets: Int, checkpoint: String,
                             compactEvery: Int = 0, maxFilesPerBucket: Int = 0,
                             maxItemsPerBloom: Long = MaxBloomItems)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    shards.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBenchmarkBatch(batch, batchId, textCol, table, buckets,
-          maxItemsPerBloom)
-        graft.core.Bucketing.maintainInLoop(batchId, compactEvery,
-          maxFilesPerBucket)(
-          compactBenchmarkStore(batch.sparkSession, table, buckets))(
-          m => { compactBenchmarkStoreIfNeeded(batch.sparkSession, table,
-            buckets, m); () })
-      }
-      .start()
+    StoreLifecycle.stream(shards, checkpoint, compactEvery,
+        maxFilesPerBucket, store(table, buckets))(
+      ingestBenchmarkBatch(_, _, textCol, table, buckets, maxItemsPerBloom))
 
   /** Decontaminate a TRAINING shard against a persisted benchmark store
     * (written by [[writeBenchmarkStore]]) — identical results to

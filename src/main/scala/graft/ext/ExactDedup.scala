@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.core.{Bucketing, IngestLedger}
+import graft.core.StoreLifecycle
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -98,27 +98,28 @@ object ExactDedup {
       .filter(col("fp").isNotNull)
       .groupBy("fp").agg(min(col(idCol)).as("canonical_id"))
 
+  /** The fingerprint store family: bucketed by `fp`, folded to the min
+    * canonical id per fp (the [[dedupExactAgainstStore]] read grain
+    * made durable). */
+  private[ext] def store(table: String, buckets: Int) =
+    StoreLifecycle.Store(table, Seq("fp"), buckets,
+      fold = _.groupBy("fp").agg(min("canonical_id").as("canonical_id")))
+
   /** Compute and persist the fingerprint store for `docs` as the
     * bucketed catalog table `table` (bucketed+sorted by `fp`). A fresh
-    * store restarts its batch-id space, so any stale applied-batch
-    * ledger is dropped ([[graft.core.IngestLedger.reset]]). */
+    * store restarts its batch-id space. */
   def writeFingerprintStore(docs: DataFrame, idCol: String, textCol: String,
-                            table: String, buckets: Int): Unit = {
-    Bucketing.writeBucketed(storeRows(docs, idCol, textCol),
-      table, Seq("fp"), buckets)
-    IngestLedger.reset(docs.sparkSession, table)
-  }
+                            table: String, buckets: Int): Unit =
+    StoreLifecycle.write(storeRows(docs, idCol, textCol), store(table, buckets))
 
   /** Append a shard's fingerprints into an existing store (same
     * layout). The ingest loop appends SURVIVORS only — their
     * fingerprints are absent from the store by definition of having
     * survived, so the one-row-per-fp invariant holds across appends
-    * (intra-shard twins collapse to their min id here). Periodic
-    * [[graft.core.Bucketing.compact]] restores one file per bucket. */
+    * (intra-shard twins collapse to their min id here). */
   def appendFingerprints(docs: DataFrame, idCol: String, textCol: String,
                          table: String, buckets: Int): Unit =
-    Bucketing.appendBucketed(storeRows(docs, idCol, textCol),
-      table, Seq("fp"), buckets)
+    StoreLifecycle.append(storeRows(docs, idCol, textCol), store(table, buckets))
 
   /** Deduplicate a NEW shard against a persisted fingerprint `store`:
     * one row per shard doc — `(id, kept, dup_of)`, `dup_of` the store's
@@ -141,95 +142,42 @@ object ExactDedup {
         .hint("merge"), Seq("fp"), "left")
       .select(col(idCol), col("dup_of").isNull.as("kept"), col("dup_of"))
 
-  /** Periodic store maintenance: one file per bucket
-    * ([[graft.core.Bucketing.compact]]), duplicate fps collapsed to the
-    * min canonical id (the [[dedupExactAgainstStore]] read grain made
-    * durable), and the ledger's markers pruned below the
-    * contiguous-commit watermark. */
-  def compactStore(spark: SparkSession, table: String, buckets: Int): Unit = {
-    Bucketing.compact(spark, table, Seq("fp"), buckets,
-      prepare = _.groupBy("fp").agg(min("canonical_id").as("canonical_id")))
-    IngestLedger.prune(spark, table)
-  }
-
-  /** [[compactStore]] behind the files-per-bucket decay trigger
-    * ([[graft.core.Bucketing.needsCompaction]]) — the production
-    * cadence. Returns whether a compaction ran. */
-  def compactStoreIfNeeded(spark: SparkSession, table: String, buckets: Int,
-                           maxFilesPerBucket: Int): Boolean = {
-    Bucketing.recoverSwap(spark, table)
-    val due = Bucketing.needsCompaction(spark, table, buckets, maxFilesPerBucket)
-    if (due) compactStore(spark, table, buckets)
-    due
-  }
+  /** Periodic store maintenance ([[StoreLifecycle.compact]]): one file
+    * per bucket, duplicate fps collapsed to the min canonical id, ledger
+    * markers pruned. */
+  def compactStore(spark: SparkSession, table: String, buckets: Int): Unit =
+    StoreLifecycle.compact(spark, store(table, buckets))
 
   /** The CONTINUOUS-ingest form ([[IncrementalDedup.streamIngest]]'s
     * exact-fingerprint twin, and in production the loop that runs
-    * AHEAD of it): each micro-batch is a shard — dedup it against the
-    * fingerprint store, write the per-doc verdicts EXACTLY-ONCE
-    * (partitioned by `batch_id` with dynamic partition overwrite),
-    * append the SURVIVORS' fingerprints, so the next micro-batch
-    * dedups against everything ingested so far. Replay is
-    * exactly-once end to end via the two-phase ledger
-    * ([[graft.core.IngestLedger]]): a committed batch id is skipped
-    * outright, and one that crashed mid-append reconciles by
-    * re-appending only the fps the crash left missing (reusing the
-    * committed verdicts — a re-run of the dedup would see the shard's
-    * own appended fps and flip intra-shard twins from kept to
-    * dropped). In-loop compaction: `compactEvery = N` (fixed cadence;
-    * checked configs use 1 for coverage) or `maxFilesPerBucket = M`
-    * (the production decay trigger — [[compactStoreIfNeeded]]). */
+    * AHEAD of it): each micro-batch is a shard through [[ingestBatch]],
+    * so the next one dedups against everything ingested so far;
+    * in-loop maintenance per [[StoreLifecycle.stream]]. */
   def streamIngest(newDocs: DataFrame, idCol: String, textCol: String,
                    table: String, buckets: Int,
                    outPath: String, checkpoint: String,
                    compactEvery: Int = 0, maxFilesPerBucket: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, idCol, textCol, table, buckets, outPath)
-        Bucketing.maintainInLoop(batchId, compactEvery, maxFilesPerBucket)(
-          compactStore(batch.sparkSession, table, buckets))(
-          m => compactStoreIfNeeded(batch.sparkSession, table, buckets, m))
-      }
-      .start()
+    StoreLifecycle.stream(newDocs, checkpoint, compactEvery,
+        maxFilesPerBucket, store(table, buckets))(
+      ingestBatch(_, _, idCol, textCol, table, buckets, outPath))
 
   /** One micro-batch of [[streamIngest]] — also the non-streaming entry
-    * point for a caller-driven loop. Verdicts are eagerly materialized
-    * (`localCheckpoint`) BEFORE the store append, so the lazy plan over
-    * the store table cannot observe the shard's own fingerprints. */
+    * point for a caller-driven loop: dedup the shard against the store,
+    * write its verdict partition, append the SURVIVORS' fingerprints,
+    * exactly-once under the ledger ([[StoreLifecycle.ingestVerdicts]];
+    * a batch that crashed mid-append re-appends only the fps it left
+    * missing, reusing its committed verdicts — a re-run would see the
+    * shard's own appended fps and flip intra-shard twins from kept to
+    * dropped). */
   def ingestBatch(batch: DataFrame, batchId: Long,
                   idCol: String, textCol: String,
                   table: String, buckets: Int, outPath: String): Unit = {
     val spark = batch.sparkSession
-    Bucketing.recoverSwap(spark, table)
-    if (IngestLedger.applied(spark, table, batchId)) return
-    if (IngestLedger.intended(spark, table, batchId)) {
-      // a prior attempt committed this batch's verdicts and crashed
-      // inside its append: reuse them and append only the missing fps
-      // (idempotent — a completed prior append makes this zero rows)
-      val kept = spark.read.parquet(outPath)
-        .filter(col("batch_id") === batchId && col("kept"))
-        .select(col(idCol))
-      val missing = storeRows(batch.join(kept, Seq(idCol)), idCol, textCol)
-        .join(spark.table(table), Seq("fp"), "left_anti")
-      Bucketing.appendBucketed(missing, table, Seq("fp"), buckets)
-    } else {
-      val verdicts = dedupExactAgainstStore(batch, idCol, textCol,
-          spark.table(table))
-        .localCheckpoint(true)
-      verdicts.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(outPath)
-      IngestLedger.intent(spark, table, batchId)
-      val kept = verdicts.filter(col("kept")).select(col(idCol))
-      appendFingerprints(batch.join(kept, Seq(idCol)), idCol, textCol,
-        table, buckets)
-    }
-    IngestLedger.record(spark, table, batchId)
+    StoreLifecycle.ingestVerdicts(spark, store(table, buckets), batchId,
+        idCol, outPath)(
+      dedupExactAgainstStore(batch, idCol, textCol, spark.table(table)))(
+      kept => storeRows(batch.join(kept, Seq(idCol)), idCol, textCol))
   }
 
   /** Release diff: compare a corpus against a previous release's

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.core.{Bucketing, IngestLedger}
+import graft.core.StoreLifecycle
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -41,21 +41,15 @@ import org.apache.spark.sql.functions._
   * operators cap them per run (`maxBandDocs` — see
   * `MinHash.candidatePairs`); the incremental analogue implemented here
   * is a per-`(band, band_key)` doc-count SIDE TABLE
-  * ([[countsTable]], bucketed like the store) maintained on every
-  * append and semi-filtering BOTH join sides of [[dedupAgainstStore]]
-  * against keys at-or-under the cap. The side table is APPEND-ONLY:
-  * each append lands the shard's per-key count DELTAS as new rows
-  * (O(shard) write work — the counts are never recomputed from the
-  * store and the side table is never rewritten on an append; either
-  * would be O(corpus-keys) per shard and quadratic over the ingest
-  * loop, breaking the cost-proportional-to-the-shard contract). Totals
-  * are summed at dedup time by [[keyCountTotals]] — an IN-BUCKET
-  * rollup, since the deltas are bucketed by the groupBy keys — so the
-  * cap costs one narrow aggregate + filter + two bucket-aligned
-  * semi-joins over the compact count relation (two key columns and a
-  * long — no signatures, no text). [[compactStore]] periodically
-  * collapses the accumulated deltas (and the store's per-bucket files)
-  * back to one row per key / one file per bucket. As in the batch
+  * ([[countsTable]]) semi-filtering BOTH join sides of
+  * [[dedupAgainstStore]] against keys at-or-under the cap. The side
+  * table is APPEND-ONLY ([[graft.core.StoreLifecycle.Counts]]): each
+  * append lands the shard's per-key count DELTAS — recomputing or
+  * rewriting the counts per append would be O(corpus-keys) per shard,
+  * quadratic over the ingest loop — and the totals are summed at dedup
+  * time in-bucket by [[keyCountTotals]], so the cap costs one narrow
+  * aggregate + filter + two bucket-aligned semi-joins over the compact
+  * count relation (no signatures, no text). As in the batch
   * family, a capped key means a bounded, observable recall loss on
   * exactly the docs upstream exact dedup ([[ExactDedup]]) already
   * collapses.
@@ -86,14 +80,10 @@ object IncrementalDedup {
       .select(col("band"), col("band_key"), col(idCol), col("__sig"))
   }
 
-  /** Name of the per-key doc-count side table maintained alongside a
-    * signature store `table` — APPEND-ONLY delta rows
-    * `(band, band_key, n_docs)`: one row per key per append, summed to
-    * totals at read time by [[keyCountTotals]] (a key touched by k
-    * appends has k rows until [[compactStore]] collapses them).
-    * Bucketed by the same keys with the same bucket count as the store,
-    * so both the read-time rollup and the hot-key semi-filters in
-    * [[dedupAgainstStore]] run bucket-aligned, Exchange-free. */
+  /** Name of the per-key doc-count side table of a signature store
+    * `table` — delta rows `(band, band_key, n_docs)` summed to totals at
+    * read time by [[keyCountTotals]], bucket-aligned with the store, so
+    * the rollup and the hot-key semi-filters run Exchange-free. */
   def countsTable(table: String): String = s"${table}_keycounts"
 
   /** Total per-key store doc counts from the delta side table: sum the
@@ -104,168 +94,66 @@ object IncrementalDedup {
   def keyCountTotals(deltas: DataFrame): DataFrame =
     deltas.groupBy("band", "band_key").agg(sum("n_docs").as("n_docs"))
 
-  /** Per-key doc counts of a banded-signature relation. One row per
-    * (band, doc) in ⇒ the count per key is the key's doc count. */
-  private def bandKeyCounts(banded: DataFrame): DataFrame =
-    banded.groupBy("band", "band_key").agg(count(lit(1)).as("n_docs"))
+  /** The signature store family: bucketed by `(band, band_key)` with
+    * the per-key doc-count side table ([[countsTable]]); compaction is
+    * a full-row distinct — the banded layout is fully determined by the
+    * doc, so it is id-exact and collapses any drift introduced OUTSIDE
+    * the ledgered loop (a shard appended twice by hand). */
+  private[ext] def store(table: String, buckets: Int) =
+    StoreLifecycle.Store(table, Seq("band", "band_key"), buckets,
+      fold = _.dropDuplicates(),
+      counts = Some(StoreLifecycle.Counts("_keycounts", "n_docs")))
 
   /** Compute and persist the signature store for `docs` as the bucketed
     * catalog table `table` (bucketed+sorted by `(band, band_key)`),
-    * plus its per-key doc-count side table ([[countsTable]]). The
-    * counts are derived by reading the just-written store back — the
-    * table is bucketed by the groupBy keys, so the rollup runs
-    * in-bucket with no Exchange. */
+    * plus its per-key doc-count side table ([[countsTable]]), read back
+    * from the just-written store in-bucket. */
   def writeSignatureStore(docs: DataFrame, idCol: String, textCol: String,
                           shingleN: Int, numHashes: Int, nBands: Int,
-                          table: String, buckets: Int): Unit = {
-    Bucketing.writeBucketed(
+                          table: String, buckets: Int): Unit =
+    StoreLifecycle.write(
       bandedSignatures(docs, idCol, textCol, shingleN, numHashes, nBands),
-      table, Seq("band", "band_key"), buckets)
-    val spark = docs.sparkSession
-    Bucketing.writeBucketed(bandKeyCounts(spark.table(table)),
-      countsTable(table), Seq("band", "band_key"), buckets)
-    IngestLedger.reset(spark, table)
-  }
+      store(table, buckets))
 
   /** Append a shard's signatures into an existing store (same layout —
-    * see [[graft.core.Bucketing.appendBucketed]]). The ingest loop is
-    * write store → per new shard: [[dedupAgainstStore]] → append the
-    * SURVIVORS' signatures → next shard dedups against everything
-    * ingested so far (IncrementalDedupSpec drives three shards through
-    * it). Dropped duplicates are not appended: their store
-    * representative already carries the signature a future match
-    * needs. */
+    * see [[graft.core.Bucketing.appendBucketed]]) and land its per-key
+    * count deltas ([[graft.core.StoreLifecycle.append]]). The ingest
+    * loop is write store → per new shard: [[dedupAgainstStore]] →
+    * append the SURVIVORS' signatures → next shard dedups against
+    * everything ingested so far. Dropped duplicates are not appended:
+    * their store representative already carries the signature a future
+    * match needs. */
   def appendSignatures(docs: DataFrame, idCol: String, textCol: String,
                        shingleN: Int, numHashes: Int, nBands: Int,
                        table: String, buckets: Int): Unit = {
     val banded = bandedSignatures(docs, idCol, textCol, shingleN, numHashes,
         nBands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try appendBanded(banded, table, buckets)
+    try StoreLifecycle.append(banded, store(table, buckets))
     finally banded.unpersist()
   }
 
-  /** Append ALREADY-BANDED signature rows (the [[bandedSignatures]]
-    * layout) and maintain the count side table. Callers must hand in a
-    * materialization-safe frame (persisted, or derived from one): the
-    * rows are consumed twice — store append + count-delta append.
-    *
-    * Count maintenance is APPEND-ONLY: the shard's per-key counts land
-    * as new delta rows ([[countsTable]]'s layout), O(shard) work that
-    * never reads, rewrites, or re-aggregates the existing count
-    * relation — totals are summed in-bucket at dedup time
-    * ([[keyCountTotals]]) and the accumulated deltas collapse at
-    * [[compactStore]] time. (Stores written before the side table
-    * existed get it backfilled here with a one-time in-bucket
-    * rollup.) */
-  private def appendBanded(banded: DataFrame, table: String,
-                           buckets: Int): Unit = {
-    val keys = Seq("band", "band_key")
-    val spark = banded.sparkSession
-    val ct = countsTable(table)
-    if (spark.catalog.tableExists(ct))
-      // the two appends are independent writes off the same persisted
-      // frame, and the crash contract is order-free (Reconcile recounts
-      // touched keys from whatever subset committed) — overlap them so
-      // the second write's tasks back-fill the first one's tail
-      // (guide §2.6; measured ~0.4 s/batch of the ingest loop's fixed
-      // cost at sf0.1)
-      Bucketing.inParallel(
-        Bucketing.appendBucketed(banded, table, keys, buckets),
-        Bucketing.appendBucketed(bandKeyCounts(banded), ct, keys, buckets))
-    else {
-      Bucketing.appendBucketed(banded, table, keys, buckets)
-      Bucketing.writeBucketed(bandKeyCounts(spark.table(table)), ct, keys,
-        buckets)
-    }
-  }
+  /** Periodic store maintenance ([[graft.core.StoreLifecycle.compact]]):
+    * the store back to one file per bucket (restoring the dedup join's
+    * in-bucket Sort elision), full-row distinct, the count side table
+    * rebuilt from a fresh in-bucket recount (the accumulated delta rows
+    * collapse to one per key), ledger markers pruned. */
+  def compactStore(spark: SparkSession, table: String, buckets: Int): Unit =
+    StoreLifecycle.compact(spark, store(table, buckets))
 
-  /** Periodic store maintenance: rewrite the signature store back to
-    * one file per bucket (restoring the dedup join's in-bucket Sort
-    * elision — [[graft.core.Bucketing.compact]]) and rebuild the count
-    * side table from a fresh in-bucket recount of the compacted store,
-    * collapsing the accumulated per-append delta rows to one row per
-    * key. This is the amortized moment where full-relation work is paid
-    * once per MANY appends instead of once per append.
-    *
-    * The `prepare` distinct is defense-in-depth: the two-phase ledger
-    * ([[graft.core.IngestLedger]] + [[graft.core.Reconcile]]) already
-    * keeps the ingest loop exactly-once, but any drift introduced
-    * OUTSIDE it (a caller appending the same shard twice by hand)
-    * collapses here too — the banded layout is fully determined by the
-    * doc, so full-row distinct is id-exact, and the recount restores
-    * exact per-key counts. */
-  def compactStore(spark: SparkSession, table: String, buckets: Int): Unit = {
-    val keys = Seq("band", "band_key")
-    Bucketing.compact(spark, table, keys, buckets,
-      prepare = _.dropDuplicates())
-    // the counts rewrite goes through the same staged swap as the store
-    // (a bare overwrite would drop the table before the rewrite lands —
-    // a crash there would strand the capped dedup path on a missing
-    // side table); the swap's own crash window self-heals via
-    // Bucketing.recoverSwap at the next maintenance/ingest entry
-    Bucketing.replaceBucketed(bandKeyCounts(spark.table(table)),
-      countsTable(table), keys, buckets)
-    // compaction is also the amortized moment to collapse the ledger's
-    // per-batch marker files below the contiguous-commit watermark
-    IngestLedger.prune(spark, table)
-  }
-
-  /** [[compactStore]] behind the FILES-PER-BUCKET trigger
-    * ([[graft.core.Bucketing.needsCompaction]]): compact only once the
-    * store has accumulated more than `maxFilesPerBucket` appended
-    * generations — the production cadence (pays the O(store) rewrite
-    * exactly when the scan-side decay has accrued, independent of shard
-    * sizing). Returns whether a compaction ran. */
+  /** [[compactStore]] behind the files-per-bucket decay trigger
+    * ([[graft.core.StoreLifecycle.compactIfNeeded]]). Returns whether a
+    * compaction ran. */
   def compactStoreIfNeeded(spark: SparkSession, table: String, buckets: Int,
-                           maxFilesPerBucket: Int): Boolean = {
-    // heal BOTH swap windows: a stranded COUNTS swap would otherwise
-    // persist until the store itself came due, failing any capped
-    // reader on a missing side table in the meantime
-    Bucketing.recoverSwap(spark, table)
-    Bucketing.recoverSwap(spark, countsTable(table))
-    val due = Bucketing.needsCompaction(spark, table, buckets, maxFilesPerBucket)
-    if (due) compactStore(spark, table, buckets)
-    due
-  }
+                           maxFilesPerBucket: Int): Boolean =
+    StoreLifecycle.compactIfNeeded(spark, store(table, buckets),
+      maxFilesPerBucket)
 
-  /** Deduplicate a NEW shard against a persisted signature `store`
-    * (a table written by [[writeSignatureStore]] with the SAME
-    * `shingleN`/`numHashes`/`nBands`).
-    *
-    * Candidate pairs come from the `(band, band_key)` equi-join of the
-    * shard's banded signatures against the store (the store side reads
-    * bucketed, shuffle-free; the merge hint pins the sort-merge
-    * strategy so a small test-scale shard cannot silently broadcast and
-    * bypass the layout being proven — [[graft.core.Upsert.mergeBucketed]]'s
-    * rationale). A pair is a duplicate when its signature agreement
-    * `n_match/numHashes ≥ minJaccard` — the same estimate as
-    * [[MinHash.nearDupPairs]], compared in exact integers.
-    *
-    * @return one row per new-shard doc: `(id, kept, n_store_matches,
-    *         dup_of)` — `kept` when no store doc matched, `dup_of` the
-    *         smallest matching store id (null when kept). */
   /** The continuous-ingest form of the ingest loop: each micro-batch is
-    * a shard — dedup it against the signature store, append the per-doc
-    * verdicts to `outPath`, append the SURVIVORS' signatures to the
-    * store, so the next micro-batch dedups against everything ingested
-    * so far. `Trigger.AvailableNow` + `maxFilesPerTrigger` on the file
-    * source make "one landed file = one shard" (the reference's
-    * operational shape — process what's pending, exactly once per file,
-    * stop).
-    *
-    * The loop is IDEMPOTENT under `foreachBatch`'s at-least-once
-    * replay: verdicts land partitioned by `batch_id` with dynamic
-    * partition overwrite (a replayed batch REPLACES its own partition),
-    * and a batch whose id is already in the store's applied-batch
-    * ledger ([[graft.core.IngestLedger]]) is skipped outright, so a
-    * fully-committed batch never re-appends signatures or count deltas.
-    * A batch that crashed INSIDE its append (intent marker without a
-    * commit marker) replays through the reconcile path
-    * ([[graft.core.Reconcile.appendExact]]): the committed verdicts are
-    * reused and store + counts converge to the exact post-append state
-    * — there is no residual window (IngestRecoverySpec drives every
-    * crash point).
+    * a shard through [[ingestBatch]] — dedup it against the signature
+    * store, write its verdicts, append the SURVIVORS' signatures, so the
+    * next micro-batch dedups against everything ingested so far — with
+    * in-loop maintenance per [[graft.core.StoreLifecycle.stream]].
     *
     * Upgrade note (pre-two-phase ledgers): before resuming a loop whose
     * previous run predates the ledger's INTENT markers and crashed
@@ -279,52 +167,22 @@ object IncrementalDedup {
                    maxBandDocs: Int = 0, compactEvery: Int = 0,
                    maxFilesPerBucket: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, idCol, textCol, shingleN, numHashes,
-          nBands, table, buckets, minJaccard, outPath, maxBandDocs)
-        // in-loop maintenance (compactEvery > 0): every N batches,
-        // collapse the store's accumulated per-bucket shard files and
-        // count deltas back to one file per bucket / one row per key —
-        // without it, a long-running loop degrades toward
-        // thousands-of-files-per-bucket scans. Runs AFTER the batch's
-        // ledger record: compaction is best-effort maintenance outside
-        // the exactly-once contract, and replaying a skipped batch may
-        // at worst re-compact, which is idempotent. A crash BEFORE the
-        // staging swap leaves the original store intact; a crash INSIDE
-        // the swap's drop→rename window strands a state the next entry
-        // of any maintenance/ingest path completes automatically
-        // (Bucketing.recoverSwap).
-        //
-        // Sizing: each compaction is a FULL-STORE rewrite — O(store)
-        // work per trigger — so a production loop wants N ≫ 1, sized so
-        // one rewrite amortizes over many O(shard) appends. x37's
-        // checked `compactEvery = 1` is a COVERAGE configuration (prove
-        // dedup survives the compaction boundary on every batch), not a
-        // production template. `maxFilesPerBucket` is the PRODUCTION
-        // cadence: trigger on the store's measured file decay
-        // (compactStoreIfNeeded), independent of shard sizing.
-        Bucketing.maintainInLoop(batchId, compactEvery, maxFilesPerBucket)(
-          compactStore(batch.sparkSession, table, buckets))(
-          m => compactStoreIfNeeded(batch.sparkSession, table, buckets, m))
-      }
-      .start()
+    StoreLifecycle.stream(newDocs, checkpoint, compactEvery,
+        maxFilesPerBucket, store(table, buckets))(
+      ingestBatch(_, _, idCol, textCol, shingleN, numHashes, nBands, table,
+        buckets, minJaccard, outPath, maxBandDocs))
 
   /** One micro-batch of [[streamIngest]] — also the non-streaming entry
     * point for callers driving the ingest loop themselves (one call per
     * shard with a caller-chosen batch id): dedup the batch against the
-    * store, overwrite THIS
-    * batch's verdict partition, append the survivors' signatures, and
-    * record the batch in the store's applied-batch ledger
-    * ([[graft.core.IngestLedger]] — a batch id already committed is
-    * skipped outright, and one that crashed mid-append reconciles
-    * exactly, so the at-least-once `foreachBatch` replay is effectively
-    * exactly-once end to end). The verdicts are eagerly materialized
-    * (`localCheckpoint`) BEFORE the store append — `dedupAgainstStore`
-    * returns a lazy plan over the store table, and appending first
-    * would let the plan observe the shard's own signatures. */
+    * store, write its verdict partition, append the survivors'
+    * signatures, exactly-once under the store's ledger
+    * ([[graft.core.StoreLifecycle.ingestVerdicts]] — a batch that
+    * crashed mid-append reconciles store and counts exactly;
+    * IngestRecoverySpec drives every crash point). The shard is signed ONCE: the persisted banded
+    * rows feed both the dedup join and the survivors' append (re-signing
+    * the survivors would double the loop's only corpus-proportional
+    * compute). */
   def ingestBatch(batch: DataFrame, batchId: Long,
                   idCol: String, textCol: String,
                   shingleN: Int, numHashes: Int, nBands: Int,
@@ -332,51 +190,28 @@ object IncrementalDedup {
                   minJaccard: Double, outPath: String,
                   maxBandDocs: Int = 0): Unit = {
     val spark = batch.sparkSession
-    // complete any staging swap a crashed compaction stranded, before
-    // anything reads the store or its count side table
-    Bucketing.recoverSwap(spark, table)
-    Bucketing.recoverSwap(spark, countsTable(table))
-    if (IngestLedger.applied(spark, table, batchId)) return
-    // sign the shard ONCE: the persisted banded rows feed both the
-    // dedup join and the survivors' append (re-signing the survivors
-    // would double the ingest loop's only corpus-proportional compute)
     val banded = bandedSignatures(batch, idCol, textCol,
         shingleN, numHashes, nBands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (IngestLedger.intended(spark, table, batchId)) {
-        // a prior attempt committed this batch's verdicts and crashed
-        // somewhere inside its append: reuse the committed verdicts
-        // (re-running the dedup here would see the shard's own appended
-        // rows — surviving near-dup SIBLINGS would each match the
-        // other's store row and flip from kept to dropped) and converge
-        // store + counts to the exact post-append state
-        val kept = spark.read.parquet(outPath)
-          .filter(col("batch_id") === batchId && col("kept"))
-          .select(col(idCol))
-        graft.core.Reconcile.appendExact(banded.join(kept, Seq(idCol)),
-          idCol, table, countsTable(table), "n_docs",
-          Seq("band", "band_key"), buckets)
-      } else {
-        val counts =
-          if (maxBandDocs > 0) Some(spark.table(countsTable(table))) else None
-        val verdicts = dedupBanded(batch.select(col(idCol)), banded, idCol,
-            numHashes, spark.table(table), minJaccard, maxBandDocs, counts)
-          .localCheckpoint(true)
-        verdicts.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
-        IngestLedger.intent(spark, table, batchId)
-        val kept = verdicts.filter(col("kept")).select(col(idCol))
-        appendBanded(banded.join(kept, Seq(idCol)), table, buckets)
-      }
-      IngestLedger.record(spark, table, batchId)
-    } finally banded.unpersist()
+    try StoreLifecycle.ingestVerdicts(spark, store(table, buckets), batchId,
+        idCol, outPath)(
+      dedupBanded(batch.select(col(idCol)), banded, idCol, numHashes,
+        spark.table(table), minJaccard, maxBandDocs,
+        if (maxBandDocs > 0) Some(spark.table(countsTable(table))) else None))(
+      kept => banded.join(kept, Seq(idCol)))
+    finally banded.unpersist()
   }
 
-  /** `maxBandDocs > 0` engages the hot-key cap: band keys carrying MORE
+  /** Deduplicate a NEW shard against a persisted signature `store`
+    * (written with the SAME `shingleN`/`numHashes`/`nBands`): candidate
+    * pairs come from the `(band, band_key)` equi-join (store side read
+    * bucketed, merge-hinted so a test-scale shard cannot broadcast
+    * around the layout); a pair is a duplicate when
+    * `n_match/numHashes ≥ minJaccard`, compared in exact integers.
+    * Returns `(id, kept, n_store_matches, dup_of)` per shard doc,
+    * `dup_of` the smallest matching store id (null when kept).
+    *
+    * `maxBandDocs > 0` engages the hot-key cap: band keys carrying MORE
     * than that many STORE docs (per `keyCounts` — the [[countsTable]]
     * side table, required when the cap is on) are excluded from
     * candidate generation on BOTH join sides. A hot key (boilerplate)

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.core.{Bucketing, IngestLedger}
+import graft.core.StoreLifecycle
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -242,14 +242,17 @@ object LmScore {
     * reference-corpus identity at build time; [[appendToModel]] grows
     * the store WITHOUT rewriting the meta — the contract columns are
     * immutable, and keeping the meta out of the append path is what
-    * keeps appends O(shard) and single-table-atomic).
-    *
-    * Crash-consistency: the meta table is the COMMIT MARKER of a store
-    * (re)build — dropped first, written last ([[writeModelStore]]), so
-    * a crash mid-build leaves a store with no meta and
-    * [[scoreAgainstStore]] refuses loudly; the repair is to re-run the
-    * build. */
-  def modelMeta(table: String): String = s"${table}_meta"
+    * keeps appends O(shard) and single-table-atomic). The meta is the
+    * build's commit marker ([[graft.core.StoreLifecycle.writeCommitted]]):
+    * a crashed build serves nothing until it is re-run. */
+  def modelMeta(table: String): String = StoreLifecycle.metaTable(table)
+
+  /** The model store family: bucketed by `fp`, count deltas folded by
+    * `(n, fp)` ([[graft.core.StoreLifecycle.CountDelta]]). */
+  private def store(table: String, buckets: Int) =
+    StoreLifecycle.Store(table, Seq("fp"), buckets,
+      fold = _.groupBy("n", "fp").agg(sum(col("c")).as("c")),
+      replay = StoreLifecycle.CountDelta)
 
   /** Store grain: the [[fit]] (or, for a `maxN = 3` store, [[fit3]])
     * relation plus a `batch_id` column — append GENERATIONS stay
@@ -268,32 +271,29 @@ object LmScore {
     * so each count join reads the buckets in place). `maxN = 2` (the
     * default) persists the bigram model; `maxN = 3` the trigram one —
     * the meta records which, and appends read it back so a delta can
-    * never carry a different gram depth than the store it grows. A
-    * fresh store restarts its batch-id space ([[IngestLedger.reset]]). */
+    * never carry a different gram depth than the store it grows. The
+    * build's rows carry the −1 sentinel (like compacted rows): a
+    * streamed loop's ids start at 0, so no batch repair can ever filter
+    * the base build away. */
   def writeModelStore(refDocs: DataFrame, textCol: String,
                       table: String, buckets: Int, maxN: Int = 2): Unit = {
     require(maxN == 2 || maxN == 3, s"maxN must be 2 or 3, got $maxN")
     val spark = refDocs.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS `${modelMeta(table)}`")
-    // the build's rows carry the -1 sentinel (like compacted rows):
-    // a streamed loop's ids start at 0, so no batch repair can ever
-    // filter the base build away
-    Bucketing.writeBucketed(modelRows(refDocs, textCol, batchId = -1L, maxN),
-      table, Seq("fp"), buckets)
-    IngestLedger.reset(spark, table)
-    spark.table(table)
-      .agg(
-        sum(when(col("n") === 1, lit(1L))).as("n_unigram_fps"),
-        sum(when(col("n") === 2, lit(1L))).as("n_bigram_fps"),
-        sum(when(col("n") === 1, col("c"))).as("unigram_tokens"),
-        sum(when(col("n") === 2, col("c"))).as("bigram_tokens"))
-      .select(lit(maxN).as("max_n"), lit(QScale.toLong).as("q_scale"),
-        coalesce(col("n_unigram_fps"), lit(0L)).as("n_unigram_fps"),
-        coalesce(col("n_bigram_fps"), lit(0L)).as("n_bigram_fps"),
-        coalesce(col("unigram_tokens"), lit(0L)).as("unigram_tokens"),
-        coalesce(col("bigram_tokens"), lit(0L)).as("bigram_tokens"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(modelMeta(table))
+    StoreLifecycle.writeCommitted(
+        modelRows(refDocs, textCol, batchId = -1L, maxN), store(table, buckets)) {
+      StoreLifecycle.saveTable(spark.table(table)
+        .agg(
+          sum(when(col("n") === 1, lit(1L))).as("n_unigram_fps"),
+          sum(when(col("n") === 2, lit(1L))).as("n_bigram_fps"),
+          sum(when(col("n") === 1, col("c"))).as("unigram_tokens"),
+          sum(when(col("n") === 2, col("c"))).as("bigram_tokens"))
+        .select(lit(maxN).as("max_n"), lit(QScale.toLong).as("q_scale"),
+          coalesce(col("n_unigram_fps"), lit(0L)).as("n_unigram_fps"),
+          coalesce(col("n_bigram_fps"), lit(0L)).as("n_bigram_fps"),
+          coalesce(col("unigram_tokens"), lit(0L)).as("unigram_tokens"),
+          coalesce(col("bigram_tokens"), lit(0L)).as("bigram_tokens")),
+        modelMeta(table))
+    }
   }
 
   /** Grow the model with a new slice of the reference corpus at
@@ -305,17 +305,19 @@ object LmScore {
     * it). The delta's gram depth comes FROM THE STORE'S META (so an
     * append can never silently mix depths — and appending to a store
     * whose build never committed fails loudly here, not at serve
-    * time). Periodic [[compactModelStore]] collapses the generations.
-    * Caller-driven appends own their atomicity (the
-    * [[ExactDedup.appendFingerprints]] convention); the streamed loop
-    * ([[streamIngestModel]]) adds the exactly-once ledger. */
+    * time). Caller-driven appends own their atomicity; the streamed
+    * loop ([[streamIngestModel]]) adds the exactly-once ledger. */
   def appendToModel(refDocs: DataFrame, textCol: String,
                     table: String, buckets: Int,
-                    batchId: Long = -1L): Unit = {
-    val spark = refDocs.sparkSession
-    val maxN = requireModelContract(spark, table).getAs[Int]("max_n")
-    Bucketing.appendBucketed(modelRows(refDocs, textCol, batchId, maxN),
-      table, Seq("fp"), buckets)
+                    batchId: Long = -1L): Unit =
+    StoreLifecycle.append(deltaRows(refDocs, textCol, table, batchId),
+      store(table, buckets))
+
+  /** A slice's delta rows at the store's committed gram depth. */
+  private def deltaRows(refDocs: DataFrame, textCol: String, table: String,
+                        batchId: Long): DataFrame = {
+    val meta = requireModelContract(refDocs.sparkSession, table)
+    modelRows(refDocs, textCol, batchId, meta.getAs[Int]("max_n"))
   }
 
   /** The model relation served FROM the store: `(n, fp, c)` with delta
@@ -369,17 +371,9 @@ object LmScore {
     * Returns the meta row so callers needing more contract columns
     * (gram depth) don't pay a second driver-side read. */
   private def requireModelContract(spark: SparkSession,
-                                   table: String): org.apache.spark.sql.Row = {
-    require(spark.catalog.tableExists(modelMeta(table)),
-      s"model store '$table' has no meta table — a (re)build crashed " +
-        "before committing; re-run writeModelStore before scoring")
-    val meta = spark.table(modelMeta(table)).head()
-    require(meta.getAs[Long]("q_scale") == QScale.toLong,
-      s"model store '$table' was built with quantizer scale " +
-        s"${meta.getAs[Long]("q_scale")}, this engine scores at " +
-        s"${QScale.toLong} — rebuild the store or match the scale")
-    meta
-  }
+                                   table: String): org.apache.spark.sql.Row =
+    StoreLifecycle.committedMeta(spark, table, "model", "writeModelStore",
+      Some(QScale.toLong))
 
   /** DSIR-style domain-targeted selection (Xie et al.'s data-selection
     * pattern: score every candidate by a TARGET-domain model against a
@@ -446,96 +440,35 @@ object LmScore {
 
   /** Collapse accumulated delta generations to one `(n, fp)` row and
     * one file per bucket; compacted rows carry `batch_id = -1` (the
-    * "folded" sentinel). Rows of a DANGLING batch — intent marker
-    * written, commit record never reached (a crash mid-append whose
-    * replay has not run yet) — pass through UNFOLDED, still carrying
-    * their batch id: the crash repair removes a partial append by
-    * `batch_id` filter ([[ingestModelBatch]]), and folding those rows
-    * into the sentinel would strand them where the repair cannot see
-    * them, double-counting the batch after its re-append. (The
-    * in-loop path compacts strictly after the commit record, so it
-    * never has a dangling own batch — this guards the PUBLIC entry
-    * points against compaction interleaved before a replay.) Ledger
+    * "folded" sentinel), rows of a dangling-intent batch pass through
+    * unfolded ([[graft.core.StoreLifecycle.CountDelta]]), and ledger
     * markers prune below the watermark. */
   def compactModelStore(spark: SparkSession, table: String,
-                        buckets: Int): Unit = {
-    val dangling = IngestLedger.danglingIntents(spark, table)
-    Bucketing.compact(spark, table, Seq("fp"), buckets,
-      prepare = df => {
-        val fold = (if (dangling.isEmpty) df
-          else df.filter(!col("batch_id").isin(dangling: _*)))
-          .groupBy("n", "fp").agg(sum(col("c")).as("c"))
-          .withColumn("batch_id", lit(-1L))
-          .select("n", "fp", "c", "batch_id")
-        if (dangling.isEmpty) fold
-        else fold.unionByName(df.filter(col("batch_id").isin(dangling: _*))
-          .select("n", "fp", "c", "batch_id"))
-      })
-    IngestLedger.prune(spark, table)
-  }
-
-  /** [[compactModelStore]] behind the files-per-bucket decay trigger —
-    * the production cadence. Returns whether a compaction ran. */
-  def compactModelStoreIfNeeded(spark: SparkSession, table: String,
-                                buckets: Int,
-                                maxFilesPerBucket: Int): Boolean = {
-    Bucketing.recoverSwap(spark, table)
-    val due = Bucketing.needsCompaction(spark, table, buckets,
-      maxFilesPerBucket)
-    if (due) compactModelStore(spark, table, buckets)
-    due
-  }
+                        buckets: Int): Unit =
+    StoreLifecycle.compact(spark, store(table, buckets))
 
   /** The CONTINUOUS form: each micro-batch is a new slice of the
-    * reference corpus whose count deltas append exactly-once under the
-    * two-phase ledger ([[graft.core.IngestLedger]]) — the
-    * [[ExactDedup.streamIngest]] pattern minus the verdict sink (a
-    * model ingest has no per-doc output; the store IS the product). */
+    * reference corpus whose count deltas append exactly-once
+    * ([[ingestModelBatch]]) — the [[ExactDedup.streamIngest]] pattern
+    * minus the verdict sink (a model ingest has no per-doc output; the
+    * store IS the product). */
   def streamIngestModel(refDocs: DataFrame, textCol: String,
                         table: String, buckets: Int, checkpoint: String,
                         compactEvery: Int = 0, maxFilesPerBucket: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    refDocs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestModelBatch(batch, batchId, textCol, table, buckets)
-        Bucketing.maintainInLoop(batchId, compactEvery, maxFilesPerBucket)(
-          compactModelStore(batch.sparkSession, table, buckets))(
-          m => compactModelStoreIfNeeded(batch.sparkSession, table,
-            buckets, m))
-      }
-      .start()
+    StoreLifecycle.stream(refDocs, checkpoint, compactEvery,
+        maxFilesPerBucket, store(table, buckets))(
+      ingestModelBatch(_, _, textCol, table, buckets))
 
   /** One micro-batch of [[streamIngestModel]] — also the non-streaming
-    * entry point for a caller-driven loop that wants the ledger.
-    * Replay of a batch that crashed mid-append converges EXACTLY: the
-    * batch's delta rows are tagged with its id, so the repair rewrites
-    * the store without them (a partial append's stragglers included)
-    * and re-appends deterministically — an O(store) rewrite, paid only
-    * on the rare crash-repair path, never per batch. */
+    * entry point for a caller-driven loop that wants the ledger
+    * ([[graft.core.StoreLifecycle.ingestDeltas]]: replay of a batch
+    * that crashed mid-append converges EXACTLY by dropping its tagged
+    * delta rows and re-appending). */
   def ingestModelBatch(batch: DataFrame, batchId: Long, textCol: String,
-                       table: String, buckets: Int): Unit = {
-    require(batchId >= 0,
-      s"ingestModelBatch: batchId must be >= 0 (got $batchId) — negative " +
-        "ids are the base-build/compacted sentinel and a repair keyed on " +
-        "one would delete the folded rows")
-    val spark = batch.sparkSession
-    Bucketing.recoverSwap(spark, table)
-    if (IngestLedger.applied(spark, table, batchId)) return
-    if (IngestLedger.intended(spark, table, batchId)) {
-      // a prior attempt crashed somewhere inside its append: the delta
-      // may have landed fully, partially, or not at all — drop whatever
-      // landed and re-append (deterministic: same slice, same counts)
-      Bucketing.replaceBucketed(
-        spark.table(table).filter(col("batch_id") =!= batchId),
-        table, Seq("fp"), buckets)
-    } else {
-      IngestLedger.intent(spark, table, batchId)
-    }
-    appendToModel(batch, textCol, table, buckets, batchId)
-    IngestLedger.record(spark, table, batchId)
-  }
+                       table: String, buckets: Int): Unit =
+    StoreLifecycle.ingestDeltas(batch.sparkSession, store(table, buckets),
+      batchId)(deltaRows(batch, textCol, table, batchId))
 
   /** PASSAGE-level quality cutting — the CCNet deployment grain: CCNet
     * scores and filters PARAGRAPHS, not pages, because a good page

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Bucketing, IngestLedger}
+import graft.core.StoreLifecycle
 
 /** TRAINED discriminative quality classifier — the fastText-style
   * binary positive-corpus-vs-background scorer every published
@@ -182,7 +182,15 @@ object QualityClassifier {
 
   // ---------------- persisted model store (the x54 pattern) ----------------
 
-  def classifierMeta(table: String): String = s"${table}_meta"
+  def classifierMeta(table: String): String = StoreLifecycle.metaTable(table)
+
+  /** The classifier store family: bucketed by `fp`, count deltas folded
+    * by `(side, fp)` ([[graft.core.StoreLifecycle.CountDelta]] — the
+    * [[LmScore]] model-store shape with the classifier's grain). */
+  private def store(table: String, buckets: Int) =
+    StoreLifecycle.Store(table, Seq("fp"), buckets,
+      fold = _.groupBy("side", "fp").agg(sum(col("c")).as("c")),
+      replay = StoreLifecycle.CountDelta)
 
   private def modelRows(pos: DataFrame, neg: DataFrame, textCol: String,
                         batchId: Long): DataFrame =
@@ -190,22 +198,16 @@ object QualityClassifier {
 
   /** Fit on the two labeled corpora and persist as the fp-bucketed
     * catalog table `table` (the [[LmScore.writeModelStore]] shape:
-    * build rows carry the −1 batch sentinel; ledger reset BEFORE the
-    * meta commits so the commit marker covers the ledger state too;
-    * the meta — quantizer scale — is the commit marker, written
-    * last). */
+    * build rows carry the −1 batch sentinel; the meta — quantizer
+    * scale — is the commit marker, written last). */
   def writeClassifierStore(pos: DataFrame, neg: DataFrame, textCol: String,
-                           table: String, buckets: Int): Unit = {
-    val spark = pos.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS `${classifierMeta(table)}`")
-    Bucketing.writeBucketed(modelRows(pos, neg, textCol, batchId = -1L),
-      table, Seq("fp"), buckets)
-    IngestLedger.reset(spark, table)
-    spark.range(1)
-      .select(lit(QScale.toLong).as("q_scale"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(classifierMeta(table))
-  }
+                           table: String, buckets: Int): Unit =
+    StoreLifecycle.writeCommitted(modelRows(pos, neg, textCol, batchId = -1L),
+        store(table, buckets)) {
+      StoreLifecycle.saveTable(
+        pos.sparkSession.range(1).select(lit(QScale.toLong).as("q_scale")),
+        classifierMeta(table))
+    }
 
   /** Grow the model with NEW labeled slices at O(shard) cost: delta
     * count rows in the same bucket layout, summed at serve time —
@@ -216,107 +218,43 @@ object QualityClassifier {
   def appendToClassifier(pos: DataFrame, neg: DataFrame, textCol: String,
                          table: String, buckets: Int,
                          batchId: Long = -1L): Unit = {
-    val spark = pos.sparkSession
-    requireClassifierContract(spark, table)
-    Bucketing.appendBucketed(modelRows(pos, neg, textCol, batchId),
-      table, Seq("fp"), buckets)
+    requireClassifierContract(pos.sparkSession, table)
+    StoreLifecycle.append(modelRows(pos, neg, textCol, batchId),
+      store(table, buckets))
   }
 
-  /** [[appendToClassifier]]'s labeled-frame form — the delta an
-    * ingested micro-batch lands. */
-  private def appendLabeled(batch: DataFrame, labelCol: String,
-                            textCol: String, table: String, buckets: Int,
-                            batchId: Long): Unit =
-    Bucketing.appendBucketed(
-      fitLabeled(batch, labelCol, textCol).withColumn("batch_id",
-        lit(batchId)),
-      table, Seq("fp"), buckets)
-
   /** One exactly-once micro-batch of labeled training data — the
-    * [[LmScore.ingestModelBatch]] two-phase protocol verbatim (count
-    * deltas are NOT idempotent on replay, so a batch that crashed
-    * mid-append first drops its tagged rows — stragglers of the partial
-    * append included — then re-appends deterministically; the O(store)
-    * rewrite is paid only on the rare crash-repair path). */
+    * [[LmScore.ingestModelBatch]] count-delta protocol
+    * ([[graft.core.StoreLifecycle.ingestDeltas]]) after the store's
+    * contract check. */
   def ingestClassifierBatch(batch: DataFrame, batchId: Long,
                             labelCol: String, textCol: String,
                             table: String, buckets: Int): Unit = {
-    require(batchId >= 0,
-      s"ingestClassifierBatch: batchId must be >= 0 (got $batchId) — " +
-        "negative ids are the base-build/compacted sentinel and a repair " +
-        "keyed on one would delete the folded rows")
-    val spark = batch.sparkSession
-    Bucketing.recoverSwap(spark, table)
-    requireClassifierContract(spark, table)
-    if (IngestLedger.applied(spark, table, batchId)) return
-    if (IngestLedger.intended(spark, table, batchId)) {
-      Bucketing.replaceBucketed(
-        spark.table(table).filter(col("batch_id") =!= batchId),
-        table, Seq("fp"), buckets)
-    } else {
-      IngestLedger.intent(spark, table, batchId)
-    }
-    appendLabeled(batch, labelCol, textCol, table, buckets, batchId)
-    IngestLedger.record(spark, table, batchId)
+    requireClassifierContract(batch.sparkSession, table)
+    StoreLifecycle.ingestDeltas(batch.sparkSession, store(table, buckets),
+        batchId)(
+      fitLabeled(batch, labelCol, textCol).withColumn("batch_id", lit(batchId)))
   }
 
   /** Collapse the store's delta generations to one row per (side, fp)
-    * and prune the ledger — the [[LmScore.compactModelStore]] fold with
-    * the classifier's grain, dangling-intent batches carried through
+    * and prune the ledger — dangling-intent batches carried through
     * unfolded so their crash repair stays exact. */
   def compactClassifierStore(spark: SparkSession, table: String,
-                             buckets: Int): Unit = {
-    val dangling = IngestLedger.danglingIntents(spark, table)
-    Bucketing.compact(spark, table, Seq("fp"), buckets,
-      prepare = df => {
-        val fold = (if (dangling.isEmpty) df
-          else df.filter(!col("batch_id").isin(dangling: _*)))
-          .groupBy("side", "fp").agg(sum(col("c")).as("c"))
-          .withColumn("batch_id", lit(-1L))
-          .select("side", "fp", "c", "batch_id")
-        if (dangling.isEmpty) fold
-        else fold.unionByName(df.filter(col("batch_id").isin(dangling: _*))
-          .select("side", "fp", "c", "batch_id"))
-      })
-    IngestLedger.prune(spark, table)
-  }
-
-  /** [[compactClassifierStore]] behind the files-per-bucket decay
-    * trigger — the production cadence. Returns whether a compaction
-    * ran. */
-  def compactClassifierStoreIfNeeded(spark: SparkSession, table: String,
-                                     buckets: Int,
-                                     maxFilesPerBucket: Int): Boolean = {
-    Bucketing.recoverSwap(spark, table)
-    val due = Bucketing.needsCompaction(spark, table, buckets,
-      maxFilesPerBucket)
-    if (due) compactClassifierStore(spark, table, buckets)
-    due
-  }
+                             buckets: Int): Unit =
+    StoreLifecycle.compact(spark, store(table, buckets))
 
   /** The CONTINUOUS form — labeled training waves arrive as a stream
     * (a new curated source lands, a new crawl snapshot lands as
-    * background) and the model grows under the exactly-once ledger;
-    * in-loop maintenance on the shared cadence policy. Completes the
-    * batch + streamed ingest symmetry of the engine's other five store
-    * families. */
+    * background) and the model grows under the exactly-once ledger,
+    * with in-loop maintenance per [[graft.core.StoreLifecycle.stream]]. */
   def streamIngestClassifier(labeled: DataFrame, labelCol: String,
                              textCol: String, table: String, buckets: Int,
                              checkpoint: String, compactEvery: Int = 0,
                              maxFilesPerBucket: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    labeled.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestClassifierBatch(batch, batchId, labelCol, textCol, table,
-          buckets)
-        Bucketing.maintainInLoop(batchId, compactEvery, maxFilesPerBucket)(
-          compactClassifierStore(batch.sparkSession, table, buckets))(
-          m => { compactClassifierStoreIfNeeded(batch.sparkSession, table,
-            buckets, m); () })
-      }
-      .start()
+    StoreLifecycle.stream(labeled, checkpoint, compactEvery,
+        maxFilesPerBucket, store(table, buckets))(
+      ingestClassifierBatch(_, _, labelCol, textCol, table, buckets))
 
   /** The model relation served FROM the store: delta generations
     * summed in-bucket (fp is the bucket key; the merge hint pins the
@@ -354,14 +292,7 @@ object QualityClassifier {
       .filter(col("cls_score").isNull || col("cls_score") >= minScore)
 
   private def requireClassifierContract(spark: SparkSession,
-                                        table: String): Unit = {
-    require(spark.catalog.tableExists(classifierMeta(table)),
-      s"classifier store '$table' has no meta table — a (re)build " +
-        "crashed before committing; re-run writeClassifierStore")
-    val meta = spark.table(classifierMeta(table)).head()
-    require(meta.getAs[Long]("q_scale") == QScale.toLong,
-      s"classifier store '$table' was built with quantizer scale " +
-        s"${meta.getAs[Long]("q_scale")}, this engine scores at " +
-        s"${QScale.toLong} — rebuild the store or match the scale")
-  }
+                                        table: String): Unit =
+    StoreLifecycle.committedMeta(spark, table, "classifier",
+      "writeClassifierStore", Some(QScale.toLong))
 }

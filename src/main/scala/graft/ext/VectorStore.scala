@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.core.{Bucketing, IngestLedger}
+import graft.core.{Bucketing, IngestLedger, StoreLifecycle}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,15 +37,13 @@ import org.apache.spark.sql.functions._
   * a zero-adjacent region the codebook under-resolves) grows every
   * future shard's probe-join candidate work unboundedly. The cap is the
   * x43 pattern applied to `cell`: a per-cell vector-count SIDE TABLE
-  * ([[countsTable]], bucketed like the store) maintained as APPEND-ONLY
-  * deltas on every append (O(shard) write work, never a rewrite),
-  * summed in-bucket at dedup time ([[cellCountTotals]]) and
+  * ([[countsTable]] — [[graft.core.StoreLifecycle.Counts]]' append-only
+  * deltas) summed in-bucket at dedup time ([[cellCountTotals]]) and
   * semi-filtering BOTH probe and store sides against cells at-or-under
   * `maxCellVecs`. A capped cell means a bounded, observable recall loss
   * on exactly the vectors upstream exact dedup already collapses — and
   * the permanent fix (a larger / trained codebook) is a re-cluster, not
-  * a per-shard cost. [[compactStore]] periodically collapses the
-  * accumulated deltas and per-bucket files.
+  * a per-shard cost.
   *
   * First-wins over the union: store vectors were ingested earlier, so a
   * new vector matching any store vector (exact cosine ≥ `minCosine`
@@ -76,12 +74,9 @@ object VectorStore {
                nCentroids: Int, dim: Int, seedOffset: Long): DataFrame =
     assignedWith(vecs, idCol, embCol, LcgCellScorer(nCentroids, dim, seedOffset))
 
-  /** Name of the per-cell vector-count side table maintained alongside
-    * a vector store `table` — APPEND-ONLY delta rows `(cell, n_vecs)`:
-    * one row per cell per append, summed to totals at read time by
-    * [[cellCountTotals]]. Bucketed by `cell` with the store's bucket
-    * count, so the rollup and the hot-cell semi-filters run
-    * bucket-aligned, Exchange-free. */
+  /** Name of the per-cell vector-count side table of a vector store
+    * `table` — delta rows `(cell, n_vecs)` summed to totals at read
+    * time by [[cellCountTotals]], bucket-aligned with the store. */
   def countsTable(table: String): String = s"${table}_cellcounts"
 
   /** Name of the persisted codebook table of a TRAINED store: the
@@ -108,20 +103,26 @@ object VectorStore {
   def cellCountTotals(deltas: DataFrame): DataFrame =
     deltas.groupBy("cell").agg(sum("n_vecs").as("n_vecs"))
 
-  /** Per-cell vector counts of an assigned relation. */
-  private def cellCounts(assignedVecs: DataFrame): DataFrame =
-    assignedVecs.groupBy("cell").agg(count(lit(1)).as("n_vecs"))
+  /** The vector store family: bucketed by `cell` with the per-cell
+    * count side table ([[countsTable]]); compaction is a full-row
+    * distinct (the assigned layout is fully determined by the vector),
+    * and maintenance entry completes a crashed [[recluster]] before
+    * measuring decay. */
+  private[ext] def store(table: String, buckets: Int) =
+    StoreLifecycle.Store(table, Seq("cell"), buckets,
+      fold = _.dropDuplicates(),
+      counts = Some(StoreLifecycle.Counts("_cellcounts", "n_vecs")),
+      recover = recoverRecluster(_, table))
 
   /** Compute and persist the vector store for `vecs` as the bucketed
     * catalog table `table` (bucketed+sorted by `cell`), plus its
-    * per-cell count side table ([[countsTable]] — the initial full
-    * rollup is the first delta, derived by reading the just-written
-    * store back in-bucket), under the LCG codebook. */
+    * per-cell count side table ([[countsTable]]), under the LCG
+    * codebook. */
   def writeVectorStore(vecs: DataFrame, idCol: String, embCol: String,
                        nCentroids: Int, dim: Int, seedOffset: Long,
                        table: String, buckets: Int): Unit =
-    writeStoreWith(vecs, idCol, embCol,
-      LcgCellScorer(nCentroids, dim, seedOffset), table, buckets)
+    StoreLifecycle.write(assignedWith(vecs, idCol, embCol,
+      LcgCellScorer(nCentroids, dim, seedOffset)), store(table, buckets))
 
   /** [[writeVectorStore]] under a TRAINED codebook ([[KMeans.fit]]'s
     * `(cid, c)` frame): the codebook is persisted FIRST
@@ -132,55 +133,26 @@ object VectorStore {
   def writeVectorStoreTrained(vecs: DataFrame, idCol: String, embCol: String,
                               codebook: DataFrame, table: String,
                               buckets: Int): Unit = {
-    val spark = vecs.sparkSession
-    codebook.select(col("cid").cast("int").as("cid"), col("c"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(codebookTable(table))
-    writeStoreWith(vecs, idCol, embCol, trainedScorer(spark, table),
-      table, buckets)
-  }
-
-  private def writeStoreWith(vecs: DataFrame, idCol: String, embCol: String,
-                             scorer: CellScorer, table: String,
-                             buckets: Int): Unit = {
-    Bucketing.writeBucketed(assignedWith(vecs, idCol, embCol, scorer),
-      table, Seq("cell"), buckets)
-    val spark = vecs.sparkSession
-    Bucketing.writeBucketed(cellCounts(spark.table(table)),
-      countsTable(table), Seq("cell"), buckets)
-    IngestLedger.reset(spark, table)
+    StoreLifecycle.saveTable(
+      codebook.select(col("cid").cast("int").as("cid"), col("c")),
+      codebookTable(table))
+    StoreLifecycle.write(assignedWith(vecs, idCol, embCol,
+      trainedScorer(vecs.sparkSession, table)), store(table, buckets))
   }
 
   /** Append a shard's assigned vectors into an existing store (same
     * layout; the ingest loop appends SURVIVORS only, mirroring
     * [[IncrementalDedup.appendSignatures]]) and land the shard's
     * per-cell count DELTAS in the side table — O(shard) work, no
-    * rewrite of either relation. Stores written before the side table
-    * existed get it backfilled with a one-time in-bucket rollup. The
-    * shard is consumed twice (store append + delta append), so the
-    * narrow assigned rows are persisted for the duration. */
+    * rewrite of either relation. The narrow assigned rows are consumed
+    * twice, so they are persisted for the duration. */
   def appendVectorsWith(vecs: DataFrame, idCol: String, embCol: String,
                         scorer: CellScorer, table: String,
                         buckets: Int): Unit = {
     val rows = assignedWith(vecs, idCol, embCol, scorer)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val spark = vecs.sparkSession
-      val ct = countsTable(table)
-      if (spark.catalog.tableExists(ct))
-        // independent writes off the same persisted frame, order-free
-        // crash contract (Reconcile recounts touched cells) — overlap
-        // them, the IncrementalDedup.appendBanded rationale (guide §2.6)
-        Bucketing.inParallel(
-          Bucketing.appendBucketed(rows, table, Seq("cell"), buckets),
-          Bucketing.appendBucketed(cellCounts(rows), ct, Seq("cell"),
-            buckets))
-      else {
-        Bucketing.appendBucketed(rows, table, Seq("cell"), buckets)
-        Bucketing.writeBucketed(cellCounts(spark.table(table)), ct,
-          Seq("cell"), buckets)
-      }
-    } finally rows.unpersist()
+    try StoreLifecycle.append(rows, store(table, buckets))
+    finally rows.unpersist()
   }
 
   /** [[appendVectorsWith]] under the LCG codebook. */
@@ -191,43 +163,12 @@ object VectorStore {
       LcgCellScorer(nCentroids, dim, seedOffset), table, buckets)
 
   /** Periodic store maintenance — the vector twin of
-    * [[IncrementalDedup.compactStore]]: rewrite the store to one file
-    * per bucket (restoring the probe join's in-bucket Sort elision),
-    * collapse any externally-introduced duplicate rows (full-row
-    * distinct — the assigned layout is fully determined by the vector;
-    * the ingest loop itself is exactly-once via the two-phase ledger,
-    * [[graft.core.IngestLedger]] + [[graft.core.Reconcile]]), rebuild
-    * the count side table from a fresh in-bucket recount (a staged
-    * swap, like the store itself — a crash mid-rewrite never leaves
-    * either table missing), and prune the ledger's applied markers
-    * below the contiguous-commit watermark
-    * ([[graft.core.IngestLedger.prune]]). */
-  def compactStore(spark: SparkSession, table: String, buckets: Int): Unit = {
-    Bucketing.compact(spark, table, Seq("cell"), buckets,
-      prepare = _.dropDuplicates())
-    Bucketing.replaceBucketed(cellCounts(spark.table(table)),
-      countsTable(table), Seq("cell"), buckets)
-    IngestLedger.prune(spark, table)
-  }
-
-  /** [[compactStore]] behind the FILES-PER-BUCKET trigger
-    * ([[graft.core.Bucketing.needsCompaction]]): compact only once the
-    * store has accumulated more than `maxFilesPerBucket` appended
-    * generations — the production cadence (pays the O(store) rewrite
-    * exactly when the scan-side decay has accrued, independent of shard
-    * sizing). Returns whether a compaction ran. */
-  def compactStoreIfNeeded(spark: SparkSession, table: String, buckets: Int,
-                           maxFilesPerBucket: Int): Boolean = {
-    // heal BOTH swap windows (a stranded counts swap would otherwise
-    // persist until the store itself came due) and any crashed
-    // recluster before measuring decay
-    Bucketing.recoverSwap(spark, table)
-    Bucketing.recoverSwap(spark, countsTable(table))
-    recoverRecluster(spark, table)
-    val due = Bucketing.needsCompaction(spark, table, buckets, maxFilesPerBucket)
-    if (due) compactStore(spark, table, buckets)
-    due
-  }
+    * [[IncrementalDedup.compactStore]] ([[graft.core.StoreLifecycle.compact]]):
+    * one file per bucket (restoring the probe join's in-bucket Sort
+    * elision), full-row distinct, the count side table rebuilt from a
+    * fresh in-bucket recount, ledger markers pruned. */
+  def compactStore(spark: SparkSession, table: String, buckets: Int): Unit =
+    StoreLifecycle.compact(spark, store(table, buckets))
 
   /** Path of the recluster-in-progress marker — the [[graft.core.IngestLedger]]
     * dir convention applied to the one maintenance pass that is not
@@ -288,7 +229,7 @@ object VectorStore {
     * MARKER carrying the pass's parameters: a crash anywhere between
     * the codebook overwrite and the counts rewrite leaves the marker in
     * place, and [[ingestBatchTrained]] (so both resumed loops) and
-    * [[compactStoreIfNeeded]] call [[recoverRecluster]] at entry —
+    * decay-triggered maintenance call [[recoverRecluster]] at entry —
     * the pass re-runs deterministically (same vectors → same codebook)
     * instead of silently probing a cell space the store rows were never
     * assigned with (IngestRecoverySpec drives the crash window through
@@ -313,44 +254,26 @@ object VectorStore {
       s"$buckets\t$idCol\t$embCol\t$k\t$rounds".getBytes("UTF-8"))
     finally out.close()
     val vecs = spark.table(table).select(col(idCol), col(embCol))
-    KMeans.fit(vecs, idCol, embCol, k, rounds)
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(codebookTable(table))
+    StoreLifecycle.saveTable(KMeans.fit(vecs, idCol, embCol, k, rounds),
+      codebookTable(table))
     val scorer = trainedScorer(spark, table)
     Bucketing.replaceBucketed(assignedWith(vecs, idCol, embCol, scorer),
       table, Seq("cell"), buckets)
-    Bucketing.replaceBucketed(cellCounts(spark.table(table)),
+    Bucketing.replaceBucketed(
+      StoreLifecycle.keyCounts(store(table, buckets), spark.table(table)),
       countsTable(table), Seq("cell"), buckets)
     fs.delete(marker, false)
   }
 
   /** The continuous-ingest form ([[IncrementalDedup.streamIngest]]'s
-    * vector twin): each micro-batch is a shard — dedup it against the
-    * vector store (optionally hot-cell-capped through the count side
-    * table, which the loop's appends advance BETWEEN micro-batches),
-    * write the per-vector verdicts EXACTLY-ONCE (partitioned by
-    * `batch_id` with dynamic partition overwrite, so a replayed batch
-    * replaces its own partition), append the SURVIVORS' assigned
-    * vectors, so the next micro-batch dedups against everything
-    * ingested so far.
-    *
-    * In-loop compaction cadence — two alternatives: `compactEvery = N`
-    * compacts every N batches (a compaction is a FULL-STORE rewrite —
-    * O(store) work per trigger, so a production loop wants N ≫ 1, sized
-    * so the rewrite amortizes over many O(shard) appends; x49's checked
-    * `compactEvery = 1` is a COVERAGE configuration — prove dedup
-    * survives the compaction boundary on every batch — not a production
-    * template). `maxFilesPerBucket = M` is the PRODUCTION trigger
-    * ([[compactStoreIfNeeded]]): compact only when the store's actual
-    * file decay passes M appended generations — pays the rewrite
-    * exactly when the scan-side cost has accrued, independent of shard
-    * sizing.
-    *
-    * Upgrade note (pre-two-phase ledgers): before resuming a loop whose
-    * previous run predates the ledger's INTENT markers and crashed
-    * mid-append, run [[compactStore]] once — its full-row distinct and
-    * recount collapse the old crash's duplicate rows, after which the
-    * replay is safe ([[graft.core.IngestLedger]]'s upgrade note). */
+    * vector twin): each micro-batch is a shard through [[ingestBatch]] —
+    * dedup it against the vector store (optionally hot-cell-capped
+    * through the count side table, which the loop's appends advance
+    * BETWEEN micro-batches), write its verdicts, append the SURVIVORS'
+    * assigned vectors — with in-loop maintenance per
+    * [[graft.core.StoreLifecycle.stream]] (x49 checks the coverage
+    * cadence `compactEvery = 1`). Same upgrade note as
+    * [[IncrementalDedup.streamIngest]]. */
   def streamIngest(newVecs: DataFrame, idCol: String, embCol: String,
                    table: String, buckets: Int, minCosine: Double,
                    nCentroids: Int, nProbe: Int, dim: Int, seedOffset: Long,
@@ -358,52 +281,27 @@ object VectorStore {
                    maxCellVecs: Long = 0L, compactEvery: Int = 0,
                    maxFilesPerBucket: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    newVecs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, idCol, embCol, table, buckets,
-          minCosine, nCentroids, nProbe, dim, seedOffset, outPath,
-          maxCellVecs)
-        // in-loop maintenance, same contract as
-        // [[IncrementalDedup.streamIngest]]: best-effort compaction
-        // AFTER the batch's ledger record, outside the exactly-once
-        // contract, idempotent under replay. A crash before the swap
-        // leaves the original store intact; a crash INSIDE the swap's
-        // drop→rename window strands a state the next entry of any
-        // maintenance/ingest path completes automatically
-        // (Bucketing.recoverSwap).
-        Bucketing.maintainInLoop(batchId, compactEvery, maxFilesPerBucket)(
-          compactStore(batch.sparkSession, table, buckets))(
-          m => compactStoreIfNeeded(batch.sparkSession, table, buckets, m))
-      }
-      .start()
+    StoreLifecycle.stream(newVecs, checkpoint, compactEvery,
+        maxFilesPerBucket, store(table, buckets))(
+      ingestBatch(_, _, idCol, embCol, table, buckets, minCosine, nCentroids,
+        nProbe, dim, seedOffset, outPath, maxCellVecs))
 
   /** [[streamIngest]] over a TRAINED store (written by
     * [[writeVectorStoreTrained]] or converted by [[recluster]]): each
     * micro-batch assigns and probes with the store's PERSISTED codebook
     * — re-read per batch, so the loop keeps following the store even
     * across an interleaved recluster (a recluster that CRASHED mid-pass
-    * is completed at batch entry — [[recoverRecluster]]). Same
-    * exactly-once, compaction-cadence, and upgrade contracts as
-    * [[streamIngest]]. */
+    * is completed at batch entry — [[recoverRecluster]]). */
   def streamIngestTrained(newVecs: DataFrame, idCol: String, embCol: String,
                           table: String, buckets: Int, minCosine: Double,
                           nProbe: Int, outPath: String, checkpoint: String,
                           maxCellVecs: Long = 0L, compactEvery: Int = 0,
                           maxFilesPerBucket: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    newVecs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatchTrained(batch, batchId, idCol, embCol, table, buckets,
-          minCosine, nProbe, outPath, maxCellVecs)
-        Bucketing.maintainInLoop(batchId, compactEvery, maxFilesPerBucket)(
-          compactStore(batch.sparkSession, table, buckets))(
-          m => compactStoreIfNeeded(batch.sparkSession, table, buckets, m))
-      }
-      .start()
+    StoreLifecycle.stream(newVecs, checkpoint, compactEvery,
+        maxFilesPerBucket, store(table, buckets))(
+      ingestBatchTrained(_, _, idCol, embCol, table, buckets, minCosine,
+        nProbe, outPath, maxCellVecs))
 
   /** One micro-batch of [[streamIngest]] — also the non-streaming entry
     * point for a caller-driven ingest loop (LCG codebook). */
@@ -424,7 +322,6 @@ object VectorStore {
                          table: String, buckets: Int, minCosine: Double,
                          nProbe: Int, outPath: String,
                          maxCellVecs: Long = 0L): Unit = {
-    Bucketing.recoverSwap(batch.sparkSession, table)
     // a recluster that crashed between its codebook overwrite and its
     // assignment rewrite would otherwise have this batch probe a cell
     // space the store rows were never assigned with — silently missing
@@ -435,25 +332,18 @@ object VectorStore {
       outPath, maxCellVecs)
   }
 
-  /** The shared micro-batch body. Verdicts are eagerly materialized
-    * (`localCheckpoint`) BEFORE the store append, so the lazy plan over
-    * the store table cannot observe the shard's own vectors; a batch id
-    * already committed in the store's applied-batch ledger
-    * ([[graft.core.IngestLedger]]) is skipped outright, and one that
-    * crashed mid-append replays through the reconcile path
-    * ([[graft.core.Reconcile.appendExact]], reusing the committed
-    * verdicts), so the at-least-once `foreachBatch` replay is
-    * effectively exactly-once end to end. Entry completes any staging
-    * swap a crashed compaction stranded ([[graft.core.Bucketing.recoverSwap]]
-    * on both the store and its count side table). */
+  /** The shared micro-batch body: dedup the shard against the store,
+    * write its verdict partition, append the survivors' assigned
+    * vectors, exactly-once under the store's ledger
+    * ([[graft.core.StoreLifecycle.ingestVerdicts]] — a batch that
+    * crashed mid-append reconciles store and counts exactly, reusing
+    * its committed verdicts). */
   def ingestBatchWith(batch: DataFrame, batchId: Long,
                       idCol: String, embCol: String,
                       table: String, buckets: Int, minCosine: Double,
                       scorer: CellScorer, nProbe: Int,
                       outPath: String, maxCellVecs: Long = 0L): Unit = {
     val spark = batch.sparkSession
-    Bucketing.recoverSwap(spark, table)
-    Bucketing.recoverSwap(spark, countsTable(table))
     // a pending recluster means the store is (or is mid-conversion to)
     // a TRAINED store: a caller-supplied scorer would probe a cell
     // space the store rows were not assigned with and silently miss
@@ -464,41 +354,13 @@ object VectorStore {
       s"a recluster of '$table' is pending (crashed mid-pass) — resume " +
         "through ingestBatchTrained/streamIngestTrained (which complete " +
         "it), or run recoverRecluster first")
-    if (IngestLedger.applied(spark, table, batchId)) return
-    if (IngestLedger.intended(spark, table, batchId)) {
-      // a prior attempt committed this batch's verdicts and crashed
-      // inside its append: reuse the committed verdicts (a re-run of
-      // the dedup would see the shard's own appended vectors —
-      // surviving near-dup SIBLINGS would each match the other's store
-      // row and flip from kept to dropped) and converge store + counts
-      // to the exact post-append state
-      val kept = spark.read.parquet(outPath)
-        .filter(col("batch_id") === batchId && col("kept"))
-        .select(col(idCol))
-      val rows = assignedWith(batch.join(kept, Seq(idCol)), idCol, embCol,
-          scorer)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try graft.core.Reconcile.appendExact(rows, idCol, table,
-        countsTable(table), "n_vecs", Seq("cell"), buckets)
-      finally rows.unpersist()
-    } else {
-      val counts =
-        if (maxCellVecs > 0) Some(spark.table(countsTable(table))) else None
-      val verdicts = dedupAgainstStoreWith(batch, idCol, embCol,
-          spark.table(table), minCosine, scorer, nProbe,
-          maxCellVecs, counts)
-        .localCheckpoint(true)
-      verdicts.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(outPath)
-      IngestLedger.intent(spark, table, batchId)
-      val kept = verdicts.filter(col("kept")).select(col(idCol))
-      appendVectorsWith(batch.join(kept, Seq(idCol)), idCol, embCol,
-        scorer, table, buckets)
-    }
-    IngestLedger.record(spark, table, batchId)
+    StoreLifecycle.ingestVerdicts(spark, store(table, buckets), batchId,
+        idCol, outPath)(
+      dedupAgainstStoreWith(batch, idCol, embCol, spark.table(table),
+        minCosine, scorer, nProbe, maxCellVecs,
+        if (maxCellVecs > 0) Some(spark.table(countsTable(table))) else None))(
+      kept => assignedWith(batch.join(kept, Seq(idCol)), idCol, embCol, scorer)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   /** Each query/shard row's `nProbe` best cells under `scorer` (ties to

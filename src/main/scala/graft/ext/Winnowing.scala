@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.core.{Bucketing, IngestLedger}
+import graft.core.StoreLifecycle
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -139,13 +139,18 @@ object Winnowing {
   /** Name of the 1-row meta table next to a winnow store: `(k, w)`.
     * Dropped first, written last — a crashed (re)build serves nothing
     * rather than a half-written index. */
-  def winnowMeta(table: String): String = s"${table}_meta"
+  def winnowMeta(table: String): String = StoreLifecycle.metaTable(table)
+
+  /** The winnow store family: bucketed by `sel_fp`, folded to distinct
+    * (fp, doc) pairs — the pair grain makes a replayed append
+    * IDEMPOTENT (duplicates collapse at every read and at compaction),
+    * so a resumed batch simply re-appends. */
+  private def store(table: String, buckets: Int) =
+    StoreLifecycle.Store(table, Seq("sel_fp"), buckets, fold = _.distinct())
 
   private def readMeta(spark: SparkSession, table: String): (Int, Int) = {
-    require(spark.catalog.tableExists(winnowMeta(table)),
-      s"winnow store '$table' has no meta table — a (re)build crashed " +
-        "before committing; re-run writeWinnowStore before serving")
-    val m = spark.table(winnowMeta(table)).head()
+    val m = StoreLifecycle.committedMeta(spark, table, "winnow",
+      "writeWinnowStore")
     (m.getAs[Int]("k"), m.getAs[Int]("w"))
   }
 
@@ -165,16 +170,13 @@ object Winnowing {
     * `table` (bucketed+sorted by `sel_fp`); commits the (k, w) meta
     * LAST. A fresh store restarts its batch-id space. */
   def writeWinnowStore(docs: DataFrame, idCol: String, textCol: String,
-                       k: Int, w: Int, table: String, buckets: Int): Unit = {
-    val spark = docs.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS `${winnowMeta(table)}`")
-    Bucketing.writeBucketed(storeRows(docs, idCol, textCol, k, w),
-      table, Seq("sel_fp"), buckets)
-    IngestLedger.reset(spark, table)
-    spark.range(1).select(lit(k).as("k"), lit(w).as("w"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(winnowMeta(table))
-  }
+                       k: Int, w: Int, table: String, buckets: Int): Unit =
+    StoreLifecycle.writeCommitted(storeRows(docs, idCol, textCol, k, w),
+        store(table, buckets)) {
+      StoreLifecycle.saveTable(
+        docs.sparkSession.range(1).select(lit(k).as("k"), lit(w).as("w")),
+        winnowMeta(table))
+    }
 
   /** Append a shard's winnowed fingerprints (selection parameters come
     * FROM the committed meta — a caller cannot mix incomparable
@@ -186,8 +188,8 @@ object Winnowing {
   def appendWinnowShard(docs: DataFrame, idCol: String, textCol: String,
                         table: String, buckets: Int): Unit = {
     val (k, w) = readMeta(docs.sparkSession, table)
-    Bucketing.appendBucketed(storeRows(docs, idCol, textCol, k, w),
-      table, Seq("sel_fp"), buckets)
+    StoreLifecycle.append(storeRows(docs, idCol, textCol, k, w),
+      store(table, buckets))
   }
 
   /** Overlap a NEW shard against the persisted index: winnow the shard
@@ -231,59 +233,32 @@ object Winnowing {
     * pairs collapsed (idempotent — safe next to a dangling append),
     * ledger pruned below the contiguous-commit watermark. */
   def compactWinnowStore(spark: SparkSession, table: String,
-                         buckets: Int): Unit = {
-    Bucketing.compact(spark, table, Seq("sel_fp"), buckets,
-      prepare = _.distinct())
-    IngestLedger.prune(spark, table)
-  }
+                         buckets: Int): Unit =
+    StoreLifecycle.compact(spark, store(table, buckets))
 
-  /** [[compactWinnowStore]] behind the files-per-bucket decay trigger. */
-  def compactWinnowStoreIfNeeded(spark: SparkSession, table: String,
-                                 buckets: Int,
-                                 maxFilesPerBucket: Int): Boolean = {
-    Bucketing.recoverSwap(spark, table)
-    val due = Bucketing.needsCompaction(spark, table, buckets,
-      maxFilesPerBucket)
-    if (due) compactWinnowStore(spark, table, buckets)
-    due
-  }
-
-  /** One exactly-once ingest micro-batch: a committed batch skips; a
-    * batch that crashed mid-append re-appends — the pair grain makes
-    * the replay IDEMPOTENT (duplicate (fp, doc) rows collapse at every
-    * read and at compaction), so unlike the count-delta stores no
-    * partial-append repair pass is needed; the intent marker still
-    * brackets the append so [[IngestLedger.danglingIntents]] can name
-    * unfinished batches for the maintenance audit. */
+  /** One exactly-once ingest micro-batch
+    * ([[graft.core.StoreLifecycle.ingestSet]]): a committed batch skips;
+    * a batch that crashed mid-append re-appends — no partial-append
+    * repair pass is needed at the pair grain, and the intent marker
+    * still brackets the append so
+    * [[graft.core.IngestLedger.danglingIntents]] can
+    * name unfinished batches for the maintenance audit. */
   def ingestWinnowBatch(batch: DataFrame, batchId: Long,
                         idCol: String, textCol: String,
-                        table: String, buckets: Int): Unit = {
-    val spark = batch.sparkSession
-    Bucketing.recoverSwap(spark, table)
-    if (IngestLedger.applied(spark, table, batchId)) return
-    if (!IngestLedger.intended(spark, table, batchId))
-      IngestLedger.intent(spark, table, batchId)
-    appendWinnowShard(batch, idCol, textCol, table, buckets)
-    IngestLedger.record(spark, table, batchId)
-  }
+                        table: String, buckets: Int): Unit =
+    StoreLifecycle.ingestSet(batch.sparkSession, store(table, buckets),
+      batchId)(appendWinnowShard(batch, idCol, textCol, table, buckets))
 
   /** The CONTINUOUS form: every shard's winnowed fingerprints land
-    * exactly-once; in-loop maintenance on the shared cadence policy. */
+    * exactly-once; in-loop maintenance per
+    * [[graft.core.StoreLifecycle.stream]]. */
   def streamIngestWinnow(shards: DataFrame, idCol: String, textCol: String,
                          table: String, buckets: Int, checkpoint: String,
                          compactEvery: Int = 0, maxFilesPerBucket: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    shards.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestWinnowBatch(batch, batchId, idCol, textCol, table, buckets)
-        Bucketing.maintainInLoop(batchId, compactEvery, maxFilesPerBucket)(
-          compactWinnowStore(batch.sparkSession, table, buckets))(
-          m => compactWinnowStoreIfNeeded(batch.sparkSession, table,
-            buckets, m))
-      }
-      .start()
+    StoreLifecycle.stream(shards, checkpoint, compactEvery,
+        maxFilesPerBucket, store(table, buckets))(
+      ingestWinnowBatch(_, _, idCol, textCol, table, buckets))
 
   /** WINNOW-CLUSTER DEDUP — the MOSS pipeline's keep/drop resolution:
     * [[overlapPairs]]' candidate graph contracted to connected

@@ -1248,29 +1248,17 @@ object ExtQueries {
         graft.util.Sessions.streamingShufflePartitions) {
       val root = java.nio.file.Files.createTempDirectory("graft-x37-")
       val in = root.resolve("in"); val out = s"$root/out"; val chk = s"$root/chk"
-      java.nio.file.Files.createDirectories(in)
       val boiler =
         "standard cookie banner please accept all cookies to continue reading"
       val docs = documents(s, d).withColumn("text",
         when(col("doc_id") % 7 === 0, lit(boiler)).otherwise(col("text")))
-      def stage(shard: org.apache.spark.sql.DataFrame, name: String, ts: Long): Unit =
-        graft.util.Staging.stageWave(shard, in, name, ts)
-      // store build and wave staging are independent side effects into
-      // disjoint locations — overlap them (guide §2.6, the
-      // Bucketing.inParallel rationale). Wave ORDER is carried by the
-      // explicit mod times (any values work — only their ORDER matters),
-      // not by staging order.
-      graft.core.Bucketing.inParallel(
+      val stream = graft.util.Staging.stagedStream(in,
+          Seq(docs.filter(col("doc_id") % 3 === 1),
+            docs.filter(col("doc_id") % 3 === 2)))(
         graft.ext.IncrementalDedup.writeSignatureStore(
           docs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
           shingleN = 3, numHashes = 16, nBands = 4, table = "x37_sig_store",
-          buckets = 8),
-        {
-          stage(docs.filter(col("doc_id") % 3 === 1), "shard1.parquet", 1704067200000L)
-          stage(docs.filter(col("doc_id") % 3 === 2), "shard2.parquet", 1704067260000L)
-        })
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in.toString)
+          buckets = 8))
       val job = graft.ext.IncrementalDedup.streamIngest(stream, "doc_id", "text",
         shingleN = 3, numHashes = 16, nBands = 4, table = "x37_sig_store",
         buckets = 8, minJaccard = 0.5, outPath = out, checkpoint = chk,
@@ -1725,28 +1713,18 @@ object ExtQueries {
         graft.util.Sessions.streamingShufflePartitions) {
       val root = java.nio.file.Files.createTempDirectory("graft-x46-")
       val in = root.resolve("in"); val out = s"$root/out"; val chk = s"$root/chk"
-      java.nio.file.Files.createDirectories(in)
       val boiler = array((0 until 64).map(j => lit((j % 7 - 3).toFloat)): _*)
       val emb = embeddings(s, d).withColumn("embedding",
         when(col("vec_id") % 7 === 0, boiler).otherwise(col("embedding")))
       val shard0 = emb.filter(col("vec_id") % 3 === 0)
       val cap = math.ceil(1.05 * shard0.count() / 16).toLong
-      def stage(shard: org.apache.spark.sql.DataFrame, name: String, ts: Long): Unit =
-        graft.util.Staging.stageWave(shard, in, name, ts)
-      // store build ∥ wave staging — independent side effects
-      // (guide §2.6, the Bucketing.inParallel rationale); wave order is
-      // carried by the explicit mod times
-      graft.core.Bucketing.inParallel(
+      val stream = graft.util.Staging.stagedStream(in,
+          Seq(emb.filter(col("vec_id") % 3 === 1),
+            emb.filter(col("vec_id") % 3 === 2)))(
         graft.ext.VectorStore.writeVectorStore(
           shard0, "vec_id", "embedding",
           nCentroids = 16, dim = 64, seedOffset = 100000L,
-          table = "x46_vec_store", buckets = 8),
-        {
-          stage(emb.filter(col("vec_id") % 3 === 1), "shard1.parquet", 1704067200000L)
-          stage(emb.filter(col("vec_id") % 3 === 2), "shard2.parquet", 1704067260000L)
-        })
-      val stream = s.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in.toString)
+          table = "x46_vec_store", buckets = 8))
       val job = graft.ext.VectorStore.streamIngest(stream, "vec_id", "embedding",
         table = "x46_vec_store", buckets = 8, minCosine = 0.4,
         nCentroids = 16, nProbe = 4, dim = 64, seedOffset = 100000L,
@@ -2012,24 +1990,15 @@ object ExtQueries {
         graft.util.Sessions.streamingShufflePartitions) {
       val root = java.nio.file.Files.createTempDirectory("graft-x49-")
       val in = root.resolve("in"); val out = s"$root/out"; val chk = s"$root/chk"
-      java.nio.file.Files.createDirectories(in)
       val emb = embeddings(s, d)
       val shard0 = emb.filter(col("vec_id") % 3 === 0)
       val codebook = KMeans.fit(shard0, "vec_id", "embedding",
         k = 16, rounds = 2)
-      def stage(shard: org.apache.spark.sql.DataFrame, name: String, ts: Long): Unit =
-        graft.util.Staging.stageWave(shard, in, name, ts)
-      // store build ∥ wave staging (guide §2.6); wave order is carried
-      // by the explicit mod times
-      graft.core.Bucketing.inParallel(
+      val stream = graft.util.Staging.stagedStream(in,
+          Seq(emb.filter(col("vec_id") % 3 === 1),
+            emb.filter(col("vec_id") % 3 === 2)))(
         graft.ext.VectorStore.writeVectorStoreTrained(shard0, "vec_id",
-          "embedding", codebook, table = "x49_vec_store", buckets = 8),
-        {
-          stage(emb.filter(col("vec_id") % 3 === 1), "shard1.parquet", 1704067200000L)
-          stage(emb.filter(col("vec_id") % 3 === 2), "shard2.parquet", 1704067260000L)
-        })
-      val stream = s.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in.toString)
+          "embedding", codebook, table = "x49_vec_store", buckets = 8))
       val job = graft.ext.VectorStore.streamIngestTrained(stream, "vec_id",
         "embedding", table = "x49_vec_store", buckets = 8, minCosine = 0.4,
         nProbe = 4, outPath = out, checkpoint = chk, compactEvery = 1)
@@ -2177,7 +2146,6 @@ object ExtQueries {
         graft.util.Sessions.streamingShufflePartitions) {
       val root = java.nio.file.Files.createTempDirectory("graft-x51-")
       val in = root.resolve("in"); val out = s"$root/out"; val chk = s"$root/chk"
-      java.nio.file.Files.createDirectories(in)
       val docs = documents(s, d).select(col("doc_id"), col("text"))
       def recrawl(pred: org.apache.spark.sql.Column, offset: Long) =
         docs.filter(pred).select((col("doc_id") + offset).as("doc_id"),
@@ -2190,20 +2158,10 @@ object ExtQueries {
           col("doc_id") % 4 === 1, 200000L))
         .unionByName(recrawl(col("doc_id") % 3 === 0 &&
           col("doc_id") % 5 === 0, 300000L))
-      def stage(shard: org.apache.spark.sql.DataFrame, name: String, ts: Long): Unit =
-        graft.util.Staging.stageWave(shard, in, name, ts)
-      // store build ∥ wave staging (guide §2.6); wave order is carried
-      // by the explicit mod times
-      graft.core.Bucketing.inParallel(
+      val stream = graft.util.Staging.stagedStream(in, Seq(shard1, shard2))(
         graft.ext.ExactDedup.writeFingerprintStore(
           docs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
-          table = "x51_fp_store", buckets = 8),
-        {
-          stage(shard1, "shard1.parquet", 1704067200000L)
-          stage(shard2, "shard2.parquet", 1704067260000L)
-        })
-      val stream = s.readStream.schema(shard1.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in.toString)
+          table = "x51_fp_store", buckets = 8))
       graft.ext.ExactDedup.streamIngest(stream, "doc_id", "text",
           table = "x51_fp_store", buckets = 8, outPath = out,
           checkpoint = chk, maxFilesPerBucket = 1)
@@ -3793,27 +3751,15 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
         graft.util.Sessions.streamingShufflePartitions) {
       val root = java.nio.file.Files.createTempDirectory("graft-x76-")
       val in = root.resolve("in"); val chk = s"$root/chk"
-      java.nio.file.Files.createDirectories(in)
       val docs = documents(s, d)
       val bench = docs.filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"), col("text"))
-      def stage(wave: org.apache.spark.sql.DataFrame, name: String,
-                ts: Long): Unit =
-        graft.util.Staging.stageWave(wave, in, name, ts)
-      // store build ∥ wave staging (guide §2.6); wave order is carried
-      // by the explicit mod times
-      graft.core.Bucketing.inParallel(
+      val stream = graft.util.Staging.stagedStream(in,
+          Seq(bench.filter(col("doc_id") % 3 === 1),
+            bench.filter(col("doc_id") % 3 === 2)))(
         Decontaminate.writeBenchmarkStore(
           bench.filter(col("doc_id") % 3 === 0),
-          "text", n = 8, table = "x76_bench", buckets = 8),
-        {
-          stage(bench.filter(col("doc_id") % 3 === 1), "wave1.parquet",
-            1704067200000L)
-          stage(bench.filter(col("doc_id") % 3 === 2), "wave2.parquet",
-            1704067260000L)
-        })
-      val stream = s.readStream.schema(bench.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in.toString)
+          "text", n = 8, table = "x76_bench", buckets = 8))
       Decontaminate.streamIngestBenchmark(stream, "text", "x76_bench",
           buckets = 8, checkpoint = chk, maxFilesPerBucket = 1)
         .awaitTermination()
@@ -4730,31 +4676,20 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
         graft.util.Sessions.streamingShufflePartitions) {
       val root = java.nio.file.Files.createTempDirectory("graft-x93-")
       val in = root.resolve("in"); val chk = s"$root/chk"
-      java.nio.file.Files.createDirectories(in)
       val docs = documents(s, d)
       val labeled = docs.select(col("doc_id"),
         when(col("source").isin(curatedSources: _*), lit(1))
           .otherwise(lit(0)).as("label"),
         col("text"))
-      // store build ∥ wave staging (guide §2.6); wave order is carried
-      // by the explicit mod times
-      graft.core.Bucketing.inParallel(
+      val stream = graft.util.Staging.stagedStream(in,
+          Seq(labeled.filter(col("doc_id") % 3 === 1),
+            labeled.filter(col("doc_id") % 3 === 2)))(
         QualityClassifier.writeClassifierStore(
           labeled.filter(col("label") === 1 && col("doc_id") % 3 === 0)
             .select("doc_id", "text"),
           labeled.filter(col("label") === 0 && col("doc_id") % 3 === 0)
             .select("doc_id", "text"),
-          "text", "x93_cls", buckets = 8),
-        {
-          graft.util.Staging.stageWave(
-            labeled.filter(col("doc_id") % 3 === 1),
-            in, "wave1.parquet", 1704067200000L)
-          graft.util.Staging.stageWave(
-            labeled.filter(col("doc_id") % 3 === 2),
-            in, "wave2.parquet", 1704067260000L)
-        })
-      val stream = s.readStream.schema(labeled.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in.toString)
+          "text", "x93_cls", buckets = 8))
       QualityClassifier.streamIngestClassifier(stream, "label", "text",
           "x93_cls", buckets = 8, checkpoint = chk, maxFilesPerBucket = 1)
         .awaitTermination()
@@ -5834,22 +5769,13 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
         graft.util.Sessions.streamingShufflePartitions) {
       val root = java.nio.file.Files.createTempDirectory("graft-x115-")
       val in = root.resolve("in"); val chk = s"$root/chk"
-      java.nio.file.Files.createDirectories(in)
       val docs = documents(s, d).select(col("doc_id"), col("text"))
-      // store build ∥ wave staging (guide §2.6); wave order is carried
-      // by the explicit mod times
-      graft.core.Bucketing.inParallel(
+      val stream = graft.util.Staging.stagedStream(in,
+          Seq(docs.filter(col("doc_id") % 3 === 1),
+            docs.filter(col("doc_id") % 3 === 2)))(
         graft.ext.Winnowing.writeWinnowStore(
           docs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
-          k = 3, w = 4, table = "x115_winnow_store", buckets = 8),
-        {
-          graft.util.Staging.stageWave(docs.filter(col("doc_id") % 3 === 1),
-            in, "wave1.parquet", 1704067200000L)
-          graft.util.Staging.stageWave(docs.filter(col("doc_id") % 3 === 2),
-            in, "wave2.parquet", 1704067260000L)
-        })
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in.toString)
+          k = 3, w = 4, table = "x115_winnow_store", buckets = 8))
       graft.ext.Winnowing.streamIngestWinnow(stream, "doc_id", "text",
           table = "x115_winnow_store", buckets = 8, checkpoint = chk,
           compactEvery = 1)
@@ -6239,27 +6165,19 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
       // the two tokenizer FITS are independent driver-sequential job
       // loops (BPE merge rounds, unigram EM rounds) — each leaves most
       // cores idle between its tiny jobs, so overlap them from two
-      // driver threads (guide §2.6, the Bucketing.inParallel rationale)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fMerges = Future {
+      // driver threads (guide §2.6); a failed fit cancels its sibling
+      val (merges, probs) = graft.core.Bucketing.inParallel(
         Bpe.fitMerges(docs, "text", numMerges = bpeK)
           .orderBy("step").collect()
-          .map(r => (r.getString(1), r.getString(2))).toSeq
-      }
-      val fProbs = Future {
+          .map(r => (r.getString(1), r.getString(2))).toSeq,
         graft.ext.Unigram.fit(docs, "text", vocabSize = ugV,
             maxPieceLen = ugL, rounds = ugR)
-          .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
-      }
-      val merges = Await.result(fMerges, Duration.Inf)
+          .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap)
       val bpe = Bpe.fertilityCard(docs, "source", "text",
           Bpe.encodeWords(Bpe.wordSymbols(docs, "text"), merges))
         .select(col("source"), col("n_words"),
           col("n_pieces").as("bpe_pieces"),
           col("fertility").as("bpe_fertility"))
-      val probs = Await.result(fProbs, Duration.Inf)
       val ug = graft.ext.Unigram.fertilityCard(docs, "source", "text",
           probs, ugL)
         .select(col("source"), col("n_pieces").as("ug_pieces"),

@@ -5,6 +5,8 @@ import java.nio.file.attribute.FileTime
 
 import org.apache.spark.sql.DataFrame
 
+import graft.core.Bucketing
+
 /** Fixture plumbing for the streamed-ingest checked queries and specs:
   * stage a DataFrame as ONE parquet file with a pinned modification
   * time under a file-stream input directory. The file source orders
@@ -30,5 +32,20 @@ object Staging {
     val dest = destDir.resolve(name)
     Files.copy(part, dest)
     Files.setLastModifiedTime(dest, FileTime.fromMillis(ts))
+  }
+
+  /** Build a store and stage `waves` under `dir` concurrently —
+    * independent side effects into disjoint locations (guide §2.6) —
+    * then open the file stream that replays the waves one micro-batch
+    * each (`maxFilesPerTrigger = 1`). Wave ORDER is carried by pinned
+    * modification times one minute apart, not by staging order. */
+  def stagedStream(dir: Path, waves: Seq[DataFrame])(build: => Unit): DataFrame = {
+    Files.createDirectories(dir)
+    Bucketing.inParallel(build,
+      waves.zipWithIndex.foreach { case (w, i) =>
+        stageWave(w, dir, s"wave${i + 1}.parquet", 1704067200000L + 60000L * i)
+      })
+    waves.head.sparkSession.readStream.schema(waves.head.schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir.toString)
   }
 }

@@ -513,6 +513,42 @@ class BucketingSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS bkt_stale__compact")
     }
   }
+
+  test("inParallel: when both sides fail, the rethrown failure carries the other as suppressed") {
+    spark // the session whose jobs inParallel tags
+    val e = intercept[RuntimeException] {
+      graft.core.Bucketing.inParallel(throw new IllegalStateException("left"),
+        throw new IllegalArgumentException("right"))
+    }
+    assert(Set("left", "right")(e.getMessage))
+    val other = if (e.getMessage == "left") "right" else "left"
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq(other),
+      "the second failure must ride along, not be swallowed")
+    assert(graft.core.Bucketing.inParallel(1 + 1, "b") == ((2, "b")))
+  }
+
+  test("inParallel: a failing side cancels its sibling's running job; both settle first") {
+    val sc = spark.sparkContext
+    val t0 = System.nanoTime()
+    def secs = (System.nanoTime() - t0) / 1e9
+    val e = intercept[IllegalStateException] {
+      graft.core.Bucketing.inParallel(
+        {
+          while (sc.statusTracker.getActiveJobIds().isEmpty && secs < 30)
+            Thread.sleep(10)
+          throw new IllegalStateException("left failed")
+        },
+        sc.parallelize(Seq(1), 1).foreach { _ =>
+          val start = System.nanoTime()
+          while (!org.apache.spark.TaskContext.get().isInterrupted() &&
+              System.nanoTime() - start < 60e9) Thread.sleep(20)
+        })
+    }
+    assert(e.getMessage == "left failed")
+    assert(e.getSuppressed.length == 1,
+      "the cancelled sibling settles and its failure rides along")
+    assert(secs < 30, s"the sibling's job must be cancelled, not awaited ($secs s)")
+  }
 }
 
 /** A-family percentiles: the approx sketch (the 100 TB path) must land

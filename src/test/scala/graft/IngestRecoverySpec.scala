@@ -5,7 +5,7 @@ import graft.ext.{IncrementalDedup, VectorStore}
 import org.apache.spark.sql.functions._
 
 /** Crash-recovery semantics of the two-phase ingest ledger
-  * ([[graft.core.IngestLedger]] + [[graft.core.Reconcile]]): every
+  * ([[graft.core.IngestLedger]] + [[graft.core.StoreLifecycle]]): every
   * crash point of `ingestBatch`'s append phase is simulated and the
   * replay must converge verdicts, store, and counts to the EXACT
   * single-append state. The simulations drive the same public surface
