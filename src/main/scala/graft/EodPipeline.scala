@@ -8,7 +8,7 @@ import graft.metrics.{Audit, PostMergeMetrics, PreMergeMetrics}
 import graft.quality.Gates
 import graft.schema.Schemas
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -18,14 +18,21 @@ import org.apache.spark.sql.types.StructType
   * fact → postmerge`) collapsed into one driver call per trading date.
   *
   * Layer tables are parquet directories under `warehouseDir`, partitioned
-  * by `trade_date` where date-scoped (RAW/CORE/REJECT/FACT) so every
-  * incremental run prunes to one partition and rewrites only it
-  * (dynamic partition overwrite = the MERGE of SURVEY.md §2.5).
+  * by `trade_date` where date-scoped (RAW/CORE/REJECT/FACT). Each layer
+  * gets only the write its semantics need:
+  *   - RAW, REJECT, `dim_security` and `dim_date` are insert-only (COPY
+  *     appends, `WHEN NOT MATCHED THEN INSERT` merges): their new rows
+  *     are appended as one file (per date partition), never rewriting
+  *     what is there;
+  *   - CORE, the one layer that rewrites what it reads, goes through a
+  *     scratch copy and a dynamic overwrite of its date partition (the
+  *     MERGE of SURVEY.md §2.5);
+  *   - FACT overwrites its date partition directly: its plan never reads
+  *     FACT.
+  * The post-merge counts are observed on the CORE and FACT writes.
   *
   * Storage goes through the Hadoop `FileSystem` API, so the warehouse can
-  * live on any supported filesystem (file:/, hdfs:/, s3a:/ ...). One
-  * caveat is documented on [[EodPipeline.replace]]: the dim swap uses
-  * rename, which is atomic on HDFS/local but copy-based on object stores.
+  * live on any supported filesystem (file:/, hdfs:/, s3a:/ ...).
   */
 final case class RunResult(tradeDate: java.sql.Date,
                            pre: PreMergeMetrics, post: PostMergeMetrics)
@@ -37,11 +44,9 @@ class EodPipeline(spark: SparkSession, warehouseDir: String) {
   private val fs: FileSystem =
     new Path(warehouseDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def exists(p: String): Boolean = fs.exists(new Path(p))
-
   private def readOrEmpty(t: String, schema: StructType): DataFrame = {
     val p = path(t)
-    if (exists(p)) spark.read.schema(schema).parquet(p)
+    if (fs.exists(new Path(p))) spark.read.schema(schema).parquet(p)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
@@ -54,7 +59,10 @@ class EodPipeline(spark: SparkSession, warehouseDir: String) {
     * too. `forceReload = true` reproduces the reference's literal
     * `FORCE=TRUE` (`dags/sql/1. copy_to_raw.sql:39`): blind re-append —
     * RAW then duplicates on rerun exactly as the reference's would, and
-    * downstream stays correct through the latest-wins dedup. */
+    * downstream stays correct through the latest-wins dedup.
+    *
+    * The parsed bronze rows are persisted for the run, so the CSV is
+    * scanned once, skip count included. */
   def run(bronzeCsvPath: String, runDate: java.sql.Date,
           ingestTs: Option[java.sql.Timestamp] = None,
           forceReload: Boolean = false): RunResult = {
@@ -62,11 +70,13 @@ class EodPipeline(spark: SparkSession, warehouseDir: String) {
     // grain (before date scoping — a skipped row has no parseable
     // trade_date to scope by): rows_parsed − rows_loaded, the COPY
     // load-history number (`1. copy_to_raw.sql:38` ON_ERROR=CONTINUE).
-    val parsed = EodCsvSource.readParsed(spark, bronzeCsvPath, ingestTs)
-    val skipped = parsed.filter(EodCsvSource.keyFieldsMissing).count()
-    val batch = EodCsvSource.forDate(
-      parsed.filter(!EodCsvSource.keyFieldsMissing), runDate)
-    runBatch(batch, runDate, ingestTs, forceReload, skippedCnt = skipped)
+    val parsed = EodCsvSource.readParsed(spark, bronzeCsvPath, ingestTs).persist()
+    try {
+      val skipped = parsed.filter(EodCsvSource.keyFieldsMissing).count()
+      val batch = EodCsvSource.forDate(
+        parsed.filter(!EodCsvSource.keyFieldsMissing), runDate)
+      runBatch(batch, runDate, ingestTs, forceReload, skippedCnt = skipped)
+    } finally { parsed.unpersist(); () }
   }
 
   /** [[run]] under the reference's task-retry policy
@@ -74,9 +84,10 @@ class EodPipeline(spark: SparkSession, warehouseDir: String) {
     * [[graft.util.Retry]]): transient failures (a source outage, an
     * object-store blip) retry whole-stage like the reference's Airflow
     * tasks; deterministic failures exhaust the budget and rethrow.
-    * Safe to re-enter mid-cascade: RAW appends are load-history-guarded
-    * by `_src_file` and every merge is rerun-idempotent
-    * (EodPipelineSpec pins both). */
+    * Safe to re-enter mid-cascade: every append is whole or absent and
+    * its anti-join skips what already landed, and the CORE and FACT
+    * overwrites are rerun-idempotent (EodPipelineSpec and EodRecoverySpec
+    * pin both). */
   def runWithRetry(bronzeCsvPath: String, runDate: java.sql.Date,
                    ingestTs: Option[java.sql.Timestamp] = None,
                    forceReload: Boolean = false,
@@ -89,75 +100,91 @@ class EodPipeline(spark: SparkSession, warehouseDir: String) {
   /** The cascade from an already-read RAW-shaped batch (one run date).
     * This is the entry point the streaming variant reuses per micro-batch
     * (SURVEY.md §2.9) — stages t04.2..t04.7 are identical in batch and
-    * streaming. */
+    * streaming. The batch is persisted for the cascade, so its source is
+    * read once, and unpersisted when the cascade ends. The tables are
+    * written in a fixed order: RAW, REJECT, CORE, `dim_security`,
+    * `dim_date`, FACT. */
   def runBatch(batch: DataFrame, runDate: java.sql.Date,
                ingestTs: Option[java.sql.Timestamp] = None,
                forceReload: Boolean = false,
                skippedCnt: Long = 0L): RunResult = {
-    // t04.2 check (A2)
-    Gates.requireNonEmpty(batch, s"raw batch $runDate")
+    val raw = batch.persist()
+    try {
+      // t04.2 check (A2)
+      Gates.requireNonEmpty(raw, s"raw batch $runDate")
 
-    // RAW is append-only per date: existing partition rows survive new
-    // files for the same date (the reference's RAW never drops rows).
-    val raw0 = readOrEmpty(RawTable, Schemas.raw)
-      .filter(col("trade_date") === lit(runDate))
-    val rawIncoming =
-      if (forceReload) batch
-      else batch.join(raw0.select("_src_file").distinct(), Seq("_src_file"), "left_anti")
-    writeDatePartition(raw0.unionByName(rawIncoming), RawTable, runDate)
+      // RAW is append-only per date: a file already loaded for the date
+      // is skipped (COPY load history) unless reloading by force
+      val rawNew =
+        if (forceReload) raw
+        else raw.join(dateSlice(RawTable, Schemas.raw, runDate).select("_src_file").distinct(),
+          Seq("_src_file"), "left_anti")
+      append(rawNew, RawTable)
 
-    // t04.3 premerge metrics (Q1) — against CORE as it stands
-    val core0 = readOrEmpty(CoreTable, Schemas.core)
-    val pre = Audit.preMerge(batch, core0, skippedCnt)
+      // t04.3 premerge metrics (Q1) — against CORE as it stands
+      val core0 = readOrEmpty(CoreTable, Schemas.core)
+      val pre = Audit.preMerge(raw, core0, skippedCnt)
 
-    // t04.4 merge_core: reject quarantine (M1) + dedup (W1) + upsert (M2).
-    // Symbols are normalized BEFORE the dedup window (the reference's
-    // src_raw CTE, `4. merge_core.sql:58`) so case/whitespace variants of
-    // one ticker collapse into one dedup group; same for the reject rows
-    // (`4. merge_core.sql:28`). Null-volume rows land in neither branch
-    // (reference three-valued `>= 0` / `< 0` — see Gates.referenceSplit).
-    val normalized = batch.withColumn("symbol", upper(trim(col("symbol"))))
-    val (valid, rejects) = Gates.referenceSplit(normalized)
-    val reject0 = readOrEmpty(RejectTable, Schemas.reject)
-      .filter(col("trade_date") === lit(runDate))
-    val rejectNew = Upsert.insertOnly(
-      reject0, Gates.annotateReject(rejects, "NEGATIVE_VOLUME"),
-      Seq("symbol", "trade_date"))
-    writeDatePartition(rejectNew, RejectTable, runDate)
+      // t04.4 merge_core: reject quarantine (M1) + dedup (W1) + upsert (M2).
+      // Symbols are normalized BEFORE the dedup window (the reference's
+      // src_raw CTE, `4. merge_core.sql:58`) so case/whitespace variants of
+      // one ticker collapse into one dedup group; same for the reject rows
+      // (`4. merge_core.sql:28`). Null-volume rows land in neither branch
+      // (reference three-valued `>= 0` / `< 0` — see Gates.referenceSplit).
+      val normalized = raw.withColumn("symbol", upper(trim(col("symbol"))))
+      val (valid, rejects) = Gates.referenceSplit(normalized)
+      append(Upsert.newRows(dateSlice(RejectTable, Schemas.reject, runDate),
+        Gates.annotateReject(rejects, "NEGATIVE_VOLUME"), Seq("symbol", "trade_date")),
+        RejectTable)
 
-    val loadTs = ingestTs.map(t => lit(t)).getOrElse(current_timestamp())
-    val deduped = Dedup.latestIngestWins(valid)
-      .select(col("trade_date"), col("symbol"),
-        col("open"), col("high"), col("low"), col("close"), col("volume"))
-      .withColumn("load_ts", loadTs)
-    val coreNew = Upsert.merge(
-      core0.filter(col("trade_date") === lit(runDate)), deduped,
-      Seq("symbol", "trade_date"))
-    writeDatePartition(coreNew, CoreTable, runDate)
+      val loadTs = ingestTs.map(t => lit(t)).getOrElse(current_timestamp())
+      val deduped = Dedup.latestIngestWins(valid)
+        .select(col("trade_date"), col("symbol"),
+          col("open"), col("high"), col("low"), col("close"), col("volume"))
+        .withColumn("load_ts", loadTs)
+      val coreRows = writeDatePartition(Upsert.merge(
+        core0.filter(col("trade_date") === lit(runDate)), deduped,
+        Seq("symbol", "trade_date")), CoreTable, runDate)
 
-    // t04.5 dims (M3/M4) — insert-only, not date-partitioned
-    val dim0 = readOrEmpty(DimSecurityTable, Schemas.dimSecurity)
-    val dimSec = DimSecurity.merge(dim0, deduped.select("symbol"))
-    replace(dimSec, path(DimSecurityTable))
+      // t04.5 dims (M3/M4) — insert-only, not date-partitioned
+      append(DimSecurity.newRows(readOrEmpty(DimSecurityTable, Schemas.dimSecurity),
+        deduped.select("symbol")), DimSecurityTable)
+      append(Upsert.newRows(readOrEmpty(DimDateTable, Schemas.dimDate),
+        DimDate.derive(deduped.select("trade_date"), "trade_date"), Seq("date_sk")),
+        DimDateTable)
 
-    val dimDate0 = readOrEmpty(DimDateTable, Schemas.dimDate)
-    val dimDate = Upsert.insertOnly(dimDate0,
-      DimDate.derive(deduped.select("trade_date"), "trade_date"), Seq("date_sk"))
-    replace(dimDate, path(DimDateTable))
+      // t04.6 fact (J3/M5); t04.7 postmerge metrics (Q2) are observed on
+      // the CORE and FACT writes
+      val fact = FactDailyPrice.build(dateSlice(CoreTable, Schemas.core, runDate),
+        readOrEmpty(DimSecurityTable, Schemas.dimSecurity),
+        readOrEmpty(DimDateTable, Schemas.dimDate))
+      val factRows = countWritten(fact)(
+        Upsert.overwriteDatePartition(spark, _, path(FactTable)))
+      RunResult(runDate, pre, PostMergeMetrics(coreRows, factRows))
+    } finally { raw.unpersist(); () }
+  }
 
-    // t04.6 fact (J3/M5)
-    val core1 = readOrEmpty(CoreTable, Schemas.core)
-      .filter(col("trade_date") === lit(runDate))
-    val factNew = FactDailyPrice.build(core1,
-      spark.read.parquet(path(DimSecurityTable)),
-      spark.read.parquet(path(DimDateTable)))
-    writeDatePartition(factNew, FactTable, runDate)
+  private def dateSlice(t: String, schema: StructType, d: java.sql.Date): DataFrame =
+    readOrEmpty(t, schema).filter(col("trade_date") === lit(d))
 
-    // t04.7 postmerge metrics (Q2)
-    val post = Audit.postMerge(
-      readOrEmpty(CoreTable, Schemas.core),
-      readOrEmpty(FactTable, Schemas.fact), runDate)
-    RunResult(runDate, pre, post)
+  /** Run `write` over `df` and return the rows it wrote, counted by an
+    * `Observation` in the same pass. */
+  private def countWritten(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val rows = Observation()
+    write(df.observe(rows, count(lit(1)).as("n")))
+    rows.get("n").asInstanceOf[Long]
+  }
+
+  /** Append `rows` to an insert-only table as one file (one per date
+    * partition of a date-partitioned table; a date's new rows are at most
+    * one bronze file's). With one writer task the commit is a single
+    * rename, so after a crash the append is whole or absent, and a
+    * re-run's anti-join skips exactly what landed. A dim with no new rows
+    * is not written: an empty write would still leave an empty file. */
+  private def append(rows: DataFrame, table: String): Unit = {
+    val w = rows.coalesce(1).write.mode("append")
+    if (table == RawTable || table == RejectTable) w.partitionBy("trade_date").parquet(path(table))
+    else if (!rows.isEmpty) w.parquet(path(table))
   }
 
   /** Overwrite one date partition with a result that was (lazily) derived
@@ -166,32 +193,15 @@ class EodPipeline(spark: SparkSession, warehouseDir: String) {
     * from" at best, partial-read data loss at worst), so the result is
     * first materialized to a scratch dir, re-read, and only then swapped
     * into the target partition. Two writes of ONE date's slice — bounded,
-    * partition-pruned IO, safe on any filesystem. */
-  private def writeDatePartition(df: DataFrame, table: String, d: java.sql.Date): Unit = {
+    * partition-pruned IO, safe on any filesystem. Returns the rows
+    * written. */
+  private def writeDatePartition(df: DataFrame, table: String, d: java.sql.Date): Long = {
     val scratch = s"$warehouseDir/_tmp/$table"
-    df.filter(col("trade_date") === lit(d))
-      .write.mode("overwrite").parquet(scratch)
+    val rows = countWritten(df.filter(col("trade_date") === lit(d)))(
+      _.write.mode("overwrite").parquet(scratch))
     Upsert.overwriteDatePartition(spark, spark.read.parquet(scratch), path(table))
     fs.delete(new Path(scratch), true)
-    ()
-  }
-
-  /** Small non-partitioned tables (dims): write to a scratch dir, then
-    * delete-and-rename into place via the Hadoop FileSystem API. Rename
-    * is atomic on HDFS/local but copy-based (non-atomic) on object
-    * stores; for the tiny dims the exposure window is milliseconds, and a
-    * production object-store deployment would point a catalog entry at
-    * the new dir instead (documented scope). */
-  private def replace(df: DataFrame, tablePath: String): Unit = {
-    val tmp = new Path(tablePath + "__tmp")
-    val target = new Path(tablePath)
-    df.write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(target)) fs.delete(target, true)
-    // rename signals failure via its return value, not an exception — an
-    // ignored false here would silently destroy the table we just deleted
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(
-        s"rename $tmp -> $target failed; new table preserved at $tmp")
+    rows
   }
 }
 

@@ -18,21 +18,26 @@ import org.apache.spark.sql.functions._
   *     survive. Equivalent to target LEFT ANTI source ∪ source.
   *
   * Scale notes (100 TB): the anti join shuffles on the merge key unless
-  * one side broadcasts — dims always broadcast; for the date-scoped fact
-  * and core merges, read ONLY the affected `trade_date=` partitions of the
-  * target (partition pruning), anti-join that slice, and rewrite it with
-  * `partitionOverwriteMode=dynamic` so untouched dates are never
+  * one side broadcasts — dims always broadcast. An insert-only table
+  * (RAW, REJECT, the dims) is never rewritten: only its [[newRows]] are
+  * appended, so a day's write is O(new rows), not O(table). The full
+  * upsert (CORE) reads ONLY the affected `trade_date=` partition of the
+  * target (partition pruning), anti-joins that slice, and rewrites it
+  * with `partitionOverwriteMode=dynamic` so untouched dates are never
   * re-written.
   */
 object Upsert {
 
-  /** Insert-only merge: rows of `source` whose key is absent in `target`,
-    * appended to `target` (J5 anti-join + union). Column sets must match. */
-  def insertOnly(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame = {
-    val newRows = source.join(target.select(keys.map(col): _*).distinct(),
-      keys, "left_anti")
-    target.unionByName(newRows)
-  }
+  /** The rows an insert-only merge adds: rows of `source` whose key is
+    * absent in `target` (J5 anti-join). An append of exactly these rows
+    * is the physical insert-only merge. */
+  def newRows(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame =
+    source.join(target.select(keys.map(col): _*).distinct(), keys, "left_anti")
+
+  /** Insert-only merge: [[newRows]] appended to `target`. Column sets
+    * must match. */
+  def insertOnly(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame =
+    target.unionByName(newRows(target, source, keys))
 
   /** Full upsert: every key present in `source` takes the source row
     * (unconditional update, matching the reference's real behavior — its

@@ -58,8 +58,10 @@ object DimSecurity {
     keys.select(col(keyCol))
       .repartitionByRange(col(keyCol)).sortWithinPartitions(keyCol)
 
-  /** Merge new symbols into an existing (security_id, symbol) dim. */
-  def merge(dim: DataFrame, incomingSymbols: DataFrame, symbolCol: String = "symbol"): DataFrame = {
+  /** The rows a [[merge]] adds: normalized incoming symbols absent from
+    * `dim`, with dense ids continuing from its max. Appending exactly
+    * these rows is the physical insert-only merge. */
+  def newRows(dim: DataFrame, incomingSymbols: DataFrame, symbolCol: String = "symbol"): DataFrame = {
     val nextId: Long = dim.agg(coalesce(max(col("security_id")), lit(0L)))
       .first().getLong(0) + 1L
     val normalized = incomingSymbols
@@ -67,8 +69,12 @@ object DimSecurity {
       .filter(col("symbol").isNotNull && col("symbol") =!= "")
       .distinct()
     val newSymbols = normalized.join(dim.select("symbol"), Seq("symbol"), "left_anti")
-    dim.unionByName(assignDenseIds(newSymbols, nextId))
+    assignDenseIds(newSymbols, nextId)
   }
+
+  /** Merge new symbols into an existing (security_id, symbol) dim. */
+  def merge(dim: DataFrame, incomingSymbols: DataFrame, symbolCol: String = "symbol"): DataFrame =
+    dim.unionByName(newRows(dim, incomingSymbols, symbolCol))
 
   /** An empty dim with the right schema, to bootstrap a warehouse. */
   def empty(spark: SparkSession): DataFrame =

@@ -225,16 +225,17 @@ object QualityClassifier {
 
   /** One exactly-once micro-batch of labeled training data — the
     * [[LmScore.ingestModelBatch]] count-delta protocol
-    * ([[graft.core.StoreLifecycle.ingestDeltas]]) after the store's
-    * contract check. */
+    * ([[graft.core.StoreLifecycle.ingestDeltas]]). The store's contract
+    * is checked only when the batch's deltas are built, so a committed
+    * replay skips without reading the store. */
   def ingestClassifierBatch(batch: DataFrame, batchId: Long,
                             labelCol: String, textCol: String,
-                            table: String, buckets: Int): Unit = {
-    requireClassifierContract(batch.sparkSession, table)
+                            table: String, buckets: Int): Unit =
     StoreLifecycle.ingestDeltas(batch.sparkSession, store(table, buckets),
-        batchId)(
-      fitLabeled(batch, labelCol, textCol).withColumn("batch_id", lit(batchId)))
-  }
+        batchId) {
+      requireClassifierContract(batch.sparkSession, table)
+      fitLabeled(batch, labelCol, textCol).withColumn("batch_id", lit(batchId))
+    }
 
   /** Collapse the store's delta generations to one row per (side, fp)
     * and prune the ledger — dangling-intent batches carried through

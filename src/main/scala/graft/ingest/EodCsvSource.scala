@@ -34,21 +34,30 @@ object EodCsvSource {
   val keyFieldsMissing: org.apache.spark.sql.Column =
     col("trade_date").isNull || col("symbol").isNull
 
+  // The COPY file format, shared by the batch and the streaming reader
+  private val Format = Map("header" -> "true", "nullValue" -> "NULL", "mode" -> "PERMISSIVE")
+
+  private def withLineage(csv: DataFrame, ingestTs: Option[java.sql.Timestamp]): DataFrame =
+    csv.withColumn("_src_file", input_file_name())
+      .withColumn("_ingest_ts", ingestTs.map(t => lit(t)).getOrElse(current_timestamp()))
+
   /** PERMISSIVE parse of one or more bronze CSV files (glob OK) into
     * RAW shape WITHOUT the skip filter — unparseable-key rows are
     * present with null keys, exactly `rows_parsed` grain. Use [[read]]
     * for the loaded rows; the difference is the skipped count. */
   def readParsed(spark: SparkSession, path: String,
-                 ingestTs: Option[java.sql.Timestamp] = None): DataFrame = {
-    val ts = ingestTs.map(t => lit(t)).getOrElse(current_timestamp())
-    spark.read
-      .schema(Schemas.bronzeCsv)
-      .option("header", "true")
-      .option("nullValue", "NULL")
-      .option("mode", "PERMISSIVE")
-      .csv(path)
-      .withColumn("_src_file", input_file_name())
-      .withColumn("_ingest_ts", ts)
+                 ingestTs: Option[java.sql.Timestamp] = None): DataFrame =
+    withLineage(spark.read.schema(Schemas.bronzeCsv).options(Format).csv(path), ingestTs)
+
+  /** The streaming twin of [[read]]: a file-source stream of the loaded
+    * rows of every bronze CSV file that lands under `path` (glob OK).
+    * `maxFilesPerTrigger` bounds a micro-batch. */
+  def readStream(spark: SparkSession, path: String,
+                 ingestTs: Option[java.sql.Timestamp] = None,
+                 maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val reader = spark.readStream.schema(Schemas.bronzeCsv).options(Format)
+    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
+    withLineage(reader.csv(path), ingestTs).filter(!keyFieldsMissing)
   }
 
   /** Read one or more bronze CSV files (glob OK) into RAW shape.

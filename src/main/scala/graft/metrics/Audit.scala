@@ -1,10 +1,13 @@
 package graft.metrics
 
+import graft.quality.Gates
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pre/post-merge audit metrics (SURVEY.md §2.7 Q1/Q2; reference
-  * `dags/sql/3. premerge_metrics.sql`, `8. postmerge_metrics.sql`).
+  * `dags/sql/3. premerge_metrics.sql`, `8. postmerge_metrics.sql`). The
+  * post-merge counts are observed on the CORE and FACT writes themselves
+  * ([[graft.EodPipeline]]), so they cost no job of their own.
   *
   * The reference stitches four scalar counts into one row via cross joins
   * of 1-row aggregates (`3. premerge_metrics.sql:50-53`) and ships it over
@@ -19,7 +22,9 @@ final case class PostMergeMetrics(coreRows: Long, factRows: Long)
 object Audit {
 
   /** Q1: given the raw batch (one date) and the current CORE table,
-    * compute (raw_cnt, reject_cnt, est_inserts, est_updates).
+    * compute (raw_cnt, reject_cnt, est_inserts, est_updates): one
+    * aggregate pass over the batch, plus the semi-join count of its
+    * valid keys already in CORE.
     * est_updates = |distinct valid keys ∩ core keys|; est_inserts =
     * |distinct valid keys| − est_updates — the invariant est_inserts +
     * est_updates = |distinct valid keys| holds by construction
@@ -36,24 +41,16 @@ object Audit {
     * the load passes it through. */
   def preMerge(raw: DataFrame, core: DataFrame,
                skippedCnt: Long = 0L): PreMergeMetrics = {
-    val rawCnt = raw.count()
-    val rejectCnt = raw.filter(graft.quality.Gates.negativeVolume).count()
-    val validKeys = raw.filter(graft.quality.Gates.validVolume)
-      .select(upper(trim(col("symbol"))).as("symbol"), col("trade_date"))
-      .distinct()
-    val existing = validKeys.join(
-      core.select(col("symbol"), col("trade_date")),
-      Seq("symbol", "trade_date"), "left_semi").count()
-    PreMergeMetrics(rawCnt, rejectCnt,
-      estInserts = validKeys.count() - existing, estUpdates = existing,
+    val key = Seq(upper(trim(col("symbol"))).as("symbol"), col("trade_date"))
+    val counts = raw.agg(count(lit(1)), count(when(Gates.negativeVolume, 1)),
+      count_distinct(when(Gates.validVolume, struct(key: _*)))).first()
+    val existing = raw.filter(Gates.validVolume).select(key: _*).distinct()
+      .join(core.select("symbol", "trade_date"), Seq("symbol", "trade_date"), "left_semi")
+      .count()
+    PreMergeMetrics(counts.getLong(0), counts.getLong(1),
+      estInserts = counts.getLong(2) - existing, estUpdates = existing,
       skippedCnt = skippedCnt)
   }
-
-  /** Q2: post-merge reconciliation counts for the run date. */
-  def postMerge(core: DataFrame, fact: DataFrame, runDate: java.sql.Date): PostMergeMetrics =
-    PostMergeMetrics(
-      core.filter(col("trade_date") === lit(runDate)).count(),
-      fact.filter(col("trade_date") === lit(runDate)).count())
 
   /** Q3 summary formatting (reference `dags/get_securities_data.py:186-206`)
     * — the run-summary text the reference posts to Slack, produced from

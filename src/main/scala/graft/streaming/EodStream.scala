@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.EodPipeline
-import graft.schema.Schemas
+import graft.ingest.EodCsvSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -36,35 +36,26 @@ object EodStream {
   def start(spark: SparkSession, bronzeGlob: String, warehouseDir: String,
             checkpointDir: String,
             ingestTs: Option[java.sql.Timestamp] = None,
-            maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val ts = ingestTs.map(t => lit(t)).getOrElse(current_timestamp())
-    val reader = spark.readStream
-      .schema(Schemas.bronzeCsv)
-      .option("header", "true")
-      .option("nullValue", "NULL")
-      .option("mode", "PERMISSIVE")
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.csv(bronzeGlob)
-      // same ON_ERROR=CONTINUE parity + lineage as EodCsvSource.read
-      .filter(col("trade_date").isNotNull && col("symbol").isNotNull)
-      .withColumn("_src_file", input_file_name())
-      .withColumn("_ingest_ts", ts)
-
-    stream.writeStream
+            maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    EodCsvSource.readStream(spark, bronzeGlob, ingestTs, maxFilesPerTrigger)
+      .writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val pipe = new EodPipeline(spark, warehouseDir)
-        // one cascade per trade date in the micro-batch (driver-side loop
-        // over the handful of distinct dates — bounded by the lookback
-        // window, reference `eod_data_downloader.py:29`)
-        val dates = batch.select("trade_date").distinct().collect()
-          .map(_.getDate(0)).sortBy(_.getTime)
-        dates.foreach { d =>
-          pipe.runBatch(batch.filter(col("trade_date") === lit(d)), d, ingestTs)
-          ()
-        }
+        // persisted, so the micro-batch's files are scanned once
+        val b = batch.persist()
+        try {
+          // one cascade per trade date in the micro-batch (driver-side
+          // loop over the handful of distinct dates — bounded by the
+          // lookback window, reference `eod_data_downloader.py:29`)
+          val dates = b.select("trade_date").distinct().collect()
+            .map(_.getDate(0)).sortBy(_.getTime)
+          dates.foreach { d =>
+            pipe.runBatch(b.filter(col("trade_date") === lit(d)), d, ingestTs)
+            ()
+          }
+        } finally { b.unpersist(); () }
       }
       .start()
-  }
 }

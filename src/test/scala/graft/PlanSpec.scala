@@ -415,10 +415,9 @@ class PlanSpec extends SparkSpec {
         s"single-stripe store must keep the constant bloom probe:\n${p1.take(800)}")
       assert(!p1.toLowerCase.contains("mappartitions"),
         "single-stripe store must not pay the mapPartitions probe")
-      // multi-stripe (capacity 1 forces 2 stripes): the BloomBench-adopted
-      // broadcast form — no bloom literals in the plan, a mapPartitions
-      // probe instead (the measured 4x/27x/52x decision, Decontaminate
-      // probeStriped docstring)
+      // multi-stripe (capacity 1 forces 2 stripes): the broadcast form —
+      // no bloom literals in the plan, a mapPartitions probe instead (the
+      // measured 4x/27x/52x decision, Decontaminate's PROBE-FORM DECISION)
       Decontaminate.writeBenchmarkStore(docs.filter(col("doc_id") === 0),
         "text", n = 3, table = "plan_bloom_2", buckets = 2,
         maxItemsPerBloom = 1)

@@ -171,6 +171,30 @@ class QualityClassifierSpec extends SparkSpec {
     }
   }
 
+  test("a committed replay skips without the store's meta; a new batch still refuses") {
+    val wave = pos.withColumn("label", lit(1))
+      .unionByName(neg.withColumn("label", lit(0)))
+    QualityClassifier.writeClassifierStore(pos, neg, "text",
+      "qc_replay", buckets = 2)
+    try {
+      QualityClassifier.ingestClassifierBatch(wave, 0L, "label", "text",
+        "qc_replay", buckets = 2)
+      spark.sql("DROP TABLE qc_replay_meta")
+      // batch 0 is committed: the replay is a no-op and reads no meta
+      QualityClassifier.ingestClassifierBatch(wave, 0L, "label", "text",
+        "qc_replay", buckets = 2)
+      val e = intercept[IllegalArgumentException] {
+        QualityClassifier.ingestClassifierBatch(wave, 1L, "label", "text",
+          "qc_replay", buckets = 2)
+      }
+      assert(e.getMessage.contains("re-run writeClassifierStore"))
+    } finally {
+      Seq("qc_replay", "qc_replay_meta").foreach(t =>
+        spark.sql(s"DROP TABLE IF EXISTS $t"))
+      graft.core.IngestLedger.reset(spark, "qc_replay")
+    }
+  }
+
   test("an empty positive corpus still scores: background vocab leans negative, novel vocab positive") {
     val s = spark
     import s.implicits._
