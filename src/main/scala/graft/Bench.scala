@@ -48,7 +48,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = graft.util.Sessions.harnessCores
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
     val spark = graft.util.Sessions.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -19,7 +19,8 @@ object EodDemo {
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse(
       Files.createTempDirectory("graft-demo").toString)
-    val spark = graft.util.Sessions.builder("local[4]", 4).getOrCreate()
+    val cpus = graft.util.Sessions.harnessCores
+    val spark = graft.util.Sessions.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val today = LocalDate.of(2026, 8, 10)

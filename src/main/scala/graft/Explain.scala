@@ -15,7 +15,7 @@ object Explain {
     val names = args(0).split(',').map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 2) args(2) else "/root/repo/plans/r21"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = graft.util.Sessions.harnessCores
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "")
     val spark = graft.util.Sessions.builder(s"local[$cpus]", cpus).getOrCreate()

@@ -35,7 +35,8 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = graft.util.Sessions.builder("local[4]", 4).getOrCreate()
+    val cpus = graft.util.Sessions.harnessCores
+    val spark = graft.util.Sessions.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     println("# Physical plans (explain formatted) - headline queries")
     println(s"\nGenerated by `graft.Plans` over `$sfDir`.\n")

@@ -8,7 +8,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = graft.util.Sessions.harnessCores
     val spark = graft.util.Sessions.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.util.Sessions.quietKnownWarnings()

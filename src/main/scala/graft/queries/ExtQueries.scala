@@ -13,6 +13,487 @@ import org.apache.spark.sql.types.DecimalType
   */
 object ExtQueries {
 
+  // ---- Shared oracle fragments --------------------------------------
+  // Each DuckDB primitive the oracles below reuse is written ONCE here
+  // and interpolated at every call site, so a fragment and its Spark
+  // twin can drift in one place only. Defined before the queries: the
+  // query vals read them during object initialization.
+
+  /** Normalized whitespace tokens `toks(doc_id, w)` per doc of `src` (the
+    * SQL twin of [[graft.ext.Ngrams.normTokens]] — lowering first makes
+    * collapse-then-split and split-directly identical token lists). */
+  private def toksOver(src: String): String =
+    raw"""toks AS MATERIALIZED (SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS w
+               FROM $src)"""
+
+  /** [[toksOver]] the `documents` table: the common oracle prelude. */
+  private val tokSql = toksOver("documents")
+
+  /** Word-3-gram shingles `sh<n>(doc_id, sgl)` of the token lists in
+    * `toks` — [[graft.ext.MinHash]]'s shingling at `shingleN = 3`. */
+  private def shingleSql(n: String = "", toks: String = "toks"): String =
+    s"""sh$n AS MATERIALIZED (SELECT doc_id,
+                 list_transform(range(0, len(w)-2), i -> w[i+1]||' '||w[i+2]||' '||w[i+3]) AS sgl
+               FROM $toks WHERE len(w) >= 3)"""
+
+  /** `sig<n>(doc_id, sg)`: 16-permutation MinHash signatures of the
+    * shingle hashes `hs<n>(doc_id, hh)` — [[graft.ext.MinHash]]'s
+    * universal-hash family (`(a·h + b) mod p`, LCG-drawn a and b,
+    * p = 10⁹+7), the one SQL copy of it. */
+  private def minHashSigSql(n: String = ""): String =
+    s"""sig$n AS MATERIALIZED (SELECT doc_id, list_transform(range(0,16), i ->
+                  list_min(list_transform(hh, h ->
+                    (((1103515245*(i+1) + 12345) % 1000000006 + 1) * h
+                      + (1103515245*(i+101) + 12345) % 1000000007) % 1000000007))) AS sg
+                FROM hs$n)"""
+
+  /** `bands<n>(doc_id, <band>, bk)`: the 4-band × 4-row LSH keys of
+    * `sig<n>`; `band` selects the band index (`b`, or `b AS bb`). */
+  private def minHashBandsSql(band: String, n: String = ""): String =
+    s"""bands$n AS MATERIALIZED (SELECT doc_id, $band,
+                    CAST(sg[4*b+1] AS VARCHAR)||'-'||CAST(sg[4*b+2] AS VARCHAR)
+                      ||'-'||CAST(sg[4*b+3] AS VARCHAR)||'-'||CAST(sg[4*b+4] AS VARCHAR) AS bk
+                  FROM sig$n, (SELECT unnest(range(0,4)) AS b))"""
+
+  /** The MinHash chain over `toks` at x08's parameters: shingles →
+    * 60-bit md5 hashes mod p → signatures → band keys. */
+  private def minHashSql(band: String = "b"): String =
+    s"""${shingleSql()},
+        hs AS MATERIALIZED (SELECT doc_id, list_transform(sgl, s ->
+                 CAST(CAST('0x'||substr(md5(s),1,15) AS UBIGINT) AS BIGINT) % 1000000007) AS hh
+               FROM sh),
+        ${minHashSigSql()},
+        ${minHashBandsSql(band)}"""
+
+  /** Transitive closure `reach(u, v)` of the undirected edges `(a, b)` in
+    * `pairs` — the connected-components oracle of
+    * [[graft.ext.DupClusters]]; needs a `WITH RECURSIVE` header. */
+  private def reachSql(pairs: String, a: String, b: String): String =
+    s"""e(u, v) AS (SELECT $a, $b FROM $pairs
+                    UNION SELECT $b, $a FROM $pairs),
+        reach(u, v) AS (SELECT u, v FROM e
+                        UNION SELECT r.u, e2.v FROM reach r JOIN e e2 ON r.v = e2.u)"""
+
+  /** x16's near-dup pair pipeline closed transitively: tokens, the
+    * MinHash chain, band candidates confirmed at est. Jaccard ≥ 0.5
+    * (`pairs(doc_a, doc_b)`), then [[reachSql]]. Splice after
+    * `WITH RECURSIVE`. */
+  private val nearDupReachSql =
+    s"""$tokSql,
+        ${minHashSql()},
+        cand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+                 FROM bands a JOIN bands b
+                   ON a.b = b.b AND a.bk = b.bk AND a.doc_id < b.doc_id),
+        pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM cand
+                  JOIN sig sa ON sa.doc_id = doc_a
+                  JOIN sig sb ON sb.doc_id = doc_b
+                  WHERE len(list_filter(list_zip(sa.sg, sb.sg), x -> x[1] = x[2])) >= 8),
+        ${reachSql("pairs", "doc_a", "doc_b")}"""
+
+  /** [[nearDupReachSql]] resolved to components: `comp(doc_id,
+    * canonical_id)`, the min id reachable from each paired doc. */
+  private val nearDupCompSql =
+    s"""$nearDupReachSql,
+        comp AS MATERIALIZED (SELECT u AS doc_id, least(u, min(v)) AS canonical_id
+                 FROM reach GROUP BY u)"""
+
+  /** x16's cluster oracle, shared verbatim by x35: label propagation and
+    * the star algorithm must produce identical clusters. */
+  private val nearDupClustersOracle =
+    s"""WITH RECURSIVE
+                 $nearDupReachSql
+            SELECT u AS doc_id, least(u, min(v)) AS canonical_id
+            FROM reach GROUP BY u ORDER BY doc_id"""
+
+  /** Cosine of the float lists `a` and `b`: sequential double folds of
+    * exact float products, bit-identical to [[graft.ext.Similarity]]. */
+  private def cosineSql(a: String, b: String): String =
+    s"""list_sum(list_transform(list_zip($a, $b),
+          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+        / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
+         * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))"""
+
+  /** Random-hyperplane LSH over the `dim`-float vectors `vec` of `src`
+    * (keyed by `id`): `sig` holds 16 sign bits, `bands` the 4 × 4-bit
+    * keys — the hyperplanes of [[graft.ext.Similarity.lshTopK]]. */
+  private def hyperplaneBandsSql(id: String, vec: String, dim: Int,
+                                 src: String): String =
+    s"""sig AS MATERIALIZED (SELECT $id, $vec,
+          list_transform(range(0,16), p -> CASE WHEN
+            list_sum(list_transform(list_zip($vec, range(0,$dim)),
+              x -> CAST(x[1] AS DOUBLE) *
+                   (CAST((1103515245*(p*$dim + x[2]) + 12345) % 2147483648 AS DOUBLE)
+                    / 2147483648.0 * 2 - 1))) >= 0
+            THEN 1 ELSE 0 END) AS sg
+        FROM $src),
+        bands AS MATERIALIZED (SELECT $id, b,
+                    sg[4*b+1]*8 + sg[4*b+2]*4 + sg[4*b+3]*2 + sg[4*b+4] AS bk
+                  FROM sig, (SELECT unnest(range(0,4)) AS b))"""
+
+  /** Per-`embedding` scores against x13's 16 LCG centroids (seed offset
+    * 100000, dim 64): projection onto each unnormalized centroid over its
+    * norm — [[graft.ext.Similarity.ivfTopK]]'s codebook, which the
+    * vector stores share. */
+  private val ivfScoresSql =
+    """list_transform(range(0,16), kk ->
+          list_sum(list_transform(list_zip(embedding, range(0,64)),
+            x -> CAST(x[1] AS DOUBLE) *
+                 (CAST((1103515245*(100000 + kk*64 + x[2]) + 12345) % 2147483648 AS DOUBLE)
+                  / 2147483648.0 * 2 - 1)))
+          / sqrt(list_sum(list_transform(range(0,64), j ->
+              (CAST((1103515245*(100000 + kk*64 + j) + 12345) % 2147483648 AS DOUBLE)
+               / 2147483648.0 * 2 - 1)
+              * (CAST((1103515245*(100000 + kk*64 + j) + 12345) % 2147483648 AS DOUBLE)
+                 / 2147483648.0 * 2 - 1)))))"""
+
+  /** [[graft.ext.KMeans]]'s integer quantization of `embeddings`:
+    * `q(vec_id, u)` and one row per coordinate, `ql(vec_id, pos, x)`. */
+  private val kmQuantSql =
+    """q AS MATERIALIZED (SELECT vec_id, list_transform(embedding,
+                 v -> CAST(floor(CAST(v AS DOUBLE)*1048576 + 0.5) AS BIGINT) + 2097152) AS u
+               FROM embeddings),
+        ql AS MATERIALIZED (SELECT vec_id, e.e.i AS pos, e.e.x AS x
+               FROM q, unnest(list_transform(generate_series(1, len(u)),
+                      i -> {'i': i-1, 'x': u[i]})) AS e(e))"""
+
+  /** x23's Lloyd rounds over `ql` with the `k` lowest ids as seeds: the
+    * round-1 assignment `m1`, the round-2 centroids `c1`, and every
+    * vector's distance to each of them, `d2(vec_id, cid, dist)`. */
+  private def kmLloydSql(k: Int): String =
+    s"""c0 AS MATERIALIZED (SELECT vec_id AS cid, pos, x AS c FROM ql WHERE vec_id < $k),
+        d1 AS MATERIALIZED (SELECT ql.vec_id, c0.cid, sum((ql.x - c0.c)*(ql.x - c0.c)) AS dist
+               FROM ql JOIN c0 USING (pos) GROUP BY 1, 2),
+        a1 AS MATERIALIZED (SELECT vec_id, cid,
+                 row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
+               FROM d1),
+        m1 AS MATERIALIZED (SELECT vec_id, cid FROM a1 WHERE rn = 1),
+        c1 AS MATERIALIZED (SELECT m1.cid, ql.pos,
+                 CAST((2*sum(ql.x) + count(*)) // (2*count(*)) AS BIGINT) AS c
+               FROM ql JOIN m1 USING (vec_id) GROUP BY 1, 2),
+        d2 AS MATERIALIZED (SELECT ql.vec_id, c1.cid, sum((ql.x - c1.c)*(ql.x - c1.c)) AS dist
+               FROM ql JOIN c1 USING (pos) GROUP BY 1, 2)"""
+
+  /** The 60-bit md5 fingerprint of the word 8-gram at position `i` of
+    * `w` — [[graft.ext.Decontaminate]]'s gram hash. */
+  private val gram8FpSql =
+    """CAST(CAST('0x'||substr(md5(array_to_string(w[i:i+7], ' ')),1,15) AS UBIGINT) AS BIGINT)"""
+
+  /** Every word-8-gram fingerprint of the token list `w`. */
+  private val gram8Sql =
+    s"""list_transform(generate_series(1, len(w)-7),
+          i -> $gram8FpSql)"""
+
+  /** `g(doc_id, gram_fp)`, one row per 8-gram of each `toks` doc, and its
+    * distinct set `dg`. */
+  private val gramsSql =
+    s"""g AS MATERIALIZED (SELECT doc_id, unnest($gram8Sql) AS gram_fp
+               FROM toks WHERE len(w) >= 8),
+        dg AS MATERIALIZED (SELECT DISTINCT doc_id, gram_fp FROM g)"""
+
+  /** Unigram and bigram fingerprints of the token list `w` — the gram
+    * keys of [[graft.ext.LmScore]]'s count model. */
+  private val unigramFpsSql =
+    """list_transform(generate_series(1, len(w)),
+          i -> CAST(CAST('0x'||substr(md5(w[i]),1,15) AS UBIGINT) AS BIGINT))"""
+  private val bigramFpsSql =
+    """list_transform(generate_series(1, len(w)-1),
+          i -> CAST(CAST('0x'||substr(md5(w[i]||' '||w[i+1]),1,15) AS UBIGINT) AS BIGINT))"""
+
+  /** `<name>(doc_id, uni_fp, bi_fp)`: one row per bigram position of the
+    * token lists in `src`, keyed for the count joins. */
+  private def lmPairsSql(name: String, src: String): String =
+    s"""$name AS MATERIALIZED (SELECT doc_id, u.pr.uf AS uni_fp, u.pr.bf AS bi_fp
+              FROM $src, unnest(list_transform(generate_series(1, len(w)-1),
+                i -> {'uf': CAST(CAST('0x'||substr(md5(w[i]),1,15) AS UBIGINT) AS BIGINT),
+                      'bf': CAST(CAST('0x'||substr(md5(w[i]||' '||w[i+1]),1,15) AS UBIGINT) AS BIGINT)})) AS u(pr)
+              WHERE len(w) >= 2)"""
+
+  /** The reference model's unigram (`<p>1`) and bigram (`<p>2`)
+    * `(fp, c)` counts over the rows of `src` that pass `filter`. */
+  private def lmCountsSql(p: String, src: String, filter: String): String =
+    s"""${p}1 AS MATERIALIZED (SELECT fp, count(*) AS c FROM (
+                 SELECT unnest($unigramFpsSql) AS fp
+                 FROM $src WHERE $filter AND len(w) >= 1)
+               GROUP BY fp),
+        ${p}2 AS MATERIALIZED (SELECT fp, count(*) AS c FROM (
+                 SELECT unnest($bigramFpsSql) AS fp
+                 FROM $src WHERE $filter AND len(w) >= 2)
+               GROUP BY fp)"""
+
+  /** Σ over a doc's bigrams of the transition probability `c(w₁w₂)/c(w₁)`
+    * quantized to floor(p·2³⁰) (unseen → 0), given the joined bigram and
+    * unigram count rows — [[graft.ext.LmScore]]'s order-free sum. */
+  private def lmSumQSql(bigram: String, unigram: String): String =
+    s"""CAST(sum(CAST(floor(COALESCE(CAST($bigram.c AS DOUBLE) / CAST($unigram.c AS DOUBLE), 0.0)
+                          * 1073741824.0) AS BIGINT)) AS BIGINT)"""
+
+  /** x03's digit and stopword ratio features of `text` (the twins of
+    * `TA.digitRatio` and `TA.stopwordRatio(_, TA.stopEn)`). */
+  private val qualityRatiosSql =
+    """CASE WHEN length(text) = 0 THEN 0.0
+             ELSE CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / length(text)
+        END AS digit_ratio,
+        CASE WHEN len(regexp_extract_all(lower(text), '[a-z]+')) = 0 THEN 0.0
+             ELSE CAST(len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
+                    x -> x IN ('the','a','of','and','to','in','is','it','for','on'))) AS DOUBLE)
+                  / len(regexp_extract_all(lower(text), '[a-z]+'))
+        END AS stop_ratio"""
+
+  /** x02's per-language scores `s_de … s_zh` over `toks` (lowered
+    * `[a-z]+` words) and `text` — the twin of `TA.langScores`. */
+  private val langScoresSql =
+    s"""${langScoreSql("s_de", "'der','die','das','und','ist','nicht','mit','ein','zu','den'")},
+        ${langScoreSql("s_en", "'the','a','of','and','to','in','is','it','for','on'")},
+        ${langScoreSql("s_es", "'el','la','que','y','en','un','es','los','se','del'")},
+        ${langScoreSql("s_fr", "'le','la','et','un','que','pour','dans','ce','une','sur'")},
+        CASE WHEN length(text) = 0 THEN 0.0
+             ELSE CAST(length(regexp_replace(text, '[\\x00-\\x7f]', '', 'g')) AS DOUBLE) / length(text)
+        END AS s_zh"""
+
+  /** A doc's global token offset: the running `n_tokens` sum over the
+    * docs before it in id order — [[graft.ext.Packing]]'s prefix sum. */
+  private val offsetSql =
+    """CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
+          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS "offset""""
+
+  /** x26's result over `rel(doc_id, n_tokens, offset)`: the first and
+    * last 512-token window each doc spans. */
+  private def packedBinsSql(rel: String): String =
+    s"""SELECT doc_id, n_tokens, "offset",
+               "offset" // 512 AS bin_start,
+               CASE WHEN n_tokens = 0 THEN "offset" // 512
+                    ELSE ("offset" + n_tokens - 1) // 512 END AS bin_end
+        FROM $rel ORDER BY doc_id"""
+
+  /** x130's token-id layout: dense ids for the pieces of `vocab(word,
+    * syms)` in piece order, each doc of `src` encoded word by word to
+    * `ids`, laid out by [[offsetSql]] and cut into 64-token windows —
+    * `segs(doc_id, n_tokens, ids, offset, bin)`, one row per window a
+    * doc touches. */
+  private def tokenIdSegsSql(vocab: String, src: String): String =
+    s"""pid AS MATERIALIZED (
+          SELECT piece,
+                 CAST(row_number() OVER (ORDER BY piece) - 1 AS BIGINT) AS pid
+          FROM (SELECT DISTINCT unnest(syms) AS piece FROM $vocab)),
+        wsym AS MATERIALIZED (
+          SELECT word, u.e.j AS j, u.e.s AS s
+          FROM $vocab, unnest(list_transform(generate_series(1, len(syms)),
+            i -> {'j': i, 's': syms[CAST(i AS INT)]})) AS u(e)),
+        wid AS MATERIALIZED (
+          SELECT ws.word, list(pid.pid ORDER BY ws.j) AS wids
+          FROM wsym ws JOIN pid ON pid.piece = ws.s GROUP BY ws.word),
+        dw AS MATERIALIZED (
+          SELECT doc_id, u.e.p AS p, u.e.wd AS word
+          FROM (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
+                FROM $src) t,
+               unnest(list_transform(generate_series(1, len(ws)),
+                 i -> {'p': i, 'wd': ws[CAST(i AS INT)]})) AS u(e)
+          WHERE len(ws) >= 1),
+        docids AS MATERIALIZED (
+          SELECT dw.doc_id, flatten(list(wid.wids ORDER BY dw.p)) AS ids
+          FROM dw JOIN wid ON wid.word = dw.word GROUP BY dw.doc_id),
+        costs AS MATERIALIZED (
+          SELECT d.doc_id, CAST(COALESCE(len(di.ids), 0) AS BIGINT) AS n_tokens,
+                 di.ids AS ids
+          FROM documents d LEFT JOIN docids di USING (doc_id)),
+        laid AS MATERIALIZED (
+          SELECT doc_id, n_tokens, ids,
+                 $offsetSql
+          FROM costs),
+        segs AS MATERIALIZED (
+          SELECT doc_id, n_tokens, ids, "offset",
+                 CAST(unnest(generate_series("offset" // 64,
+                   ("offset" + n_tokens - 1) // 64)) AS BIGINT) AS bin
+          FROM laid WHERE n_tokens > 0)"""
+
+  /** x130's result over [[tokenIdSegsSql]]: per (window, doc segment)
+    * the in-window offset and length, the head/tail flags and the
+    * segment's id slice, in window order. */
+  private val tokenIdWindowsSql =
+    """geo AS MATERIALIZED (
+          SELECT doc_id, ids, "offset", bin,
+                 greatest(0, "offset" - bin * 64) AS bin_offset,
+                 least(64, "offset" + n_tokens - bin * 64)
+                   - greatest(0, "offset" - bin * 64) AS seg_len,
+                 (bin = "offset" // 64) AS is_head,
+                 (bin = ("offset" + n_tokens - 1) // 64) AS is_tail
+          FROM segs)
+        SELECT bin, doc_id, bin_offset, seg_len, is_head, is_tail,
+               array_to_string(
+                 ids[CAST(bin * 64 + bin_offset - "offset" + 1 AS INT)
+                     : CAST(bin * 64 + bin_offset - "offset" + seg_len AS INT)],
+                 ' ') AS ids
+        FROM geo ORDER BY bin, bin_offset"""
+
+  /** x111's `corpus(doc_id, text)`: the documents plus a prefix-mutated
+    * twin (id + 300000) of every doc_id % 9 doc. */
+  private val twinnedCorpusSql =
+    """corpus AS MATERIALIZED (
+          SELECT doc_id, text FROM documents
+          UNION ALL
+          SELECT doc_id + 300000, 'mutated twin prefix ' || text
+          FROM documents WHERE doc_id % 9 = 0)"""
+
+  /** x40's PII-seeded text of each `documents` row (one email / IPv4 /
+    * phone appended per residue class of `doc_id`). */
+  private val piiSeededSql =
+    """text
+          || CASE WHEN doc_id % 5 = 0 THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com' ELSE '' END
+          || CASE WHEN doc_id % 7 = 0 THEN ' from 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.' || CAST((doc_id // 7) % 256 AS VARCHAR) ELSE '' END
+          || CASE WHEN doc_id % 11 = 0 THEN ' call 555-' || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ELSE '' END"""
+
+  /** x43's `docs(doc_id, text)`: every `doc_id % 7 = 0` text replaced by
+    * one boilerplate string, so its band keys run hot. */
+  private val boilerplateDocsSql =
+    """docs AS MATERIALIZED (SELECT doc_id,
+            CASE WHEN doc_id % 7 = 0
+                 THEN 'standard cookie banner please accept all cookies to continue reading'
+                 ELSE text END AS text
+          FROM documents)"""
+
+  /** x07's result over `scored(query_id, neighbor_id, sim)`: each
+    * query's 5 best neighbors, ties to the lower id. */
+  private val topKSql =
+    """r AS MATERIALIZED (SELECT query_id, neighbor_id, sim,
+                 row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rn
+               FROM scored)
+        SELECT query_id, CAST(rn AS INT) AS rank, neighbor_id, sim
+        FROM r WHERE rn <= 5 ORDER BY query_id, rank"""
+
+  /** `probes(new_id, qe, cell)`: the 4 best of 16 LCG cells of each `sc`
+    * vector (those passing `filter`, when given) — the store probes of
+    * [[graft.ext.VectorStore]]. */
+  private def ivfProbesSql(filter: String = ""): String =
+    s"""probes AS MATERIALIZED (SELECT new_id, qe, cell FROM (
+            SELECT vec_id AS new_id, embedding AS qe, CAST(j AS INT) AS cell,
+                   row_number() OVER (PARTITION BY vec_id
+                     ORDER BY scores[j+1] DESC, j) AS pr
+            FROM sc, (SELECT unnest(range(0,16)) AS j)${
+              if (filter.isEmpty) "" else s" WHERE $filter"})
+          WHERE pr <= 4)"""
+
+  /** `m(new_id, store_id)`: MinHash band candidates `pairs` confirmed at
+    * estimated Jaccard ≥ 0.5. */
+  private val minHashMatchSql =
+    """m AS MATERIALIZED (SELECT new_id, store_id
+              FROM pairs JOIN sig sa ON sa.doc_id = new_id
+                         JOIN sig sb ON sb.doc_id = store_id
+              WHERE len(list_filter(list_zip(sa.sg, sb.sg), x -> x[1] = x[2])) >= 8)"""
+
+  /** `f(doc_id, fp)`: x01's md5 fingerprint of normalized text
+    * (`TA.fingerprintMd5`). */
+  private val exactFpSql =
+    raw"""f AS MATERIALIZED (SELECT doc_id,
+                md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
+              FROM documents)"""
+
+  /** `tok(doc_id, lang, nt)`: each doc's normalized token count. */
+  private val langTokSql =
+    raw"""tok AS MATERIALIZED (SELECT doc_id, lang,
+           CAST(len(regexp_extract_all(lower(trim(text)), '\S+')) AS BIGINT) AS nt
+         FROM documents)"""
+
+  /** 10-token passages `p(doc_id, ps)` of each `toks` doc (one empty
+    * passage for an empty doc) — [[graft.ext.PassageDedup]]'s split. */
+  private val passagesSql =
+    """p AS MATERIALIZED (SELECT doc_id, CASE WHEN len(w) = 0 THEN ['']
+            ELSE list_transform(generate_series(0, CAST((len(w)-1)//10 AS INT)),
+                   c -> array_to_string(w[c*10+1:c*10+10], ' ')) END AS ps
+          FROM toks)"""
+
+  /** Copies of the doc `tk` at repeat factor `f.repeat_factor`: whole
+    * epochs plus one seeded md5-bucket draw for the fraction — the
+    * copy count of [[Mixing.materializeMixture]]. */
+  private val mixCopiesSql =
+    """CAST(floor(f.repeat_factor) AS BIGINT)
+          + (CASE WHEN CAST(CAST('0x'||substr(md5(CAST(tk.doc_id AS VARCHAR)),1,15) AS UBIGINT) AS BIGINT) % 10000
+                  < CAST(floor(f.repeat_factor * 10000.0) AS BIGINT)
+                    - CAST(floor(f.repeat_factor) AS BIGINT) * 10000
+                  THEN 1 ELSE 0 END) AS n_copies"""
+
+  // ---- Shared Spark-side fixtures -------------------------------------
+
+  /** Run the streamed checked query `body` under the streaming
+    * shuffle-partition count ([[graft.util.Sessions.withShufflePartitions]])
+    * with its fixture paths — the input directory `in`, the sink `out`
+    * and the checkpoint `chk` — under a fresh root `graft-<tag>-…` that
+    * is deleted at JVM exit (the returned frame reads the sink lazily). */
+  private def streamed(s: org.apache.spark.sql.SparkSession, tag: String)(
+      body: (java.nio.file.Path, String, String) => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    graft.util.Sessions.withShufflePartitions(s,
+        graft.util.Sessions.streamingShufflePartitions) {
+      val root = graft.util.Staging.exitScopedRoot(s"graft-$tag-")
+      body(root.resolve("in"), s"$root/out", s"$root/chk")
+    }
+
+  /** Drain `writer` into the parquet sink `out` (checkpoint `chk`) under
+    * one `Trigger.AvailableNow` run, then read the sink back through `s`. */
+  private def drain(s: org.apache.spark.sql.SparkSession,
+                    writer: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row],
+                    out: String, chk: String): org.apache.spark.sql.DataFrame = {
+    writer.format("parquet")
+      .option("path", out).option("checkpointLocation", chk)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    s.read.parquet(out)
+  }
+
+  /** Persist the %10 benchmark split of `docs` as the 8-gram benchmark
+    * store `table` ([[Decontaminate.writeBenchmarkStore]]). */
+  private def benchStore(docs: org.apache.spark.sql.DataFrame, table: String): Unit =
+    Decontaminate.writeBenchmarkStore(docs.filter(col("doc_id") % 10 === 0),
+      "text", n = 8, table = table, buckets = 8)
+
+  /** x40's PII seeding: `docs` plus `__seeded`, its text with one
+    * email / IPv4 / phone appended per residue class of `doc_id` (the
+    * twin of [[piiSeededSql]]). */
+  private def piiSeeded(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val id = col("doc_id")
+    docs.withColumn("__seeded", concat(
+      col("text"),
+      when(id % 5 === 0, concat(lit(" contact user"), id.cast("string"),
+        lit("@example.com"))).otherwise(lit("")),
+      when(id % 7 === 0, concat(lit(" from 10.0."), (id % 256).cast("string"),
+        lit("."), expr("(doc_id DIV 7) % 256").cast("string"))).otherwise(lit("")),
+      when(id % 11 === 0, concat(lit(" call 555-"),
+        lpad((id % 1000).cast("string"), 3, "0"), lit("-"),
+        lpad((id % 10000).cast("string"), 4, "0"))).otherwise(lit(""))))
+  }
+
+  /** x43's hot-key seeding: every `doc_id % 7 = 0` text of `docs`
+    * replaced by one boilerplate string (the twin of
+    * [[boilerplateDocsSql]]). */
+  private def boilerplateDocs(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    docs.withColumn("text", when(col("doc_id") % 7 === 0,
+      lit("standard cookie banner please accept all cookies to continue reading"))
+      .otherwise(col("text")))
+
+  /** x111's corpus: `docs` (doc_id, text) plus a prefix-mutated twin
+    * (id + 300000) of every doc_id % 9 doc — the twin of
+    * [[twinnedCorpusSql]]. */
+  private def twinnedCorpus(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val base = docs.select(col("doc_id"), col("text"))
+    base.unionByName(base.filter(col("doc_id") % 9 === 0)
+      .select((col("doc_id") + 300000L).as("doc_id"),
+        concat(lit("mutated twin prefix "), col("text")).as("text")))
+  }
+
+  /** x130's checked projection of a token-id window stream: ids as one
+    * space-joined string, in window order. */
+  private def idWindowRows(windows: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    windows.select(col("bin"), col("doc_id"), col("bin_offset"), col("seg_len"),
+        col("is_head"), col("is_tail"),
+        array_join(col("ids").cast("array<string>"), " ").as("ids"))
+      .orderBy("bin", "bin_offset")
+
+  /** x102's fitted BPE merges of `docs`, in merge order. */
+  private def bpeMerges(docs: org.apache.spark.sql.DataFrame): Seq[(String, String)] =
+    Bpe.fitMerges(docs, "text", numMerges = bpeK)
+      .orderBy("step").collect()
+      .map(r => (r.getString(1), r.getString(2))).toSeq
+
   /** Exact dedup: hash-groupBy on the md5 fingerprint of normalized text,
     * min-id canonical. */
   private val x01 = Q("x01_dedup_exact",
@@ -39,13 +520,7 @@ object ExtQueries {
     Some(s"""WITH t AS MATERIALIZED (SELECT doc_id, text,
                  regexp_extract_all(lower(text), '[a-z]+') AS toks FROM documents),
              sc AS MATERIALIZED (SELECT doc_id,
-               ${langScoreSql("s_de", "'der','die','das','und','ist','nicht','mit','ein','zu','den'")},
-               ${langScoreSql("s_en", "'the','a','of','and','to','in','is','it','for','on'")},
-               ${langScoreSql("s_es", "'el','la','que','y','en','un','es','los','se','del'")},
-               ${langScoreSql("s_fr", "'le','la','et','un','que','pour','dans','ce','une','sur'")},
-               CASE WHEN length(text) = 0 THEN 0.0
-                    ELSE CAST(length(regexp_replace(text, '[\\x00-\\x7f]', '', 'g')) AS DOUBLE) / length(text)
-               END AS s_zh
+               $langScoresSql
              FROM t)
              SELECT doc_id, s_de, s_en, s_es, s_fr, s_zh,
                CASE WHEN s_de >= greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'de'
@@ -79,15 +554,10 @@ object ExtQueries {
             + lit(0.3) * (lit(1.0) - col("digit_ratio")))
         .orderBy("doc_id")
     },
-    Some("""WITH f AS MATERIALIZED (SELECT doc_id,
+    Some(raw"""WITH f AS MATERIALIZED (SELECT doc_id,
               CAST(length(text) AS BIGINT) AS n_chars_calc,
               CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens,
-              CASE WHEN length(text) = 0 THEN 0.0
-                   ELSE CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / length(text) END AS digit_ratio,
-              CASE WHEN len(regexp_extract_all(lower(text), '[a-z]+')) = 0 THEN 0.0
-                   ELSE CAST(len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
-                          x -> x IN ('the','a','of','and','to','in','is','it','for','on'))) AS DOUBLE)
-                        / len(regexp_extract_all(lower(text), '[a-z]+')) END AS stop_ratio
+              $qualityRatiosSql
             FROM documents),
             g AS MATERIALIZED (SELECT *, CASE WHEN n_tokens = 0 THEN 0.0
                    ELSE CAST(n_chars_calc - n_tokens + 1 AS DOUBLE) / n_tokens END AS avg_token_len
@@ -150,12 +620,9 @@ object ExtQueries {
           "vec_id", "embedding", 5)
         .orderBy("query_id", "rank")
     },
-    Some("""WITH q AS MATERIALIZED (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 8),
+    Some(s"""WITH q AS MATERIALIZED (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 8),
                  s AS MATERIALIZED (SELECT qid, vec_id AS nid,
-                         list_sum(list_transform(list_zip(qe, embedding),
-                           x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                         / (sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                          * sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) AS sim
+                         ${cosineSql("qe", "embedding")} AS sim
                        FROM embeddings, q WHERE vec_id <> qid),
                  r AS MATERIALIZED (SELECT qid, nid, sim,
                          row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rn FROM s)
@@ -170,22 +637,8 @@ object ExtQueries {
     (s, d) => MinHash.nearDupPairs(documents(s, d), "doc_id", "text",
         shingleN = 3, numHashes = 16, nBands = 4, minJaccard = 0.5)
       .orderBy("doc_a", "doc_b"),
-    Some("""WITH toks AS MATERIALIZED (SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS w FROM documents),
-                 sh AS MATERIALIZED (SELECT doc_id,
-                          list_transform(range(0, len(w)-2), i -> w[i+1]||' '||w[i+2]||' '||w[i+3]) AS sgl
-                        FROM toks WHERE len(w) >= 3),
-                 hs AS MATERIALIZED (SELECT doc_id, list_transform(sgl, s ->
-                          CAST(CAST('0x'||substr(md5(s),1,15) AS UBIGINT) AS BIGINT) % 1000000007) AS hh
-                        FROM sh),
-                 sig AS MATERIALIZED (SELECT doc_id, list_transform(range(0,16), i ->
-                           list_min(list_transform(hh, h ->
-                             (((1103515245*(i+1) + 12345) % 1000000006 + 1) * h
-                               + (1103515245*(i+101) + 12345) % 1000000007) % 1000000007))) AS sg
-                         FROM hs),
-                 bands AS MATERIALIZED (SELECT doc_id, b,
-                             CAST(sg[4*b+1] AS VARCHAR)||'-'||CAST(sg[4*b+2] AS VARCHAR)
-                               ||'-'||CAST(sg[4*b+3] AS VARCHAR)||'-'||CAST(sg[4*b+4] AS VARCHAR) AS bk
-                           FROM sig, (SELECT unnest(range(0,4)) AS b)),
+    Some(s"""WITH $tokSql,
+                 ${minHashSql()},
                  pairs AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
                            FROM bands a JOIN bands b
                              ON a.b = b.b AND a.bk = b.bk AND a.doc_id < b.doc_id)
@@ -205,32 +658,15 @@ object ExtQueries {
           "vec_id", "embedding", k = 5, nBands = 4, bandBits = 4, dim = 64)
         .orderBy("query_id", "rank")
     },
-    Some("""WITH sig AS MATERIALIZED (SELECT vec_id, embedding,
-                   list_transform(range(0,16), p -> CASE WHEN
-                     list_sum(list_transform(list_zip(embedding, range(0,64)),
-                       x -> CAST(x[1] AS DOUBLE) *
-                            (CAST((1103515245*(p*64 + x[2]) + 12345) % 2147483648 AS DOUBLE)
-                             / 2147483648.0 * 2 - 1))) >= 0
-                     THEN 1 ELSE 0 END) AS sg
-                 FROM embeddings),
-                 bands AS MATERIALIZED (SELECT vec_id, b,
-                             sg[4*b+1]*8 + sg[4*b+2]*4 + sg[4*b+3]*2 + sg[4*b+4] AS bk
-                           FROM sig, (SELECT unnest(range(0,4)) AS b)),
+    Some(s"""WITH ${hyperplaneBandsSql("vec_id", "embedding", 64, "embeddings")},
                  cand AS MATERIALIZED (SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
                           FROM bands q JOIN bands c ON q.b = c.b AND q.bk = c.bk
                           WHERE q.vec_id < 8 AND c.vec_id <> q.vec_id),
                  scored AS MATERIALIZED (SELECT query_id, neighbor_id,
-                     list_sum(list_transform(list_zip(qe.embedding, ce.embedding),
-                       x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                     / (sqrt(list_sum(list_transform(qe.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                      * sqrt(list_sum(list_transform(ce.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) AS sim
+                     ${cosineSql("qe.embedding", "ce.embedding")} AS sim
                    FROM cand JOIN embeddings qe ON qe.vec_id = query_id
                              JOIN embeddings ce ON ce.vec_id = neighbor_id),
-                 r AS MATERIALIZED (SELECT query_id, neighbor_id, sim,
-                         row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rn
-                       FROM scored)
-            SELECT query_id, CAST(rn AS INT) AS rank, neighbor_id, sim
-            FROM r WHERE rn <= 5 ORDER BY query_id, rank"""))
+                 $topKSql"""))
 
   /** SimHash near-dup: 60-bit majority-vote fingerprint over shingle
     * hashes, 4×15-bit bands (exhaustive for Hamming ≤ 3), pairs with
@@ -239,10 +675,8 @@ object ExtQueries {
     (s, d) => SimHash.nearDupPairs(documents(s, d), "doc_id", "text",
         shingleN = 3, maxHamming = 3)
       .orderBy("doc_a", "doc_b"),
-    Some("""WITH toks AS MATERIALIZED (SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS w FROM documents),
-                 sh AS MATERIALIZED (SELECT doc_id,
-                          list_transform(range(0, len(w)-2), i -> w[i+1]||' '||w[i+2]||' '||w[i+3]) AS sgl
-                        FROM toks WHERE len(w) >= 3),
+    Some(s"""WITH $tokSql,
+                 ${shingleSql()},
                  hs AS MATERIALIZED (SELECT doc_id, list_transform(sgl, s ->
                           CAST(CAST('0x'||substr(md5(s),1,15) AS UBIGINT) AS BIGINT)) AS hh
                         FROM sh),
@@ -266,23 +700,14 @@ object ExtQueries {
     (s, d) => MinHash.exactJaccardPairs(documents(s, d), "doc_id", "text",
         shingleN = 3, numHashes = 16, nBands = 4, minJaccard = 0.8)
       .orderBy("doc_a", "doc_b"),
-    Some("""WITH toks AS MATERIALIZED (SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS w FROM documents),
-                 sh AS MATERIALIZED (SELECT doc_id,
-                          list_transform(range(0, len(w)-2), i -> w[i+1]||' '||w[i+2]||' '||w[i+3]) AS sgl
-                        FROM toks WHERE len(w) >= 3),
+    Some(s"""WITH $tokSql,
+                 ${shingleSql()},
                  hsraw AS MATERIALIZED (SELECT doc_id, list_transform(sgl, s ->
                              CAST(CAST('0x'||substr(md5(s),1,15) AS UBIGINT) AS BIGINT)) AS hraw
                            FROM sh),
                  hs AS MATERIALIZED (SELECT doc_id, list_transform(hraw, h -> h % 1000000007) AS hh FROM hsraw),
-                 sig AS MATERIALIZED (SELECT doc_id, list_transform(range(0,16), i ->
-                           list_min(list_transform(hh, h ->
-                             (((1103515245*(i+1) + 12345) % 1000000006 + 1) * h
-                               + (1103515245*(i+101) + 12345) % 1000000007) % 1000000007))) AS sg
-                         FROM hs),
-                 bands AS MATERIALIZED (SELECT doc_id, b,
-                             CAST(sg[4*b+1] AS VARCHAR)||'-'||CAST(sg[4*b+2] AS VARCHAR)
-                               ||'-'||CAST(sg[4*b+3] AS VARCHAR)||'-'||CAST(sg[4*b+4] AS VARCHAR) AS bk
-                           FROM sig, (SELECT unnest(range(0,4)) AS b)),
+                 ${minHashSigSql()},
+                 ${minHashBandsSql("b")},
                  pairs AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
                            FROM bands a JOIN bands b
                              ON a.b = b.b AND a.bk = b.bk AND a.doc_id < b.doc_id),
@@ -302,25 +727,12 @@ object ExtQueries {
     (s, d) => Similarity.nearDupPairs(embeddings(s, d), "vec_id", "embedding",
         minCosine = 0.4, nBands = 4, bandBits = 4, dim = 64)
       .orderBy("vec_a", "vec_b"),
-    Some("""WITH sig AS MATERIALIZED (SELECT vec_id, embedding,
-                   list_transform(range(0,16), p -> CASE WHEN
-                     list_sum(list_transform(list_zip(embedding, range(0,64)),
-                       x -> CAST(x[1] AS DOUBLE) *
-                            (CAST((1103515245*(p*64 + x[2]) + 12345) % 2147483648 AS DOUBLE)
-                             / 2147483648.0 * 2 - 1))) >= 0
-                     THEN 1 ELSE 0 END) AS sg
-                 FROM embeddings),
-                 bands AS MATERIALIZED (SELECT vec_id, b,
-                             sg[4*b+1]*8 + sg[4*b+2]*4 + sg[4*b+3]*2 + sg[4*b+4] AS bk
-                           FROM sig, (SELECT unnest(range(0,4)) AS b)),
+    Some(s"""WITH ${hyperplaneBandsSql("vec_id", "embedding", 64, "embeddings")},
                  pairs AS MATERIALIZED (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
                            FROM bands a JOIN bands b
                              ON a.b = b.b AND a.bk = b.bk AND a.vec_id < b.vec_id),
                  scored AS MATERIALIZED (SELECT vec_a, vec_b,
-                     list_sum(list_transform(list_zip(ea.embedding, eb.embedding),
-                       x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                     / (sqrt(list_sum(list_transform(ea.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                      * sqrt(list_sum(list_transform(eb.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) AS cos
+                     ${cosineSql("ea.embedding", "eb.embedding")} AS cos
                    FROM pairs JOIN embeddings ea ON ea.vec_id = vec_a
                               JOIN embeddings eb ON eb.vec_id = vec_b)
             SELECT vec_a, vec_b, cos FROM scored
@@ -336,17 +748,8 @@ object ExtQueries {
           "vec_id", "embedding", k = 5, nCentroids = 16, nProbe = 4, dim = 64)
         .orderBy("query_id", "rank")
     },
-    Some("""WITH sc AS MATERIALIZED (SELECT vec_id, embedding,
-                   list_transform(range(0,16), kk ->
-                     list_sum(list_transform(list_zip(embedding, range(0,64)),
-                       x -> CAST(x[1] AS DOUBLE) *
-                            (CAST((1103515245*(100000 + kk*64 + x[2]) + 12345) % 2147483648 AS DOUBLE)
-                             / 2147483648.0 * 2 - 1)))
-                     / sqrt(list_sum(list_transform(range(0,64), j ->
-                         (CAST((1103515245*(100000 + kk*64 + j) + 12345) % 2147483648 AS DOUBLE)
-                          / 2147483648.0 * 2 - 1)
-                         * (CAST((1103515245*(100000 + kk*64 + j) + 12345) % 2147483648 AS DOUBLE)
-                            / 2147483648.0 * 2 - 1))))) AS scores
+    Some(s"""WITH sc AS MATERIALIZED (SELECT vec_id, embedding,
+                   $ivfScoresSql AS scores
                  FROM embeddings),
                  assigned AS MATERIALIZED (SELECT vec_id, embedding,
                                 CAST(list_position(scores, list_max(scores)) - 1 AS INT) AS centroid
@@ -359,17 +762,10 @@ object ExtQueries {
                      WHERE vec_id < 8)
                    WHERE pr <= 4),
                  scored AS MATERIALIZED (SELECT DISTINCT query_id, a.vec_id AS neighbor_id,
-                     list_sum(list_transform(list_zip(p.qe, a.embedding),
-                       x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                     / (sqrt(list_sum(list_transform(p.qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                      * sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) AS sim
+                     ${cosineSql("p.qe", "a.embedding")} AS sim
                    FROM probes p JOIN assigned a
                      ON a.centroid = p.centroid AND a.vec_id <> p.query_id),
-                 r AS MATERIALIZED (SELECT query_id, neighbor_id, sim,
-                         row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rn
-                       FROM scored)
-            SELECT query_id, CAST(rn AS INT) AS rank, neighbor_id, sim
-            FROM r WHERE rn <= 5 ORDER BY query_id, rank"""))
+                 $topKSql"""))
 
   /** Multimodal → ANN bridge (the claim at
     * [[graft.ext.Multimodal.extractFeatures]]): opaque payloads →
@@ -389,7 +785,7 @@ object ExtQueries {
           "doc_id", "embedding", k = 5, nBands = 4, bandBits = 4, dim = 16)
         .orderBy("query_id", "rank")
     },
-    Some("""WITH raw AS MATERIALIZED (SELECT doc_id,
+    Some(s"""WITH raw AS MATERIALIZED (SELECT doc_id,
                    list_transform(range(0,16), j ->
                      CAST((1103515245*((CAST(CAST('0x'||substr(md5(text),1,15) AS UBIGINT) AS BIGINT)
                                         % 2147483648) + j) + 12345) % 2147483648 AS DOUBLE)
@@ -401,32 +797,15 @@ object ExtQueries {
                          FROM (SELECT doc_id, v,
                                  sqrt(list_sum(list_transform(v, y -> y*y))) AS n
                                FROM raw)),
-                 sig AS MATERIALIZED (SELECT doc_id, e,
-                   list_transform(range(0,16), p -> CASE WHEN
-                     list_sum(list_transform(list_zip(e, range(0,16)),
-                       x -> CAST(x[1] AS DOUBLE) *
-                            (CAST((1103515245*(p*16 + x[2]) + 12345) % 2147483648 AS DOUBLE)
-                             / 2147483648.0 * 2 - 1))) >= 0
-                     THEN 1 ELSE 0 END) AS sg
-                 FROM emb),
-                 bands AS MATERIALIZED (SELECT doc_id, b,
-                             sg[4*b+1]*8 + sg[4*b+2]*4 + sg[4*b+3]*2 + sg[4*b+4] AS bk
-                           FROM sig, (SELECT unnest(range(0,4)) AS b)),
+                 ${hyperplaneBandsSql("doc_id", "e", 16, "emb")},
                  cand AS MATERIALIZED (SELECT DISTINCT q.doc_id AS query_id, c.doc_id AS neighbor_id
                           FROM bands q JOIN bands c ON q.b = c.b AND q.bk = c.bk
                           WHERE q.doc_id < 8 AND c.doc_id <> q.doc_id),
                  scored AS MATERIALIZED (SELECT query_id, neighbor_id,
-                     list_sum(list_transform(list_zip(qe.e, ce.e),
-                       x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                     / (sqrt(list_sum(list_transform(qe.e, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                      * sqrt(list_sum(list_transform(ce.e, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) AS sim
+                     ${cosineSql("qe.e", "ce.e")} AS sim
                    FROM cand JOIN emb qe ON qe.doc_id = query_id
                              JOIN emb ce ON ce.doc_id = neighbor_id),
-                 r AS MATERIALIZED (SELECT query_id, neighbor_id, sim,
-                         row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rn
-                       FROM scored)
-            SELECT query_id, CAST(rn AS INT) AS rank, neighbor_id, sim
-            FROM r WHERE rn <= 5 ORDER BY query_id, rank"""))
+                 $topKSql"""))
 
   /** Duplicate-cluster resolution: the near-dup PAIRS (x08's MinHash/LSH
     * output) resolved into connected components with a min-id canonical
@@ -438,36 +817,7 @@ object ExtQueries {
         shingleN = 3, numHashes = 16, nBands = 4, minJaccard = 0.5)
       graft.ext.DupClusters.connectedComponents(pairs).orderBy("doc_id")
     },
-    Some("""WITH RECURSIVE
-                 toks AS MATERIALIZED (SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS w FROM documents),
-                 sh AS MATERIALIZED (SELECT doc_id,
-                          list_transform(range(0, len(w)-2), i -> w[i+1]||' '||w[i+2]||' '||w[i+3]) AS sgl
-                        FROM toks WHERE len(w) >= 3),
-                 hs AS MATERIALIZED (SELECT doc_id, list_transform(sgl, s ->
-                          CAST(CAST('0x'||substr(md5(s),1,15) AS UBIGINT) AS BIGINT) % 1000000007) AS hh
-                        FROM sh),
-                 sig AS MATERIALIZED (SELECT doc_id, list_transform(range(0,16), i ->
-                           list_min(list_transform(hh, h ->
-                             (((1103515245*(i+1) + 12345) % 1000000006 + 1) * h
-                               + (1103515245*(i+101) + 12345) % 1000000007) % 1000000007))) AS sg
-                         FROM hs),
-                 bands AS MATERIALIZED (SELECT doc_id, b,
-                             CAST(sg[4*b+1] AS VARCHAR)||'-'||CAST(sg[4*b+2] AS VARCHAR)
-                               ||'-'||CAST(sg[4*b+3] AS VARCHAR)||'-'||CAST(sg[4*b+4] AS VARCHAR) AS bk
-                           FROM sig, (SELECT unnest(range(0,4)) AS b)),
-                 cand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                          FROM bands a JOIN bands b
-                            ON a.b = b.b AND a.bk = b.bk AND a.doc_id < b.doc_id),
-                 pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM cand
-                           JOIN sig sa ON sa.doc_id = doc_a
-                           JOIN sig sb ON sb.doc_id = doc_b
-                           WHERE len(list_filter(list_zip(sa.sg, sb.sg), x -> x[1] = x[2])) >= 8),
-                 e(u, v) AS (SELECT doc_a, doc_b FROM pairs
-                             UNION SELECT doc_b, doc_a FROM pairs),
-                 reach(u, v) AS (SELECT u, v FROM e
-                                 UNION SELECT r.u, e2.v FROM reach r JOIN e e2 ON r.v = e2.u)
-            SELECT u AS doc_id, least(u, min(v)) AS canonical_id
-            FROM reach GROUP BY u ORDER BY doc_id"""))
+    Some(nearDupClustersOracle))
 
   /** Deterministic stratified sampling (the data-mixing recipe step):
     * per-language rates, keep/drop decided by a stable md5-bucket of the
@@ -501,23 +851,15 @@ object ExtQueries {
     * the 365-day watermark delay keeps every fingerprint's state live
     * across micro-batches, so dedup is exact over the whole run. */
   private val x17 = Q("x17_stream_dedup",
-    (s, d) => graft.util.Sessions.withShufflePartitions(s,
-        graft.util.Sessions.streamingShufflePartitions) {
-      val root = java.nio.file.Files.createTempDirectory("graft-x17-")
-      val in = s"$root/in"; val out = s"$root/out"; val chk = s"$root/chk"
+    (s, d) => streamed(s, "x17") { (in, out, chk) =>
       val staged = documents(s, d).withColumn("event_ts",
         timestamp_seconds(lit(1704067200L) + col("doc_id")))
-      staged.write.mode("overwrite").parquet(in)
-      val stream = s.readStream.schema(staged.schema).parquet(in)
-      val job = graft.streaming.StreamDedup
+      staged.write.mode("overwrite").parquet(in.toString)
+      val stream = s.readStream.schema(staged.schema).parquet(in.toString)
+      drain(s, graft.streaming.StreamDedup
         .exactDedupStreamWatermarked(stream, "text", "event_ts", "365 days")
         .select("fp")
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", chk)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      job.awaitTermination()
-      s.read.parquet(out).select("fp").orderBy("fp")
+        .writeStream, out, chk).select("fp").orderBy("fp")
     },
     Some("""SELECT DISTINCT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
             FROM documents ORDER BY fp"""))
@@ -538,25 +880,17 @@ object ExtQueries {
     * pushes the final watermark past every real window's end so append
     * mode flushes them all before `AvailableNow` terminates. */
   private val x18 = Q("x18_stream_windowed_agg",
-    (s, d) => graft.util.Sessions.withShufflePartitions(s,
-        graft.util.Sessions.streamingShufflePartitions) {
-      val root = java.nio.file.Files.createTempDirectory("graft-x18-")
-      val in = s"$root/in"; val out = s"$root/out"; val chk = s"$root/chk"
+    (s, d) => streamed(s, "x18") { (in, out, chk) =>
       val ev = events(s, d).select(col("user_id"), col("ts"),
         graft.sa.Analytics.cents2(col("value")).as("value_c"))
       val sentinel = s.range(1).select(lit(-1L).as("user_id"),
         to_timestamp(lit("2024-12-31 00:00:00")).as("ts"),
         graft.sa.Analytics.cents2(lit(0.0)).as("value_c"))
-      ev.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(in)
-      val stream = s.readStream.schema(ev.schema).parquet(in)
-      val job = graft.streaming.StreamAnalytics
+      ev.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(in.toString)
+      val stream = s.readStream.schema(ev.schema).parquet(in.toString)
+      drain(s, graft.streaming.StreamAnalytics
         .windowedTradedValue(stream, "user_id", "ts", "value_c", "1 day", "1 minute")
-        .writeStream.format("parquet").outputMode("append")
-        .option("path", out).option("checkpointLocation", chk)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      job.awaitTermination()
-      s.read.parquet(out)
+        .writeStream.outputMode("append"), out, chk)
         .filter(col("user_id") >= 0)
         .select(col("user_id"),
           col("window_start").cast("date").as("window_day"),
@@ -570,13 +904,6 @@ object ExtQueries {
                    CAST(count(*) AS BIGINT) AS n_events
             FROM events GROUP BY 1, 2 ORDER BY user_id, window_day"""))
 
-  /** Shared oracle prelude: normalized whitespace tokens per doc (the
-    * SQL twin of [[graft.ext.Ngrams.normTokens]] — lowering first makes
-    * collapse-then-split and split-directly identical token lists). */
-  private val tokSql =
-    """toks AS MATERIALIZED (SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS w
-               FROM documents)"""
-
   /** Stream-static enrichment join under the oracle (SURVEY.md §2.9,
     * the dimension-enrichment leg): the events table streams through a
     * file source and each micro-batch broadcast-joins a STATIC
@@ -587,25 +914,17 @@ object ExtQueries {
     * (every event_id survives), value pre-quantized to cents, ordered
     * output — arrival order cannot influence any cell. */
   private val x24 = Q("x24_stream_enrich",
-    (s, d) => graft.util.Sessions.withShufflePartitions(s,
-        graft.util.Sessions.streamingShufflePartitions) {
-      val root = java.nio.file.Files.createTempDirectory("graft-x24-")
-      val in = s"$root/in"; val out = s"$root/out"; val chk = s"$root/chk"
+    (s, d) => streamed(s, "x24") { (in, out, chk) =>
       val ev = events(s, d).select(col("event_id"), col("event_type"),
         graft.sa.Analytics.cents2(col("value")).as("value_c"))
-      ev.coalesce(1).write.mode("overwrite").parquet(in)
+      ev.coalesce(1).write.mode("overwrite").parquet(in.toString)
       val dim = ev.select(col("event_type")).distinct()
         .withColumn("category",
           concat(upper(col("event_type")), lit("-"),
             length(col("event_type")).cast("string")))
-      val stream = s.readStream.schema(ev.schema).parquet(in)
-      val job = graft.streaming.StreamAnalytics.enrich(stream, dim, "event_type")
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", chk)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      job.awaitTermination()
-      s.read.parquet(out)
+      val stream = s.readStream.schema(ev.schema).parquet(in.toString)
+      drain(s, graft.streaming.StreamAnalytics.enrich(stream, dim, "event_type")
+        .writeStream, out, chk)
         .select(col("event_id"), col("event_type"), col("category"),
           (col("value_c").cast(DecimalType(38, 0)).cast("double") / lit(100.0))
             .as("value_q"))
@@ -619,6 +938,21 @@ object ExtQueries {
              FROM events JOIN dim USING (event_type)
              ORDER BY event_id"""))
 
+  /** x19's contamination oracle over the %10 eval split, shared
+    * verbatim by every plan that must land on the same answer: x44's
+    * bloom prefilter, x52's persisted benchmark store, x71's
+    * append-grown store and x76's streamed one. */
+  private val decontamOracle = s"""WITH $tokSql,
+             $gramsSql,
+             ev AS MATERIALIZED (SELECT DISTINCT gram_fp FROM g WHERE doc_id % 10 = 0),
+             tr AS MATERIALIZED (SELECT * FROM dg WHERE doc_id % 10 <> 0),
+             tot AS MATERIALIZED (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams FROM tr GROUP BY 1),
+             sh AS MATERIALIZED (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shared
+                    FROM tr JOIN ev USING (gram_fp) GROUP BY 1)
+             SELECT s.doc_id, t.n_grams, s.n_shared,
+                    CAST(s.n_shared AS DOUBLE) / t.n_grams AS contamination
+             FROM sh s JOIN tot t USING (doc_id) ORDER BY doc_id"""
+
   /** Train/eval decontamination (the GPT-3/Pile/FineWeb n-gram-overlap
     * hygiene sweep): eval split = doc_id % 10 = 0, word 8-grams, train
     * docs sharing any gram with the eval set — see
@@ -628,19 +962,7 @@ object ExtQueries {
     (s, d) => Decontaminate.contaminated(documents(s, d), "doc_id", "text",
         col("doc_id") % 10 === 0, n = 8)
       .orderBy("doc_id"),
-    Some(s"""WITH $tokSql,
-             g AS MATERIALIZED (SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-7),
-                      i -> CAST(CAST('0x'||substr(md5(array_to_string(w[i:i+7], ' ')),1,15) AS UBIGINT) AS BIGINT))) AS gram_fp
-                   FROM toks WHERE len(w) >= 8),
-             dg AS MATERIALIZED (SELECT DISTINCT doc_id, gram_fp FROM g),
-             ev AS MATERIALIZED (SELECT DISTINCT gram_fp FROM g WHERE doc_id % 10 = 0),
-             tr AS MATERIALIZED (SELECT * FROM dg WHERE doc_id % 10 <> 0),
-             tot AS MATERIALIZED (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams FROM tr GROUP BY 1),
-             sh AS MATERIALIZED (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shared
-                    FROM tr JOIN ev USING (gram_fp) GROUP BY 1)
-             SELECT s.doc_id, t.n_grams, s.n_shared,
-                    CAST(s.n_shared AS DOUBLE) / t.n_grams AS contamination
-             FROM sh s JOIN tot t USING (doc_id) ORDER BY doc_id"""))
+    Some(decontamOracle))
 
   /** Gopher-style repetition quality signals (duplicate / top n-gram
     * occurrence fractions for n=2,3) — see [[graft.ext.Repetition]].
@@ -682,10 +1004,7 @@ object ExtQueries {
         chunkTokens = 10)
       .orderBy("doc_id"),
     Some(s"""WITH $tokSql,
-             p AS MATERIALIZED (SELECT doc_id, CASE WHEN len(w) = 0 THEN ['']
-                     ELSE list_transform(generate_series(0, CAST((len(w)-1)//10 AS INT)),
-                            c -> array_to_string(w[c*10+1:c*10+10], ' ')) END AS ps
-                   FROM toks),
+             $passagesSql,
              e AS MATERIALIZED (SELECT doc_id, u.e.i AS idx, u.e.p AS passage
                    FROM p, unnest(list_transform(generate_series(1, len(ps)),
                           i -> {'i': i-1, 'p': ps[i]})) AS u(e)),
@@ -723,24 +1042,8 @@ object ExtQueries {
     (s, d) => KMeans.lloyd(embeddings(s, d), "vec_id", "embedding",
         k = 8, rounds = 2)
       .orderBy("vec_id"),
-    Some("""WITH q AS MATERIALIZED (SELECT vec_id, list_transform(embedding,
-                      v -> CAST(floor(CAST(v AS DOUBLE)*1048576 + 0.5) AS BIGINT) + 2097152) AS u
-                    FROM embeddings),
-             ql AS MATERIALIZED (SELECT vec_id, e.e.i AS pos, e.e.x AS x
-                    FROM q, unnest(list_transform(generate_series(1, len(u)),
-                           i -> {'i': i-1, 'x': u[i]})) AS e(e)),
-             c0 AS MATERIALIZED (SELECT vec_id AS cid, pos, x AS c FROM ql WHERE vec_id < 8),
-             d1 AS MATERIALIZED (SELECT ql.vec_id, c0.cid, sum((ql.x - c0.c)*(ql.x - c0.c)) AS dist
-                    FROM ql JOIN c0 USING (pos) GROUP BY 1, 2),
-             a1 AS MATERIALIZED (SELECT vec_id, cid,
-                      row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-                    FROM d1),
-             m1 AS MATERIALIZED (SELECT vec_id, cid FROM a1 WHERE rn = 1),
-             c1 AS MATERIALIZED (SELECT m1.cid, ql.pos,
-                      CAST((2*sum(ql.x) + count(*)) // (2*count(*)) AS BIGINT) AS c
-                    FROM ql JOIN m1 USING (vec_id) GROUP BY 1, 2),
-             d2 AS MATERIALIZED (SELECT ql.vec_id, c1.cid, sum((ql.x - c1.c)*(ql.x - c1.c)) AS dist
-                    FROM ql JOIN c1 USING (pos) GROUP BY 1, 2),
+    Some(s"""WITH $kmQuantSql,
+             ${kmLloydSql(8)},
              a2 AS MATERIALIZED (SELECT vec_id, cid, dist,
                       row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
                     FROM d2)
@@ -760,13 +1063,7 @@ object ExtQueries {
     Some(s"""WITH t0 AS MATERIALIZED (SELECT doc_id, text,
                     regexp_extract_all(lower(text), '[a-z]+') AS toks FROM documents),
              sc AS MATERIALIZED (SELECT doc_id, text,
-               ${langScoreSql("s_de", "'der','die','das','und','ist','nicht','mit','ein','zu','den'")},
-               ${langScoreSql("s_en", "'the','a','of','and','to','in','is','it','for','on'")},
-               ${langScoreSql("s_es", "'el','la','que','y','en','un','es','los','se','del'")},
-               ${langScoreSql("s_fr", "'le','la','et','un','que','pour','dans','ce','une','sur'")},
-               CASE WHEN length(text) = 0 THEN 0.0
-                    ELSE CAST(length(regexp_replace(text, '[\\x00-\\x7f]', '', 'g')) AS DOUBLE) / length(text)
-               END AS s_zh
+               $langScoresSql
              FROM t0),
              l AS MATERIALIZED (SELECT doc_id, text FROM
                      (SELECT *, greatest(s_de, s_en, s_es, s_fr, s_zh) AS g FROM sc)
@@ -775,12 +1072,7 @@ object ExtQueries {
                      (SELECT doc_id, text,
                         CAST(length(text) AS BIGINT) AS n_chars_calc,
                         CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT) AS n_tokens,
-                        CASE WHEN length(text) = 0 THEN 0.0
-                             ELSE CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / length(text) END AS digit_ratio,
-                        CASE WHEN len(regexp_extract_all(lower(text), '[a-z]+')) = 0 THEN 0.0
-                             ELSE CAST(len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
-                                    x -> x IN ('the','a','of','and','to','in','is','it','for','on'))) AS DOUBLE)
-                                  / len(regexp_extract_all(lower(text), '[a-z]+')) END AS stop_ratio
+                        $qualityRatiosSql
                       FROM l)
                    WHERE 0.4 * stop_ratio
                          + 0.3 * (least(CASE WHEN n_tokens = 0 THEN 0.0
@@ -810,14 +1102,9 @@ object ExtQueries {
     Some(s"""WITH $tokSql,
              c AS MATERIALIZED (SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens FROM toks),
              p AS MATERIALIZED (SELECT doc_id, n_tokens,
-                     CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS "offset"
+                     $offsetSql
                    FROM c)
-             SELECT doc_id, n_tokens, "offset",
-                    "offset" // 512 AS bin_start,
-                    CASE WHEN n_tokens = 0 THEN "offset" // 512
-                         ELSE ("offset" + n_tokens - 1) // 512 END AS bin_end
-             FROM p ORDER BY doc_id"""))
+             ${packedBinsSql("p")}"""))
 
   /** Stream-stream interval join under the oracle (SURVEY.md §2.9, the
     * two-stream leg): clicks and purchases stream independently from
@@ -830,14 +1117,11 @@ object ExtQueries {
     * watermark only governs state cleanup), and every output cell is a
     * key or an integer µs difference. */
   private val x27 = Q("x27_stream_interval_join",
-    (s, d) => graft.util.Sessions.withShufflePartitions(s,
-        graft.util.Sessions.streamingShufflePartitions) {
-      val root = java.nio.file.Files.createTempDirectory("graft-x27-")
-      val in = s"$root/in"; val out = s"$root/out"; val chk = s"$root/chk"
+    (s, d) => streamed(s, "x27") { (in, out, chk) =>
       val ev = events(s, d).select(col("event_id"), col("ts"),
         col("user_id"), col("event_type"))
-      ev.coalesce(1).write.mode("overwrite").parquet(in)
-      def stream = s.readStream.schema(ev.schema).parquet(in)
+      ev.coalesce(1).write.mode("overwrite").parquet(in.toString)
+      def stream = s.readStream.schema(ev.schema).parquet(in.toString)
       val clicks = stream.filter(col("event_type") === "click")
       val purchases = stream.filter(col("event_type") === "purchase")
       val joined = graft.streaming.StreamAnalytics
@@ -846,12 +1130,7 @@ object ExtQueries {
           col("r.event_id").as("purchase_id"),
           col("l.user_id").as("user_id"),
           (unix_micros(col("r.ts")) - unix_micros(col("l.ts"))).as("lag_us"))
-      val job = joined.writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", chk)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      job.awaitTermination()
-      s.read.parquet(out).orderBy("click_id", "purchase_id")
+      drain(s, joined.writeStream, out, chk).orderBy("click_id", "purchase_id")
     },
     Some("""SELECT a.event_id AS click_id, b.event_id AS purchase_id,
                    a.user_id AS user_id,
@@ -972,16 +1251,13 @@ object ExtQueries {
     * price), close = price at (max ts, tie→max price)" — the oracle's
     * two row_number orders. Prices are pre-quantized doubles. */
   private val x32 = Q("x32_stream_ohlc",
-    (s, d) => graft.util.Sessions.withShufflePartitions(s,
-        graft.util.Sessions.streamingShufflePartitions) {
-      val root = java.nio.file.Files.createTempDirectory("graft-x32-")
-      val in = s"$root/in"; val out = s"$root/out"; val chk = s"$root/chk"
+    (s, d) => streamed(s, "x32") { (in, out, chk) =>
       val ev = events(s, d).select(
         col("user_id").cast("string").as("symbol"), col("ts"),
         graft.sa.Analytics.qdbl2(col("value")).as("price"))
-      ev.coalesce(1).write.mode("overwrite").parquet(in)
+      ev.coalesce(1).write.mode("overwrite").parquet(in.toString)
       import s.implicits._
-      val ticks = s.readStream.schema(ev.schema).parquet(in)
+      val ticks = s.readStream.schema(ev.schema).parquet(in.toString)
         .as[graft.streaming.StreamAnalytics.Tick]
       val job = graft.streaming.StreamAnalytics.runningOhlc(ticks)
         .writeStream.outputMode("update")
@@ -1026,27 +1302,19 @@ object ExtQueries {
     * staging rules apply: one file, pre-quantized cents, sentinel row
     * pushes the watermark past every real session. */
   private val x33 = Q("x33_stream_sessionize",
-    (s, d) => graft.util.Sessions.withShufflePartitions(s,
-        graft.util.Sessions.streamingShufflePartitions) {
-      val root = java.nio.file.Files.createTempDirectory("graft-x33-")
-      val in = s"$root/in"; val out = s"$root/out"; val chk = s"$root/chk"
+    (s, d) => streamed(s, "x33") { (in, out, chk) =>
       val ev = events(s, d).select(col("user_id"), col("ts"),
         graft.sa.Analytics.cents2(col("value")).as("value_c"))
       val sentinel = s.range(1).select(lit(-1L).as("user_id"),
         to_timestamp(lit("2024-12-31 00:00:00")).as("ts"),
         graft.sa.Analytics.cents2(lit(0.0)).as("value_c"))
-      ev.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(in)
-      val stream = s.readStream.schema(ev.schema).parquet(in)
-      val job = stream
+      ev.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(in.toString)
+      val stream = s.readStream.schema(ev.schema).parquet(in.toString)
+      drain(s, stream
         .withWatermark("ts", "1 minute")
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
         .agg(sum(col("value_c")).as("total_c"), count(lit(1)).as("n_events"))
-        .writeStream.format("parquet").outputMode("append")
-        .option("path", out).option("checkpointLocation", chk)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      job.awaitTermination()
-      s.read.parquet(out)
+        .writeStream.outputMode("append"), out, chk)
         .filter(col("user_id") >= 0)
         .select(col("user_id"),
           col("session_window.start").as("session_start"),
@@ -1094,29 +1362,12 @@ object ExtQueries {
           store = s.table("x34_sig_store"), minJaccard = 0.5)
         .orderBy("doc_id")
     },
-    Some("""WITH toks AS MATERIALIZED (SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS w FROM documents),
-                 sh AS MATERIALIZED (SELECT doc_id,
-                          list_transform(range(0, len(w)-2), i -> w[i+1]||' '||w[i+2]||' '||w[i+3]) AS sgl
-                        FROM toks WHERE len(w) >= 3),
-                 hs AS MATERIALIZED (SELECT doc_id, list_transform(sgl, s ->
-                          CAST(CAST('0x'||substr(md5(s),1,15) AS UBIGINT) AS BIGINT) % 1000000007) AS hh
-                        FROM sh),
-                 sig AS MATERIALIZED (SELECT doc_id, list_transform(range(0,16), i ->
-                           list_min(list_transform(hh, h ->
-                             (((1103515245*(i+1) + 12345) % 1000000006 + 1) * h
-                               + (1103515245*(i+101) + 12345) % 1000000007) % 1000000007))) AS sg
-                         FROM hs),
-                 bands AS MATERIALIZED (SELECT doc_id, b,
-                             CAST(sg[4*b+1] AS VARCHAR)||'-'||CAST(sg[4*b+2] AS VARCHAR)
-                               ||'-'||CAST(sg[4*b+3] AS VARCHAR)||'-'||CAST(sg[4*b+4] AS VARCHAR) AS bk
-                           FROM sig, (SELECT unnest(range(0,4)) AS b)),
+    Some(s"""WITH $tokSql,
+                 ${minHashSql()},
                  pairs AS MATERIALIZED (SELECT DISTINCT n.doc_id AS new_id, s.doc_id AS store_id
                            FROM bands n JOIN bands s ON n.b = s.b AND n.bk = s.bk
                            WHERE n.doc_id % 5 = 4 AND s.doc_id % 5 <> 4),
-                 m AS MATERIALIZED (SELECT new_id, store_id
-                       FROM pairs JOIN sig sa ON sa.doc_id = new_id
-                                  JOIN sig sb ON sb.doc_id = store_id
-                       WHERE len(list_filter(list_zip(sa.sg, sb.sg), x -> x[1] = x[2])) >= 8),
+                 $minHashMatchSql,
                  agg AS MATERIALIZED (SELECT new_id, CAST(count(*) AS BIGINT) AS n_store_matches,
                                 min(store_id) AS dup_of
                          FROM m GROUP BY new_id)
@@ -1139,36 +1390,7 @@ object ExtQueries {
         shingleN = 3, numHashes = 16, nBands = 4, minJaccard = 0.5)
       graft.ext.DupClusters.connectedComponentsStars(pairs).orderBy("doc_id")
     },
-    Some("""WITH RECURSIVE
-                 toks AS MATERIALIZED (SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS w FROM documents),
-                 sh AS MATERIALIZED (SELECT doc_id,
-                          list_transform(range(0, len(w)-2), i -> w[i+1]||' '||w[i+2]||' '||w[i+3]) AS sgl
-                        FROM toks WHERE len(w) >= 3),
-                 hs AS MATERIALIZED (SELECT doc_id, list_transform(sgl, s ->
-                          CAST(CAST('0x'||substr(md5(s),1,15) AS UBIGINT) AS BIGINT) % 1000000007) AS hh
-                        FROM sh),
-                 sig AS MATERIALIZED (SELECT doc_id, list_transform(range(0,16), i ->
-                           list_min(list_transform(hh, h ->
-                             (((1103515245*(i+1) + 12345) % 1000000006 + 1) * h
-                               + (1103515245*(i+101) + 12345) % 1000000007) % 1000000007))) AS sg
-                         FROM hs),
-                 bands AS MATERIALIZED (SELECT doc_id, b,
-                             CAST(sg[4*b+1] AS VARCHAR)||'-'||CAST(sg[4*b+2] AS VARCHAR)
-                               ||'-'||CAST(sg[4*b+3] AS VARCHAR)||'-'||CAST(sg[4*b+4] AS VARCHAR) AS bk
-                           FROM sig, (SELECT unnest(range(0,4)) AS b)),
-                 cand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                          FROM bands a JOIN bands b
-                            ON a.b = b.b AND a.bk = b.bk AND a.doc_id < b.doc_id),
-                 pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM cand
-                           JOIN sig sa ON sa.doc_id = doc_a
-                           JOIN sig sb ON sb.doc_id = doc_b
-                           WHERE len(list_filter(list_zip(sa.sg, sb.sg), x -> x[1] = x[2])) >= 8),
-                 e(u, v) AS (SELECT doc_a, doc_b FROM pairs
-                             UNION SELECT doc_b, doc_a FROM pairs),
-                 reach(u, v) AS (SELECT u, v FROM e
-                                 UNION SELECT r.u, e2.v FROM reach r JOIN e e2 ON r.v = e2.u)
-            SELECT u AS doc_id, least(u, min(v)) AS canonical_id
-            FROM reach GROUP BY u ORDER BY doc_id"""))
+    Some(nearDupClustersOracle))
 
   /** x08 with the hot-bucket cap engaged (`maxBandDocs = 2` — at sf0.01
     * this skips the four 3-doc band buckets, so the check exercises the
@@ -1182,22 +1404,8 @@ object ExtQueries {
         shingleN = 3, numHashes = 16, nBands = 4, minJaccard = 0.5,
         maxBandDocs = 2)
       .orderBy("doc_a", "doc_b"),
-    Some("""WITH toks AS MATERIALIZED (SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS w FROM documents),
-                 sh AS MATERIALIZED (SELECT doc_id,
-                          list_transform(range(0, len(w)-2), i -> w[i+1]||' '||w[i+2]||' '||w[i+3]) AS sgl
-                        FROM toks WHERE len(w) >= 3),
-                 hs AS MATERIALIZED (SELECT doc_id, list_transform(sgl, s ->
-                          CAST(CAST('0x'||substr(md5(s),1,15) AS UBIGINT) AS BIGINT) % 1000000007) AS hh
-                        FROM sh),
-                 sig AS MATERIALIZED (SELECT doc_id, list_transform(range(0,16), i ->
-                           list_min(list_transform(hh, h ->
-                             (((1103515245*(i+1) + 12345) % 1000000006 + 1) * h
-                               + (1103515245*(i+101) + 12345) % 1000000007) % 1000000007))) AS sg
-                         FROM hs),
-                 bands AS MATERIALIZED (SELECT doc_id, b,
-                             CAST(sg[4*b+1] AS VARCHAR)||'-'||CAST(sg[4*b+2] AS VARCHAR)
-                               ||'-'||CAST(sg[4*b+3] AS VARCHAR)||'-'||CAST(sg[4*b+4] AS VARCHAR) AS bk
-                           FROM sig, (SELECT unnest(range(0,4)) AS b)),
+    Some(s"""WITH $tokSql,
+                 ${minHashSql()},
                  sized AS MATERIALIZED (SELECT b, bk FROM bands GROUP BY b, bk HAVING count(*) <= 2),
                  kept AS MATERIALIZED (SELECT bands.doc_id, bands.b, bands.bk
                           FROM bands JOIN sized ON bands.b = sized.b AND bands.bk = sized.bk),
@@ -1244,14 +1452,8 @@ object ExtQueries {
     * (the results are compaction-invariant; only the file layout
     * changes). */
   private val x37 = Q("x37_stream_incremental_dedup",
-    (s, d) => graft.util.Sessions.withShufflePartitions(s,
-        graft.util.Sessions.streamingShufflePartitions) {
-      val root = java.nio.file.Files.createTempDirectory("graft-x37-")
-      val in = root.resolve("in"); val out = s"$root/out"; val chk = s"$root/chk"
-      val boiler =
-        "standard cookie banner please accept all cookies to continue reading"
-      val docs = documents(s, d).withColumn("text",
-        when(col("doc_id") % 7 === 0, lit(boiler)).otherwise(col("text")))
+    (s, d) => streamed(s, "x37") { (in, out, chk) =>
+      val docs = boilerplateDocs(documents(s, d))
       val stream = graft.util.Staging.stagedStream(in,
           Seq(docs.filter(col("doc_id") % 3 === 1),
             docs.filter(col("doc_id") % 3 === 2)))(
@@ -1269,27 +1471,9 @@ object ExtQueries {
           col("dup_of"), col("batch_id").cast("long").as("batch_id"))
         .orderBy("doc_id")
     },
-    Some("""WITH docs AS MATERIALIZED (SELECT doc_id,
-                   CASE WHEN doc_id % 7 = 0
-                        THEN 'standard cookie banner please accept all cookies to continue reading'
-                        ELSE text END AS text
-                 FROM documents),
-                 toks AS MATERIALIZED (SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS w FROM docs),
-                 sh AS MATERIALIZED (SELECT doc_id,
-                          list_transform(range(0, len(w)-2), i -> w[i+1]||' '||w[i+2]||' '||w[i+3]) AS sgl
-                        FROM toks WHERE len(w) >= 3),
-                 hs AS MATERIALIZED (SELECT doc_id, list_transform(sgl, s ->
-                          CAST(CAST('0x'||substr(md5(s),1,15) AS UBIGINT) AS BIGINT) % 1000000007) AS hh
-                        FROM sh),
-                 sig AS MATERIALIZED (SELECT doc_id, list_transform(range(0,16), i ->
-                           list_min(list_transform(hh, h ->
-                             (((1103515245*(i+1) + 12345) % 1000000006 + 1) * h
-                               + (1103515245*(i+101) + 12345) % 1000000007) % 1000000007))) AS sg
-                         FROM hs),
-                 bands AS MATERIALIZED (SELECT doc_id, b,
-                             CAST(sg[4*b+1] AS VARCHAR)||'-'||CAST(sg[4*b+2] AS VARCHAR)
-                               ||'-'||CAST(sg[4*b+3] AS VARCHAR)||'-'||CAST(sg[4*b+4] AS VARCHAR) AS bk
-                           FROM sig, (SELECT unnest(range(0,4)) AS b)),
+    Some(s"""WITH $boilerplateDocsSql,
+                 ${toksOver("docs")},
+                 ${minHashSql()},
                  s1 AS MATERIALIZED (SELECT doc_id FROM documents WHERE doc_id % 3 = 1),
                  s2 AS MATERIALIZED (SELECT doc_id FROM documents WHERE doc_id % 3 = 2),
                  sized1 AS MATERIALIZED (SELECT b, bk FROM bands WHERE doc_id % 3 = 0
@@ -1357,24 +1541,8 @@ object ExtQueries {
           k = 8, rounds = 2, minCosine = 0.4, maxClusterDocs = cap)
         .orderBy("vec_id")
     },
-    Some("""WITH q AS MATERIALIZED (SELECT vec_id, list_transform(embedding,
-                      v -> CAST(floor(CAST(v AS DOUBLE)*1048576 + 0.5) AS BIGINT) + 2097152) AS u
-                    FROM embeddings),
-             ql AS MATERIALIZED (SELECT vec_id, e.e.i AS pos, e.e.x AS x
-                    FROM q, unnest(list_transform(generate_series(1, len(u)),
-                           i -> {'i': i-1, 'x': u[i]})) AS e(e)),
-             c0 AS MATERIALIZED (SELECT vec_id AS cid, pos, x AS c FROM ql WHERE vec_id < 8),
-             d1 AS MATERIALIZED (SELECT ql.vec_id, c0.cid, sum((ql.x - c0.c)*(ql.x - c0.c)) AS dist
-                    FROM ql JOIN c0 USING (pos) GROUP BY 1, 2),
-             a1 AS MATERIALIZED (SELECT vec_id, cid,
-                      row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-                    FROM d1),
-             m1 AS MATERIALIZED (SELECT vec_id, cid FROM a1 WHERE rn = 1),
-             c1 AS MATERIALIZED (SELECT m1.cid, ql.pos,
-                      CAST((2*sum(ql.x) + count(*)) // (2*count(*)) AS BIGINT) AS c
-                    FROM ql JOIN m1 USING (vec_id) GROUP BY 1, 2),
-             d2 AS MATERIALIZED (SELECT ql.vec_id, c1.cid, sum((ql.x - c1.c)*(ql.x - c1.c)) AS dist
-                    FROM ql JOIN c1 USING (pos) GROUP BY 1, 2),
+    Some(s"""WITH $kmQuantSql,
+             ${kmLloydSql(8)},
              a2 AS MATERIALIZED (SELECT vec_id, cid,
                       row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
                     FROM d2),
@@ -1387,10 +1555,7 @@ object ExtQueries {
                          ON a.cluster = b.cluster AND a.vec_id < b.vec_id
                        WHERE a.cluster IN (SELECT cluster FROM ok)),
              scored AS MATERIALIZED (SELECT id_a, id_b,
-                 list_sum(list_transform(list_zip(ea.embedding, eb.embedding),
-                   x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                 / (sqrt(list_sum(list_transform(ea.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(eb.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) AS cos
+                 ${cosineSql("ea.embedding", "eb.embedding")} AS cos
                FROM pairs JOIN embeddings ea ON ea.vec_id = id_a
                           JOIN embeddings eb ON eb.vec_id = id_b),
              drp AS MATERIALIZED (SELECT id_b AS vec_id, min(id_a) AS dup_of
@@ -1442,23 +1607,10 @@ object ExtQueries {
     */
   private val x40 = Q("x40_pii_scrub",
     (s, d) => {
-      val id = col("doc_id")
-      val seeded = documents(s, d).withColumn("__seeded", concat(
-        col("text"),
-        when(id % 5 === 0, concat(lit(" contact user"), id.cast("string"),
-          lit("@example.com"))).otherwise(lit("")),
-        when(id % 7 === 0, concat(lit(" from 10.0."), (id % 256).cast("string"),
-          lit("."), expr("(doc_id DIV 7) % 256").cast("string"))).otherwise(lit("")),
-        when(id % 11 === 0, concat(lit(" call 555-"),
-          lpad((id % 1000).cast("string"), 3, "0"), lit("-"),
-          lpad((id % 10000).cast("string"), 4, "0"))).otherwise(lit(""))))
+      val seeded = piiSeeded(documents(s, d))
       Pii.annotate(seeded, "doc_id", "__seeded").orderBy("doc_id")
     },
-    Some("""WITH seeded AS MATERIALIZED (SELECT doc_id, text
-                 || CASE WHEN doc_id % 5 = 0 THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com' ELSE '' END
-                 || CASE WHEN doc_id % 7 = 0 THEN ' from 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.' || CAST((doc_id // 7) % 256 AS VARCHAR) ELSE '' END
-                 || CASE WHEN doc_id % 11 = 0 THEN ' call 555-' || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ELSE '' END
-                 AS t FROM documents),
+    Some(raw"""WITH seeded AS MATERIALIZED (SELECT doc_id, $piiSeededSql AS t FROM documents),
             r1 AS MATERIALIZED (SELECT doc_id, t,
                      regexp_replace(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g') AS t1
                    FROM seeded),
@@ -1535,10 +1687,7 @@ object ExtQueries {
     * per-shard dedup cost proportional to the shard. */
   private val x43 = Q("x43_incremental_capped",
     (s, d) => {
-      val boiler =
-        "standard cookie banner please accept all cookies to continue reading"
-      val docs = documents(s, d).withColumn("text",
-        when(col("doc_id") % 7 === 0, lit(boiler)).otherwise(col("text")))
+      val docs = boilerplateDocs(documents(s, d))
       val store = docs.filter(col("doc_id") % 5 =!= 4)
       val fresh = docs.filter(col("doc_id") % 5 === 4)
       graft.ext.IncrementalDedup.writeSignatureStore(store, "doc_id", "text",
@@ -1552,27 +1701,9 @@ object ExtQueries {
             graft.ext.IncrementalDedup.countsTable("x43_sig_store"))))
         .orderBy("doc_id")
     },
-    Some("""WITH docs AS MATERIALIZED (SELECT doc_id,
-                   CASE WHEN doc_id % 7 = 0
-                        THEN 'standard cookie banner please accept all cookies to continue reading'
-                        ELSE text END AS text
-                 FROM documents),
-                 toks AS MATERIALIZED (SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS w FROM docs),
-                 sh AS MATERIALIZED (SELECT doc_id,
-                          list_transform(range(0, len(w)-2), i -> w[i+1]||' '||w[i+2]||' '||w[i+3]) AS sgl
-                        FROM toks WHERE len(w) >= 3),
-                 hs AS MATERIALIZED (SELECT doc_id, list_transform(sgl, s ->
-                          CAST(CAST('0x'||substr(md5(s),1,15) AS UBIGINT) AS BIGINT) % 1000000007) AS hh
-                        FROM sh),
-                 sig AS MATERIALIZED (SELECT doc_id, list_transform(range(0,16), i ->
-                           list_min(list_transform(hh, h ->
-                             (((1103515245*(i+1) + 12345) % 1000000006 + 1) * h
-                               + (1103515245*(i+101) + 12345) % 1000000007) % 1000000007))) AS sg
-                         FROM hs),
-                 bands AS MATERIALIZED (SELECT doc_id, b,
-                             CAST(sg[4*b+1] AS VARCHAR)||'-'||CAST(sg[4*b+2] AS VARCHAR)
-                               ||'-'||CAST(sg[4*b+3] AS VARCHAR)||'-'||CAST(sg[4*b+4] AS VARCHAR) AS bk
-                           FROM sig, (SELECT unnest(range(0,4)) AS b)),
+    Some(s"""WITH $boilerplateDocsSql,
+                 ${toksOver("docs")},
+                 ${minHashSql()},
                  sized AS MATERIALIZED (SELECT b, bk FROM bands WHERE doc_id % 5 <> 4
                            GROUP BY b, bk HAVING count(*) <= 2),
                  kept AS MATERIALIZED (SELECT bands.doc_id, bands.b, bands.bk
@@ -1580,10 +1711,7 @@ object ExtQueries {
                  pairs AS MATERIALIZED (SELECT DISTINCT n.doc_id AS new_id, s.doc_id AS store_id
                            FROM kept n JOIN kept s ON n.b = s.b AND n.bk = s.bk
                            WHERE n.doc_id % 5 = 4 AND s.doc_id % 5 <> 4),
-                 m AS MATERIALIZED (SELECT new_id, store_id
-                       FROM pairs JOIN sig sa ON sa.doc_id = new_id
-                                  JOIN sig sb ON sb.doc_id = store_id
-                       WHERE len(list_filter(list_zip(sa.sg, sb.sg), x -> x[1] = x[2])) >= 8),
+                 $minHashMatchSql,
                  agg AS MATERIALIZED (SELECT new_id, CAST(count(*) AS BIGINT) AS n_store_matches,
                                 min(store_id) AS dup_of
                          FROM m GROUP BY new_id)
@@ -1608,19 +1736,7 @@ object ExtQueries {
     (s, d) => Decontaminate.contaminatedBloom(documents(s, d), "doc_id", "text",
         col("doc_id") % 10 === 0, n = 8)
       .orderBy("doc_id"),
-    Some(s"""WITH $tokSql,
-             g AS MATERIALIZED (SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-7),
-                      i -> CAST(CAST('0x'||substr(md5(array_to_string(w[i:i+7], ' ')),1,15) AS UBIGINT) AS BIGINT))) AS gram_fp
-                   FROM toks WHERE len(w) >= 8),
-             dg AS MATERIALIZED (SELECT DISTINCT doc_id, gram_fp FROM g),
-             ev AS MATERIALIZED (SELECT DISTINCT gram_fp FROM g WHERE doc_id % 10 = 0),
-             tr AS MATERIALIZED (SELECT * FROM dg WHERE doc_id % 10 <> 0),
-             tot AS MATERIALIZED (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams FROM tr GROUP BY 1),
-             sh AS MATERIALIZED (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shared
-                    FROM tr JOIN ev USING (gram_fp) GROUP BY 1)
-             SELECT s.doc_id, t.n_grams, s.n_shared,
-                    CAST(s.n_shared AS DOUBLE) / t.n_grams AS contamination
-             FROM sh s JOIN tot t USING (doc_id) ORDER BY doc_id"""))
+    Some(decontamOracle))
 
   /** Incremental embedding dedup against a persisted IVF-bucketed
     * vector store ([[graft.ext.VectorStore]]) — the vector-space twin
@@ -1645,35 +1761,17 @@ object ExtQueries {
           nCentroids = 16, nProbe = 4, dim = 64, seedOffset = 100000L)
         .orderBy("vec_id")
     },
-    Some("""WITH sc AS MATERIALIZED (SELECT vec_id, embedding,
-                   list_transform(range(0,16), kk ->
-                     list_sum(list_transform(list_zip(embedding, range(0,64)),
-                       x -> CAST(x[1] AS DOUBLE) *
-                            (CAST((1103515245*(100000 + kk*64 + x[2]) + 12345) % 2147483648 AS DOUBLE)
-                             / 2147483648.0 * 2 - 1)))
-                     / sqrt(list_sum(list_transform(range(0,64), j ->
-                         (CAST((1103515245*(100000 + kk*64 + j) + 12345) % 2147483648 AS DOUBLE)
-                          / 2147483648.0 * 2 - 1)
-                         * (CAST((1103515245*(100000 + kk*64 + j) + 12345) % 2147483648 AS DOUBLE)
-                            / 2147483648.0 * 2 - 1))))) AS scores
+    Some(s"""WITH sc AS MATERIALIZED (SELECT vec_id, embedding,
+                   $ivfScoresSql AS scores
                  FROM embeddings),
                  assigned AS MATERIALIZED (SELECT vec_id, embedding,
                                 CAST(list_position(scores, list_max(scores)) - 1 AS INT) AS cell
                               FROM sc WHERE vec_id % 5 <> 4),
-                 probes AS MATERIALIZED (SELECT new_id, qe, cell FROM (
-                     SELECT vec_id AS new_id, embedding AS qe, CAST(j AS INT) AS cell,
-                            row_number() OVER (PARTITION BY vec_id
-                              ORDER BY scores[j+1] DESC, j) AS pr
-                     FROM sc, (SELECT unnest(range(0,16)) AS j)
-                     WHERE vec_id % 5 = 4)
-                   WHERE pr <= 4),
+                 ${ivfProbesSql("vec_id % 5 = 4")},
                  m AS MATERIALIZED (SELECT new_id, a.vec_id AS store_id
                        FROM probes p JOIN assigned a
                          ON a.cell = p.cell AND a.vec_id <> p.new_id
-                       WHERE list_sum(list_transform(list_zip(p.qe, a.embedding),
-                               x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                             / (sqrt(list_sum(list_transform(p.qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                              * sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))
+                       WHERE ${cosineSql("p.qe", "a.embedding")}
                              >= 0.4),
                  agg AS MATERIALIZED (SELECT new_id, CAST(count(*) AS BIGINT) AS n_store_matches,
                                 min(store_id) AS dup_of
@@ -1709,10 +1807,7 @@ object ExtQueries {
     * cell-size filter diverges. Ordinary cross-shard twins keep
     * dropping through their sub-cap cells. */
   private val x46 = Q("x46_stream_vec_dedup",
-    (s, d) => graft.util.Sessions.withShufflePartitions(s,
-        graft.util.Sessions.streamingShufflePartitions) {
-      val root = java.nio.file.Files.createTempDirectory("graft-x46-")
-      val in = root.resolve("in"); val out = s"$root/out"; val chk = s"$root/chk"
+    (s, d) => streamed(s, "x46") { (in, out, chk) =>
       val boiler = array((0 until 64).map(j => lit((j % 7 - 3).toFloat)): _*)
       val emb = embeddings(s, d).withColumn("embedding",
         when(col("vec_id") % 7 === 0, boiler).otherwise(col("embedding")))
@@ -1735,34 +1830,20 @@ object ExtQueries {
           col("dup_of"), col("batch_id").cast("long").as("batch_id"))
         .orderBy("vec_id")
     },
-    Some("""WITH emb2 AS MATERIALIZED (SELECT vec_id,
+    Some(s"""WITH emb2 AS MATERIALIZED (SELECT vec_id,
                    CASE WHEN vec_id % 7 = 0
                         THEN list_transform(range(0,64), j -> CAST(j % 7 - 3 AS FLOAT))
                         ELSE embedding END AS embedding
                  FROM embeddings),
                  sc AS MATERIALIZED (SELECT vec_id, embedding,
-                   list_transform(range(0,16), kk ->
-                     list_sum(list_transform(list_zip(embedding, range(0,64)),
-                       x -> CAST(x[1] AS DOUBLE) *
-                            (CAST((1103515245*(100000 + kk*64 + x[2]) + 12345) % 2147483648 AS DOUBLE)
-                             / 2147483648.0 * 2 - 1)))
-                     / sqrt(list_sum(list_transform(range(0,64), j ->
-                         (CAST((1103515245*(100000 + kk*64 + j) + 12345) % 2147483648 AS DOUBLE)
-                          / 2147483648.0 * 2 - 1)
-                         * (CAST((1103515245*(100000 + kk*64 + j) + 12345) % 2147483648 AS DOUBLE)
-                            / 2147483648.0 * 2 - 1))))) AS scores
+                   $ivfScoresSql AS scores
                  FROM emb2),
                  cells AS MATERIALIZED (SELECT vec_id, embedding,
                              CAST(list_position(scores, list_max(scores)) - 1 AS INT) AS cell
                            FROM sc),
                  cap AS MATERIALIZED (SELECT CAST(ceiling(1.05 * count(*) / 16) AS BIGINT) AS cap
                          FROM embeddings WHERE vec_id % 3 = 0),
-                 probes AS MATERIALIZED (SELECT new_id, qe, cell FROM (
-                     SELECT vec_id AS new_id, embedding AS qe, CAST(j AS INT) AS cell,
-                            row_number() OVER (PARTITION BY vec_id
-                              ORDER BY scores[j+1] DESC, j) AS pr
-                     FROM sc, (SELECT unnest(range(0,16)) AS j))
-                   WHERE pr <= 4),
+                 ${ivfProbesSql()},
                  s1 AS MATERIALIZED (SELECT vec_id FROM embeddings WHERE vec_id % 3 = 1),
                  s2 AS MATERIALIZED (SELECT vec_id FROM embeddings WHERE vec_id % 3 = 2),
                  sized1 AS MATERIALIZED (SELECT cell FROM cells WHERE vec_id % 3 = 0
@@ -1772,10 +1853,7 @@ object ExtQueries {
                           ON a.cell = p.cell AND a.vec_id <> p.new_id
                         JOIN sized1 ON a.cell = sized1.cell
                         WHERE p.new_id % 3 = 1 AND a.vec_id % 3 = 0
-                          AND list_sum(list_transform(list_zip(p.qe, a.embedding),
-                                x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                              / (sqrt(list_sum(list_transform(p.qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                               * sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))
+                          AND ${cosineSql("p.qe", "a.embedding")}
                               >= 0.4),
                  v1 AS MATERIALIZED (SELECT s1.vec_id, (min(m1.store_id) IS NULL) AS kept,
                                CAST(count(m1.store_id) AS BIGINT) AS n_store_matches,
@@ -1792,10 +1870,7 @@ object ExtQueries {
                         JOIN st1 ON a.vec_id = st1.vec_id
                         JOIN sized2 ON a.cell = sized2.cell
                         WHERE p.new_id % 3 = 2
-                          AND list_sum(list_transform(list_zip(p.qe, a.embedding),
-                                x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                              / (sqrt(list_sum(list_transform(p.qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                               * sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))
+                          AND ${cosineSql("p.qe", "a.embedding")}
                               >= 0.4),
                  v2 AS MATERIALIZED (SELECT s2.vec_id, (min(m2.store_id) IS NULL) AS kept,
                                CAST(count(m2.store_id) AS BIGINT) AS n_store_matches,
@@ -1849,22 +1924,13 @@ object ExtQueries {
             graft.ext.VectorStore.countsTable("x47_vec_store"))))
         .orderBy("vec_id")
     },
-    Some("""WITH emb2 AS MATERIALIZED (SELECT vec_id,
+    Some(s"""WITH emb2 AS MATERIALIZED (SELECT vec_id,
                    CASE WHEN vec_id % 7 = 0
                         THEN list_transform(range(0,64), j -> CAST(j % 7 - 3 AS FLOAT))
                         ELSE embedding END AS embedding
                  FROM embeddings),
                  sc AS MATERIALIZED (SELECT vec_id, embedding,
-                   list_transform(range(0,16), kk ->
-                     list_sum(list_transform(list_zip(embedding, range(0,64)),
-                       x -> CAST(x[1] AS DOUBLE) *
-                            (CAST((1103515245*(100000 + kk*64 + x[2]) + 12345) % 2147483648 AS DOUBLE)
-                             / 2147483648.0 * 2 - 1)))
-                     / sqrt(list_sum(list_transform(range(0,64), j ->
-                         (CAST((1103515245*(100000 + kk*64 + j) + 12345) % 2147483648 AS DOUBLE)
-                          / 2147483648.0 * 2 - 1)
-                         * (CAST((1103515245*(100000 + kk*64 + j) + 12345) % 2147483648 AS DOUBLE)
-                            / 2147483648.0 * 2 - 1))))) AS scores
+                   $ivfScoresSql AS scores
                  FROM emb2),
                  assigned AS MATERIALIZED (SELECT vec_id, embedding,
                                 CAST(list_position(scores, list_max(scores)) - 1 AS INT) AS cell
@@ -1874,20 +1940,11 @@ object ExtQueries {
                              CAST(ceiling(1.05 * (SELECT count(*) FROM assigned) / 16) AS BIGINT)),
                  aok AS MATERIALIZED (SELECT a.vec_id, a.embedding, a.cell
                          FROM assigned a JOIN sized ON a.cell = sized.cell),
-                 probes AS MATERIALIZED (SELECT new_id, qe, cell FROM (
-                     SELECT vec_id AS new_id, embedding AS qe, CAST(j AS INT) AS cell,
-                            row_number() OVER (PARTITION BY vec_id
-                              ORDER BY scores[j+1] DESC, j) AS pr
-                     FROM sc, (SELECT unnest(range(0,16)) AS j)
-                     WHERE vec_id % 5 = 4)
-                   WHERE pr <= 4),
+                 ${ivfProbesSql("vec_id % 5 = 4")},
                  m AS MATERIALIZED (SELECT new_id, a.vec_id AS store_id
                        FROM probes p JOIN aok a
                          ON a.cell = p.cell AND a.vec_id <> p.new_id
-                       WHERE list_sum(list_transform(list_zip(p.qe, a.embedding),
-                               x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                             / (sqrt(list_sum(list_transform(p.qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                              * sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))
+                       WHERE ${cosineSql("p.qe", "a.embedding")}
                              >= 0.4),
                  agg AS MATERIALIZED (SELECT new_id, CAST(count(*) AS BIGINT) AS n_store_matches,
                                 min(store_id) AS dup_of
@@ -1918,24 +1975,8 @@ object ExtQueries {
           "vec_id", "embedding", k = 5, centroids = codebook, nProbe = 4)
         .orderBy("query_id", "rank")
     },
-    Some("""WITH q AS MATERIALIZED (SELECT vec_id, list_transform(embedding,
-                      v -> CAST(floor(CAST(v AS DOUBLE)*1048576 + 0.5) AS BIGINT) + 2097152) AS u
-                    FROM embeddings),
-             ql AS MATERIALIZED (SELECT vec_id, e.e.i AS pos, e.e.x AS x
-                    FROM q, unnest(list_transform(generate_series(1, len(u)),
-                           i -> {'i': i-1, 'x': u[i]})) AS e(e)),
-             c0 AS MATERIALIZED (SELECT vec_id AS cid, pos, x AS c FROM ql WHERE vec_id < 16),
-             d1 AS MATERIALIZED (SELECT ql.vec_id, c0.cid, sum((ql.x - c0.c)*(ql.x - c0.c)) AS dist
-                    FROM ql JOIN c0 USING (pos) GROUP BY 1, 2),
-             a1 AS MATERIALIZED (SELECT vec_id, cid,
-                      row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-                    FROM d1),
-             m1 AS MATERIALIZED (SELECT vec_id, cid FROM a1 WHERE rn = 1),
-             c1 AS MATERIALIZED (SELECT m1.cid, ql.pos,
-                      CAST((2*sum(ql.x) + count(*)) // (2*count(*)) AS BIGINT) AS c
-                    FROM ql JOIN m1 USING (vec_id) GROUP BY 1, 2),
-             d2 AS MATERIALIZED (SELECT ql.vec_id, c1.cid, sum((ql.x - c1.c)*(ql.x - c1.c)) AS dist
-                    FROM ql JOIN c1 USING (pos) GROUP BY 1, 2),
+    Some(s"""WITH $kmQuantSql,
+             ${kmLloydSql(16)},
              asg AS MATERIALIZED (SELECT vec_id, cid FROM
                        (SELECT vec_id, cid,
                           row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
@@ -1946,19 +1987,12 @@ object ExtQueries {
                      FROM d2 WHERE vec_id < 8),
              probes AS MATERIALIZED (SELECT query_id, cid FROM prn WHERE pr <= 4),
              scored AS MATERIALIZED (SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id,
-                 list_sum(list_transform(list_zip(qe.embedding, ne.embedding),
-                   x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                 / (sqrt(list_sum(list_transform(qe.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(ne.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) AS sim
+                 ${cosineSql("qe.embedding", "ne.embedding")} AS sim
                FROM probes p
                JOIN asg a ON a.cid = p.cid AND a.vec_id <> p.query_id
                JOIN embeddings qe ON qe.vec_id = p.query_id
                JOIN embeddings ne ON ne.vec_id = a.vec_id),
-             r AS MATERIALIZED (SELECT query_id, neighbor_id, sim,
-                     row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rn
-                   FROM scored)
-            SELECT query_id, CAST(rn AS INT) AS rank, neighbor_id, sim
-            FROM r WHERE rn <= 5 ORDER BY query_id, rank"""))
+             $topKSql"""))
 
   /** The TRAINED-codebook incremental vector-store loop — x46's
     * continuous ingest with x48's fitted k-means cells, end to end on
@@ -1986,10 +2020,7 @@ object ExtQueries {
     * after batch 1, so the oracle proves the maintenance pass preserves
     * dedup semantics across the batch boundary. */
   private val x49 = Q("x49_stream_vec_trained",
-    (s, d) => graft.util.Sessions.withShufflePartitions(s,
-        graft.util.Sessions.streamingShufflePartitions) {
-      val root = java.nio.file.Files.createTempDirectory("graft-x49-")
-      val in = root.resolve("in"); val out = s"$root/out"; val chk = s"$root/chk"
+    (s, d) => streamed(s, "x49") { (in, out, chk) =>
       val emb = embeddings(s, d)
       val shard0 = emb.filter(col("vec_id") % 3 === 0)
       val codebook = KMeans.fit(shard0, "vec_id", "embedding",
@@ -2008,12 +2039,7 @@ object ExtQueries {
           col("dup_of"), col("batch_id").cast("long").as("batch_id"))
         .orderBy("vec_id")
     },
-    Some("""WITH q AS MATERIALIZED (SELECT vec_id, list_transform(embedding,
-                      v -> CAST(floor(CAST(v AS DOUBLE)*1048576 + 0.5) AS BIGINT) + 2097152) AS u
-                    FROM embeddings),
-             ql AS MATERIALIZED (SELECT vec_id, e.e.i AS pos, e.e.x AS x
-                    FROM q, unnest(list_transform(generate_series(1, len(u)),
-                           i -> {'i': i-1, 'x': u[i]})) AS e(e)),
+    Some(s"""WITH $kmQuantSql,
              seeds AS MATERIALIZED (SELECT vec_id, rn - 1 AS cid FROM (
                          SELECT vec_id, row_number() OVER (ORDER BY vec_id) AS rn
                          FROM embeddings WHERE vec_id % 3 = 0)
@@ -2052,10 +2078,7 @@ object ExtQueries {
                      JOIN embeddings qe ON qe.vec_id = p.new_id
                      JOIN embeddings ne ON ne.vec_id = a.vec_id
                      WHERE p.new_id % 3 = 1 AND a.vec_id % 3 = 0
-                       AND list_sum(list_transform(list_zip(qe.embedding, ne.embedding),
-                             x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                           / (sqrt(list_sum(list_transform(qe.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                            * sqrt(list_sum(list_transform(ne.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))
+                       AND ${cosineSql("qe.embedding", "ne.embedding")}
                            >= 0.4),
              v1 AS MATERIALIZED (SELECT s1.vec_id, (min(m1v.store_id) IS NULL) AS kept,
                            CAST(count(m1v.store_id) AS BIGINT) AS n_store_matches,
@@ -2071,10 +2094,7 @@ object ExtQueries {
                      JOIN embeddings qe ON qe.vec_id = p.new_id
                      JOIN embeddings ne ON ne.vec_id = a.vec_id
                      WHERE p.new_id % 3 = 2
-                       AND list_sum(list_transform(list_zip(qe.embedding, ne.embedding),
-                             x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                           / (sqrt(list_sum(list_transform(qe.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                            * sqrt(list_sum(list_transform(ne.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))
+                       AND ${cosineSql("qe.embedding", "ne.embedding")}
                            >= 0.4),
              v2 AS MATERIALIZED (SELECT s2.vec_id, (min(m2v.store_id) IS NULL) AS kept,
                            CAST(count(m2v.store_id) AS BIGINT) AS n_store_matches,
@@ -2112,9 +2132,7 @@ object ExtQueries {
           s.table("x50_fp_store"))
         .orderBy("doc_id")
     },
-    Some("""WITH f AS MATERIALIZED (SELECT doc_id,
-                         md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
-                       FROM documents),
+    Some(s"""WITH $exactFpSql,
                  store AS MATERIALIZED (SELECT fp, min(doc_id) AS canonical_id
                            FROM f WHERE doc_id % 3 <> 2 GROUP BY fp),
                  fresh AS MATERIALIZED (SELECT doc_id, fp FROM f WHERE doc_id % 3 = 2
@@ -2142,10 +2160,7 @@ object ExtQueries {
     * verdicts are compaction-invariant under the trigger. Batch order
     * is pinned by staged-file modification times. */
   private val x51 = Q("x51_stream_exact_dedup",
-    (s, d) => graft.util.Sessions.withShufflePartitions(s,
-        graft.util.Sessions.streamingShufflePartitions) {
-      val root = java.nio.file.Files.createTempDirectory("graft-x51-")
-      val in = root.resolve("in"); val out = s"$root/out"; val chk = s"$root/chk"
+    (s, d) => streamed(s, "x51") { (in, out, chk) =>
       val docs = documents(s, d).select(col("doc_id"), col("text"))
       def recrawl(pred: org.apache.spark.sql.Column, offset: Long) =
         docs.filter(pred).select((col("doc_id") + offset).as("doc_id"),
@@ -2171,9 +2186,7 @@ object ExtQueries {
           col("batch_id").cast("long").as("batch_id"))
         .orderBy("doc_id")
     },
-    Some("""WITH f AS MATERIALIZED (SELECT doc_id,
-                         md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
-                       FROM documents),
+    Some(s"""WITH $exactFpSql,
                  store0 AS MATERIALIZED (SELECT fp, min(doc_id) AS cid
                             FROM f WHERE doc_id % 3 = 0 GROUP BY fp),
                  b1 AS MATERIALIZED (SELECT doc_id, fp FROM f WHERE doc_id % 3 = 1
@@ -2217,32 +2230,13 @@ object ExtQueries {
   private val x52 = Q("x52_decontaminate_store",
     (s, d) => {
       val docs = documents(s, d)
-      Decontaminate.writeBenchmarkStore(docs.filter(col("doc_id") % 10 === 0),
-        "text", n = 8, table = "x52_bench_store", buckets = 8)
+      benchStore(docs, "x52_bench_store")
       Decontaminate.contaminatedAgainstStore(
           docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text",
           "x52_bench_store")
         .orderBy("doc_id")
     },
-    Some(benchContamOracle))
-
-  /** The x52 store-served contamination oracle (the x44 split over the
-    * FULL %10 benchmark), shared verbatim by x71's append-grown store —
-    * append-then-serve must equal a store rebuilt on the whole
-    * benchmark, so the two queries must read the SAME replay. */
-  private lazy val benchContamOracle = s"""WITH $tokSql,
-             g AS MATERIALIZED (SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-7),
-                      i -> CAST(CAST('0x'||substr(md5(array_to_string(w[i:i+7], ' ')),1,15) AS UBIGINT) AS BIGINT))) AS gram_fp
-                   FROM toks WHERE len(w) >= 8),
-             dg AS MATERIALIZED (SELECT DISTINCT doc_id, gram_fp FROM g),
-             ev AS MATERIALIZED (SELECT DISTINCT gram_fp FROM g WHERE doc_id % 10 = 0),
-             tr AS MATERIALIZED (SELECT * FROM dg WHERE doc_id % 10 <> 0),
-             tot AS MATERIALIZED (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams FROM tr GROUP BY 1),
-             sh AS MATERIALIZED (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shared
-                    FROM tr JOIN ev USING (gram_fp) GROUP BY 1)
-             SELECT s.doc_id, t.n_grams, s.n_shared,
-                    CAST(s.n_shared AS DOUBLE) / t.n_grams AS contamination
-             FROM sh s JOIN tot t USING (doc_id) ORDER BY doc_id"""
+    Some(decontamOracle))
 
   /** Bigram-LM quality scoring ([[graft.ext.LmScore]] — the
     * CCNet/KenLM filtering pattern): bigram statistics are fitted on
@@ -2264,25 +2258,11 @@ object ExtQueries {
     * counts + per-doc quantized sums), shared by the scoring oracles
     * (x53/x54/x55) and x59's per-source quantile gate. */
   private val lmCascadeSql = s"""WITH $tokSql,
-             pairs AS MATERIALIZED (SELECT doc_id, u.pr.uf AS uni_fp, u.pr.bf AS bi_fp
-                       FROM toks, unnest(list_transform(generate_series(1, len(w)-1),
-                         i -> {'uf': CAST(CAST('0x'||substr(md5(w[i]),1,15) AS UBIGINT) AS BIGINT),
-                               'bf': CAST(CAST('0x'||substr(md5(w[i]||' '||w[i+1]),1,15) AS UBIGINT) AS BIGINT)})) AS u(pr)
-                       WHERE len(w) >= 2),
-             c1 AS MATERIALIZED (SELECT fp, count(*) AS c FROM (
-                      SELECT unnest(list_transform(generate_series(1, len(w)),
-                        i -> CAST(CAST('0x'||substr(md5(w[i]),1,15) AS UBIGINT) AS BIGINT))) AS fp
-                      FROM toks WHERE doc_id % 10 <> 0 AND len(w) >= 1)
-                    GROUP BY fp),
-             c2 AS MATERIALIZED (SELECT fp, count(*) AS c FROM (
-                      SELECT unnest(list_transform(generate_series(1, len(w)-1),
-                        i -> CAST(CAST('0x'||substr(md5(w[i]||' '||w[i+1]),1,15) AS UBIGINT) AS BIGINT))) AS fp
-                      FROM toks WHERE doc_id % 10 <> 0 AND len(w) >= 2)
-                    GROUP BY fp),
+             ${lmPairsSql("pairs", "toks")},
+             ${lmCountsSql("c", "toks", "doc_id % 10 <> 0")},
              sc AS MATERIALIZED (SELECT p.doc_id,
                       CAST(count(*) AS BIGINT) AS n_bigrams,
-                      CAST(sum(CAST(floor(COALESCE(CAST(c2.c AS DOUBLE) / CAST(c1.c AS DOUBLE), 0.0)
-                                          * 1073741824.0) AS BIGINT)) AS BIGINT) AS p_sum_q
+                      ${lmSumQSql("c2", "c1")} AS p_sum_q
                     FROM pairs p
                     LEFT JOIN c2 ON p.bi_fp = c2.fp
                     LEFT JOIN c1 ON p.uni_fp = c1.fp
@@ -2366,6 +2346,39 @@ object ExtQueries {
     * lm_score ≥ 0.033 (no-transition docs pass — no evidence, no
     * drop). One row per shard doc: kept, the dropping stage, the dup
     * target, and the gate metrics where the doc reached them. */
+  /** The curation-loop fixture shared by x56/x57 and x72: the train docs
+    * (doc_id % 10 ≠ 0) joined to their embeddings, the five stores
+    * `<tag>_fp|sig|vec|bench|model` built from the `doc_id % seedMod = 0`
+    * slice (the benchmark store from the held-out %10 docs, the LM model
+    * from all train docs), and a fresh loop output root. Returns the
+    * joined corpus, the stores and the root. */
+  private def curationFixture(s: org.apache.spark.sql.SparkSession, d: String,
+                              tag: String, seedMod: Int)
+      : (org.apache.spark.sql.DataFrame, graft.ext.CurationLoop.Stores, String) = {
+    val docs = documents(s, d)
+    val train = docs.filter(col("doc_id") % 10 =!= 0)
+    val full = train
+      .join(embeddings(s, d).select(col("vec_id").as("doc_id"), col("embedding")),
+        Seq("doc_id"))
+      .select(col("doc_id"), col("text"), col("embedding"))
+    val seed = full.filter(col("doc_id") % seedMod === 0)
+    ExactDedup.writeFingerprintStore(seed, "doc_id", "text",
+      table = s"${tag}_fp", buckets = 8)
+    graft.ext.IncrementalDedup.writeSignatureStore(seed, "doc_id", "text",
+      shingleN = 3, numHashes = 16, nBands = 4, table = s"${tag}_sig",
+      buckets = 8)
+    graft.ext.VectorStore.writeVectorStore(
+      seed.select(col("doc_id"), col("embedding")), "doc_id", "embedding",
+      nCentroids = 16, dim = 64, seedOffset = 100000L,
+      table = s"${tag}_vec", buckets = 8)
+    benchStore(docs, s"${tag}_bench")
+    graft.ext.LmScore.writeModelStore(train, "text",
+      table = s"${tag}_model", buckets = 8)
+    val stores = graft.ext.CurationLoop.Stores(s"${tag}_fp", s"${tag}_sig",
+      s"${tag}_vec", s"${tag}_bench", s"${tag}_model", buckets = 8)
+    (full, stores, graft.util.Staging.exitScopedRoot(s"graft-$tag-").toString)
+  }
+
   /** Seed the five x56 stores from the driver tables and run the
     * two-shard composed loop; returns the loop's output root. Shared
     * by x56 (per-doc verdicts) and x57 (funnel counts) — each
@@ -2373,30 +2386,7 @@ object ExtQueries {
     * reset), so the two checked queries stay independent. */
   private def runCurationLoop(s: org.apache.spark.sql.SparkSession,
                               d: String): String = {
-      val docs = documents(s, d)
-      val emb = embeddings(s, d)
-      val train = docs.filter(col("doc_id") % 10 =!= 0)
-      val full = train
-        .join(emb.select(col("vec_id").as("doc_id"), col("embedding")),
-          Seq("doc_id"))
-        .select(col("doc_id"), col("text"), col("embedding"))
-      val seed = full.filter(col("doc_id") % 3 === 0)
-      ExactDedup.writeFingerprintStore(seed, "doc_id", "text",
-        table = "x56_fp", buckets = 8)
-      graft.ext.IncrementalDedup.writeSignatureStore(seed, "doc_id", "text",
-        shingleN = 3, numHashes = 16, nBands = 4, table = "x56_sig",
-        buckets = 8)
-      graft.ext.VectorStore.writeVectorStore(
-        seed.select(col("doc_id"), col("embedding")), "doc_id", "embedding",
-        nCentroids = 16, dim = 64, seedOffset = 100000L,
-        table = "x56_vec", buckets = 8)
-      Decontaminate.writeBenchmarkStore(docs.filter(col("doc_id") % 10 === 0),
-        "text", n = 8, table = "x56_bench", buckets = 8)
-      graft.ext.LmScore.writeModelStore(train, "text",
-        table = "x56_model", buckets = 8)
-      val root = java.nio.file.Files.createTempDirectory("graft-x56-").toString
-      val stores = graft.ext.CurationLoop.Stores("x56_fp", "x56_sig",
-        "x56_vec", "x56_bench", "x56_model", buckets = 8)
+      val (full, stores, root) = curationFixture(s, d, "x56", seedMod = 3)
       val params = graft.ext.CurationLoop.Params(shingleN = 3,
         numHashes = 16, nBands = 4, minJaccard = 0.5, minCosine = 0.4,
         nCentroids = 16, nProbe = 4, dim = 64, seedOffset = 100000L,
@@ -2448,21 +2438,7 @@ e2 AS MATERIALIZED (SELECT b2.doc_id, s.cid AS dup_of
 ever AS MATERIALIZED (SELECT doc_id, dup_of, 0 AS b FROM e1
          UNION ALL SELECT doc_id, dup_of, 1 AS b FROM e2),
 -- ======== stage 2: MinHash near-dup (x34 recipe, two-batch growth) ========
-sh AS MATERIALIZED (SELECT doc_id,
-         list_transform(range(0, len(w)-2), i -> w[i+1]||' '||w[i+2]||' '||w[i+3]) AS sgl
-       FROM toks WHERE len(w) >= 3),
-hs AS MATERIALIZED (SELECT doc_id, list_transform(sgl, s ->
-         CAST(CAST('0x'||substr(md5(s),1,15) AS UBIGINT) AS BIGINT) % 1000000007) AS hh
-       FROM sh),
-sig AS MATERIALIZED (SELECT doc_id, list_transform(range(0,16), i ->
-          list_min(list_transform(hh, h ->
-            (((1103515245*(i+1) + 12345) % 1000000006 + 1) * h
-              + (1103515245*(i+101) + 12345) % 1000000007) % 1000000007))) AS sg
-        FROM hs),
-bands AS MATERIALIZED (SELECT doc_id, b AS bb,
-            CAST(sg[4*b+1] AS VARCHAR)||'-'||CAST(sg[4*b+2] AS VARCHAR)
-              ||'-'||CAST(sg[4*b+3] AS VARCHAR)||'-'||CAST(sg[4*b+4] AS VARCHAR) AS bk
-          FROM sig, (SELECT unnest(range(0,4)) AS b)),
+${minHashSql("b AS bb")},
 nb0 AS MATERIALIZED (SELECT doc_id, bb, bk FROM bands
         WHERE doc_id % 10 <> 0 AND doc_id % 3 = 0
           AND doc_id IN (SELECT vec_id FROM embeddings)),
@@ -2494,16 +2470,7 @@ nver AS MATERIALIZED (SELECT doc_id, dup_of, 0 AS b FROM n1
          UNION ALL SELECT doc_id, dup_of, 1 AS b FROM n2),
 -- ======== stage 3: LCG-IVF vector dedup (x45 recipe, two-batch growth) ========
 sc AS MATERIALIZED (SELECT vec_id, embedding,
-         list_transform(range(0,16), kk ->
-           list_sum(list_transform(list_zip(embedding, range(0,64)),
-             x -> CAST(x[1] AS DOUBLE) *
-                  (CAST((1103515245*(100000 + kk*64 + x[2]) + 12345) % 2147483648 AS DOUBLE)
-                   / 2147483648.0 * 2 - 1)))
-           / sqrt(list_sum(list_transform(range(0,64), j ->
-               (CAST((1103515245*(100000 + kk*64 + j) + 12345) % 2147483648 AS DOUBLE)
-                / 2147483648.0 * 2 - 1)
-               * (CAST((1103515245*(100000 + kk*64 + j) + 12345) % 2147483648 AS DOUBLE)
-                  / 2147483648.0 * 2 - 1))))) AS scores
+         $ivfScoresSql AS scores
        FROM embeddings),
 va0 AS MATERIALIZED (SELECT vec_id, embedding,
           CAST(list_position(scores, list_max(scores)) - 1 AS INT) AS cell
@@ -2520,10 +2487,7 @@ v1 AS MATERIALIZED (SELECT i.doc_id, a.dup_of FROM v1in i LEFT JOIN (
          SELECT new_id, min(store_id) AS dup_of FROM (
            SELECT p.new_id, a0.vec_id AS store_id
            FROM p1 p JOIN va0 a0 ON a0.cell = p.cell AND a0.vec_id <> p.new_id
-           WHERE list_sum(list_transform(list_zip(p.qe, a0.embedding),
-                   x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                 / (sqrt(list_sum(list_transform(p.qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(a0.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))
+           WHERE ${cosineSql("p.qe", "a0.embedding")}
                  >= 0.4) GROUP BY new_id) a ON a.new_id = i.doc_id),
 va1 AS MATERIALIZED (SELECT * FROM va0
         UNION ALL
@@ -2542,19 +2506,13 @@ v2 AS MATERIALIZED (SELECT i.doc_id, a.dup_of FROM v2in i LEFT JOIN (
          SELECT new_id, min(store_id) AS dup_of FROM (
            SELECT p.new_id, a1.vec_id AS store_id
            FROM p2 p JOIN va1 a1 ON a1.cell = p.cell AND a1.vec_id <> p.new_id
-           WHERE list_sum(list_transform(list_zip(p.qe, a1.embedding),
-                   x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                 / (sqrt(list_sum(list_transform(p.qe, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(a1.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))
+           WHERE ${cosineSql("p.qe", "a1.embedding")}
                  >= 0.4) GROUP BY new_id) a ON a.new_id = i.doc_id),
 vver AS MATERIALIZED (SELECT doc_id, dup_of, 0 AS b FROM v1
          UNION ALL SELECT doc_id, dup_of, 1 AS b FROM v2),
 -- ======== stage 4: decontamination gate (x52 recipe, read-only) ========
 s4in AS MATERIALIZED (SELECT doc_id FROM vver WHERE dup_of IS NULL),
-g AS MATERIALIZED (SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-7),
-         i -> CAST(CAST('0x'||substr(md5(array_to_string(w[i:i+7], ' ')),1,15) AS UBIGINT) AS BIGINT))) AS gram_fp
-      FROM toks WHERE len(w) >= 8),
-dg AS MATERIALIZED (SELECT DISTINCT doc_id, gram_fp FROM g),
+$gramsSql,
 evg AS MATERIALIZED (SELECT DISTINCT gram_fp FROM g WHERE doc_id % 10 = 0),
 tr4 AS MATERIALIZED (SELECT dg.doc_id, dg.gram_fp FROM dg JOIN s4in ON s4in.doc_id = dg.doc_id),
 tot4 AS MATERIALIZED (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams FROM tr4 GROUP BY 1),
@@ -2566,25 +2524,11 @@ cont AS MATERIALIZED (SELECT t.doc_id,
 -- ======== stage 5: LM quality gate (x53 recipe, read-only) ========
 s5in AS MATERIALIZED (SELECT i.doc_id FROM s4in i LEFT JOIN cont c ON c.doc_id = i.doc_id
          WHERE COALESCE(c.cont, 0.0) <= 0.5),
-pairs AS MATERIALIZED (SELECT doc_id, u.pr.uf AS uni_fp, u.pr.bf AS bi_fp
-          FROM toks, unnest(list_transform(generate_series(1, len(w)-1),
-            i -> {'uf': CAST(CAST('0x'||substr(md5(w[i]),1,15) AS UBIGINT) AS BIGINT),
-                  'bf': CAST(CAST('0x'||substr(md5(w[i]||' '||w[i+1]),1,15) AS UBIGINT) AS BIGINT)})) AS u(pr)
-          WHERE len(w) >= 2),
-c1 AS MATERIALIZED (SELECT fp, count(*) AS c FROM (
-         SELECT unnest(list_transform(generate_series(1, len(w)),
-           i -> CAST(CAST('0x'||substr(md5(w[i]),1,15) AS UBIGINT) AS BIGINT))) AS fp
-         FROM toks WHERE doc_id % 10 <> 0 AND len(w) >= 1)
-       GROUP BY fp),
-c2 AS MATERIALIZED (SELECT fp, count(*) AS c FROM (
-         SELECT unnest(list_transform(generate_series(1, len(w)-1),
-           i -> CAST(CAST('0x'||substr(md5(w[i]||' '||w[i+1]),1,15) AS UBIGINT) AS BIGINT))) AS fp
-         FROM toks WHERE doc_id % 10 <> 0 AND len(w) >= 2)
-       GROUP BY fp),
+${lmPairsSql("pairs", "toks")},
+${lmCountsSql("c", "toks", "doc_id % 10 <> 0")},
 lmsc AS MATERIALIZED (SELECT p.doc_id,
            CAST(count(*) AS BIGINT) AS n_bigrams,
-           CAST(sum(CAST(floor(COALESCE(CAST(c2.c AS DOUBLE) / CAST(c1.c AS DOUBLE), 0.0)
-                               * 1073741824.0) AS BIGINT)) AS BIGINT) AS p_sum_q
+           ${lmSumQSql("c2", "c1")} AS p_sum_q
          FROM pairs p
          JOIN s5in ON s5in.doc_id = p.doc_id
          LEFT JOIN c2 ON p.bi_fp = c2.fp
@@ -2681,37 +2625,13 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
   private val dsirAggSql = s"""$tokSql,
              tokl AS MATERIALIZED (SELECT t.doc_id, t.w, d.lang
                       FROM toks t JOIN documents d USING (doc_id)),
-             pairs AS MATERIALIZED (SELECT doc_id, u.pr.uf AS uni_fp, u.pr.bf AS bi_fp
-                       FROM toks, unnest(list_transform(generate_series(1, len(w)-1),
-                         i -> {'uf': CAST(CAST('0x'||substr(md5(w[i]),1,15) AS UBIGINT) AS BIGINT),
-                               'bf': CAST(CAST('0x'||substr(md5(w[i]||' '||w[i+1]),1,15) AS UBIGINT) AS BIGINT)})) AS u(pr)
-                       WHERE len(w) >= 2),
-             tc1 AS MATERIALIZED (SELECT fp, count(*) AS c FROM (
-                       SELECT unnest(list_transform(generate_series(1, len(w)),
-                         i -> CAST(CAST('0x'||substr(md5(w[i]),1,15) AS UBIGINT) AS BIGINT))) AS fp
-                       FROM tokl WHERE lang = 'en' AND len(w) >= 1)
-                     GROUP BY fp),
-             tc2 AS MATERIALIZED (SELECT fp, count(*) AS c FROM (
-                       SELECT unnest(list_transform(generate_series(1, len(w)-1),
-                         i -> CAST(CAST('0x'||substr(md5(w[i]||' '||w[i+1]),1,15) AS UBIGINT) AS BIGINT))) AS fp
-                       FROM tokl WHERE lang = 'en' AND len(w) >= 2)
-                     GROUP BY fp),
-             sc1 AS MATERIALIZED (SELECT fp, count(*) AS c FROM (
-                       SELECT unnest(list_transform(generate_series(1, len(w)),
-                         i -> CAST(CAST('0x'||substr(md5(w[i]),1,15) AS UBIGINT) AS BIGINT))) AS fp
-                       FROM tokl WHERE lang <> 'en' AND len(w) >= 1)
-                     GROUP BY fp),
-             sc2 AS MATERIALIZED (SELECT fp, count(*) AS c FROM (
-                       SELECT unnest(list_transform(generate_series(1, len(w)-1),
-                         i -> CAST(CAST('0x'||substr(md5(w[i]||' '||w[i+1]),1,15) AS UBIGINT) AS BIGINT))) AS fp
-                       FROM tokl WHERE lang <> 'en' AND len(w) >= 2)
-                     GROUP BY fp),
+             ${lmPairsSql("pairs", "toks")},
+             ${lmCountsSql("tc", "tokl", "lang = 'en'")},
+             ${lmCountsSql("sc", "tokl", "lang <> 'en'")},
              agg AS MATERIALIZED (SELECT p.doc_id,
                        CAST(count(*) AS BIGINT) AS n_bigrams,
-                       CAST(sum(CAST(floor(COALESCE(CAST(t2.c AS DOUBLE) / CAST(t1.c AS DOUBLE), 0.0)
-                                           * 1073741824.0) AS BIGINT)) AS BIGINT) AS t_sum_q,
-                       CAST(sum(CAST(floor(COALESCE(CAST(s2.c AS DOUBLE) / CAST(s1.c AS DOUBLE), 0.0)
-                                           * 1073741824.0) AS BIGINT)) AS BIGINT) AS s_sum_q
+                       ${lmSumQSql("t2", "t1")} AS t_sum_q,
+                       ${lmSumQSql("s2", "s1")} AS s_sum_q
                      FROM pairs p
                      LEFT JOIN tc2 t2 ON p.bi_fp = t2.fp
                      LEFT JOIN tc1 t1 ON p.uni_fp = t1.fp
@@ -2811,9 +2731,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
         .select(col("doc_id"), col("lang"), col("copy_idx"), col("n_copies"))
         .orderBy("doc_id", "copy_idx")
     },
-    Some("""WITH tok AS MATERIALIZED (SELECT doc_id, lang,
-                    CAST(len(regexp_extract_all(lower(trim(text)), '\S+')) AS BIGINT) AS nt
-                  FROM documents),
+    Some(s"""WITH $langTokSql,
              b AS MATERIALIZED (SELECT 3 * CAST(sum(nt) AS BIGINT) AS budget FROM tok),
              s AS MATERIALIZED (SELECT lang, CAST(sum(nt) AS BIGINT) AS n_tokens FROM tok GROUP BY 1),
              f AS MATERIALIZED (SELECT lang,
@@ -2899,18 +2817,11 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
     (s, d) => graft.ext.DataCard.perSource(documents(s, d),
         "doc_id", "text", "lang", "source")
       .orderBy("source"),
-    Some("""WITH f AS MATERIALIZED (SELECT doc_id, lang, source,
+    Some(raw"""WITH f AS MATERIALIZED (SELECT doc_id, lang, source,
                     md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp,
                     CAST(length(text) AS BIGINT) AS nc,
                     CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS nt,
-                    CASE WHEN length(text) = 0 THEN 0.0
-                         ELSE CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / length(text)
-                    END AS digit_ratio,
-                    CASE WHEN len(regexp_extract_all(lower(text), '[a-z]+')) = 0 THEN 0.0
-                         ELSE CAST(len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
-                                x -> x IN ('the','a','of','and','to','in','is','it','for','on'))) AS DOUBLE)
-                              / len(regexp_extract_all(lower(text), '[a-z]+'))
-                    END AS stop_ratio
+                    $qualityRatiosSql
                   FROM documents),
              q AS MATERIALIZED (SELECT *, CASE WHEN nt = 0 THEN 0.0
                      ELSE CAST(nc - nt + 1 AS DOUBLE) / nt END AS avg_len FROM f),
@@ -2955,9 +2866,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
           "doc_id", "text", s.table("x63_fp_store"))
         .orderBy("fp")
     },
-    Some("""WITH f AS MATERIALIZED (SELECT doc_id,
-                    md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
-                  FROM documents),
+    Some(s"""WITH $exactFpSql,
              store AS MATERIALIZED (SELECT fp, min(doc_id) AS prev_id
                        FROM f WHERE doc_id % 3 <> 0 GROUP BY fp),
              cur AS MATERIALIZED (SELECT fp, min(doc_id) AS cur_id,
@@ -2985,10 +2894,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
         "text", chunkTokens = 10)
       .orderBy("doc_id"),
     Some(s"""WITH $tokSql,
-             p AS MATERIALIZED (SELECT doc_id, CASE WHEN len(w) = 0 THEN ['']
-                     ELSE list_transform(generate_series(0, CAST((len(w)-1)//10 AS INT)),
-                            c -> array_to_string(w[c*10+1:c*10+10], ' ')) END AS ps
-                   FROM toks),
+             $passagesSql,
              k AS MATERIALIZED (SELECT doc_id, ps,
                      list_filter(ps, (x, i) -> list_position(ps[1:i-1], x) = 0) AS kept
                    FROM p)
@@ -3010,10 +2916,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
         "text", chunkTokens = 10, minDocFreq = 2)
       .orderBy("doc_id"),
     Some(s"""WITH $tokSql,
-             p AS MATERIALIZED (SELECT doc_id, CASE WHEN len(w) = 0 THEN ['']
-                     ELSE list_transform(generate_series(0, CAST((len(w)-1)//10 AS INT)),
-                            c -> array_to_string(w[c*10+1:c*10+10], ' ')) END AS ps
-                   FROM toks),
+             $passagesSql,
              e AS MATERIALIZED (SELECT doc_id, u.e.i AS idx, u.e.p AS passage
                    FROM p, unnest(list_transform(generate_series(1, len(ps)),
                           i -> {'i': i-1, 'p': ps[i]})) AS u(e)),
@@ -3057,7 +2960,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
     * the round's empty-gate root cause. With the hints both oracles
     * answer in <1 s, bit-identically (re-checked through
     * tools/check_oracle.py). A pure planner hint: semantics unchanged. */
-  private val recipeCascadePrefixSql = """WITH corpus AS MATERIALIZED (SELECT doc_id, lang, source, text FROM documents
+  private val recipeCascadePrefixSql = raw"""WITH corpus AS MATERIALIZED (SELECT doc_id, lang, source, text FROM documents
                   UNION ALL
                   SELECT doc_id + 100000, lang, source, text
                   FROM documents WHERE doc_id % 7 = 0),
@@ -3110,21 +3013,12 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
              s3 AS MATERIALIZED (SELECT s2.* FROM s2 JOIN canon USING (doc_id)),
              -- ==== stage 4: MinHash near-dup over the cleaned text (x08 recipe, greedy by id) ====
              w3 AS MATERIALIZED (SELECT doc_id, regexp_extract_all(lower(trim(ctext)), '\S+') AS w FROM s3),
-             sh3 AS MATERIALIZED (SELECT doc_id,
-                       list_transform(range(0, len(w)-2), i -> w[i+1]||' '||w[i+2]||' '||w[i+3]) AS sgl
-                     FROM w3 WHERE len(w) >= 3),
+             ${shingleSql("3", "w3")},
              hs3 AS MATERIALIZED (SELECT doc_id, list_transform(sgl, sx ->
                        CAST(CAST('0x'||substr(md5(sx),1,15) AS UBIGINT) AS BIGINT) % 1000000007) AS hh
                      FROM sh3),
-             sig3 AS MATERIALIZED (SELECT doc_id, list_transform(range(0,16), i ->
-                        list_min(list_transform(hh, h ->
-                          (((1103515245*(i+1) + 12345) % 1000000006 + 1) * h
-                            + (1103515245*(i+101) + 12345) % 1000000007) % 1000000007))) AS sg
-                      FROM hs3),
-             bands3 AS MATERIALIZED (SELECT doc_id, b AS bb,
-                          CAST(sg[4*b+1] AS VARCHAR)||'-'||CAST(sg[4*b+2] AS VARCHAR)
-                            ||'-'||CAST(sg[4*b+3] AS VARCHAR)||'-'||CAST(sg[4*b+4] AS VARCHAR) AS bk
-                        FROM sig3, (SELECT unnest(range(0,4)) AS b)),
+             ${minHashSigSql("3")},
+             ${minHashBandsSql("b AS bb", "3")},
              nd AS MATERIALIZED (SELECT DISTINCT pr.idb AS doc_id FROM (
                       SELECT DISTINCT ba.doc_id AS ida, bb2.doc_id AS idb
                       FROM bands3 ba JOIN bands3 bb2
@@ -3136,39 +3030,25 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
              s4 AS MATERIALIZED (SELECT s3.* FROM s3 WHERE s3.doc_id NOT IN (SELECT doc_id FROM nd)),
              -- ==== stage 5: embedding dedup in LCG-IVF top-1 cells (x45 quantizer, greedy by id) ====
              vsc AS MATERIALIZED (SELECT vec_id, embedding,
-                       list_transform(range(0,16), kk ->
-                         list_sum(list_transform(list_zip(embedding, range(0,64)),
-                           x -> CAST(x[1] AS DOUBLE) *
-                                (CAST((1103515245*(100000 + kk*64 + x[2]) + 12345) % 2147483648 AS DOUBLE)
-                                 / 2147483648.0 * 2 - 1)))
-                         / sqrt(list_sum(list_transform(range(0,64), j ->
-                             (CAST((1103515245*(100000 + kk*64 + j) + 12345) % 2147483648 AS DOUBLE)
-                              / 2147483648.0 * 2 - 1)
-                             * (CAST((1103515245*(100000 + kk*64 + j) + 12345) % 2147483648 AS DOUBLE)
-                                / 2147483648.0 * 2 - 1))))) AS scores
+                       $ivfScoresSql AS scores
                      FROM embeddings),
              va AS MATERIALIZED (SELECT v.vec_id AS doc_id, v.embedding,
                       CAST(list_position(v.scores, list_max(v.scores)) - 1 AS INT) AS cell
                     FROM vsc v JOIN s4 ON s4.doc_id = v.vec_id),
              vd AS MATERIALIZED (SELECT DISTINCT vb.doc_id FROM va AS vaa JOIN va AS vb
                       ON vaa.cell = vb.cell AND vaa.doc_id < vb.doc_id
-                    WHERE list_sum(list_transform(list_zip(vaa.embedding, vb.embedding),
-                            x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                          / (sqrt(list_sum(list_transform(vaa.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                           * sqrt(list_sum(list_transform(vb.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))
+                    WHERE ${cosineSql("vaa.embedding", "vb.embedding")}
                           >= 0.4),
              s5 AS MATERIALIZED (SELECT s4.* FROM s4 WHERE s4.doc_id NOT IN (SELECT doc_id FROM vd)),
              -- ==== stage 6: decontamination vs the %10 benchmark store (x52 recipe, 8-grams of cleaned text) ====
              bw AS MATERIALIZED (SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS w
                     FROM documents WHERE doc_id % 10 = 0),
              evg AS MATERIALIZED (SELECT DISTINCT gram_fp FROM (
-                       SELECT unnest(list_transform(generate_series(1, len(w)-7),
-                         i -> CAST(CAST('0x'||substr(md5(array_to_string(w[i:i+7], ' ')),1,15) AS UBIGINT) AS BIGINT))) AS gram_fp
+                       SELECT unnest($gram8Sql) AS gram_fp
                        FROM bw WHERE len(w) >= 8)),
              w5 AS MATERIALIZED (SELECT doc_id, regexp_extract_all(lower(trim(ctext)), '\S+') AS w FROM s5),
              cg AS MATERIALIZED (SELECT DISTINCT doc_id, gram_fp FROM (
-                      SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-7),
-                        i -> CAST(CAST('0x'||substr(md5(array_to_string(w[i:i+7], ' ')),1,15) AS UBIGINT) AS BIGINT))) AS gram_fp
+                      SELECT doc_id, unnest($gram8Sql) AS gram_fp
                       FROM w5 WHERE len(w) >= 8)),
              ctot AS MATERIALIZED (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams FROM cg GROUP BY 1),
              cshr AS MATERIALIZED (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shared
@@ -3182,32 +3062,25 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
     * the %10-trained store's scores, per-source top half. x90 swaps in
     * [[recipeClassifierTailSql]] instead — same prefix, same mixture
     * tail, so the three recipe oracles share every other stage. */
-  private val recipeLmTailSql = """
+  private val recipeLmTailSql = raw"""
              -- ==== stage 7: LM quality from the %10-trained store, per-source top half (x54 + x59) ====
              lc1 AS MATERIALIZED (SELECT fp, count(*) AS c FROM (
-                       SELECT unnest(list_transform(generate_series(1, len(w)),
-                         i -> CAST(CAST('0x'||substr(md5(w[i]),1,15) AS UBIGINT) AS BIGINT))) AS fp
+                       SELECT unnest($unigramFpsSql) AS fp
                        FROM (SELECT regexp_extract_all(lower(trim(text)), '\S+') AS w
                              FROM documents WHERE doc_id % 10 <> 0)
                        WHERE len(w) >= 1)
                      GROUP BY fp),
              lc2 AS MATERIALIZED (SELECT fp, count(*) AS c FROM (
-                       SELECT unnest(list_transform(generate_series(1, len(w)-1),
-                         i -> CAST(CAST('0x'||substr(md5(w[i]||' '||w[i+1]),1,15) AS UBIGINT) AS BIGINT))) AS fp
+                       SELECT unnest($bigramFpsSql) AS fp
                        FROM (SELECT regexp_extract_all(lower(trim(text)), '\S+') AS w
                              FROM documents WHERE doc_id % 10 <> 0)
                        WHERE len(w) >= 2)
                      GROUP BY fp),
              w6 AS MATERIALIZED (SELECT doc_id, regexp_extract_all(lower(trim(ctext)), '\S+') AS w FROM s6),
-             pr7 AS MATERIALIZED (SELECT doc_id, u.pr.uf AS uni_fp, u.pr.bf AS bi_fp
-                     FROM w6, unnest(list_transform(generate_series(1, len(w)-1),
-                       i -> {'uf': CAST(CAST('0x'||substr(md5(w[i]),1,15) AS UBIGINT) AS BIGINT),
-                             'bf': CAST(CAST('0x'||substr(md5(w[i]||' '||w[i+1]),1,15) AS UBIGINT) AS BIGINT)})) AS u(pr)
-                     WHERE len(w) >= 2),
+             ${lmPairsSql("pr7", "w6")},
              lmsc AS MATERIALIZED (SELECT p7.doc_id,
                         CAST(count(*) AS BIGINT) AS nb,
-                        CAST(sum(CAST(floor(COALESCE(CAST(lc2.c AS DOUBLE) / CAST(lc1.c AS DOUBLE), 0.0)
-                                            * 1073741824.0) AS BIGINT)) AS BIGINT) AS psq
+                        ${lmSumQSql("lc2", "lc1")} AS psq
                       FROM pr7 p7
                       LEFT JOIN lc2 ON p7.bi_fp = lc2.fp
                       LEFT JOIN lc1 ON p7.uni_fp = lc1.fp
@@ -3251,8 +3124,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
     // driver calls them sequentially). Contents are deterministic
     // either way.
     graft.core.Bucketing.inParallel(
-      Decontaminate.writeBenchmarkStore(docs.filter(col("doc_id") % 10 === 0),
-        "text", n = 8, table = "x66_bench", buckets = 8),
+      benchStore(docs, "x66_bench"),
       graft.ext.LmScore.writeModelStore(docs.filter(col("doc_id") % 10 =!= 0),
         "text", table = "x66_model", buckets = 8))
     (corpus, emb)
@@ -3328,17 +3200,10 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
         1L, "doc_id", "text", "lang", "source", "x67_card", 4)
       graft.ext.DataCard.serveCard(s, "x67_card").orderBy("source")
     },
-    Some("""WITH f AS MATERIALIZED (SELECT doc_id, lang, source,
+    Some(raw"""WITH f AS MATERIALIZED (SELECT doc_id, lang, source,
                     CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS nt,
                     CAST(length(text) AS BIGINT) AS nc,
-                    CASE WHEN length(text) = 0 THEN 0.0
-                         ELSE CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / length(text)
-                    END AS digit_ratio,
-                    CASE WHEN len(regexp_extract_all(lower(text), '[a-z]+')) = 0 THEN 0.0
-                         ELSE CAST(len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
-                                x -> x IN ('the','a','of','and','to','in','is','it','for','on'))) AS DOUBLE)
-                              / len(regexp_extract_all(lower(text), '[a-z]+'))
-                    END AS stop_ratio
+                    $qualityRatiosSql
                   FROM documents),
              q AS MATERIALIZED (SELECT *, CASE WHEN nt = 0 THEN 0.0
                      ELSE CAST(nc - nt + 1 AS DOUBLE) / nt END AS avg_len FROM f),
@@ -3381,16 +3246,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
                                 'bf': CAST(CAST('0x'||substr(md5(w[i+1]||' '||w[i+2]),1,15) AS UBIGINT) AS BIGINT),
                                 'gf': CAST(CAST('0x'||substr(md5(w[i+1]),1,15) AS UBIGINT) AS BIGINT)})) AS u(pr)
                         WHERE len(w) >= 3),
-             c1 AS MATERIALIZED (SELECT fp, count(*) AS c FROM (
-                      SELECT unnest(list_transform(generate_series(1, len(w)),
-                        i -> CAST(CAST('0x'||substr(md5(w[i]),1,15) AS UBIGINT) AS BIGINT))) AS fp
-                      FROM toks WHERE doc_id % 10 <> 0 AND len(w) >= 1)
-                    GROUP BY fp),
-             c2 AS MATERIALIZED (SELECT fp, count(*) AS c FROM (
-                      SELECT unnest(list_transform(generate_series(1, len(w)-1),
-                        i -> CAST(CAST('0x'||substr(md5(w[i]||' '||w[i+1]),1,15) AS UBIGINT) AS BIGINT))) AS fp
-                      FROM toks WHERE doc_id % 10 <> 0 AND len(w) >= 2)
-                    GROUP BY fp),
+             ${lmCountsSql("c", "toks", "doc_id % 10 <> 0")},
              c3 AS MATERIALIZED (SELECT fp, count(*) AS c FROM (
                       SELECT unnest(list_transform(generate_series(1, len(w)-2),
                         i -> CAST(CAST('0x'||substr(md5(w[i]||' '||w[i+1]||' '||w[i+2]),1,15) AS UBIGINT) AS BIGINT))) AS fp
@@ -3537,7 +3393,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
           "x71_bench")
         .orderBy("doc_id")
     },
-    Some(benchContamOracle))
+    Some(decontamOracle))
 
   /** The curation run's funnel TIME SERIES
     * ([[graft.ext.CurationLoop.funnelHistory]]): three shards through
@@ -3555,30 +3411,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
     * arithmetic) over a funnel the real loop wrote. */
   private val x72 = Q("x72_funnel_history",
     (s, d) => {
-      val docs = documents(s, d)
-      val emb = embeddings(s, d)
-      val train = docs.filter(col("doc_id") % 10 =!= 0)
-      val full = train
-        .join(emb.select(col("vec_id").as("doc_id"), col("embedding")),
-          Seq("doc_id"))
-        .select(col("doc_id"), col("text"), col("embedding"))
-      val seed = full.filter(col("doc_id") % 4 === 0)
-      ExactDedup.writeFingerprintStore(seed, "doc_id", "text",
-        table = "x72_fp", buckets = 8)
-      graft.ext.IncrementalDedup.writeSignatureStore(seed, "doc_id", "text",
-        shingleN = 3, numHashes = 16, nBands = 4, table = "x72_sig",
-        buckets = 8)
-      graft.ext.VectorStore.writeVectorStore(
-        seed.select(col("doc_id"), col("embedding")), "doc_id", "embedding",
-        nCentroids = 16, dim = 64, seedOffset = 100000L,
-        table = "x72_vec", buckets = 8)
-      Decontaminate.writeBenchmarkStore(docs.filter(col("doc_id") % 10 === 0),
-        "text", n = 8, table = "x72_bench", buckets = 8)
-      graft.ext.LmScore.writeModelStore(train, "text",
-        table = "x72_model", buckets = 8)
-      val root = java.nio.file.Files.createTempDirectory("graft-x72-").toString
-      val stores = graft.ext.CurationLoop.Stores("x72_fp", "x72_sig",
-        "x72_vec", "x72_bench", "x72_model", buckets = 8)
+      val (full, stores, root) = curationFixture(s, d, "x72", seedMod = 4)
       val params = graft.ext.CurationLoop.Params(shingleN = 3,
         numHashes = 16, nBands = 4, minJaccard = 1.1, minCosine = 1.5,
         nCentroids = 16, nProbe = 4, dim = 64, seedOffset = 100000L,
@@ -3696,10 +3529,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
         col("doc_id") % 10 === 0, n = 8)
       .orderBy("doc_id"),
     Some(s"""WITH $tokSql,
-             g AS MATERIALIZED (SELECT doc_id, unnest(list_transform(generate_series(1, len(w)-7),
-                      i -> CAST(CAST('0x'||substr(md5(array_to_string(w[i:i+7], ' ')),1,15) AS UBIGINT) AS BIGINT))) AS gram_fp
-                   FROM toks WHERE len(w) >= 8),
-             dg AS MATERIALIZED (SELECT DISTINCT doc_id, gram_fp FROM g),
+             $gramsSql,
              ev AS MATERIALIZED (SELECT * FROM dg WHERE doc_id % 10 = 0),
              tr AS MATERIALIZED (SELECT doc_id AS tid, gram_fp FROM dg WHERE doc_id % 10 <> 0),
              j AS MATERIALIZED (SELECT ev.doc_id, ev.gram_fp, tr.tid
@@ -3747,10 +3577,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
     * the served check — which must equal x52's
     * store-rebuilt-on-everything answer; the oracle IS x52's. */
   private val x76 = Q("x76_stream_bench_ingest",
-    (s, d) => graft.util.Sessions.withShufflePartitions(s,
-        graft.util.Sessions.streamingShufflePartitions) {
-      val root = java.nio.file.Files.createTempDirectory("graft-x76-")
-      val in = root.resolve("in"); val chk = s"$root/chk"
+    (s, d) => streamed(s, "x76") { (in, _, chk) =>
       val docs = documents(s, d)
       val bench = docs.filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"), col("text"))
@@ -3774,7 +3601,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
           "x76_bench")
         .orderBy("doc_id")
     },
-    Some(benchContamOracle))
+    Some(decontamOracle))
 
   /** Fuzzy decontamination
     * ([[graft.ext.Decontaminate.fuzzyContaminatedAgainstStore]]): the
@@ -3796,29 +3623,12 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
           minJaccard = 0.5)
         .orderBy("doc_id")
     },
-    Some("""WITH toks AS MATERIALIZED (SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS w FROM documents),
-                 sh AS MATERIALIZED (SELECT doc_id,
-                          list_transform(range(0, len(w)-2), i -> w[i+1]||' '||w[i+2]||' '||w[i+3]) AS sgl
-                        FROM toks WHERE len(w) >= 3),
-                 hs AS MATERIALIZED (SELECT doc_id, list_transform(sgl, s ->
-                          CAST(CAST('0x'||substr(md5(s),1,15) AS UBIGINT) AS BIGINT) % 1000000007) AS hh
-                        FROM sh),
-                 sig AS MATERIALIZED (SELECT doc_id, list_transform(range(0,16), i ->
-                           list_min(list_transform(hh, h ->
-                             (((1103515245*(i+1) + 12345) % 1000000006 + 1) * h
-                               + (1103515245*(i+101) + 12345) % 1000000007) % 1000000007))) AS sg
-                         FROM hs),
-                 bands AS MATERIALIZED (SELECT doc_id, b,
-                             CAST(sg[4*b+1] AS VARCHAR)||'-'||CAST(sg[4*b+2] AS VARCHAR)
-                               ||'-'||CAST(sg[4*b+3] AS VARCHAR)||'-'||CAST(sg[4*b+4] AS VARCHAR) AS bk
-                           FROM sig, (SELECT unnest(range(0,4)) AS b)),
+    Some(s"""WITH $tokSql,
+                 ${minHashSql()},
                  pairs AS MATERIALIZED (SELECT DISTINCT n.doc_id AS new_id, s.doc_id AS store_id
                            FROM bands n JOIN bands s ON n.b = s.b AND n.bk = s.bk
                            WHERE n.doc_id % 10 <> 0 AND s.doc_id % 10 = 0),
-                 m AS MATERIALIZED (SELECT new_id, store_id
-                       FROM pairs JOIN sig sa ON sa.doc_id = new_id
-                                  JOIN sig sb ON sb.doc_id = store_id
-                       WHERE len(list_filter(list_zip(sa.sg, sb.sg), x -> x[1] = x[2])) >= 8),
+                 $minHashMatchSql,
                  agg AS MATERIALIZED (SELECT new_id, CAST(count(*) AS BIGINT) AS n_bench_matches,
                                 min(store_id) AS min_bench_id
                          FROM m GROUP BY new_id)
@@ -3835,35 +3645,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
     * the engine ships). Ends in `sp(doc_id, source, text, split_key,
     * split)`; splice after a `WITH RECURSIVE` header. */
   private val splitCascadeSql =
-    """toks AS MATERIALIZED (SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS w FROM documents),
-                 sh AS MATERIALIZED (SELECT doc_id,
-                          list_transform(range(0, len(w)-2), i -> w[i+1]||' '||w[i+2]||' '||w[i+3]) AS sgl
-                        FROM toks WHERE len(w) >= 3),
-                 hs AS MATERIALIZED (SELECT doc_id, list_transform(sgl, s ->
-                          CAST(CAST('0x'||substr(md5(s),1,15) AS UBIGINT) AS BIGINT) % 1000000007) AS hh
-                        FROM sh),
-                 sig AS MATERIALIZED (SELECT doc_id, list_transform(range(0,16), i ->
-                           list_min(list_transform(hh, h ->
-                             (((1103515245*(i+1) + 12345) % 1000000006 + 1) * h
-                               + (1103515245*(i+101) + 12345) % 1000000007) % 1000000007))) AS sg
-                         FROM hs),
-                 bands AS MATERIALIZED (SELECT doc_id, b,
-                             CAST(sg[4*b+1] AS VARCHAR)||'-'||CAST(sg[4*b+2] AS VARCHAR)
-                               ||'-'||CAST(sg[4*b+3] AS VARCHAR)||'-'||CAST(sg[4*b+4] AS VARCHAR) AS bk
-                           FROM sig, (SELECT unnest(range(0,4)) AS b)),
-                 cand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                          FROM bands a JOIN bands b
-                            ON a.b = b.b AND a.bk = b.bk AND a.doc_id < b.doc_id),
-                 pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM cand
-                           JOIN sig sa ON sa.doc_id = doc_a
-                           JOIN sig sb ON sb.doc_id = doc_b
-                           WHERE len(list_filter(list_zip(sa.sg, sb.sg), x -> x[1] = x[2])) >= 8),
-                 e(u, v) AS (SELECT doc_a, doc_b FROM pairs
-                             UNION SELECT doc_b, doc_a FROM pairs),
-                 reach(u, v) AS (SELECT u, v FROM e
-                                 UNION SELECT r.u, e2.v FROM reach r JOIN e e2 ON r.v = e2.u),
-                 comp AS MATERIALIZED (SELECT u AS doc_id, least(u, min(v)) AS canonical_id
-                          FROM reach GROUP BY u),
+    s"""$nearDupCompSql,
                  sp AS MATERIALIZED (
                    SELECT d.doc_id, d.source, d.text,
                           COALESCE(c.canonical_id, d.doc_id) AS split_key,
@@ -3912,9 +3694,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
         .withColumn("n_out_rows", coalesce(col("n_out_rows"), lit(0L)))
         .orderBy("lang")
     },
-    Some("""WITH tok AS MATERIALIZED (SELECT doc_id, lang,
-                    CAST(len(regexp_extract_all(lower(trim(text)), '\S+')) AS BIGINT) AS nt
-                  FROM documents),
+    Some(s"""WITH $langTokSql,
              b AS MATERIALIZED (SELECT 2 * CAST(sum(nt) AS BIGINT) AS budget FROM tok),
              s AS MATERIALIZED (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
                      CAST(sum(nt) AS BIGINT) AS n_tokens
@@ -3931,11 +3711,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
                                / n_tokens END AS repeat_factor
                    FROM t),
              d AS MATERIALIZED (SELECT tk.lang,
-                     CAST(floor(f.repeat_factor) AS BIGINT)
-                       + (CASE WHEN CAST(CAST('0x'||substr(md5(CAST(tk.doc_id AS VARCHAR)),1,15) AS UBIGINT) AS BIGINT) % 10000
-                               < CAST(floor(f.repeat_factor * 10000.0) AS BIGINT)
-                                 - CAST(floor(f.repeat_factor) AS BIGINT) * 10000
-                               THEN 1 ELSE 0 END) AS n_copies
+                     $mixCopiesSql
                    FROM tok tk JOIN f USING (lang)),
              c AS MATERIALIZED (SELECT lang, CAST(sum(n_copies) AS BIGINT) AS n_out_rows
                    FROM d GROUP BY lang)
@@ -3954,7 +3730,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
     (s, d) => PassageDedup.removeDuplicateSpans(documents(s, d), "doc_id",
         "text", windowTokens = 8)
       .orderBy("doc_id"),
-    Some("""WITH toks AS MATERIALIZED (SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS w FROM documents),
+    Some(s"""WITH $tokSql,
                  w0 AS MATERIALIZED (SELECT doc_id, unnest(CASE WHEN len(w) < 8 THEN []
                           ELSE list_transform(range(0, len(w)-8+1), i ->
                             {'pos': i, 'fp': md5(array_to_string(list_slice(w, i+1, i+8), ' '))}) END) AS u
@@ -3988,16 +3764,14 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
   private val x81 = Q("x81_span_decontaminate",
     (s, d) => {
       val docs = documents(s, d)
-      Decontaminate.writeBenchmarkStore(docs.filter(col("doc_id") % 10 === 0),
-        "text", n = 8, table = "x81_bench_store", buckets = 8)
+      benchStore(docs, "x81_bench_store")
       Decontaminate.removeContaminatedSpans(
           docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text",
           "x81_bench_store")
         .orderBy("doc_id")
     },
     Some(s"""WITH $tokSql,
-             ev AS MATERIALIZED (SELECT DISTINCT unnest(list_transform(generate_series(1, len(w)-7),
-                      i -> CAST(CAST('0x'||substr(md5(array_to_string(w[i:i+7], ' ')),1,15) AS UBIGINT) AS BIGINT))) AS gram_fp
+             ev AS MATERIALIZED (SELECT DISTINCT unnest($gram8Sql) AS gram_fp
                     FROM toks WHERE doc_id % 10 = 0 AND len(w) >= 8),
              w0 AS MATERIALIZED (SELECT doc_id, unnest(CASE WHEN len(w) < 8 THEN []
                       ELSE list_transform(range(0, len(w)-8+1), i ->
@@ -4080,16 +3854,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
         .orderBy("doc_id")
     },
     Some(s"""WITH $tokSql,
-             c1 AS MATERIALIZED (SELECT fp, count(*) AS c FROM (
-                      SELECT unnest(list_transform(generate_series(1, len(w)),
-                        i -> CAST(CAST('0x'||substr(md5(w[i]),1,15) AS UBIGINT) AS BIGINT))) AS fp
-                      FROM toks WHERE doc_id % 10 <> 0 AND len(w) >= 1)
-                    GROUP BY fp),
-             c2 AS MATERIALIZED (SELECT fp, count(*) AS c FROM (
-                      SELECT unnest(list_transform(generate_series(1, len(w)-1),
-                        i -> CAST(CAST('0x'||substr(md5(w[i]||' '||w[i+1]),1,15) AS UBIGINT) AS BIGINT))) AS fp
-                      FROM toks WHERE doc_id % 10 <> 0 AND len(w) >= 2)
-                    GROUP BY fp),
+             ${lmCountsSql("c", "toks", "doc_id % 10 <> 0")},
              ps0 AS MATERIALIZED (SELECT doc_id, unnest(
                        CASE WHEN len(w) = 0 THEN [{'idx': CAST(0 AS BIGINT), 'pt': CAST([] AS VARCHAR[])}]
                             ELSE list_transform(range(0, CAST(floor((len(w)-1)/16) AS BIGINT) + 1),
@@ -4102,8 +3867,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
                             'bf': CAST(CAST('0x'||substr(md5(pt[i]||' '||pt[i+1]),1,15) AS UBIGINT) AS BIGINT)})) AS u(pr)
                     WHERE len(pt) >= 2),
              sc AS MATERIALIZED (SELECT doc_id, idx, CAST(count(*) AS BIGINT) AS n,
-                      CAST(sum(CAST(floor(COALESCE(CAST(c2.c AS DOUBLE) / CAST(c1.c AS DOUBLE), 0.0)
-                                          * 1073741824.0) AS BIGINT)) AS BIGINT) AS q
+                      ${lmSumQSql("c2", "c1")} AS q
                     FROM pp LEFT JOIN c2 ON pp.bf = c2.fp
                             LEFT JOIN c1 ON pp.uf = c1.fp
                     GROUP BY 1, 2),
@@ -4141,9 +3905,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
           "lang", "text", factors)
         .orderBy("lang")
     },
-    Some("""WITH tok AS MATERIALIZED (SELECT doc_id, lang,
-                    CAST(len(regexp_extract_all(lower(trim(text)), '\S+')) AS BIGINT) AS nt
-                  FROM documents),
+    Some(s"""WITH $langTokSql,
              b AS MATERIALIZED (SELECT 2 * CAST(sum(nt) AS BIGINT) AS budget FROM tok),
              s AS MATERIALIZED (SELECT lang, CAST(sum(nt) AS BIGINT) AS n_tokens FROM tok GROUP BY 1),
              q AS MATERIALIZED (SELECT *, CAST(floor(sqrt(CAST(n_tokens AS DOUBLE)) * 16.0) AS BIGINT) AS qf FROM s),
@@ -4156,11 +3918,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
                                / n_tokens END AS repeat_factor
                    FROM t),
              d AS MATERIALIZED (SELECT tk.lang, tk.nt,
-                     CAST(floor(f.repeat_factor) AS BIGINT)
-                       + (CASE WHEN CAST(CAST('0x'||substr(md5(CAST(tk.doc_id AS VARCHAR)),1,15) AS UBIGINT) AS BIGINT) % 10000
-                               < CAST(floor(f.repeat_factor * 10000.0) AS BIGINT)
-                                 - CAST(floor(f.repeat_factor) AS BIGINT) * 10000
-                               THEN 1 ELSE 0 END) AS n_copies
+                     $mixCopiesSql
                    FROM tok tk JOIN f USING (lang)),
              o AS MATERIALIZED (SELECT lang, CAST(sum(n_copies) AS BIGINT) AS n_out_rows,
                      CAST(sum(n_copies * nt) AS BIGINT) AS out_tokens
@@ -4195,36 +3953,8 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
           quality, "doc_id", "q")
         .orderBy("doc_id")
     },
-    Some("""WITH RECURSIVE
-                 toks AS MATERIALIZED (SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS w FROM documents),
-                 sh AS MATERIALIZED (SELECT doc_id,
-                          list_transform(range(0, len(w)-2), i -> w[i+1]||' '||w[i+2]||' '||w[i+3]) AS sgl
-                        FROM toks WHERE len(w) >= 3),
-                 hs AS MATERIALIZED (SELECT doc_id, list_transform(sgl, s ->
-                          CAST(CAST('0x'||substr(md5(s),1,15) AS UBIGINT) AS BIGINT) % 1000000007) AS hh
-                        FROM sh),
-                 sig AS MATERIALIZED (SELECT doc_id, list_transform(range(0,16), i ->
-                           list_min(list_transform(hh, h ->
-                             (((1103515245*(i+1) + 12345) % 1000000006 + 1) * h
-                               + (1103515245*(i+101) + 12345) % 1000000007) % 1000000007))) AS sg
-                         FROM hs),
-                 bands AS MATERIALIZED (SELECT doc_id, b,
-                             CAST(sg[4*b+1] AS VARCHAR)||'-'||CAST(sg[4*b+2] AS VARCHAR)
-                               ||'-'||CAST(sg[4*b+3] AS VARCHAR)||'-'||CAST(sg[4*b+4] AS VARCHAR) AS bk
-                           FROM sig, (SELECT unnest(range(0,4)) AS b)),
-                 cand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                          FROM bands a JOIN bands b
-                            ON a.b = b.b AND a.bk = b.bk AND a.doc_id < b.doc_id),
-                 pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM cand
-                           JOIN sig sa ON sa.doc_id = doc_a
-                           JOIN sig sb ON sb.doc_id = doc_b
-                           WHERE len(list_filter(list_zip(sa.sg, sb.sg), x -> x[1] = x[2])) >= 8),
-                 e(u, v) AS (SELECT doc_a, doc_b FROM pairs
-                             UNION SELECT doc_b, doc_a FROM pairs),
-                 reach(u, v) AS (SELECT u, v FROM e
-                                 UNION SELECT r.u, e2.v FROM reach r JOIN e e2 ON r.v = e2.u),
-                 comp AS MATERIALIZED (SELECT u AS doc_id, least(u, min(v)) AS canonical_id
-                          FROM reach GROUP BY u),
+    Some(s"""WITH RECURSIVE
+                 $nearDupCompSql,
                  qual AS MATERIALIZED (SELECT doc_id, CAST(len(w) AS BIGINT) AS q FROM toks),
                  win AS MATERIALIZED (SELECT canonical_id, doc_id AS win_id FROM (
                            SELECT c.canonical_id, c.doc_id,
@@ -4263,36 +3993,8 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
           .withColumn("strategy", lit("cluster_safe")))
         .orderBy("strategy", "split_a", "split_b")
     },
-    Some("""WITH RECURSIVE
-                 toks AS MATERIALIZED (SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS w FROM documents),
-                 sh AS MATERIALIZED (SELECT doc_id,
-                          list_transform(range(0, len(w)-2), i -> w[i+1]||' '||w[i+2]||' '||w[i+3]) AS sgl
-                        FROM toks WHERE len(w) >= 3),
-                 hs AS MATERIALIZED (SELECT doc_id, list_transform(sgl, s ->
-                          CAST(CAST('0x'||substr(md5(s),1,15) AS UBIGINT) AS BIGINT) % 1000000007) AS hh
-                        FROM sh),
-                 sig AS MATERIALIZED (SELECT doc_id, list_transform(range(0,16), i ->
-                           list_min(list_transform(hh, h ->
-                             (((1103515245*(i+1) + 12345) % 1000000006 + 1) * h
-                               + (1103515245*(i+101) + 12345) % 1000000007) % 1000000007))) AS sg
-                         FROM hs),
-                 bands AS MATERIALIZED (SELECT doc_id, b,
-                             CAST(sg[4*b+1] AS VARCHAR)||'-'||CAST(sg[4*b+2] AS VARCHAR)
-                               ||'-'||CAST(sg[4*b+3] AS VARCHAR)||'-'||CAST(sg[4*b+4] AS VARCHAR) AS bk
-                           FROM sig, (SELECT unnest(range(0,4)) AS b)),
-                 cand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                          FROM bands a JOIN bands b
-                            ON a.b = b.b AND a.bk = b.bk AND a.doc_id < b.doc_id),
-                 pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM cand
-                           JOIN sig sa ON sa.doc_id = doc_a
-                           JOIN sig sb ON sb.doc_id = doc_b
-                           WHERE len(list_filter(list_zip(sa.sg, sb.sg), x -> x[1] = x[2])) >= 8),
-                 e(u, v) AS (SELECT doc_a, doc_b FROM pairs
-                             UNION SELECT doc_b, doc_a FROM pairs),
-                 reach(u, v) AS (SELECT u, v FROM e
-                                 UNION SELECT r.u, e2.v FROM reach r JOIN e e2 ON r.v = e2.u),
-                 comp AS MATERIALIZED (SELECT u AS doc_id, least(u, min(v)) AS canonical_id
-                          FROM reach GROUP BY u),
+    Some(s"""WITH RECURSIVE
+                 $nearDupCompSql,
                  naive AS MATERIALIZED (SELECT doc_id,
                              CASE WHEN CAST(CAST('0x'||substr(md5(CAST(doc_id AS VARCHAR)),1,15) AS UBIGINT) AS BIGINT) % 10000 < 1000
                                   THEN 'valid' ELSE 'train' END AS split
@@ -4362,8 +4064,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
                FROM $docsRel),
              occ AS MATERIALIZED (
                SELECT doc_id, source$extraCols,
-                      unnest(list_transform(generate_series(1, len(w)),
-                        i -> CAST(CAST('0x'||substr(md5(w[i]),1,15) AS UBIGINT) AS BIGINT))) AS fp
+                      unnest($unigramFpsSql) AS fp
                FROM ctoks WHERE len(w) >= 1),
              cpos AS MATERIALIZED (
                SELECT fp, CAST(count(*) AS BIGINT) AS c FROM occ
@@ -4487,12 +4188,11 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
     * shared wt/wd weight relations and the threshold cut. Same prefix
     * and mixture tail as x66, so the two configurations' oracles
     * differ ONLY here. */
-  private val recipeClassifierTailSql = clsScoreSql.stripPrefix("WITH ") + """,
+  private val recipeClassifierTailSql = clsScoreSql.stripPrefix("WITH ") + raw""",
              -- ==== stage 7 (x90 seam): trained classifier threshold gate (GPT-3 rule) ====
              socc AS MATERIALIZED (
                SELECT doc_id,
-                      unnest(list_transform(generate_series(1, len(w)),
-                        i -> CAST(CAST('0x'||substr(md5(w[i]),1,15) AS UBIGINT) AS BIGINT))) AS fp
+                      unnest($unigramFpsSql) AS fp
                FROM (SELECT doc_id,
                             regexp_extract_all(lower(trim(ctext)), '\S+') AS w
                      FROM s6) WHERE len(w) >= 1),
@@ -4672,10 +4372,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
     * x88's. Count deltas are not idempotent, so the ingest runs the
     * two-phase intent/record ledger (the x55 protocol). */
   private val x93 = Q("x93_stream_classifier_ingest",
-    (s, d) => graft.util.Sessions.withShufflePartitions(s,
-        graft.util.Sessions.streamingShufflePartitions) {
-      val root = java.nio.file.Files.createTempDirectory("graft-x93-")
-      val in = root.resolve("in"); val chk = s"$root/chk"
+    (s, d) => streamed(s, "x93") { (in, _, chk) =>
       val docs = documents(s, d)
       val labeled = docs.select(col("doc_id"),
         when(col("source").isin(curatedSources: _*), lit(1))
@@ -4773,23 +4470,10 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
     * seeding as x40 so every class provably occurs. */
   private val x95 = Q("x95_pii_audit",
     (s, d) => {
-      val id = col("doc_id")
-      val seeded = documents(s, d).withColumn("__seeded", concat(
-        col("text"),
-        when(id % 5 === 0, concat(lit(" contact user"), id.cast("string"),
-          lit("@example.com"))).otherwise(lit("")),
-        when(id % 7 === 0, concat(lit(" from 10.0."), (id % 256).cast("string"),
-          lit("."), expr("(doc_id DIV 7) % 256").cast("string"))).otherwise(lit("")),
-        when(id % 11 === 0, concat(lit(" call 555-"),
-          lpad((id % 1000).cast("string"), 3, "0"), lit("-"),
-          lpad((id % 10000).cast("string"), 4, "0"))).otherwise(lit(""))))
+      val seeded = piiSeeded(documents(s, d))
       Pii.audit(seeded, "doc_id", "__seeded", "source").orderBy("source")
     },
-    Some("""WITH seeded AS MATERIALIZED (SELECT doc_id, source, text
-                 || CASE WHEN doc_id % 5 = 0 THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com' ELSE '' END
-                 || CASE WHEN doc_id % 7 = 0 THEN ' from 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.' || CAST((doc_id // 7) % 256 AS VARCHAR) ELSE '' END
-                 || CASE WHEN doc_id % 11 = 0 THEN ' call 555-' || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ELSE '' END
-                 AS t FROM documents),
+    Some(raw"""WITH seeded AS MATERIALIZED (SELECT doc_id, source, $piiSeededSql AS t FROM documents),
             pr2 AS MATERIALIZED (SELECT doc_id, source,
                      CAST(len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS ne,
                      regexp_replace(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g') AS t1
@@ -4907,17 +4591,15 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
   private val x99 = Q("x99_contamination_severity",
     (s, d) => {
       val docs = documents(s, d)
-      Decontaminate.writeBenchmarkStore(docs.filter(col("doc_id") % 10 === 0),
-        "text", n = 8, table = "x99_bench", buckets = 8)
+      benchStore(docs, "x99_bench")
       Decontaminate.contaminationSeverity(docs, "doc_id", "text", "x99_bench")
         .orderBy("doc_id")
     },
-    Some("""WITH bw AS MATERIALIZED (
+    Some(raw"""WITH bw AS MATERIALIZED (
                SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS w
                FROM documents WHERE doc_id % 10 = 0),
              evg AS MATERIALIZED (SELECT DISTINCT gram_fp FROM (
-               SELECT unnest(list_transform(generate_series(1, len(w)-7),
-                 i -> CAST(CAST('0x'||substr(md5(array_to_string(w[i:i+7], ' ')),1,15) AS UBIGINT) AS BIGINT))) AS gram_fp
+               SELECT unnest($gram8Sql) AS gram_fp
                FROM bw WHERE len(w) >= 8)),
              tw AS MATERIALIZED (
                SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS w
@@ -4926,7 +4608,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
                SELECT doc_id, u.g.p AS pos, u.g.f AS gram_fp
                FROM tw, unnest(list_transform(generate_series(1, len(w)-7),
                  i -> {'p': CAST(i - 1 AS BIGINT),
-                       'f': CAST(CAST('0x'||substr(md5(array_to_string(w[i:i+7], ' ')),1,15) AS UBIGINT) AS BIGINT)})) AS u(g)
+                       'f': $gram8FpSql})) AS u(g)
                WHERE len(w) >= 8),
              sev_tot AS MATERIALIZED (
                SELECT d.doc_id, CAST(COALESCE(cnt.c, 0) AS BIGINT) AS n_grams
@@ -5056,7 +4738,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
           minCosine = 0.95, nBands = 4, bandBits = 4, dim = 16)
         .orderBy("vec_a", "vec_b")
     },
-    Some("""WITH pay AS MATERIALIZED (SELECT doc_id,
+    Some(s"""WITH pay AS MATERIALIZED (SELECT doc_id,
                    CASE WHEN doc_id % 10 <= 1 THEN 'shared-' || CAST(doc_id // 10 AS VARCHAR)
                         WHEN doc_id % 10 = 2 THEN 'shared-' || CAST(doc_id // 10 AS VARCHAR) || '!'
                         ELSE text || CAST(doc_id AS VARCHAR) END AS payload
@@ -5073,25 +4755,12 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
                          FROM (SELECT doc_id, v,
                                  sqrt(list_sum(list_transform(v, y -> y*y))) AS n
                                FROM raw)),
-                 sig AS MATERIALIZED (SELECT doc_id, e,
-                   list_transform(range(0,16), p -> CASE WHEN
-                     list_sum(list_transform(list_zip(e, range(0,16)),
-                       x -> CAST(x[1] AS DOUBLE) *
-                            (CAST((1103515245*(p*16 + x[2]) + 12345) % 2147483648 AS DOUBLE)
-                             / 2147483648.0 * 2 - 1))) >= 0
-                     THEN 1 ELSE 0 END) AS sg
-                 FROM emb),
-                 bands AS MATERIALIZED (SELECT doc_id, b,
-                             sg[4*b+1]*8 + sg[4*b+2]*4 + sg[4*b+3]*2 + sg[4*b+4] AS bk
-                           FROM sig, (SELECT unnest(range(0,4)) AS b)),
+                 ${hyperplaneBandsSql("doc_id", "e", 16, "emb")},
                  cand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS vec_a, b.doc_id AS vec_b
                           FROM bands a JOIN bands b
                             ON a.b = b.b AND a.bk = b.bk AND a.doc_id < b.doc_id),
                  scored AS MATERIALIZED (SELECT vec_a, vec_b,
-                     list_sum(list_transform(list_zip(ea.e, eb.e),
-                       x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                     / (sqrt(list_sum(list_transform(ea.e, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                      * sqrt(list_sum(list_transform(eb.e, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) AS cos
+                     ${cosineSql("ea.e", "eb.e")} AS cos
                    FROM cand JOIN emb ea ON ea.doc_id = vec_a
                              JOIN emb eb ON eb.doc_id = vec_b)
             SELECT vec_a, vec_b, cos FROM scored
@@ -5174,9 +4843,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
   private val x103 = Q("x103_bpe_encode",
     (s, d) => {
       val docs = documents(s, d)
-      val merges = Bpe.fitMerges(docs, "text", numMerges = bpeK)
-        .orderBy("step").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
+      val merges = bpeMerges(docs)
       Bpe.encodeWords(Bpe.wordSymbols(docs, "text"), merges)
         .select(col("word"), col("cnt"),
           array_join(col("syms"), " ").as("pieces"),
@@ -5216,9 +4883,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
   private val x104 = Q("x104_bpe_piece_counts",
     (s, d) => {
       val docs = documents(s, d)
-      val merges = Bpe.fitMerges(docs, "text", numMerges = bpeK)
-        .orderBy("step").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
+      val merges = bpeMerges(docs)
       Bpe.pieceCounts(docs, "doc_id", "text",
           Bpe.encodeWords(Bpe.wordSymbols(docs, "text"), merges))
         .orderBy("doc_id")
@@ -5257,9 +4922,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
   private val x106 = Q("x106_tokenizer_fertility",
     (s, d) => {
       val docs = documents(s, d)
-      val merges = Bpe.fitMerges(docs, "text", numMerges = bpeK)
-        .orderBy("step").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
+      val merges = bpeMerges(docs)
       Bpe.fertilityCard(docs, "source", "text",
           Bpe.encodeWords(Bpe.wordSymbols(docs, "text"), merges))
         .orderBy("source")
@@ -5294,9 +4957,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
   private val x107 = Q("x107_bpe_packing",
     (s, d) => {
       val docs = documents(s, d)
-      val merges = Bpe.fitMerges(docs, "text", numMerges = bpeK)
-        .orderBy("step").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
+      val merges = bpeMerges(docs)
       val pc = Bpe.pieceCounts(docs, "doc_id", "text",
         Bpe.encodeWords(Bpe.wordSymbols(docs, "text"), merges))
       Packing.packCountedSequences(
@@ -5316,14 +4977,9 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
                FROM documents d LEFT JOIN pcnt ON pcnt.doc_id = d.doc_id),
              laid AS MATERIALIZED (
                SELECT doc_id, n_tokens,
-                      CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS "offset"
+                      $offsetSql
                FROM costs)
-            SELECT doc_id, n_tokens, "offset",
-                   "offset" // 512 AS bin_start,
-                   CASE WHEN n_tokens = 0 THEN "offset" // 512
-                        ELSE ("offset" + n_tokens - 1) // 512 END AS bin_end
-            FROM laid ORDER BY doc_id"""))
+            ${packedBinsSql("laid")}"""))
 
   /** Cross-source overlap matrix
     * ([[graft.ext.DataCard.crossSourceOverlap]] — the inter-source
@@ -5410,17 +5066,10 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
     * x109 and x118 (each applies its own threshold / abstention
     * band). */
   private val scoreSql: String =
-    """qs_f AS MATERIALIZED (SELECT doc_id, source,
+    raw"""qs_f AS MATERIALIZED (SELECT doc_id, source,
                      CAST(length(text) AS BIGINT) AS nc,
                      CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS nt,
-                     CASE WHEN length(text) = 0 THEN 0.0
-                          ELSE CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / length(text)
-                     END AS digit_ratio,
-                     CASE WHEN len(regexp_extract_all(lower(text), '[a-z]+')) = 0 THEN 0.0
-                          ELSE CAST(len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
-                                 x -> x IN ('the','a','of','and','to','in','is','it','for','on'))) AS DOUBLE)
-                               / len(regexp_extract_all(lower(text), '[a-z]+'))
-                     END AS stop_ratio
+                     $qualityRatiosSql
                    FROM documents),
              qs AS MATERIALIZED (SELECT doc_id, source, nt AS n_ws_tokens,
                      (0.4 * stop_ratio
@@ -5547,19 +5196,12 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
     * single-fp accidental matches between unrelated docs. */
   private val x111 = Q("x111_winnowing_pairs",
     (s, d) => {
-      val docs = documents(s, d).select(col("doc_id"), col("text"))
-      val corpus = docs.unionByName(docs.filter(col("doc_id") % 9 === 0)
-        .select((col("doc_id") + 300000L).as("doc_id"),
-          concat(lit("mutated twin prefix "), col("text")).as("text")))
+      val corpus = twinnedCorpus(documents(s, d))
       graft.ext.Winnowing.overlapPairs(corpus, "doc_id", "text",
           k = 3, w = 4, minShared = 2L)
         .orderBy("id_a", "id_b")
     },
-    Some(s"""WITH corpus AS MATERIALIZED (
-               SELECT doc_id, text FROM documents
-               UNION ALL
-               SELECT doc_id + 300000, 'mutated twin prefix ' || text
-               FROM documents WHERE doc_id % 9 = 0),
+    Some(s"""WITH $twinnedCorpusSql,
              ${winnowSql("", "corpus", 3, 4)},
              rare AS MATERIALIZED (
                SELECT fp FROM fps GROUP BY 1 HAVING count(*) <= 64),
@@ -5685,11 +5327,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
                FROM documents),
              md AS MATERIALIZED (
                SELECT tk.source, tk.nt,
-                      CAST(floor(f.repeat_factor) AS BIGINT)
-                        + (CASE WHEN CAST(CAST('0x'||substr(md5(CAST(tk.doc_id AS VARCHAR)),1,15) AS UBIGINT) AS BIGINT) % 10000
-                                < CAST(floor(f.repeat_factor * 10000.0) AS BIGINT)
-                                  - CAST(floor(f.repeat_factor) AS BIGINT) * 10000
-                                THEN 1 ELSE 0 END) AS n_copies
+                      $mixCopiesSql
                FROM tok tk JOIN f USING (source)),
              o AS MATERIALIZED (
                SELECT source, CAST(sum(n_copies) AS BIGINT) AS n_out_rows,
@@ -5765,10 +5403,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
     * symmetry being checked; the crash/replay discipline itself is
     * WinnowStoreSpec's pin. */
   private val x115 = Q("x115_stream_winnow_ingest",
-    (s, d) => graft.util.Sessions.withShufflePartitions(s,
-        graft.util.Sessions.streamingShufflePartitions) {
-      val root = java.nio.file.Files.createTempDirectory("graft-x115-")
-      val in = root.resolve("in"); val chk = s"$root/chk"
+    (s, d) => streamed(s, "x115") { (in, _, chk) =>
       val docs = documents(s, d).select(col("doc_id"), col("text"))
       val stream = graft.util.Staging.stagedStream(in,
           Seq(docs.filter(col("doc_id") % 3 === 1),
@@ -6041,6 +5676,91 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
         s"corpus has a $maxLen-char word — raise ugM to match")
   }
 
+  /** The x119 fixture's fitted piece probabilities, after the word-bound
+    * check — the scoring input of the unigram pricing queries. */
+  private def unigramProbs(docs: org.apache.spark.sql.DataFrame): Map[String, Double] = {
+    requireWordBound(docs)
+    graft.ext.Unigram.fit(docs, "text", vocabSize = ugV, maxPieceLen = ugL,
+        rounds = ugR)
+      .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
+  }
+
+  /** x123's layout: each doc of `docs` priced in [[unigramProbs]] pieces
+    * and packed into 512-token windows. */
+  private def unigramPacked(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    Packing.packCountedSequences(
+      graft.ext.Unigram.pieceCounts(docs, "doc_id", "text", unigramProbs(docs), ugL)
+        .select(col("doc_id"), col("n_pieces")),
+      "doc_id", "n_pieces", windowTokens = 512)
+
+  /** The x119 oracle's training cascade over the corpus words `ug_w`;
+    * the final vocabulary is `ug_v<ugR>`. */
+  private val unigramFitSql =
+    s"""ug_w AS MATERIALIZED (
+      SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM (
+        SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
+        FROM documents) GROUP BY 1),
+    ${unigramSql("ug_w", ugR, ugL, ugV, ugM)}"""
+
+  /** [[unigramFitSql]] plus one scoring DP round (`qq_`) of the corpus
+    * words under the final vocabulary: pieces per word in `qq_fin1`. */
+  private val unigramScoreSql =
+    s"""$unigramFitSql,
+    ${unigramDpRound("qq_", "ug_w", 1, s"ug_v$ugR", ugL, ugM).mkString(",\n    ")}"""
+
+  /** [[unigramFitSql]] plus the scoring round over `scored` — the corpus
+    * with foreign words appended to the doc_id % 7 docs — and its
+    * distinct words `qq_w`. */
+  private val unigramScoredSql =
+    s"""$unigramFitSql,
+    scored AS MATERIALIZED (
+      SELECT doc_id, CASE WHEN doc_id % 7 = 0 THEN text || ' zebra xylo'
+                          ELSE text END AS text FROM documents),
+    qq_w AS MATERIALIZED (
+      SELECT word, CAST(1 AS BIGINT) AS cnt FROM (
+        SELECT DISTINCT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
+        FROM scored)),
+    ${unigramDpRound("qq_", "qq_w", 1, s"ug_v$ugR", ugL, ugM).mkString(",\n    ")}"""
+
+  /** x123's unigram-priced layout: [[unigramScoreSql]]'s pieces summed
+    * per doc (`costs(doc_id, n_tokens)`) and laid out by [[offsetSql]]
+    * in `laid`. */
+  private val unigramLaidSql =
+    s"""$unigramScoreSql,
+    dw AS MATERIALIZED (
+      SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
+      FROM documents),
+    pcnt AS MATERIALIZED (
+      SELECT dw.doc_id, CAST(sum(COALESCE(f.k, 0)) AS BIGINT) AS n_pieces
+      FROM dw LEFT JOIN qq_fin1 f ON f.word = dw.word GROUP BY 1),
+    costs AS MATERIALIZED (
+      SELECT d.doc_id, COALESCE(pcnt.n_pieces, 0) AS n_tokens
+      FROM documents d LEFT JOIN pcnt ON pcnt.doc_id = d.doc_id),
+    laid AS MATERIALIZED (
+      SELECT doc_id, n_tokens,
+             $offsetSql
+      FROM costs)"""
+
+  /** [[unigramLaidSql]] cut into 512-token windows: `segs(doc_id,
+    * n_tokens, offset, bin)`, one row per window a doc touches. */
+  private val unigramSegsSql =
+    s"""$unigramLaidSql,
+    segs AS MATERIALIZED (
+      SELECT doc_id, n_tokens, "offset",
+             CAST(unnest(generate_series("offset" // 512,
+               ("offset" + n_tokens - 1) // 512)) AS BIGINT) AS bin
+      FROM laid WHERE n_tokens > 0)"""
+
+  /** [[unigramScoredSql]] with the words of each `scored` doc, `dw`, and
+    * the pieces per segmentable word, `kk(word, np)`. */
+  private val unigramPricedSql =
+    s"""$unigramScoredSql,
+    dw AS MATERIALIZED (
+      SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
+      FROM scored),
+    kk AS MATERIALIZED (
+      SELECT word, CAST(k AS BIGINT) AS np FROM qq_fin1)"""
+
   /** Unigram-LM tokenizer fit ([[graft.ext.Unigram.fit]] — the
     * SentencePiece counterpart of the x102 BPE family: seed substring
     * vocabulary → Viterbi max-product segmentation → usage recount,
@@ -6052,11 +5772,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
     * extend-then-serve path must equal the one-shot fit: one oracle,
     * two plan shapes, the x105 precedent). */
   private val unigramFitOracle: String =
-    s"""WITH ug_w AS MATERIALIZED (
-      SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM (
-        SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-        FROM documents) GROUP BY 1),
-    ${unigramSql("ug_w", ugR, ugL, ugV, ugM)}
+    s"""WITH $unigramFitSql
             SELECT piece, cnt,
                    CAST(greatest(1, (CAST(cnt AS HUGEINT) * 1048576) // (SELECT CAST(sum(cnt) AS HUGEINT) FROM ug_v$ugR)) AS DOUBLE) / 1048576.0 AS prob
             FROM ug_v$ugR ORDER BY piece"""
@@ -6106,35 +5822,14 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
   private val x120 = Q("x120_unigram_price",
     (s, d) => {
       val docs = documents(s, d)
-      requireWordBound(docs)
-      val probs = graft.ext.Unigram.fit(docs, "text", vocabSize = ugV,
-          maxPieceLen = ugL, rounds = ugR)
-        .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
+      val probs = unigramProbs(docs)
       val scored = docs.select(col("doc_id"),
         when(col("doc_id") % 7 === 0, concat(col("text"), lit(" zebra xylo")))
           .otherwise(col("text")).as("text"))
       graft.ext.Unigram.pieceCounts(scored, "doc_id", "text", probs, ugL)
         .orderBy("doc_id")
     },
-    Some(s"""WITH ug_w AS MATERIALIZED (
-      SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM (
-        SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-        FROM documents) GROUP BY 1),
-    ${unigramSql("ug_w", ugR, ugL, ugV, ugM)},
-    scored AS MATERIALIZED (
-      SELECT doc_id, CASE WHEN doc_id % 7 = 0 THEN text || ' zebra xylo'
-                          ELSE text END AS text FROM documents),
-    qq_w AS MATERIALIZED (
-      SELECT word, CAST(1 AS BIGINT) AS cnt FROM (
-        SELECT DISTINCT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-        FROM scored)),
-    ${unigramDpRound("qq_", "qq_w", 1, s"ug_v$ugR", ugL, ugM)
-      .mkString(",\n    ")},
-    dw AS MATERIALIZED (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-      FROM scored),
-    kk AS MATERIALIZED (
-      SELECT word, CAST(k AS BIGINT) AS np FROM qq_fin1)
+    Some(s"""WITH $unigramPricedSql
             SELECT d.doc_id,
                    CAST(COALESCE(agg.n_words, 0) AS BIGINT) AS n_words,
                    CAST(COALESCE(agg.n_pieces, 0) AS BIGINT) AS n_pieces,
@@ -6161,18 +5856,12 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
   private val x122 = Q("x122_tokenizer_compare",
     (s, d) => {
       val docs = documents(s, d)
-      requireWordBound(docs)
       // the two tokenizer FITS are independent driver-sequential job
       // loops (BPE merge rounds, unigram EM rounds) — each leaves most
       // cores idle between its tiny jobs, so overlap them from two
       // driver threads (guide §2.6); a failed fit cancels its sibling
       val (merges, probs) = graft.core.Bucketing.inParallel(
-        Bpe.fitMerges(docs, "text", numMerges = bpeK)
-          .orderBy("step").collect()
-          .map(r => (r.getString(1), r.getString(2))).toSeq,
-        graft.ext.Unigram.fit(docs, "text", vocabSize = ugV,
-            maxPieceLen = ugL, rounds = ugR)
-          .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap)
+        bpeMerges(docs), unigramProbs(docs))
       val bpe = Bpe.fertilityCard(docs, "source", "text",
           Bpe.encodeWords(Bpe.wordSymbols(docs, "text"), merges))
         .select(col("source"), col("n_words"),
@@ -6186,13 +5875,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
       bpe.join(ug, Seq("source")).orderBy("source")
     },
     Some(s"""WITH ${bpeCascadeSql(bpeK, 2L)},
-             ug_w AS MATERIALIZED (
-               SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM (
-                 SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-                 FROM documents) GROUP BY 1),
-             ${unigramSql("ug_w", ugR, ugL, ugV, ugM)},
-             ${unigramDpRound("qq_", "ug_w", 1, s"ug_v$ugR", ugL, ugM)
-               .mkString(",\n             ")},
+             $unigramScoreSql,
              dw AS MATERIALIZED (
                SELECT source, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
                FROM documents),
@@ -6223,45 +5906,9 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
     * re-priced in the x119 tokenizer's units; same distributed prefix
     * sum, fed by the unigram scoring DP's broadcast pricing join). */
   private val x123 = Q("x123_unigram_packing",
-    (s, d) => {
-      val docs = documents(s, d)
-      requireWordBound(docs)
-      val probs = graft.ext.Unigram.fit(docs, "text", vocabSize = ugV,
-          maxPieceLen = ugL, rounds = ugR)
-        .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
-      val pc = graft.ext.Unigram.pieceCounts(docs, "doc_id", "text",
-        probs, ugL)
-      Packing.packCountedSequences(
-          pc.select(col("doc_id"), col("n_pieces")),
-          "doc_id", "n_pieces", windowTokens = 512)
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH ug_w AS MATERIALIZED (
-      SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM (
-        SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-        FROM documents) GROUP BY 1),
-    ${unigramSql("ug_w", ugR, ugL, ugV, ugM)},
-    ${unigramDpRound("qq_", "ug_w", 1, s"ug_v$ugR", ugL, ugM)
-      .mkString(",\n    ")},
-    dw AS MATERIALIZED (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-      FROM documents),
-    pcnt AS MATERIALIZED (
-      SELECT dw.doc_id, CAST(sum(COALESCE(f.k, 0)) AS BIGINT) AS n_pieces
-      FROM dw LEFT JOIN qq_fin1 f ON f.word = dw.word GROUP BY 1),
-    costs AS MATERIALIZED (
-      SELECT d.doc_id, COALESCE(pcnt.n_pieces, 0) AS n_tokens
-      FROM documents d LEFT JOIN pcnt ON pcnt.doc_id = d.doc_id),
-    laid AS MATERIALIZED (
-      SELECT doc_id, n_tokens,
-             CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS "offset"
-      FROM costs)
-            SELECT doc_id, n_tokens, "offset",
-                   "offset" // 512 AS bin_start,
-                   CASE WHEN n_tokens = 0 THEN "offset" // 512
-                        ELSE ("offset" + n_tokens - 1) // 512 END AS bin_end
-            FROM laid ORDER BY doc_id"""))
+    (s, d) => unigramPacked(documents(s, d)).orderBy("doc_id"),
+    Some(s"""WITH $unigramLaidSql
+            ${packedBinsSql("laid")}"""))
 
   /** Span-corruption MATERIALIZER
     * ([[graft.ext.SpanCorruption.materialize]] — x116's span table
@@ -6484,45 +6131,11 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
     * the same window range per doc. */
   private val x128 = Q("x128_window_manifest",
     (s, d) => {
-      val docs = documents(s, d)
-      requireWordBound(docs)
-      val probs = graft.ext.Unigram.fit(docs, "text", vocabSize = ugV,
-          maxPieceLen = ugL, rounds = ugR)
-        .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
-      val pc = graft.ext.Unigram.pieceCounts(docs, "doc_id", "text",
-        probs, ugL)
-      val packed = Packing.packCountedSequences(
-        pc.select(col("doc_id"), col("n_pieces")),
-        "doc_id", "n_pieces", windowTokens = 512)
+      val packed = unigramPacked(documents(s, d))
       Packing.windowManifest(packed, "doc_id", windowTokens = 512)
         .orderBy("bin", "bin_offset")
     },
-    Some(s"""WITH ug_w AS MATERIALIZED (
-      SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM (
-        SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-        FROM documents) GROUP BY 1),
-    ${unigramSql("ug_w", ugR, ugL, ugV, ugM)},
-    ${unigramDpRound("qq_", "ug_w", 1, s"ug_v$ugR", ugL, ugM)
-      .mkString(",\n    ")},
-    dw AS MATERIALIZED (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-      FROM documents),
-    pcnt AS MATERIALIZED (
-      SELECT dw.doc_id, CAST(sum(COALESCE(f.k, 0)) AS BIGINT) AS n_pieces
-      FROM dw LEFT JOIN qq_fin1 f ON f.word = dw.word GROUP BY 1),
-    costs AS MATERIALIZED (
-      SELECT d.doc_id, COALESCE(pcnt.n_pieces, 0) AS n_tokens
-      FROM documents d LEFT JOIN pcnt ON pcnt.doc_id = d.doc_id),
-    laid AS MATERIALIZED (
-      SELECT doc_id, n_tokens,
-             CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS "offset"
-      FROM costs),
-    segs AS MATERIALIZED (
-      SELECT doc_id, n_tokens, "offset",
-             CAST(unnest(generate_series("offset" // 512,
-               ("offset" + n_tokens - 1) // 512)) AS BIGINT) AS bin
-      FROM laid WHERE n_tokens > 0)
+    Some(s"""WITH $unigramSegsSql
             SELECT bin, doc_id,
                    greatest(0, "offset" - bin * 512) AS bin_offset,
                    least(512, "offset" + n_tokens - bin * 512)
@@ -6560,11 +6173,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
                FROM planned),
              md AS MATERIALIZED (
                SELECT tk.doc_id,
-                      CAST(floor(f.repeat_factor) AS BIGINT)
-                        + (CASE WHEN CAST(CAST('0x'||substr(md5(CAST(tk.doc_id AS VARCHAR)),1,15) AS UBIGINT) AS BIGINT) % 10000
-                                < CAST(floor(f.repeat_factor * 10000.0) AS BIGINT)
-                                  - CAST(floor(f.repeat_factor) AS BIGINT) * 10000
-                                THEN 1 ELSE 0 END) AS n_copies
+                      $mixCopiesSql
                FROM documents tk JOIN f USING (source)),
              mix AS MATERIALIZED (
                SELECT CAST(doc_id AS VARCHAR) || ':'
@@ -6599,61 +6208,11 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
         table = "x130_tok")
       graft.ext.TokenIds.windowTokenIds(docs, "doc_id", "text", "x130_tok",
           windowTokens = 64)
-        .select(col("bin"), col("doc_id"), col("bin_offset"), col("seg_len"),
-          col("is_head"), col("is_tail"),
-          array_join(col("ids").cast("array<string>"), " ").as("ids"))
-        .orderBy("bin", "bin_offset")
+        .transform(idWindowRows)
     },
     Some(s"""WITH ${bpeCascadeSql(bpeK, 2L)},
-             pid AS MATERIALIZED (
-               SELECT piece,
-                      CAST(row_number() OVER (ORDER BY piece) - 1 AS BIGINT) AS pid
-               FROM (SELECT DISTINCT unnest(syms) AS piece FROM w$bpeK)),
-             wsym AS MATERIALIZED (
-               SELECT word, u.e.j AS j, u.e.s AS s
-               FROM w$bpeK, unnest(list_transform(generate_series(1, len(syms)),
-                 i -> {'j': i, 's': syms[CAST(i AS INT)]})) AS u(e)),
-             wid AS MATERIALIZED (
-               SELECT ws.word, list(pid.pid ORDER BY ws.j) AS wids
-               FROM wsym ws JOIN pid ON pid.piece = ws.s GROUP BY ws.word),
-             dw AS MATERIALIZED (
-               SELECT doc_id, u.e.p AS p, u.e.wd AS word
-               FROM (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
-                     FROM documents) t,
-                    unnest(list_transform(generate_series(1, len(ws)),
-                      i -> {'p': i, 'wd': ws[CAST(i AS INT)]})) AS u(e)
-               WHERE len(ws) >= 1),
-             docids AS MATERIALIZED (
-               SELECT dw.doc_id, flatten(list(wid.wids ORDER BY dw.p)) AS ids
-               FROM dw JOIN wid ON wid.word = dw.word GROUP BY dw.doc_id),
-             costs AS MATERIALIZED (
-               SELECT d.doc_id, CAST(COALESCE(len(di.ids), 0) AS BIGINT) AS n_tokens,
-                      di.ids AS ids
-               FROM documents d LEFT JOIN docids di USING (doc_id)),
-             laid AS MATERIALIZED (
-               SELECT doc_id, n_tokens, ids,
-                      CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS "offset"
-               FROM costs),
-             segs AS MATERIALIZED (
-               SELECT doc_id, n_tokens, ids, "offset",
-                      CAST(unnest(generate_series("offset" // 64,
-                        ("offset" + n_tokens - 1) // 64)) AS BIGINT) AS bin
-               FROM laid WHERE n_tokens > 0),
-             geo AS MATERIALIZED (
-               SELECT doc_id, ids, "offset", bin,
-                      greatest(0, "offset" - bin * 64) AS bin_offset,
-                      least(64, "offset" + n_tokens - bin * 64)
-                        - greatest(0, "offset" - bin * 64) AS seg_len,
-                      (bin = "offset" // 64) AS is_head,
-                      (bin = ("offset" + n_tokens - 1) // 64) AS is_tail
-               FROM segs)
-            SELECT bin, doc_id, bin_offset, seg_len, is_head, is_tail,
-                   array_to_string(
-                     ids[CAST(bin * 64 + bin_offset - "offset" + 1 AS INT)
-                         : CAST(bin * 64 + bin_offset - "offset" + seg_len AS INT)],
-                     ' ') AS ids
-            FROM geo ORDER BY bin, bin_offset"""))
+             ${tokenIdSegsSql(s"w$bpeK", "documents")},
+             $tokenIdWindowsSql"""))
 
   /** Char-fallback unigram pricing
     * ([[graft.ext.Unigram.pieceCountsWithFallback]] — the
@@ -6670,10 +6229,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
   private val x131 = Q("x131_unigram_fallback_price",
     (s, d) => {
       val docs = documents(s, d)
-      requireWordBound(docs)
-      val probs = graft.ext.Unigram.fit(docs, "text", vocabSize = ugV,
-          maxPieceLen = ugL, rounds = ugR)
-        .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
+      val probs = unigramProbs(docs)
       val scored = docs.select(col("doc_id"),
         when(col("doc_id") % 7 === 0, concat(col("text"), lit(" zebra xylo")))
           .otherwise(col("text")).as("text"))
@@ -6681,25 +6237,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
           probs, ugL)
         .orderBy("doc_id")
     },
-    Some(s"""WITH ug_w AS MATERIALIZED (
-      SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM (
-        SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-        FROM documents) GROUP BY 1),
-    ${unigramSql("ug_w", ugR, ugL, ugV, ugM)},
-    scored AS MATERIALIZED (
-      SELECT doc_id, CASE WHEN doc_id % 7 = 0 THEN text || ' zebra xylo'
-                          ELSE text END AS text FROM documents),
-    qq_w AS MATERIALIZED (
-      SELECT word, CAST(1 AS BIGINT) AS cnt FROM (
-        SELECT DISTINCT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-        FROM scored)),
-    ${unigramDpRound("qq_", "qq_w", 1, s"ug_v$ugR", ugL, ugM)
-      .mkString(",\n    ")},
-    dw AS MATERIALIZED (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-      FROM scored),
-    kk AS MATERIALIZED (
-      SELECT word, CAST(k AS BIGINT) AS np FROM qq_fin1)
+    Some(s"""WITH $unigramPricedSql
             SELECT d.doc_id,
                    CAST(COALESCE(agg.n_words, 0) AS BIGINT) AS n_words,
                    CAST(COALESCE(agg.n_pieces, 0) AS BIGINT) AS n_pieces,
@@ -6737,19 +6275,12 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
     * Exchange-free store side. */
   private val x132 = Q("x132_winnow_dedup",
     (s, d) => {
-      val docs = documents(s, d).select(col("doc_id"), col("text"))
-      val corpus = docs.unionByName(docs.filter(col("doc_id") % 9 === 0)
-        .select((col("doc_id") + 300000L).as("doc_id"),
-          concat(lit("mutated twin prefix "), col("text")).as("text")))
+      val corpus = twinnedCorpus(documents(s, d))
       graft.ext.Winnowing.dedupByOverlap(corpus, "doc_id", "text",
           k = 3, w = 4, minShared = 2L)
         .orderBy("doc_id")
     },
-    Some(s"""WITH RECURSIVE corpus AS MATERIALIZED (
-               SELECT doc_id, text FROM documents
-               UNION ALL
-               SELECT doc_id + 300000, 'mutated twin prefix ' || text
-               FROM documents WHERE doc_id % 9 = 0),
+    Some(s"""WITH RECURSIVE $twinnedCorpusSql,
              ${winnowSql("", "corpus", 3, 4)},
              rare AS MATERIALIZED (
                SELECT fp FROM fps GROUP BY 1 HAVING count(*) <= 64),
@@ -6759,10 +6290,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
                SELECT a.doc_id AS id_a, b.doc_id AS id_b
                FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
                GROUP BY 1, 2 HAVING count(*) >= 2),
-             e(u, v) AS (SELECT id_a, id_b FROM prs
-                         UNION SELECT id_b, id_a FROM prs),
-             reach(u, v) AS (SELECT u, v FROM e
-                             UNION SELECT r.u, e2.v FROM reach r JOIN e e2 ON r.v = e2.u),
+             ${reachSql("prs", "id_a", "id_b")},
              canon AS MATERIALIZED (
                SELECT u AS doc_id, least(u, min(v)) AS canonical_id
                FROM reach GROUP BY u)
@@ -6782,45 +6310,11 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
     * then bucket grain. */
   private val x133 = Q("x133_packing_card",
     (s, d) => {
-      val docs = documents(s, d)
-      requireWordBound(docs)
-      val probs = graft.ext.Unigram.fit(docs, "text", vocabSize = ugV,
-          maxPieceLen = ugL, rounds = ugR)
-        .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
-      val pc = graft.ext.Unigram.pieceCounts(docs, "doc_id", "text",
-        probs, ugL)
-      val packed = Packing.packCountedSequences(
-        pc.select(col("doc_id"), col("n_pieces")),
-        "doc_id", "n_pieces", windowTokens = 512)
+      val packed = unigramPacked(documents(s, d))
       Packing.layoutCard(Packing.windowManifest(packed, "doc_id", 512), 512)
         .orderBy("segs_per_window")
     },
-    Some(s"""WITH ug_w AS MATERIALIZED (
-      SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM (
-        SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-        FROM documents) GROUP BY 1),
-    ${unigramSql("ug_w", ugR, ugL, ugV, ugM)},
-    ${unigramDpRound("qq_", "ug_w", 1, s"ug_v$ugR", ugL, ugM)
-      .mkString(",\n    ")},
-    dw AS MATERIALIZED (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-      FROM documents),
-    pcnt AS MATERIALIZED (
-      SELECT dw.doc_id, CAST(sum(COALESCE(f.k, 0)) AS BIGINT) AS n_pieces
-      FROM dw LEFT JOIN qq_fin1 f ON f.word = dw.word GROUP BY 1),
-    costs AS MATERIALIZED (
-      SELECT d.doc_id, COALESCE(pcnt.n_pieces, 0) AS n_tokens
-      FROM documents d LEFT JOIN pcnt ON pcnt.doc_id = d.doc_id),
-    laid AS MATERIALIZED (
-      SELECT doc_id, n_tokens,
-             CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS "offset"
-      FROM costs),
-    segs AS MATERIALIZED (
-      SELECT doc_id, n_tokens, "offset",
-             CAST(unnest(generate_series("offset" // 512,
-               ("offset" + n_tokens - 1) // 512)) AS BIGINT) AS bin
-      FROM laid WHERE n_tokens > 0),
+    Some(s"""WITH $unigramSegsSql,
     geo AS MATERIALIZED (
       SELECT bin,
              least(512, "offset" + n_tokens - bin * 512)
@@ -6946,25 +6440,9 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
       graft.ext.TokenIds.windowTokenIdsUnigram(scored, "doc_id", "text",
           "x135_ug", windowTokens = 64,
           fallbackChars = ('a' to 'y').map(_.toString).toSet)
-        .select(col("bin"), col("doc_id"), col("bin_offset"), col("seg_len"),
-          col("is_head"), col("is_tail"),
-          array_join(col("ids").cast("array<string>"), " ").as("ids"))
-        .orderBy("bin", "bin_offset")
+        .transform(idWindowRows)
     },
-    Some(s"""WITH ug_w AS MATERIALIZED (
-      SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM (
-        SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-        FROM documents) GROUP BY 1),
-    ${unigramSql("ug_w", ugR, ugL, ugV, ugM)},
-    scored AS MATERIALIZED (
-      SELECT doc_id, CASE WHEN doc_id % 7 = 0 THEN text || ' zebra xylo'
-                          ELSE text END AS text FROM documents),
-    qq_w AS MATERIALIZED (
-      SELECT word, CAST(1 AS BIGINT) AS cnt FROM (
-        SELECT DISTINCT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-        FROM scored)),
-    ${unigramDpRound("qq_", "qq_w", 1, s"ug_v$ugR", ugL, ugM)
-      .mkString(",\n    ")},
+    Some(s"""WITH $unigramScoredSql,
     qq_ow AS MATERIALIZED (
       ${(1 to ugM).map(st => s"SELECT word, pos, piece FROM qq_walk1_$st")
         .mkString("\n      UNION ALL ")}),
@@ -6978,54 +6456,8 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
                       i -> substr(w.word, CAST(i AS INT), 1))
                   ELSE ['<unk>'] END AS syms
       FROM qq_w w LEFT JOIN segp USING (word)),
-    pid AS MATERIALIZED (
-      SELECT piece, CAST(row_number() OVER (ORDER BY piece) - 1 AS BIGINT) AS pid
-      FROM (SELECT DISTINCT unnest(syms) AS piece FROM wp)),
-    wsym AS MATERIALIZED (
-      SELECT word, u.e.j AS j, u.e.s AS s
-      FROM wp, unnest(list_transform(generate_series(1, len(syms)),
-        i -> {'j': i, 's': syms[CAST(i AS INT)]})) AS u(e)),
-    wid AS MATERIALIZED (
-      SELECT ws.word, list(pid.pid ORDER BY ws.j) AS wids
-      FROM wsym ws JOIN pid ON pid.piece = ws.s GROUP BY ws.word),
-    dw AS MATERIALIZED (
-      SELECT doc_id, u.e.p AS p, u.e.wd AS word
-      FROM (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
-            FROM scored) t,
-           unnest(list_transform(generate_series(1, len(ws)),
-             i -> {'p': i, 'wd': ws[CAST(i AS INT)]})) AS u(e)
-      WHERE len(ws) >= 1),
-    docids AS MATERIALIZED (
-      SELECT dw.doc_id, flatten(list(wid.wids ORDER BY dw.p)) AS ids
-      FROM dw JOIN wid ON wid.word = dw.word GROUP BY dw.doc_id),
-    costs AS MATERIALIZED (
-      SELECT d.doc_id, CAST(COALESCE(len(di.ids), 0) AS BIGINT) AS n_tokens,
-             di.ids AS ids
-      FROM documents d LEFT JOIN docids di USING (doc_id)),
-    laid AS MATERIALIZED (
-      SELECT doc_id, n_tokens, ids,
-             CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS "offset"
-      FROM costs),
-    segs AS MATERIALIZED (
-      SELECT doc_id, n_tokens, ids, "offset",
-             CAST(unnest(generate_series("offset" // 64,
-               ("offset" + n_tokens - 1) // 64)) AS BIGINT) AS bin
-      FROM laid WHERE n_tokens > 0),
-    geo AS MATERIALIZED (
-      SELECT doc_id, ids, "offset", bin,
-             greatest(0, "offset" - bin * 64) AS bin_offset,
-             least(64, "offset" + n_tokens - bin * 64)
-               - greatest(0, "offset" - bin * 64) AS seg_len,
-             (bin = "offset" // 64) AS is_head,
-             (bin = ("offset" + n_tokens - 1) // 64) AS is_tail
-      FROM segs)
-            SELECT bin, doc_id, bin_offset, seg_len, is_head, is_tail,
-                   array_to_string(
-                     ids[CAST(bin * 64 + bin_offset - "offset" + 1 AS INT)
-                         : CAST(bin * 64 + bin_offset - "offset" + seg_len AS INT)],
-                     ' ') AS ids
-            FROM geo ORDER BY bin, bin_offset"""))
+    ${tokenIdSegsSql("wp", "scored")},
+    $tokenIdWindowsSql"""))
 
   /** WINDOW-SHARD RELEASE — the last meter of the loader chain: the
     * x130 token-id stream's windows (the unit a trainer actually
@@ -7058,41 +6490,7 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
         .orderBy("shard_id")
     },
     Some(s"""WITH ${bpeCascadeSql(bpeK, 2L)},
-             pid AS MATERIALIZED (
-               SELECT piece,
-                      CAST(row_number() OVER (ORDER BY piece) - 1 AS BIGINT) AS pid
-               FROM (SELECT DISTINCT unnest(syms) AS piece FROM w$bpeK)),
-             wsym AS MATERIALIZED (
-               SELECT word, u.e.j AS j, u.e.s AS s
-               FROM w$bpeK, unnest(list_transform(generate_series(1, len(syms)),
-                 i -> {'j': i, 's': syms[CAST(i AS INT)]})) AS u(e)),
-             wid AS MATERIALIZED (
-               SELECT ws.word, list(pid.pid ORDER BY ws.j) AS wids
-               FROM wsym ws JOIN pid ON pid.piece = ws.s GROUP BY ws.word),
-             dw AS MATERIALIZED (
-               SELECT doc_id, u.e.p AS p, u.e.wd AS word
-               FROM (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
-                     FROM documents) t,
-                    unnest(list_transform(generate_series(1, len(ws)),
-                      i -> {'p': i, 'wd': ws[CAST(i AS INT)]})) AS u(e)
-               WHERE len(ws) >= 1),
-             docids AS MATERIALIZED (
-               SELECT dw.doc_id, flatten(list(wid.wids ORDER BY dw.p)) AS ids
-               FROM dw JOIN wid ON wid.word = dw.word GROUP BY dw.doc_id),
-             costs AS MATERIALIZED (
-               SELECT d.doc_id, CAST(COALESCE(len(di.ids), 0) AS BIGINT) AS n_tokens,
-                      di.ids AS ids
-               FROM documents d LEFT JOIN docids di USING (doc_id)),
-             laid AS MATERIALIZED (
-               SELECT doc_id, n_tokens, ids,
-                      CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS "offset"
-               FROM costs),
-             segs AS MATERIALIZED (
-               SELECT doc_id, n_tokens, ids, "offset",
-                      CAST(unnest(generate_series("offset" // 64,
-                        ("offset" + n_tokens - 1) // 64)) AS BIGINT) AS bin
-               FROM laid WHERE n_tokens > 0),
+             ${tokenIdSegsSql(s"w$bpeK", "documents")},
              geo AS MATERIALIZED (
                SELECT ids, "offset", bin,
                       greatest(0, "offset" - bin * 64) AS bin_offset,

@@ -63,6 +63,14 @@ object Sessions {
         "true")
       .config("spark.ui.enabled", "false")
 
+  /** Local core count of the harness sessions (Bench, Verify, Explain,
+    * Plans, EodDemo): `SPARK_GRAFT_CPUS` when set, else every core the
+    * JVM sees. Used as both the `local[n]` master and the shuffle
+    * partition count. */
+  private[graft] def harnessCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+
   /** Shuffle-partition count for the locally-run streaming queries
     * (see [[withShufflePartitions]]). Each stateful streaming operator
     * instantiates one state store PER (operator × shuffle partition)

@@ -20,19 +20,51 @@ import graft.core.Bucketing
 object Staging {
 
   /** Write `wave` as a single parquet part file at `destDir/name` with
-    * mtime `ts` (epoch millis). */
+    * mtime `ts` (epoch millis). The scratch directory the part file is
+    * written through is deleted once the file has been copied out. */
   def stageWave(wave: DataFrame, destDir: Path, name: String,
                 ts: Long): Unit = {
     val tmp = Files.createTempDirectory("graft-stage-")
-    wave.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val ls = Files.list(tmp)
-    val part =
-      try ls.filter(_.toString.endsWith(".parquet")).findFirst().get()
-      finally ls.close()
-    val dest = destDir.resolve(name)
-    Files.copy(part, dest)
-    Files.setLastModifiedTime(dest, FileTime.fromMillis(ts))
+    try {
+      wave.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val ls = Files.list(tmp)
+      val part =
+        try ls.filter(_.toString.endsWith(".parquet")).findFirst().get()
+        finally ls.close()
+      val dest = destDir.resolve(name)
+      Files.copy(part, dest)
+      Files.setLastModifiedTime(dest, FileTime.fromMillis(ts))
+    } finally deleteTree(tmp)
   }
+
+  /** A fresh temp directory `<prefix>…` deleted, with everything under
+    * it, when the JVM exits — for fixture roots that a returned
+    * DataFrame still reads lazily, so the call that built them cannot
+    * delete them on return. */
+  private[graft] def exitScopedRoot(prefix: String): Path = {
+    val root = Files.createTempDirectory(prefix)
+    exitRoots.add(root)
+    root
+  }
+
+  private val exitRoots = {
+    val roots = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+    sys.addShutdownHook(roots.forEach(deleteTree(_)))
+    roots
+  }
+
+  /** Delete `root` and everything under it; a path that vanishes or
+    * cannot be deleted meanwhile is skipped. */
+  private def deleteTree(root: Path): Unit =
+    if (Files.exists(root)) {
+      val walk = Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach { p =>
+        try Files.deleteIfExists(p)
+        catch { case _: java.io.IOException => () }
+        ()
+      }
+      finally walk.close()
+    }
 
   /** Build a store and stage `waves` under `dir` concurrently —
     * independent side effects into disjoint locations (guide §2.6) —
