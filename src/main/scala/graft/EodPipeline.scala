@@ -15,7 +15,15 @@ import org.apache.spark.sql.types.StructType
 /** The end-to-end EOD cascade (SURVEY.md §3.1) — the whole reference DAG
   * (`dags/get_securities_data.py:170-171`:
   * `copy → check → premerge → merge_core → [dim_security, dim_date] →
-  * fact → postmerge`) collapsed into one driver call per trading date.
+  * fact → postmerge`) collapsed into one driver call. The reference runs
+  * one DAG per `TRADE_DATE`; here one call takes a whole set of trade
+  * dates (a streaming micro-batch's, say) through the cascade in one pass,
+  * with the result of running the dates one after the other in date
+  * order: every read and write is scoped to the dates' partitions, the
+  * counts are grouped by date, and new `dim_security` ids follow (first
+  * date of the symbol, symbol) order. A cascade pass costs a near-fixed
+  * driver overhead of a few dozen small Spark jobs whatever its size, so
+  * one pass for the set costs about what one date did.
   *
   * Layer tables are parquet directories under `warehouseDir`, partitioned
   * by `trade_date` where date-scoped (RAW/CORE/REJECT/FACT). Each layer
@@ -25,11 +33,12 @@ import org.apache.spark.sql.types.StructType
   *     are appended as one file (per date partition), never rewriting
   *     what is there;
   *   - CORE, the one layer that rewrites what it reads, goes through a
-  *     scratch copy and a dynamic overwrite of its date partition (the
+  *     scratch copy and a dynamic overwrite of its date partitions (the
   *     MERGE of SURVEY.md §2.5);
-  *   - FACT overwrites its date partition directly: its plan never reads
+  *   - FACT overwrites its date partitions directly: its plan never reads
   *     FACT.
-  * The post-merge counts are observed on the CORE and FACT writes.
+  * The post-merge counts are observed on the CORE and FACT writes, one
+  * count per date in each write's `Observation`.
   *
   * Storage goes through the Hadoop `FileSystem` API, so the warehouse can
   * live on any supported filesystem (file:/, hdfs:/, s3a:/ ...).
@@ -97,33 +106,53 @@ class EodPipeline(spark: SparkSession, warehouseDir: String) {
     graft.util.Retry.retry(retries, delayMs, sleep)(() =>
       run(bronzeCsvPath, runDate, ingestTs, forceReload))
 
-  /** The cascade from an already-read RAW-shaped batch (one run date).
-    * This is the entry point the streaming variant reuses per micro-batch
-    * (SURVEY.md §2.9) — stages t04.2..t04.7 are identical in batch and
-    * streaming. The batch is persisted for the cascade, so its source is
-    * read once, and unpersisted when the cascade ends. The tables are
-    * written in a fixed order: RAW, REJECT, CORE, `dim_security`,
-    * `dim_date`, FACT. */
+  /** The cascade from an already-read RAW-shaped batch of one run date:
+    * [[runDates]] over that one date, with the loader's skip count
+    * (measured by the caller at read grain) on its pre-merge counts. */
   def runBatch(batch: DataFrame, runDate: java.sql.Date,
                ingestTs: Option[java.sql.Timestamp] = None,
                forceReload: Boolean = false,
                skippedCnt: Long = 0L): RunResult = {
+    val r = runDates(batch, Seq(runDate), ingestTs, forceReload).head
+    r.copy(pre = r.pre.copy(skippedCnt = skippedCnt))
+  }
+
+  /** The cascade from an already-read RAW-shaped batch holding the rows of
+    * `dates`, all dates in ONE pass: each stage, t04.2..t04.7, runs once
+    * over the batch and each table is written once, with every read and
+    * write scoped to the date partitions of `dates`. This is the entry
+    * point the streaming variant calls once per micro-batch (SURVEY.md
+    * §2.9) — stages t04.2..t04.7 are identical in batch and streaming.
+    * The result equals running the dates one after the other in date
+    * order (the reference's one-run-per-`TRADE_DATE`, `max_active_runs=1`),
+    * `dim_security` ids included; it returns one [[RunResult]] per date,
+    * in the order of `dates`. The batch is persisted for the cascade, so
+    * its source is read once, and unpersisted when the cascade ends. The
+    * tables are written in a fixed order: RAW, REJECT, CORE,
+    * `dim_security`, `dim_date`, FACT. */
+  def runDates(batch: DataFrame, dates: Seq[java.sql.Date],
+               ingestTs: Option[java.sql.Timestamp] = None,
+               forceReload: Boolean = false): Seq[RunResult] = {
+    require(dates.nonEmpty, "runDates needs at least one trade date")
+    val inDates = col("trade_date").isin(dates: _*)
+    def slices(t: String, schema: StructType) = readOrEmpty(t, schema).filter(inDates)
     val raw = batch.persist()
     try {
-      // t04.2 check (A2)
-      Gates.requireNonEmpty(raw, s"raw batch $runDate")
+      // t04.2 check (A2): every run date has rows
+      Gates.requireNonEmpty(raw, "trade_date", dates, "raw batch")
 
-      // RAW is append-only per date: a file already loaded for the date
-      // is skipped (COPY load history) unless reloading by force
+      // RAW is append-only per date: a file already loaded for a date is
+      // skipped (COPY load history) unless reloading by force
+      val loadKeys = Seq("trade_date", "_src_file")
       val rawNew =
         if (forceReload) raw
-        else raw.join(dateSlice(RawTable, Schemas.raw, runDate).select("_src_file").distinct(),
-          Seq("_src_file"), "left_anti")
+        else raw.join(slices(RawTable, Schemas.raw).select(loadKeys.map(col): _*).distinct(),
+          loadKeys, "left_anti")
       append(rawNew, RawTable)
 
       // t04.3 premerge metrics (Q1) — against CORE as it stands
       val core0 = readOrEmpty(CoreTable, Schemas.core)
-      val pre = Audit.preMerge(raw, core0, skippedCnt)
+      val pre = Audit.preMergeByDate(raw, core0).toMap
 
       // t04.4 merge_core: reject quarantine (M1) + dedup (W1) + upsert (M2).
       // Symbols are normalized BEFORE the dedup window (the reference's
@@ -133,71 +162,85 @@ class EodPipeline(spark: SparkSession, warehouseDir: String) {
       // (reference three-valued `>= 0` / `< 0` — see Gates.referenceSplit).
       val normalized = raw.withColumn("symbol", upper(trim(col("symbol"))))
       val (valid, rejects) = Gates.referenceSplit(normalized)
-      append(Upsert.newRows(dateSlice(RejectTable, Schemas.reject, runDate),
+      append(Upsert.newRows(slices(RejectTable, Schemas.reject),
         Gates.annotateReject(rejects, "NEGATIVE_VOLUME"), Seq("symbol", "trade_date")),
         RejectTable)
 
+      // the deduped batch feeds CORE and both dims: persisted, so the
+      // dedup window runs once
       val loadTs = ingestTs.map(t => lit(t)).getOrElse(current_timestamp())
       val deduped = Dedup.latestIngestWins(valid)
         .select(col("trade_date"), col("symbol"),
           col("open"), col("high"), col("low"), col("close"), col("volume"))
         .withColumn("load_ts", loadTs)
-      val coreRows = writeDatePartition(Upsert.merge(
-        core0.filter(col("trade_date") === lit(runDate)), deduped,
-        Seq("symbol", "trade_date")), CoreTable, runDate)
+        .persist()
+      val coreRows = try {
+        val rows = writeDatePartitions(Upsert.merge(core0.filter(inDates), deduped,
+          Seq("symbol", "trade_date")), CoreTable, dates)
 
-      // t04.5 dims (M3/M4) — insert-only, not date-partitioned
-      append(DimSecurity.newRows(readOrEmpty(DimSecurityTable, Schemas.dimSecurity),
-        deduped.select("symbol")), DimSecurityTable)
-      append(Upsert.newRows(readOrEmpty(DimDateTable, Schemas.dimDate),
-        DimDate.derive(deduped.select("trade_date"), "trade_date"), Seq("date_sk")),
-        DimDateTable)
+        // t04.5 dims (M3/M4) — insert-only, not date-partitioned
+        append(DimSecurity.newRows(readOrEmpty(DimSecurityTable, Schemas.dimSecurity),
+          deduped.select("symbol", "trade_date"), dateCol = Some("trade_date")),
+          DimSecurityTable)
+        append(Upsert.newRows(readOrEmpty(DimDateTable, Schemas.dimDate),
+          DimDate.derive(deduped.select("trade_date"), "trade_date"), Seq("date_sk")),
+          DimDateTable)
+        rows
+      } finally { deduped.unpersist(); () }
 
       // t04.6 fact (J3/M5); t04.7 postmerge metrics (Q2) are observed on
       // the CORE and FACT writes
-      val fact = FactDailyPrice.build(dateSlice(CoreTable, Schemas.core, runDate),
+      val fact = FactDailyPrice.build(slices(CoreTable, Schemas.core),
         readOrEmpty(DimSecurityTable, Schemas.dimSecurity),
         readOrEmpty(DimDateTable, Schemas.dimDate))
-      val factRows = countWritten(fact)(
+      val factRows = countWritten(fact, dates)(
         Upsert.overwriteDatePartition(spark, _, path(FactTable)))
-      RunResult(runDate, pre, PostMergeMetrics(coreRows, factRows))
+      // the gate leaves no date without rows, so `pre` holds every date
+      dates.indices.map(i =>
+        RunResult(dates(i), pre(dates(i)), PostMergeMetrics(coreRows(i), factRows(i))))
     } finally { raw.unpersist(); () }
   }
 
-  private def dateSlice(t: String, schema: StructType, d: java.sql.Date): DataFrame =
-    readOrEmpty(t, schema).filter(col("trade_date") === lit(d))
-
-  /** Run `write` over `df` and return the rows it wrote, counted by an
-    * `Observation` in the same pass. */
-  private def countWritten(df: DataFrame)(write: DataFrame => Unit): Long = {
+  /** Run `write` over `df` and return the rows it wrote of each date,
+    * counted by one `Observation` in the same pass. */
+  private def countWritten(df: DataFrame, dates: Seq[java.sql.Date])(
+      write: DataFrame => Unit): Seq[Long] = {
     val rows = Observation()
-    write(df.observe(rows, count(lit(1)).as("n")))
-    rows.get("n").asInstanceOf[Long]
+    val perDate = dates.indices.map(i =>
+      count(when(col("trade_date") === lit(dates(i)), 1)).as(s"n$i"))
+    write(df.observe(rows, perDate.head, perDate.tail: _*))
+    dates.indices.map(i => rows.get(s"n$i").asInstanceOf[Long])
   }
 
   /** Append `rows` to an insert-only table as one file (one per date
     * partition of a date-partitioned table; a date's new rows are at most
-    * one bronze file's). With one writer task the commit is a single
-    * rename, so after a crash the append is whole or absent, and a
-    * re-run's anti-join skips exactly what landed. A dim with no new rows
-    * is not written: an empty write would still leave an empty file. */
-  private def append(rows: DataFrame, table: String): Unit = {
-    val w = rows.coalesce(1).write.mode("append")
-    if (table == RawTable || table == RejectTable) w.partitionBy("trade_date").parquet(path(table))
-    else if (!rows.isEmpty) w.parquet(path(table))
-  }
+    * one bronze file's). With one writer task each file commits by a
+    * single rename, so after a crash each date's append is whole or
+    * absent, and a re-run's anti-join skips exactly what landed. A dim
+    * with no new rows is not written: an empty write would still leave an
+    * empty file. Its new rows are persisted for the emptiness check, so
+    * their plan runs once. */
+  private def append(rows: DataFrame, table: String): Unit =
+    if (table == RawTable || table == RejectTable)
+      rows.coalesce(1).write.mode("append").partitionBy("trade_date").parquet(path(table))
+    else {
+      val kept = rows.persist()
+      try if (!kept.isEmpty) kept.coalesce(1).write.mode("append").parquet(path(table))
+      finally { kept.unpersist(); () }
+    }
 
-  /** Overwrite one date partition with a result that was (lazily) derived
-    * from the SAME table. Writing a path that the plan also reads is a
-    * correctness hazard ("Cannot overwrite a path that is also being read
-    * from" at best, partial-read data loss at worst), so the result is
-    * first materialized to a scratch dir, re-read, and only then swapped
-    * into the target partition. Two writes of ONE date's slice — bounded,
-    * partition-pruned IO, safe on any filesystem. Returns the rows
-    * written. */
-  private def writeDatePartition(df: DataFrame, table: String, d: java.sql.Date): Long = {
+  /** Overwrite the date partitions of `dates` with a result that was
+    * (lazily) derived from the SAME table. Writing a path that the plan
+    * also reads is a correctness hazard ("Cannot overwrite a path that is
+    * also being read from" at best, partial-read data loss at worst), so
+    * the result is first materialized to a scratch dir, re-read, and only
+    * then swapped into the target partitions. Two writes of the dates'
+    * slices — bounded, partition-pruned IO, safe on any filesystem.
+    * Returns the rows written of each date. */
+  private def writeDatePartitions(df: DataFrame, table: String,
+                                  dates: Seq[java.sql.Date]): Seq[Long] = {
     val scratch = s"$warehouseDir/_tmp/$table"
-    val rows = countWritten(df.filter(col("trade_date") === lit(d)))(
+    val rows = countWritten(df.filter(col("trade_date").isin(dates: _*)), dates)(
       _.write.mode("overwrite").parquet(scratch))
     Upsert.overwriteDatePartition(spark, spark.read.parquet(scratch), path(table))
     fs.delete(new Path(scratch), true)

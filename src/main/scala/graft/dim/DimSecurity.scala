@@ -14,6 +14,9 @@ import org.apache.spark.sql.functions._
   *   3. ids = ROW_NUMBER() OVER (ORDER BY symbol) + next_id − 1 — dense,
   *      ordered, gap-free (`:27`). NOT `monotonically_increasing_id` (that
   *      is non-dense and would violate the reference's id semantics).
+  *      The reference merges one date at a time; a batch of several dates
+  *      orders by (first date the symbol appears on, symbol), which gives
+  *      exactly the ids of its dates merged one after the other.
   *
   * Scale: id assignment runs through [[assignDenseIds]] — a two-pass
   * per-partition-count + offset (zipWithIndex-shaped) assigner over
@@ -26,26 +29,28 @@ import org.apache.spark.sql.functions._
 object DimSecurity {
 
   /** Dense ordered id assignment at scale: ids `base, base+1, …` in
-    * `keyCol` order. Two passes, no global single-partition sort:
+    * (`leading`, `keyCol`) order. Two passes, no global single-partition
+    * sort:
     *   1. `repartitionByRange(keyCol).sortWithinPartitions(keyCol)` — a
     *      range shuffle, so partition p's keys all precede partition
     *      p+1's and each partition is internally sorted (Spark's binary
     *      UTF8String ordering, identical to the window formulation's);
     *   2. `zipWithIndex` — one job counting rows per partition, then a
     *      narrow map adding each partition's cumulative offset.
-    * Equivalent to `row_number() OVER (ORDER BY keyCol) + base − 1` for
-    * distinct keys, but parallel: the sort is distributed and the only
+    * Equivalent to `row_number() OVER (ORDER BY leading…, keyCol) + base − 1`
+    * for distinct keys, but parallel: the sort is distributed and the only
     * driver-side state is one count per partition. */
-  def assignDenseIds(keys: DataFrame, base: Long, keyCol: String = "symbol"): DataFrame = {
+  def assignDenseIds(keys: DataFrame, base: Long, keyCol: String = "symbol",
+                     leading: Seq[String] = Nil): DataFrame = {
     val spark = keys.sparkSession
-    val sorted = rangeSorted(keys, keyCol)
+    val sorted = rangeSorted(keys, keyCol, leading)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("security_id",
         org.apache.spark.sql.types.LongType, nullable = false),
       org.apache.spark.sql.types.StructField(keyCol,
         org.apache.spark.sql.types.StringType)))
     val rows = sorted.rdd.zipWithIndex.map { case (r, i) =>
-      org.apache.spark.sql.Row(base + i, r.getString(0))
+      org.apache.spark.sql.Row(base + i, r.getString(leading.size))
     }
     spark.createDataFrame(rows, schema)
   }
@@ -54,22 +59,29 @@ object DimSecurity {
     * PlanSpec can pin its physical shape: the Exchange must be a RANGE
     * partitioning over `keyCol` (every partition works), never a
     * SinglePartition collapse — the property the scale path exists for. */
-  private[graft] def rangeSorted(keys: DataFrame, keyCol: String): DataFrame =
-    keys.select(col(keyCol))
-      .repartitionByRange(col(keyCol)).sortWithinPartitions(keyCol)
+  private[graft] def rangeSorted(keys: DataFrame, keyCol: String,
+                                 leading: Seq[String] = Nil): DataFrame = {
+    val order = (leading :+ keyCol).map(col)
+    keys.select(order: _*).repartitionByRange(order: _*).sortWithinPartitions(order: _*)
+  }
 
   /** The rows a [[merge]] adds: normalized incoming symbols absent from
     * `dim`, with dense ids continuing from its max. Appending exactly
-    * these rows is the physical insert-only merge. */
-  def newRows(dim: DataFrame, incomingSymbols: DataFrame, symbolCol: String = "symbol"): DataFrame = {
+    * these rows is the physical insert-only merge. Ids follow symbol
+    * order; with a `dateCol`, (first date of the symbol, symbol) order,
+    * so one call over several dates assigns the ids that merging the
+    * dates one by one, in date order, would. */
+  def newRows(dim: DataFrame, incomingSymbols: DataFrame, symbolCol: String = "symbol",
+              dateCol: Option[String] = None): DataFrame = {
     val nextId: Long = dim.agg(coalesce(max(col("security_id")), lit(0L)))
       .first().getLong(0) + 1L
     val normalized = incomingSymbols
-      .select(upper(trim(col(symbolCol))).as("symbol"))
+      .select(upper(trim(col(symbolCol))).as("symbol") +: dateCol.map(col).toSeq: _*)
       .filter(col("symbol").isNotNull && col("symbol") =!= "")
-      .distinct()
-    val newSymbols = normalized.join(dim.select("symbol"), Seq("symbol"), "left_anti")
-    assignDenseIds(newSymbols, nextId)
+    val keys = dateCol.fold(normalized.distinct())(d =>
+      normalized.groupBy("symbol").agg(min(col(d)).as(d)))
+    val newSymbols = keys.join(dim.select("symbol"), Seq("symbol"), "left_anti")
+    assignDenseIds(newSymbols, nextId, "symbol", dateCol.toSeq)
   }
 
   /** Merge new symbols into an existing (security_id, symbol) dim. */

@@ -21,16 +21,10 @@ final case class PostMergeMetrics(coreRows: Long, factRows: Long)
 
 object Audit {
 
-  /** Q1: given the raw batch (one date) and the current CORE table,
-    * compute (raw_cnt, reject_cnt, est_inserts, est_updates): one
-    * aggregate pass over the batch, plus the semi-join count of its
-    * valid keys already in CORE.
-    * est_updates = |distinct valid keys ∩ core keys|; est_inserts =
-    * |distinct valid keys| − est_updates — the invariant est_inserts +
-    * est_updates = |distinct valid keys| holds by construction
-    * (reference `3. premerge_metrics.sql:45-49`). Valid/reject use the
-    * reference's exact predicates (`VOLUME >= 0` / `VOLUME < 0`), under
-    * which null-volume rows count in neither.
+  /** Q1: given a raw batch and the current CORE table, compute
+    * (raw_cnt, reject_cnt, est_inserts, est_updates) over the whole
+    * batch: the sum of [[preMergeByDate]]'s per-date counts (each count
+    * is over keys that include the trade_date, so the dates add up).
     *
     * `skippedCnt` is the loader's ON_ERROR=CONTINUE skip count
     * (rows_parsed − rows_loaded — Snowflake surfaces it in COPY load
@@ -40,16 +34,37 @@ object Audit {
     * has no parseable trade_date to scope by — so the caller that ran
     * the load passes it through. */
   def preMerge(raw: DataFrame, core: DataFrame,
-               skippedCnt: Long = 0L): PreMergeMetrics = {
+               skippedCnt: Long = 0L): PreMergeMetrics =
+    preMergeByDate(raw, core).map(_._2)
+      .foldLeft(PreMergeMetrics(0, 0, 0, 0, skippedCnt)) { (a, m) =>
+        a.copy(rawCnt = a.rawCnt + m.rawCnt, rejectCnt = a.rejectCnt + m.rejectCnt,
+          estInserts = a.estInserts + m.estInserts, estUpdates = a.estUpdates + m.estUpdates)
+      }
+
+  /** Q1 per trade date of the batch: one aggregate pass over the batch
+    * grouped by `trade_date`, plus one semi-join count of its valid keys
+    * already in CORE, grouped the same way. A date with no rows in the
+    * batch has no entry.
+    * est_updates = |distinct valid keys ∩ core keys|; est_inserts =
+    * |distinct valid keys| − est_updates — the invariant est_inserts +
+    * est_updates = |distinct valid keys| holds by construction
+    * (reference `3. premerge_metrics.sql:45-49`). Valid/reject use the
+    * reference's exact predicates (`VOLUME >= 0` / `VOLUME < 0`), under
+    * which null-volume rows count in neither. */
+  def preMergeByDate(raw: DataFrame, core: DataFrame): Seq[(java.sql.Date, PreMergeMetrics)] = {
     val key = Seq(upper(trim(col("symbol"))).as("symbol"), col("trade_date"))
-    val counts = raw.agg(count(lit(1)), count(when(Gates.negativeVolume, 1)),
-      count_distinct(when(Gates.validVolume, struct(key: _*)))).first()
+    val counts = raw.groupBy("trade_date").agg(count(lit(1)),
+      count(when(Gates.negativeVolume, 1)),
+      count_distinct(when(Gates.validVolume, struct(key: _*)))).collect()
     val existing = raw.filter(Gates.validVolume).select(key: _*).distinct()
       .join(core.select("symbol", "trade_date"), Seq("symbol", "trade_date"), "left_semi")
-      .count()
-    PreMergeMetrics(counts.getLong(0), counts.getLong(1),
-      estInserts = counts.getLong(2) - existing, estUpdates = existing,
-      skippedCnt = skippedCnt)
+      .groupBy("trade_date").count().collect()
+      .map(r => r.getDate(0) -> r.getLong(1)).toMap
+    counts.toSeq.map { r =>
+      val updates = existing.getOrElse(r.getDate(0), 0L)
+      r.getDate(0) -> PreMergeMetrics(r.getLong(1), r.getLong(2),
+        estInserts = r.getLong(3) - updates, estUpdates = updates)
+    }
   }
 
   /** Q3 summary formatting (reference `dags/get_securities_data.py:186-206`)

@@ -19,6 +19,16 @@ object Gates {
   def requireNonEmpty(df: DataFrame, what: String): Unit =
     if (df.isEmpty) throw GateFailed(s"load gate: no rows for $what")
 
+  /** A2 over a batch of several dates: fails on the first of `dates`
+    * with no rows in `df`. One distinct pass over the date column finds
+    * every date present, instead of one gate per date. */
+  def requireNonEmpty(df: DataFrame, dateCol: String, dates: Seq[java.sql.Date],
+                      what: String): Unit = {
+    val present = df.filter(col(dateCol).isin(dates: _*)).select(dateCol).distinct()
+      .collect().map(_.getDate(0)).toSet
+    dates.find(d => !present(d)).foreach(d => throw GateFailed(s"load gate: no rows for $what $d"))
+  }
+
   /** P2 reject split: partition a batch into (valid, reject) on a
     * predicate. One scan shape, two filters — Catalyst pushes both to the
     * source; `valid ∪ reject ≡ input` by construction. */

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.EodPipeline
 import graft.ingest.EodCsvSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured Streaming variant of the EOD cascade (SURVEY.md §2.9).
@@ -19,14 +18,18 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *     `max_active_runs=1` + COPY load history, for free);
   *   - `Trigger.AvailableNow` drains everything pending then stops —
   *     batch-like scheduled runs with streaming bookkeeping;
-  *   - inside a micro-batch, rows are split per trade_date and each date
-  *     runs the same per-date merge cascade as the batch entry point, so
-  *     batch and streaming produce identical warehouse state.
+  *   - a micro-batch runs ONE cascade over all of its trade dates
+  *     ([[graft.EodPipeline.runDates]]), which equals running its dates
+  *     one after the other in date order through the batch entry point —
+  *     `dim_security` ids included, assigned in (first date, symbol)
+  *     order — so batch and streaming produce identical warehouse state,
+  *     while a trigger carrying a new date and a correction of the
+  *     previous one pays the cascade's fixed cost once, not per date.
   *
   * Scale: the stream itself is a narrow file scan; all wide work happens
-  * in the per-date cascade, which is partition-pruned to the run date
-  * exactly as in batch. `maxFilesPerTrigger` bounds micro-batch size when
-  * draining a large backlog.
+  * in the cascade, which is partition-pruned to the micro-batch's dates
+  * exactly as a batch run is to its date. `maxFilesPerTrigger` bounds
+  * micro-batch size when draining a large backlog.
   */
 object EodStream {
 
@@ -42,19 +45,15 @@ object EodStream {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val pipe = new EodPipeline(spark, warehouseDir)
         // persisted, so the micro-batch's files are scanned once
         val b = batch.persist()
         try {
-          // one cascade per trade date in the micro-batch (driver-side
-          // loop over the handful of distinct dates — bounded by the
-          // lookback window, reference `eod_data_downloader.py:29`)
+          // the handful of distinct dates of the micro-batch — bounded by
+          // the lookback window, reference `eod_data_downloader.py:29`
           val dates = b.select("trade_date").distinct().collect()
-            .map(_.getDate(0)).sortBy(_.getTime)
-          dates.foreach { d =>
-            pipe.runBatch(b.filter(col("trade_date") === lit(d)), d, ingestTs)
-            ()
-          }
+            .map(_.getDate(0)).sortBy(_.getTime).toSeq
+          if (dates.nonEmpty) new EodPipeline(spark, warehouseDir).runDates(b, dates, ingestTs)
+          ()
         } finally { b.unpersist(); () }
       }
       .start()

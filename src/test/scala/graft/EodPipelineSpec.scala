@@ -142,6 +142,41 @@ class EodPipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$wh/${EodPipeline.CoreTable}").count() == 5)
   }
 
+  test("one runDates pass over two dates equals runBatch of each date in date order") {
+    val bronze = Fixtures.tempDir("bronze-dates").toString
+    val first = Fixtures.writeStandard(bronze, "2026-08-10")
+    // a correction of d1 bringing ZZZ, and the first delivery of d2
+    // bringing AMD, which sorts before ZZZ: ids follow the dates, so ZZZ
+    // must take id 6 and AMD id 7
+    val corr = Fixtures.writeBronze(bronze, "2026-08-10", Seq(
+      "2026-08-10,AAPL,231.15,233.90,230.40,240.00,51234567",
+      "2026-08-10,ZZZ,10.00,11.00,9.50,10.50,1000",
+      "2026-08-10,BAD_Y,1.00,1.00,1.00,1.00,-5"), "eod_prices_2026-08-10_corr.csv")
+    val next = Fixtures.writeBronze(bronze, "2026-08-11", Fixtures.goodRows("2026-08-11") ++
+      Fixtures.badRows("2026-08-11") :+ "2026-08-11,AMD,160.00,162.00,158.00,161.00,9999999")
+    def read(csv: String) = graft.ingest.EodCsvSource.read(spark, csv, Some(ts2))
+
+    val whSeq = Fixtures.tempDir("wh-seq").toString
+    val seq = new EodPipeline(spark, whSeq)
+    seq.run(first, d1, Some(ts1))
+    val one = Seq(seq.runBatch(read(corr), d1, Some(ts2)), seq.runBatch(read(next), d2, Some(ts2)))
+
+    val whSet = Fixtures.tempDir("wh-set").toString
+    val set = new EodPipeline(spark, whSet)
+    set.run(first, d1, Some(ts1))
+    val all = set.runDates(read(corr).unionByName(read(next)), Seq(d1, d2), Some(ts2))
+
+    assert(all == one)
+    EodPipeline.AllTables.foreach { t =>
+      assert(snapshot(whSet, t, Seq("load_ts", "_ingest_ts")) ==
+        snapshot(whSeq, t, Seq("load_ts", "_ingest_ts")), s"table $t differs")
+    }
+    val ids = spark.read.parquet(s"$whSet/${EodPipeline.DimSecurityTable}")
+      .filter(col("symbol").isin("ZZZ", "AMD")).orderBy("security_id")
+      .collect().map(r => r.getString(1) -> r.getLong(0)).toSeq
+    assert(ids == Seq("ZZZ" -> 6L, "AMD" -> 7L))
+  }
+
   test("empty batch for the run date fails the load gate") {
     val bronze = Fixtures.tempDir("bronze").toString
     val wh = Fixtures.tempDir("wh").toString

@@ -80,7 +80,7 @@ class EodStreamSpec extends SparkSpec {
     assert(spark.read.parquet(s"$wh/${EodPipeline.FactTable}").count() == 10)
   }
 
-  test("one micro-batch spanning two dates runs one cascade per date") {
+  test("one micro-batch spanning two dates runs one cascade over both dates") {
     val bronze = Fixtures.tempDir("bronze").toString
     val wh = Fixtures.tempDir("wh").toString
     val ckpt = Fixtures.tempDir("ckpt").toString
@@ -93,7 +93,7 @@ class EodStreamSpec extends SparkSpec {
     assert(core.filter(col("trade_date") === lit(d1)).count() == 5)
     assert(core.filter(col("trade_date") === lit(d2)).count() == 5)
     assert(spark.read.parquet(s"$wh/${EodPipeline.DimDateTable}").count() == 2)
-    // dim ids stay dense across the two per-date cascades
+    // dim ids stay dense across the two dates of the one cascade
     val ids = spark.read.parquet(s"$wh/${EodPipeline.DimSecurityTable}")
       .orderBy("security_id").collect().map(_.getLong(0)).toSeq
     assert(ids == (1L to 5L))

@@ -669,7 +669,7 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("streamIngest equals the batch ingest loop shard by shard") {
     val F = org.apache.spark.sql.functions
-    val root = java.nio.file.Files.createTempDirectory("graft-inc-stream-")
+    val root = graft.util.Staging.exitScopedRoot("graft-inc-stream-")
     val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
     // twin stores: one consumed by the stream, one by the batch loop
     IncrementalDedup.writeSignatureStore(store, "doc_id", "text", 3, 16, 4,
@@ -719,7 +719,7 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("a replayed micro-batch is idempotent: verdicts, store, and counts all unchanged") {
     val F = org.apache.spark.sql.functions
-    val root = java.nio.file.Files.createTempDirectory("graft-inc-replay-")
+    val root = graft.util.Staging.exitScopedRoot("graft-inc-replay-")
     IncrementalDedup.writeSignatureStore(store, "doc_id", "text", 3, 16, 4,
       "inc_replay_store", 4)
     IncrementalDedup.ingestBatch(shard, 0L, "doc_id", "text", 3, 16, 4,
@@ -933,7 +933,7 @@ class IncrementalDedupSpec extends SparkSpec {
   test("ingestBatch honors the cap through the persisted counts table") {
     val F = org.apache.spark.sql.functions
     val boiler = "standard cookie banner please accept all cookies now"
-    val root = java.nio.file.Files.createTempDirectory("graft-inc-cap-")
+    val root = graft.util.Staging.exitScopedRoot("graft-inc-cap-")
     IncrementalDedup.writeSignatureStore(
       df(Seq((1L, boiler), (2L, boiler), (3L, boiler))).toDF("doc_id", "text"),
       "doc_id", "text", 3, 16, 4, "inc_cap_ingest_store", 4)
@@ -986,7 +986,7 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("streamIngest compactEvery: in-loop compaction keeps one file per bucket; verdicts unchanged") {
     val F = org.apache.spark.sql.functions
-    val root = java.nio.file.Files.createTempDirectory("graft-inc-autocompact-")
+    val root = graft.util.Staging.exitScopedRoot("graft-inc-autocompact-")
     val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
     IncrementalDedup.writeSignatureStore(store, "doc_id", "text", 3, 16, 4,
       "inc_autocompact_store", 4)
@@ -1049,7 +1049,7 @@ class IncrementalDedupSpec extends SparkSpec {
   }
 
   test("streamIngest maxFilesPerBucket: in-loop compaction fires on measured decay, not on schedule") {
-    val root = java.nio.file.Files.createTempDirectory("graft-inc-fpbloop-")
+    val root = graft.util.Staging.exitScopedRoot("graft-inc-fpbloop-")
     val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
     IncrementalDedup.writeSignatureStore(store, "doc_id", "text", 3, 16, 4,
       "inc_fpbloop_store", 4)
@@ -1137,7 +1137,7 @@ class VectorStoreSpec extends SparkSpec {
 
   test("vector ingest loop: survivors visible to the next batch, replayed batches exactly-once") {
     val F = org.apache.spark.sql.functions
-    val root = java.nio.file.Files.createTempDirectory("graft-vec-ingest-")
+    val root = graft.util.Staging.exitScopedRoot("graft-vec-ingest-")
     VectorStore.writeVectorStore(vdf(Seq((1L, a))), "vec_id", "embedding",
       nCentroids = 4, dim = 4, seedOffset = 7L,
       table = "vec_ingest_store", buckets = 4)
@@ -1281,7 +1281,7 @@ class VectorStoreSpec extends SparkSpec {
 
   test("recluster converts an LCG store to a trained store in place: ledger kept, loop continues trained") {
     val F = org.apache.spark.sql.functions
-    val root = java.nio.file.Files.createTempDirectory("graft-vec-recl-")
+    val root = graft.util.Staging.exitScopedRoot("graft-vec-recl-")
     val d = Seq(0f, 0f, 0f, 1f)
     VectorStore.writeVectorStore(vdf(Seq((1L, a), (2L, b), (3L, c))), "vec_id",
       "embedding", nCentroids = 4, dim = 4, seedOffset = 7L,
@@ -1342,7 +1342,7 @@ class VectorStoreSpec extends SparkSpec {
 
   test("streamIngest compactEvery: vector store compacts in-loop; cross-batch dedup survives") {
     val F = org.apache.spark.sql.functions
-    val root = java.nio.file.Files.createTempDirectory("graft-vec-autocompact-")
+    val root = graft.util.Staging.exitScopedRoot("graft-vec-autocompact-")
     val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
     val a = Seq(1f, 0f, 0f, 0f)
     val c = Seq(0f, 0f, 1f, 0f)
@@ -1393,7 +1393,7 @@ class VectorStoreSpec extends SparkSpec {
   }
 
   test("streamIngest maxFilesPerBucket: vector loop compacts on measured decay; verdicts unchanged") {
-    val root = java.nio.file.Files.createTempDirectory("graft-vec-fpbloop-")
+    val root = graft.util.Staging.exitScopedRoot("graft-vec-fpbloop-")
     val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
     val e0 = Seq(1f, 0f, 0f, 0f)
     val e1 = Seq(0f, 1f, 0f, 0f)
@@ -1834,7 +1834,7 @@ class CardStreamSpec extends SparkSpec {
       (3L, "en", "b", "spark engines process the data"),
       (4L, "fr", "b", "le chat est pour la table")))
       .toDF("doc_id", "lang", "source", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft-card-stream-")
+    val root = graft.util.Staging.exitScopedRoot("graft-card-stream-")
     val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
     def stage(shard: org.apache.spark.sql.DataFrame, name: String, ts: Long): Unit =
       graft.util.Staging.stageWave(shard, in, name, ts)

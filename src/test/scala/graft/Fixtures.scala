@@ -55,5 +55,6 @@ object Fixtures {
   def writeStandard(baseDir: String, date: String): String =
     writeBronze(baseDir, date, goodRows(date) ++ badRows(date))
 
-  def tempDir(prefix: String): Path = Files.createTempDirectory(prefix)
+  /** A fresh temp directory, deleted when the test JVM exits. */
+  def tempDir(prefix: String): Path = graft.util.Staging.exitScopedRoot(prefix)
 }

@@ -53,7 +53,7 @@ class IngestRecoverySpec extends SparkSpec {
         if (r.isNullAt(3)) -1L else r.getLong(3))).toSet
 
   test("replay after crash-before-commit: verdicts preserved, store and counts exact (signature store)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-rec-sig-")
+    val root = graft.util.Staging.exitScopedRoot("graft-rec-sig-")
     IncrementalDedup.writeSignatureStore(store, "doc_id", "text", 3, 16, 4,
       "rec_sig_store", 4)
     IncrementalDedup.ingestBatch(shard, 0L, "doc_id", "text", 3, 16, 4,
@@ -86,7 +86,7 @@ class IngestRecoverySpec extends SparkSpec {
   }
 
   test("replay after crash between store append and count-delta append repairs counts exactly") {
-    val root = java.nio.file.Files.createTempDirectory("graft-rec-mid-")
+    val root = graft.util.Staging.exitScopedRoot("graft-rec-mid-")
     IncrementalDedup.writeSignatureStore(store, "doc_id", "text", 3, 16, 4,
       "rec_mid_store", 4)
     // attempt 1 by hand, stopping INSIDE the append: verdicts committed,
@@ -119,7 +119,7 @@ class IngestRecoverySpec extends SparkSpec {
   }
 
   test("a second crash during recovery reconciles again (idempotent replay-of-replay)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-rec-twice-")
+    val root = graft.util.Staging.exitScopedRoot("graft-rec-twice-")
     IncrementalDedup.writeSignatureStore(store, "doc_id", "text", 3, 16, 4,
       "rec_twice_store", 4)
     IncrementalDedup.ingestBatch(shard, 0L, "doc_id", "text", 3, 16, 4,
@@ -139,7 +139,7 @@ class IngestRecoverySpec extends SparkSpec {
   }
 
   test("vector store: replay after crash-before-commit preserves sibling-twin verdicts and converges counts") {
-    val root = java.nio.file.Files.createTempDirectory("graft-rec-vec-")
+    val root = graft.util.Staging.exitScopedRoot("graft-rec-vec-")
     def vdf(rows: Seq[(Long, Seq[Float])]) = {
       val s = spark; import s.implicits._
       rows.toDF("vec_id", "embedding")
@@ -179,7 +179,7 @@ class IngestRecoverySpec extends SparkSpec {
   }
 
   test("crash after intent but before ANY append: the reconcile performs the full append") {
-    val root = java.nio.file.Files.createTempDirectory("graft-rec-early-")
+    val root = graft.util.Staging.exitScopedRoot("graft-rec-early-")
     IncrementalDedup.writeSignatureStore(store, "doc_id", "text", 3, 16, 4,
       "rec_early_store", 4)
     // attempt 1 crashed immediately after writing the intent marker:
@@ -215,7 +215,7 @@ class IngestRecoverySpec extends SparkSpec {
   }
 
   test("reconcile backfills a legacy store that predates the counts side table") {
-    val root = java.nio.file.Files.createTempDirectory("graft-rec-legacy-")
+    val root = graft.util.Staging.exitScopedRoot("graft-rec-legacy-")
     IncrementalDedup.writeSignatureStore(store, "doc_id", "text", 3, 16, 4,
       "rec_legacy_store", 4)
     // a store written before the side table existed
@@ -244,7 +244,7 @@ class IngestRecoverySpec extends SparkSpec {
   }
 
   test("compaction swap stranded between DROP and RENAME: the next ingest entry heals it and the loop converges") {
-    val root = java.nio.file.Files.createTempDirectory("graft-rec-swap-")
+    val root = graft.util.Staging.exitScopedRoot("graft-rec-swap-")
     IncrementalDedup.writeSignatureStore(store, "doc_id", "text", 3, 16, 4,
       "rec_swap_store", 4)
     IncrementalDedup.ingestBatch(shard, 0L, "doc_id", "text", 3, 16, 4,
@@ -279,7 +279,7 @@ class IngestRecoverySpec extends SparkSpec {
   }
 
   test("counts-table swap stranded mid-compaction: the capped dedup path heals it at entry") {
-    val root = java.nio.file.Files.createTempDirectory("graft-rec-cswap-")
+    val root = graft.util.Staging.exitScopedRoot("graft-rec-cswap-")
     IncrementalDedup.writeSignatureStore(store, "doc_id", "text", 3, 16, 4,
       "rec_cswap_store", 4)
     val ct = IncrementalDedup.countsTable("rec_cswap_store")
@@ -299,7 +299,7 @@ class IngestRecoverySpec extends SparkSpec {
   }
 
   test("reconcile composes NEGATIVE corrective deltas for an over-counted touched key") {
-    val root = java.nio.file.Files.createTempDirectory("graft-rec-neg-")
+    val root = graft.util.Staging.exitScopedRoot("graft-rec-neg-")
     IncrementalDedup.writeSignatureStore(store, "doc_id", "text", 3, 16, 4,
       "rec_neg_store", 4)
     // attempt 1 ran to completion EXCEPT the commit marker (crash after
@@ -365,7 +365,7 @@ class IngestRecoverySpec extends SparkSpec {
   }
 
   test("trained store: replay after crash-before-commit preserves twin verdicts via the persisted codebook") {
-    val root = java.nio.file.Files.createTempDirectory("graft-rec-vtr-")
+    val root = graft.util.Staging.exitScopedRoot("graft-rec-vtr-")
     def vdf(rows: Seq[(Long, Seq[Float])]) = {
       val s = spark; import s.implicits._
       rows.toDF("vec_id", "embedding")
@@ -406,7 +406,7 @@ class IngestRecoverySpec extends SparkSpec {
   }
 
   test("exact-fingerprint store: replay after crash-before-commit preserves twin verdicts, store converges") {
-    val root = java.nio.file.Files.createTempDirectory("graft-rec-exd-")
+    val root = graft.util.Staging.exitScopedRoot("graft-rec-exd-")
     val tbl = "rec_exd_store"
     graft.ext.ExactDedup.writeFingerprintStore(store, "doc_id", "text", tbl, 4)
     // 40/41 are exact twins OF EACH OTHER, absent from the store: both
@@ -442,7 +442,7 @@ class IngestRecoverySpec extends SparkSpec {
   }
 
   test("recluster crash between codebook write and assignment rewrite: the resumed trained loop repairs first") {
-    val root = java.nio.file.Files.createTempDirectory("graft-rec-recl-")
+    val root = graft.util.Staging.exitScopedRoot("graft-rec-recl-")
     def vdf(rows: Seq[(Long, Seq[Float])]) = {
       val s = spark; import s.implicits._
       rows.toDF("vec_id", "embedding")
@@ -677,7 +677,7 @@ class CurationLoopRecoverySpec extends SparkSpec {
 
   test("composed cascade: each stage drops its doc, funnel matches the verdict recount") {
     val stores = seedStores("cl_a")
-    val root = java.nio.file.Files.createTempDirectory("graft-cl-a-").toString
+    val root = graft.util.Staging.exitScopedRoot("graft-cl-a-").toString
     try {
       CurationLoop.ingestShard(corpus(shardRows), 0L, "doc_id", "text",
         "embedding", stores, params, root)
@@ -715,7 +715,7 @@ class CurationLoopRecoverySpec extends SparkSpec {
 
   test("ingestShard releases only its own stage cache: a caller-persisted frame survives") {
     val stores = seedStores("cl_g")
-    val root = java.nio.file.Files.createTempDirectory("graft-cl-g-").toString
+    val root = graft.util.Staging.exitScopedRoot("graft-cl-g-").toString
     val callerFrame = corpus(seedRows).select(col("doc_id")).persist()
     try {
       callerFrame.count() // materialize the caller's cache entry
@@ -736,9 +736,9 @@ class CurationLoopRecoverySpec extends SparkSpec {
 
   test("crash between stage commits: the resumed shard matches a clean run; replay is idempotent") {
     val cleanStores = seedStores("cl_c")
-    val cleanRoot = java.nio.file.Files.createTempDirectory("graft-cl-c-").toString
+    val cleanRoot = graft.util.Staging.exitScopedRoot("graft-cl-c-").toString
     val crashStores = seedStores("cl_d")
-    val crashRoot = java.nio.file.Files.createTempDirectory("graft-cl-d-").toString
+    val crashRoot = graft.util.Staging.exitScopedRoot("graft-cl-d-").toString
     try {
       CurationLoop.ingestShard(corpus(shardRows), 0L, "doc_id", "text",
         "embedding", cleanStores, params, cleanRoot)
@@ -778,8 +778,8 @@ class CurationLoopRecoverySpec extends SparkSpec {
   test("streamIngest drives the cascade per micro-batch and matches the caller-driven loop") {
     val streamStores = seedStores("cl_e")
     val loopStores = seedStores("cl_f")
-    val streamRoot = java.nio.file.Files.createTempDirectory("graft-cl-e-").toString
-    val loopRoot = java.nio.file.Files.createTempDirectory("graft-cl-f-").toString
+    val streamRoot = graft.util.Staging.exitScopedRoot("graft-cl-e-").toString
+    val loopRoot = graft.util.Staging.exitScopedRoot("graft-cl-f-").toString
     try {
       // the reference run: caller-driven, two batches
       CurationLoop.ingestShard(corpus(shardRows), 0L, "doc_id", "text",
@@ -787,7 +787,7 @@ class CurationLoopRecoverySpec extends SparkSpec {
       CurationLoop.ingestShard(corpus(shard2Rows), 1L, "doc_id", "text",
         "embedding", loopStores, params, loopRoot)
       // the streamed run: same shards as one staged file each
-      val in = java.nio.file.Files.createTempDirectory("graft-cl-in-")
+      val in = graft.util.Staging.exitScopedRoot("graft-cl-in-")
       def stage(rows: Seq[(Long, String, Seq[Float])], name: String,
                 ts: Long): Unit =
         graft.util.Staging.stageWave(corpus(rows), in, name, ts)

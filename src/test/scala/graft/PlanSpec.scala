@@ -194,7 +194,7 @@ class PlanSpec extends SparkSpec {
     // the layout EodPipeline/Curation write at scale: partition directories
     // keyed by the slice column; a filtered read must list ONLY matching
     // directories (PartitionFilters), never scan-and-discard
-    val dir = java.nio.file.Files.createTempDirectory("graft-prune-").toString
+    val dir = graft.util.Staging.exitScopedRoot("graft-prune-").toString
     graft.util.Tables.documents(spark, sf)
       .write.partitionBy("lang").mode("overwrite").parquet(dir)
     val read = spark.read.parquet(dir).filter(org.apache.spark.sql.functions.col("lang") === "en")

@@ -11,9 +11,10 @@ object TestSpark {
     .config("spark.sql.shuffle.partitions", 2)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // catalog tables (BucketingSpec) land in a temp dir, not the repo
+    // catalog tables (BucketingSpec) land in a temp dir, not the repo,
+    // deleted when the test JVM exits
     .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-test-wh").toString)
+      graft.util.Staging.exitScopedRoot("graft-test-wh").toString)
     // same state-store provider as graft.util.Sessions.builder: the
     // streaming specs exercise the store the engine actually ships with
     .config("spark.sql.streaming.stateStore.providerClass",

@@ -243,7 +243,7 @@ class DecontaminateSpec extends SparkSpec {
       table = "deco_stream_ref", buckets = 4)
     Decontaminate.writeBenchmarkStore(evalA, "text", n = 3,
       table = "deco_stream", buckets = 4)
-    val root = java.nio.file.Files.createTempDirectory("graft-deco-stream-")
+    val root = graft.util.Staging.exitScopedRoot("graft-deco-stream-")
     val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
     def stage(d: org.apache.spark.sql.DataFrame, name: String, ts: Long): Unit =
       graft.util.Staging.stageWave(d, in, name, ts)
@@ -2908,7 +2908,7 @@ class LmScoreSpec extends SparkSpec {
   }
 
   test("streamIngestModel: reference slices stream into the store; in-loop compaction keeps scores exact") {
-    val root = java.nio.file.Files.createTempDirectory("graft-lm-stream-")
+    val root = graft.util.Staging.exitScopedRoot("graft-lm-stream-")
     val in = root.resolve("in"); java.nio.file.Files.createDirectories(in)
     val a = df(refA).toDF("doc_id", "text")
     val b = df(refB).toDF("doc_id", "text")
