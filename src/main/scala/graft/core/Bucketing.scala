@@ -89,7 +89,8 @@ object Bucketing {
     * crash contract is order-free by construction: the reconcile path
     * ([[StoreLifecycle.ingestVerdicts]]) converges store and counts from
     * ANY committed subset via a touched-key recount, so which append
-    * commits first never mattered.
+    * commits first never mattered; and by the ledger shell, to run a
+    * batch's append alongside the caller's next stage.
     *
     * Each call runs on its own pool of two daemon threads (a nested
     * call cannot starve a shared pool), and both sides' Spark jobs carry

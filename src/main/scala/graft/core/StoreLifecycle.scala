@@ -21,7 +21,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * outright → a batch with only an intent marker crashed inside its
   * append and RESUMES through its replay kind → otherwise the batch
   * runs fresh: pre-append work (a dedup family's verdict partition),
-  * intent marker, append, and the commit marker LAST. Compaction and
+  * intent marker, append (overlapped with the caller's next stage when
+  * it hands one in — [[ingestVerdicts]]), and the commit marker LAST,
+  * after both have settled. Compaction and
   * the in-loop maintenance cadence run outside that contract: both are
   * idempotent, and a crash inside a staging swap self-heals at the next
   * entry ([[Bucketing.recoverSwap]]).
@@ -192,26 +194,49 @@ object StoreLifecycle {
     due
   }
 
-  /** The ledger shell. `fresh` does the batch's pre-append work and
-    * returns its append, which runs after the intent marker. */
-  private def ledgered(spark: SparkSession, s: Store, batchId: Long)(
-      resume: => Unit)(fresh: => () => Unit): Unit = {
+  /** The ledger shell. A committed batch skips its work and hands
+    * `done` (its committed result) to `next`. Otherwise `fresh` does the
+    * batch's pre-append work and returns its result with its append,
+    * which runs after the intent marker — or, for a batch with only an
+    * intent marker, `resume` returns the committed result with its
+    * repair. The append (or repair) then runs CONCURRENTLY with `next`
+    * on the result ([[Bucketing.inParallel]]: a failing side cancels
+    * the other's jobs, and both settle before anything is rethrown), and
+    * the commit marker is written only after both have succeeded — so a
+    * failure in `next` leaves this batch to resume, never half-committed.
+    * `next` must not depend on this batch's store rows. */
+  private def ledgered[V](spark: SparkSession, s: Store, batchId: Long,
+                          next: V => Unit)(done: => V)(
+      resume: => (V, () => Unit))(fresh: => (V, () => Unit)): V = {
     s.tables.foreach(Bucketing.recoverSwap(spark, _))
-    if (IngestLedger.applied(spark, s.table, batchId)) return
-    if (IngestLedger.intended(spark, s.table, batchId)) resume
-    else {
-      val landRows = fresh
-      IngestLedger.intent(spark, s.table, batchId)
-      landRows()
+    if (IngestLedger.applied(spark, s.table, batchId)) {
+      val v = done
+      next(v)
+      return v
     }
+    val (v, land) =
+      if (IngestLedger.intended(spark, s.table, batchId)) resume
+      else {
+        val r = fresh
+        IngestLedger.intent(spark, s.table, batchId)
+        r
+      }
+    Bucketing.inParallel(land(), next(v))
     IngestLedger.record(spark, s.table, batchId)
+    v
   }
+
+  /** [[ledgered]] for a batch with no result to hand forward. */
+  private def ledgeredAppend(spark: SparkSession, s: Store, batchId: Long)(
+      resume: => Unit)(land: => Unit): Unit =
+    ledgered[Unit](spark, s, batchId, _ => ())(())(((), () => resume))(
+      ((), () => land))
 
   /** Exactly-once ingest of an [[IdempotentSet]] batch: `land` appends
     * it, and a resumed batch simply lands again. */
   def ingestSet(spark: SparkSession, s: Store, batchId: Long)(
       land: => Unit): Unit =
-    ledgered(spark, s, batchId)(land)(() => land)
+    ledgeredAppend(spark, s, batchId)(land)(land)
 
   /** Exactly-once ingest of a [[CountDelta]] batch: `delta` is the
     * batch's count rows tagged with `batchId` (evaluated after the
@@ -225,12 +250,12 @@ object StoreLifecycle {
         "delete the folded rows")
     def land(): Unit =
       Bucketing.appendBucketed(delta, s.table, s.keys, s.buckets)
-    ledgered(spark, s, batchId) {
+    ledgeredAppend(spark, s, batchId) {
       Bucketing.replaceBucketed(
         spark.table(s.table).filter(col("batch_id") =!= batchId),
         s.table, s.keys, s.buckets)
       land()
-    }(() => land())
+    }(land())
   }
 
   /** Exactly-once ingest of a DEDUP batch (the first-wins families):
@@ -241,19 +266,33 @@ object StoreLifecycle {
     * `rows(keptIds)`, land. A resumed batch reuses its committed
     * verdicts — a re-run would flip surviving near-dup siblings from
     * kept to dropped — and lands only what is missing ([[reconcile]]).
-    * `rows` must be materialization-safe; it is unpersisted once landed. */
+    * `rows` must be materialization-safe; it is unpersisted once landed.
+    *
+    * Returns the batch's verdicts: the materialized frame just written
+    * on a fresh batch, the committed partition (without its `batch_id`
+    * column) on a skipped or resumed one — the same rows on every path.
+    * Once the partition and the intent marker are written, the append
+    * (or the resume's reconcile) runs concurrently with `next` on those
+    * verdicts — a cascade's next stage, which needs this stage's
+    * verdicts but never its store — and the commit marker is written
+    * after both settle ([[ledgered]]); the call returns only then. With
+    * the default no-op `next` the ingest is simply synchronous. A
+    * skipped batch still reads its committed partition for the result
+    * (a listing of `outPath` and a schema-inference job), also for a
+    * caller that ignores it, and so fails if `outPath` has been removed. */
   def ingestVerdicts(spark: SparkSession, s: Store, batchId: Long,
-                     idCol: String, outPath: String)(
-      verdicts: => DataFrame)(rows: DataFrame => DataFrame): Unit = {
-    def landing(kept: DataFrame)(land: DataFrame => Unit): Unit = {
-      val r = rows(kept)
+                     idCol: String, outPath: String,
+                     next: DataFrame => Unit = _ => ())(
+      verdicts: => DataFrame)(rows: DataFrame => DataFrame): DataFrame = {
+    def landing(v: DataFrame)(land: DataFrame => Unit): () => Unit = () => {
+      val r = rows(v.filter(col("kept")).select(col(idCol)))
       try land(r) finally r.unpersist()
     }
-    ledgered(spark, s, batchId) {
-      val kept = spark.read.parquet(outPath)
-        .filter(col("batch_id") === batchId && col("kept"))
-        .select(col(idCol))
-      landing(kept)(reconcile(_, idCol, s))
+    def committed = spark.read.parquet(outPath)
+      .filter(col("batch_id") === batchId).drop("batch_id")
+    ledgered(spark, s, batchId, next)(committed) {
+      val v = committed
+      (v, landing(v)(reconcile(_, idCol, s)))
     } {
       val v = verdicts.localCheckpoint(true)
       v.withColumn("batch_id", lit(batchId))
@@ -261,7 +300,7 @@ object StoreLifecycle {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id")
         .parquet(outPath)
-      () => landing(v.filter(col("kept")).select(col(idCol)))(append(_, s))
+      (v, landing(v)(append(_, s)))
     }
   }
 

@@ -1,8 +1,9 @@
 package graft.ext
 
 import graft.core.StoreLifecycle
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The PRODUCTION curation topology composed end to end — one ingest
   * call per shard driving every persisted-store stage in the order a
@@ -30,11 +31,22 @@ import org.apache.spark.sql.functions._
   * NO new crash window: a replayed shard re-enters each stage's
   * `ingestBatch`, which skips if committed, reconciles if it crashed
   * mid-append, and re-runs if it never started; every stage's input is
-  * derived from the PREVIOUS stage's committed verdict partition (never
-  * recomputed against a mutated store), so the cascade is deterministic
-  * under any crash/resume interleaving. The combined verdict and funnel
-  * writes are dynamic-partition overwrites — idempotent, so they need
-  * no ledger of their own.
+  * derived from the verdicts the previous stage committed, handed
+  * forward in memory (the partition just written on a fresh batch, the
+  * committed partition on a skipped or resumed one — never recomputed
+  * against a mutated store), so the cascade is deterministic under any
+  * crash/resume interleaving. The combined verdict and funnel writes
+  * are dynamic-partition overwrites — idempotent, so they need no
+  * ledger of their own.
+  *
+  * Overlap: stage k+1 needs stage k's verdicts, never its store, so
+  * each mutating stage's store append runs concurrently with the rest
+  * of the cascade ([[graft.core.StoreLifecycle.ingestVerdicts]]'s
+  * `next`). A stage writes its commit marker only after BOTH its append
+  * and everything after it have succeeded; a failure on either side
+  * cancels the other's jobs, waits for both to settle, and leaves the
+  * stage's intent marker for a replay to resume from. Each stage mutates
+  * only its own store, so the overlap opens no new crash window.
   *
   * Store-admission semantics (deliberate, documented): a store admits
   * its OWN stage's survivors — a doc dropped later (vector twin,
@@ -46,12 +58,12 @@ import org.apache.spark.sql.functions._
   * intra-shard twins pass the cross-shard stores and are the batch
   * operators' business ([[ExactDedup.dedupExactAgainstStore]]).
   *
-  * Scale shape: the shard flows through as id-keyed joins of verdict
-  * parquet (ids + 16-byte fps/longs on the wire — document text is
-  * only scanned by each stage's own tokenize, embeddings only by the
-  * vector stage); every store side reads its buckets in place (the
-  * per-stage PlanSpec pins carry over verbatim — this file composes
-  * the pinned operators, it does not re-plan them).
+  * Scale shape: the shard is read once and flows through as id-keyed
+  * joins against the stages' verdicts (ids + 16-byte fps/longs on the
+  * wire — document text is only scanned by each stage's own tokenize,
+  * embeddings only by the vector stage); every store side reads its
+  * buckets in place (the per-stage PlanSpec pins carry over verbatim —
+  * this file composes the pinned operators, it does not re-plan them).
   */
 object CurationLoop {
 
@@ -77,11 +89,6 @@ object CurationLoop {
 
   private def stageOut(outRoot: String, stage: String) = s"$outRoot/$stage"
 
-  private def stageVerdicts(spark: SparkSession, outRoot: String,
-                            stage: String, batchId: Long): DataFrame =
-    spark.read.parquet(stageOut(outRoot, stage))
-      .filter(col("batch_id") === batchId)
-
   /** Ingest ONE shard through the full cascade. Writes, under
     * `outRoot`: each stage's own verdicts (`exact/`, `neardup/`,
     * `vector/` — the stage operators' formats), the combined per-doc
@@ -91,156 +98,168 @@ object CurationLoop {
     * when kept; `contamination`/`lm_score` are null for docs that never
     * reached that gate), and the per-batch funnel counts (`funnel/`:
     * docs surviving after each stage — the numbers a curation run
-    * publishes).
+    * publishes, observed on the verdict write itself).
     *
     * `batch` must carry `idCol`, `textCol`, and `embCol` (join the
     * embedding relation before calling — at 100 TB that join is the
     * caller's bucketed id-keyed join, not this loop's business).
     *
-    * Cache lifetime: the decontamination stage persists the shard's
-    * gram rows (and broadcasts the stripe map for a multi-stripe
-    * benchmark — the [[Decontaminate]] contract); once the combined
-    * verdicts are materialized this call releases exactly those
-    * stage-owned resources
-    * ([[Decontaminate.contaminatedAgainstStoreOwned]]'s release handle)
-    * so a long-running loop cannot accumulate one gram cache + one
-    * broadcast per batch. Caller-persisted frames held across
-    * ingestShard calls are NOT touched (CurationLoopRecoverySpec pins
-    * it). */
+    * One pass per shard: `(id, text, emb)` is read once and persisted
+    * (unless the caller already cached that exact plan, in which case
+    * the caller keeps it), so the caller's upstream — typically the
+    * embedding join — runs once, not again at every stage that joins
+    * the shard; each mutating stage's append overlaps the
+    * stage after it, and the call returns only after every append has
+    * settled — a failure anywhere leaves no job of the call running.
+    *
+    * Cache lifetime: the call persists the shard, the stage-3
+    * survivors and the contamination frame, and the decontamination
+    * stage persists the shard's gram rows (and broadcasts the stripe map
+    * for a multi-stripe benchmark — the [[Decontaminate]] contract);
+    * once the combined verdicts are written this call releases exactly
+    * those resources ([[Decontaminate.contaminatedAgainstStoreOwned]]'s
+    * release handle), so a long-running loop cannot accumulate one gram
+    * cache + one broadcast per batch. Caller-persisted frames held
+    * across ingestShard calls are NOT touched (CurationLoopRecoverySpec
+    * pins it). */
   def ingestShard(batch: DataFrame, batchId: Long,
                   idCol: String, textCol: String, embCol: String,
                   stores: Stores, params: Params, outRoot: String): Unit = {
-    val spark = batch.sparkSession
-
-    // ---- stage 1: exact dedup (mutates fpTable, own ledger) ----
-    ExactDedup.ingestBatch(batch.select(col(idCol), col(textCol)), batchId,
-      idCol, textCol, stores.fpTable, stores.buckets,
-      stageOut(outRoot, "exact"))
-    val exactKept = stageVerdicts(spark, outRoot, "exact", batchId)
-      .filter(col("kept")).select(col(idCol))
-    val s1 = batch.join(exactKept, Seq(idCol))
-
-    // ---- stage 2: near-dup (mutates sigTable, own ledger) ----
-    IncrementalDedup.ingestBatch(s1.select(col(idCol), col(textCol)),
-      batchId, idCol, textCol, params.shingleN, params.numHashes,
-      params.nBands, stores.sigTable, stores.buckets, params.minJaccard,
-      stageOut(outRoot, "neardup"))
-    val ndKept = stageVerdicts(spark, outRoot, "neardup", batchId)
-      .filter(col("kept")).select(col(idCol))
-    val s2 = s1.join(ndKept, Seq(idCol))
-
-    // ---- stage 3: vector dedup (mutates vecTable, own ledger) ----
-    VectorStore.ingestBatch(s2.select(col(idCol), col(embCol)), batchId,
-      idCol, embCol, stores.vecTable, stores.buckets, params.minCosine,
-      params.nCentroids, params.nProbe, params.dim, params.seedOffset,
-      stageOut(outRoot, "vector"))
-    val vecKept = stageVerdicts(spark, outRoot, "vector", batchId)
-      .filter(col("kept")).select(col(idCol))
-    val s3 = s2.join(vecKept, Seq(idCol)).select(col(idCol), col(textCol))
-
-    // ---- stage 4: decontamination gate (read-only) ----
-    // contaminatedAgainstStore returns only docs with >= 1 shared gram;
-    // absent docs carry contamination 0 and pass. The OWNED variant
-    // hands back a release handle for the stage's own resources (gram
-    // cache + any stripe-map broadcast) so this loop releases exactly
-    // its own allocations below — never the caller's.
-    val (contamRaw, contamRelease) = Decontaminate
-      .contaminatedAgainstStoreOwned(s3, idCol, textCol, stores.benchTable)
-    // try/finally: a failed checkpoint or verdict write must still
-    // release the stage's gram cache + stripe broadcast, or the retried
-    // loop accumulates one per failed batch (review finding, round 17)
+    val shard = batch.select(col(idCol), col(textCol), col(embCol))
+    val owned = shard.storageLevel == StorageLevel.NONE
+    if (owned) shard.persist(StorageLevel.MEMORY_AND_DISK)
+    def survivors(in: DataFrame, verdicts: DataFrame) =
+      in.join(verdicts.filter(col("kept")).select(col(idCol)), Seq(idCol))
     try {
-    val contam = contamRaw
-      .select(col(idCol), col("contamination").as("__cont"))
-    val s4 = s3.join(contam, Seq(idCol), "left")
-      .filter(coalesce(col("__cont"), lit(0.0)) <= params.maxContamination)
-      .select(col(idCol), col(textCol))
-
-    // ---- stage 5: LM quality gate (read-only) ----
-    val lm = LmScore.scoreAgainstStore(s4, idCol, textCol, stores.modelTable)
-      .select(col(idCol), col("n_bigrams").as("__lm_nb"),
-        col("lm_score").as("__lm"))
-
-    // ---- combined verdicts: one row per shard doc ----
-    val e = stageVerdicts(spark, outRoot, "exact", batchId)
-      .select(col(idCol), col("kept").as("__e_kept"),
-        col("dup_of").as("__e_dup"))
-    val n = stageVerdicts(spark, outRoot, "neardup", batchId)
-      .select(col(idCol), col("kept").as("__n_kept"),
-        col("dup_of").as("__n_dup"))
-    val v = stageVerdicts(spark, outRoot, "vector", batchId)
-      .select(col(idCol), col("kept").as("__v_kept"),
-        col("dup_of").as("__v_dup"))
-    val droppedAt =
-      when(!col("__e_kept"), "exact")
-        .when(col("__n_kept").isNotNull && !col("__n_kept"), "neardup")
-        .when(col("__v_kept").isNotNull && !col("__v_kept"), "vector")
-        .when(col("__reached4") &&
-          coalesce(col("__cont"), lit(0.0)) > params.maxContamination,
-          "decontam")
-        .when(col("__reached5") && col("__lm_nb") > 0 &&
-          col("__lm") < params.minLmScore, "lm")
-        .otherwise(lit(null).cast("string"))
-    val verdicts = batch.select(col(idCol))
-      .join(e, Seq(idCol), "left")
-      .join(n, Seq(idCol), "left")
-      .join(v, Seq(idCol), "left")
-      .join(contam, Seq(idCol), "left")
-      .join(lm, Seq(idCol), "left")
-      .withColumn("__reached4",
-        col("__e_kept") && coalesce(col("__n_kept"), lit(false)) &&
-          coalesce(col("__v_kept"), lit(false)))
-      .withColumn("__reached5", col("__reached4") &&
-        coalesce(col("__cont"), lit(0.0)) <= params.maxContamination)
-      .withColumn("dropped_at", droppedAt)
-      .select(col(idCol),
-        col("dropped_at").isNull.as("kept"),
-        col("dropped_at"),
-        coalesce(col("__e_dup"), col("__n_dup"), col("__v_dup")).as("dup_of"),
-        when(col("__reached4"), coalesce(col("__cont"), lit(0.0)))
-          .as("contamination"),
-        when(col("__reached5"), col("__lm")).as("lm_score"))
-      // eagerly materialized so the funnel rollup below and any caller
-      // re-read cannot observe a half-written partition
-      .localCheckpoint(true)
-    verdicts.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(stageOut(outRoot, "verdicts"))
-
-    // ---- funnel counts: the per-batch numbers a curation run reports ----
-    // the decontamination stage persisted the shard's train grams (the
-    // Decontaminate cache contract); the verdicts above are eagerly
-    // materialized, so this batch is done with its cached plan — release
-    // EXACTLY the stage-owned resources (a long-running loop must not
-    // accumulate one gram cache + one stripe-map broadcast per batch),
-    // and ONLY those: a caller-persisted frame held across ingestShard
-    // calls survives (CurationLoopRecoverySpec pins it; the old
-    // session-wide clearCache evicted those too — and never released
-    // broadcasts at all). The release rides the finally below so a
-    // failure anywhere after the Owned allocation also runs it.
-    verdicts
-      .agg(count(lit(1)).as("n_docs"),
-        count(when(col("dropped_at").isNull ||
-          !col("dropped_at").isin("exact"), 1)).as("n_after_exact"),
-        count(when(col("dropped_at").isNull ||
-          !col("dropped_at").isin("exact", "neardup"), 1))
-          .as("n_after_neardup"),
-        count(when(col("dropped_at").isNull ||
-          !col("dropped_at").isin("exact", "neardup", "vector"), 1))
-          .as("n_after_vector"),
-        count(when(col("dropped_at").isNull ||
-          !col("dropped_at").isin("exact", "neardup", "vector", "decontam"),
-          1)).as("n_after_decontam"),
-        count(when(col("kept"), 1)).as("n_kept"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(stageOut(outRoot, "funnel"))
-    } finally contamRelease()
+      // each mutating stage hands its verdicts to `next` — the rest of
+      // the cascade — which runs while the stage's own store appends
+      // ---- stage 1: exact dedup (mutates fpTable, own ledger) ----
+      ExactDedup.ingestBatch(shard.select(col(idCol), col(textCol)), batchId,
+          idCol, textCol, stores.fpTable, stores.buckets,
+          stageOut(outRoot, "exact"), next = { e =>
+        val s1 = survivors(shard, e)
+        // ---- stage 2: near-dup (mutates sigTable, own ledger) ----
+        IncrementalDedup.ingestBatch(s1.select(col(idCol), col(textCol)),
+            batchId, idCol, textCol, params.shingleN, params.numHashes,
+            params.nBands, stores.sigTable, stores.buckets, params.minJaccard,
+            stageOut(outRoot, "neardup"), next = { n =>
+          val s2 = survivors(s1, n)
+          // ---- stage 3: vector dedup (mutates vecTable, own ledger) ----
+          VectorStore.ingestBatch(s2.select(col(idCol), col(embCol)),
+              batchId, idCol, embCol, stores.vecTable, stores.buckets,
+              params.minCosine, params.nCentroids, params.nProbe, params.dim,
+              params.seedOffset, stageOut(outRoot, "vector"), next = { v =>
+            gates(shard.select(col(idCol)),
+              survivors(s2, v).select(col(idCol), col(textCol)),
+              e, n, v, batchId, idCol, textCol, stores, params, outRoot)
+          })
+        })
+      })
+    } finally if (owned) shard.unpersist()
   }
+
+  /** Stages 4–5 (read-only gates) over the stage-3 survivors `s3`, then
+    * the combined verdicts of the shard's `ids` from the three dedup
+    * stages' verdicts `e`/`n`/`v`, with the funnel counts observed on
+    * that write. */
+  private def gates(ids: DataFrame, s3: DataFrame, e: DataFrame,
+                    n: DataFrame, v: DataFrame, batchId: Long,
+                    idCol: String, textCol: String, stores: Stores,
+                    params: Params, outRoot: String): Unit = {
+    // the decontamination join and the LM gate's input both read the
+    // survivors, and the LM gate's input and the verdict join both read
+    // the contamination: persisted, each is computed once
+    val survivors = s3.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // ---- stage 4: decontamination gate (read-only) ----
+      // contaminatedAgainstStore returns only docs with >= 1 shared gram;
+      // absent docs carry contamination 0 and pass. The OWNED variant
+      // hands back a release handle for the stage's own resources (gram
+      // cache + any stripe-map broadcast) so this loop releases exactly
+      // its own allocations — never the caller's, and also when the
+      // verdict write fails, or a retried loop would accumulate one gram
+      // cache + broadcast per failed batch.
+      val (contamRaw, contamRelease) = Decontaminate
+        .contaminatedAgainstStoreOwned(survivors, idCol, textCol,
+          stores.benchTable)
+      val contam = contamRaw
+        .select(col(idCol), col("contamination").as("__cont"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val s4 = survivors.join(contam, Seq(idCol), "left")
+          .filter(coalesce(col("__cont"), lit(0.0)) <= params.maxContamination)
+          .select(col(idCol), col(textCol))
+
+        // ---- stage 5: LM quality gate (read-only) ----
+        val lm = LmScore.scoreAgainstStore(s4, idCol, textCol, stores.modelTable)
+          .select(col(idCol), col("n_bigrams").as("__lm_nb"),
+            col("lm_score").as("__lm"))
+
+        // ---- combined verdicts: one row per shard doc ----
+        def stage(verdicts: DataFrame, tag: String) =
+          verdicts.select(col(idCol), col("kept").as(s"__${tag}_kept"),
+            col("dup_of").as(s"__${tag}_dup"))
+        val droppedAt =
+          when(!col("__e_kept"), "exact")
+            .when(col("__n_kept").isNotNull && !col("__n_kept"), "neardup")
+            .when(col("__v_kept").isNotNull && !col("__v_kept"), "vector")
+            .when(col("__reached4") &&
+              coalesce(col("__cont"), lit(0.0)) > params.maxContamination,
+              "decontam")
+            .when(col("__reached5") && col("__lm_nb") > 0 &&
+              col("__lm") < params.minLmScore, "lm")
+            .otherwise(lit(null).cast("string"))
+        val verdicts = ids
+          .join(stage(e, "e"), Seq(idCol), "left")
+          .join(stage(n, "n"), Seq(idCol), "left")
+          .join(stage(v, "v"), Seq(idCol), "left")
+          .join(contam, Seq(idCol), "left")
+          .join(lm, Seq(idCol), "left")
+          .withColumn("__reached4",
+            col("__e_kept") && coalesce(col("__n_kept"), lit(false)) &&
+              coalesce(col("__v_kept"), lit(false)))
+          .withColumn("__reached5", col("__reached4") &&
+            coalesce(col("__cont"), lit(0.0)) <= params.maxContamination)
+          .withColumn("dropped_at", droppedAt)
+          .select(col(idCol),
+            col("dropped_at").isNull.as("kept"),
+            col("dropped_at"),
+            coalesce(col("__e_dup"), col("__n_dup"), col("__v_dup")).as("dup_of"),
+            when(col("__reached4"), coalesce(col("__cont"), lit(0.0)))
+              .as("contamination"),
+            when(col("__reached5"), col("__lm")).as("lm_score"))
+
+        // ---- funnel counts: the per-batch numbers a curation run reports,
+        // observed on the verdict write (no second pass over the verdicts) ----
+        def after(dropStages: String*) =
+          count(when(col("dropped_at").isNull ||
+            !col("dropped_at").isin(dropStages: _*), 1))
+        val counts = Seq("n_docs" -> count(lit(1)),
+          "n_after_exact" -> after("exact"),
+          "n_after_neardup" -> after("exact", "neardup"),
+          "n_after_vector" -> after("exact", "neardup", "vector"),
+          "n_after_decontam" -> after("exact", "neardup", "vector", "decontam"),
+          "n_kept" -> count(when(col("kept"), 1)))
+        val observe = counts.map { case (name, c) => c.as(name) }
+        val funnel = Observation()
+        writeBatch(verdicts.observe(funnel, observe.head, observe.tail: _*),
+          batchId, stageOut(outRoot, "verdicts"))
+        val observed = funnel.get
+        writeBatch(ids.sparkSession.range(0, 1, 1, 1).select(
+            counts.map { case (name, _) => lit(observed(name)).as(name) }: _*),
+          batchId, stageOut(outRoot, "funnel"))
+      } finally { contam.unpersist(); contamRelease() }
+    } finally survivors.unpersist()
+  }
+
+  /** Overwrite `batchId`'s partition of `path` with `df` — idempotent,
+    * so the combined verdict and funnel writes need no ledger. */
+  private def writeBatch(df: DataFrame, batchId: Long, path: String): Unit =
+    df.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id")
+      .parquet(path)
 
   /** The funnel partitions served as the curation run's TIME SERIES —
     * per-stage drop-rate drift across batches is THE production

@@ -169,13 +169,15 @@ object ExactDedup {
     * a batch that crashed mid-append re-appends only the fps it left
     * missing, reusing its committed verdicts — a re-run would see the
     * shard's own appended fps and flip intra-shard twins from kept to
-    * dropped). */
+    * dropped). Returns the batch's verdicts; `next` runs on them while
+    * the fps append ([[StoreLifecycle.ingestVerdicts]]). */
   def ingestBatch(batch: DataFrame, batchId: Long,
                   idCol: String, textCol: String,
-                  table: String, buckets: Int, outPath: String): Unit = {
+                  table: String, buckets: Int, outPath: String,
+                  next: DataFrame => Unit = _ => ()): DataFrame = {
     val spark = batch.sparkSession
     StoreLifecycle.ingestVerdicts(spark, store(table, buckets), batchId,
-        idCol, outPath)(
+        idCol, outPath, next)(
       dedupExactAgainstStore(batch, idCol, textCol, spark.table(table)))(
       kept => storeRows(batch.join(kept, Seq(idCol)), idCol, textCol))
   }

@@ -182,19 +182,21 @@ object IncrementalDedup {
     * IngestRecoverySpec drives every crash point). The shard is signed ONCE: the persisted banded
     * rows feed both the dedup join and the survivors' append (re-signing
     * the survivors would double the loop's only corpus-proportional
-    * compute). */
+    * compute). Returns the batch's verdicts; `next` runs on them while
+    * the signatures append. */
   def ingestBatch(batch: DataFrame, batchId: Long,
                   idCol: String, textCol: String,
                   shingleN: Int, numHashes: Int, nBands: Int,
                   table: String, buckets: Int,
                   minJaccard: Double, outPath: String,
-                  maxBandDocs: Int = 0): Unit = {
+                  maxBandDocs: Int = 0,
+                  next: DataFrame => Unit = _ => ()): DataFrame = {
     val spark = batch.sparkSession
     val banded = bandedSignatures(batch, idCol, textCol,
         shingleN, numHashes, nBands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try StoreLifecycle.ingestVerdicts(spark, store(table, buckets), batchId,
-        idCol, outPath)(
+        idCol, outPath, next)(
       dedupBanded(batch.select(col(idCol)), banded, idCol, numHashes,
         spark.table(table), minJaccard, maxBandDocs,
         if (maxBandDocs > 0) Some(spark.table(countsTable(table))) else None))(

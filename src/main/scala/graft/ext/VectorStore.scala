@@ -309,10 +309,11 @@ object VectorStore {
                   idCol: String, embCol: String,
                   table: String, buckets: Int, minCosine: Double,
                   nCentroids: Int, nProbe: Int, dim: Int, seedOffset: Long,
-                  outPath: String, maxCellVecs: Long = 0L): Unit =
+                  outPath: String, maxCellVecs: Long = 0L,
+                  next: DataFrame => Unit = _ => ()): DataFrame =
     ingestBatchWith(batch, batchId, idCol, embCol, table, buckets,
       minCosine, LcgCellScorer(nCentroids, dim, seedOffset), nProbe,
-      outPath, maxCellVecs)
+      outPath, maxCellVecs, next)
 
   /** One micro-batch against a TRAINED store: the scorer is the store's
     * persisted codebook ([[trainedScorer]] — a k-row read, so appends
@@ -321,7 +322,7 @@ object VectorStore {
                          idCol: String, embCol: String,
                          table: String, buckets: Int, minCosine: Double,
                          nProbe: Int, outPath: String,
-                         maxCellVecs: Long = 0L): Unit = {
+                         maxCellVecs: Long = 0L): DataFrame = {
     // a recluster that crashed between its codebook overwrite and its
     // assignment rewrite would otherwise have this batch probe a cell
     // space the store rows were never assigned with — silently missing
@@ -337,12 +338,14 @@ object VectorStore {
     * vectors, exactly-once under the store's ledger
     * ([[graft.core.StoreLifecycle.ingestVerdicts]] — a batch that
     * crashed mid-append reconciles store and counts exactly, reusing
-    * its committed verdicts). */
+    * its committed verdicts). Returns the batch's verdicts; `next` runs
+    * on them while the vectors append. */
   def ingestBatchWith(batch: DataFrame, batchId: Long,
                       idCol: String, embCol: String,
                       table: String, buckets: Int, minCosine: Double,
                       scorer: CellScorer, nProbe: Int,
-                      outPath: String, maxCellVecs: Long = 0L): Unit = {
+                      outPath: String, maxCellVecs: Long = 0L,
+                      next: DataFrame => Unit = _ => ()): DataFrame = {
     val spark = batch.sparkSession
     // a pending recluster means the store is (or is mid-conversion to)
     // a TRAINED store: a caller-supplied scorer would probe a cell
@@ -355,7 +358,7 @@ object VectorStore {
         "through ingestBatchTrained/streamIngestTrained (which complete " +
         "it), or run recoverRecluster first")
     StoreLifecycle.ingestVerdicts(spark, store(table, buckets), batchId,
-        idCol, outPath)(
+        idCol, outPath, next)(
       dedupAgainstStoreWith(batch, idCol, embCol, spark.table(table),
         minCosine, scorer, nProbe, maxCellVecs,
         if (maxCellVecs > 0) Some(spark.table(countsTable(table))) else None))(

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import graft.EodPipeline
 import graft.core.{Bucketing, Dedup, Upsert}
 import graft.dim.Scd2
+import graft.util.Staging
 import graft.util.Tables._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -94,7 +95,7 @@ object PipelineQueries {
 
   private val q28 = Q("q28_pipeline_cascade",
     (s, _) => {
-      val tmp = Files.createTempDirectory("graft_q28_")
+      val tmp = Staging.exitScopedRoot("graft_q28_")
       val (f1, f2) = writeFixtureFiles(tmp)
       val p = new EodPipeline(s, tmp.resolve("wh").toString)
       val date = java.sql.Date.valueOf(D)
@@ -116,7 +117,7 @@ object PipelineQueries {
     * tiny jobs), so it is excluded from the bench. */
   private val q35 = Q("q35_stream_cascade",
     (s, _) => {
-      val tmp = Files.createTempDirectory("graft_q35_")
+      val tmp = Staging.exitScopedRoot("graft_q35_")
       val bronze = Files.createDirectories(tmp.resolve("bronze"))
       writeFixtureFiles(bronze)
       val job = graft.streaming.EodStream.start(s,

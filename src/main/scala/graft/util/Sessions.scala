@@ -18,9 +18,8 @@ object Sessions {
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       // catalog tables (the bucketed CORE/band tables, q33) land in a
-      // fresh temp dir, never the harness cwd
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      // fresh temp dir, never the harness cwd, deleted at JVM exit
+      .config("spark.sql.warehouse.dir", Staging.exitScopedRoot("graft-wh").toString)
       // deterministic wall-clock-independent semantics
       .config("spark.sql.session.timeZone", "UTC")
       // events.parquet is TIMESTAMP(NANOS); Spark 4 rejects it without this

@@ -441,6 +441,49 @@ class IngestRecoverySpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
+  test("each dedup family's ingestBatch returns its committed verdict partition: fresh, skipped and resumed") {
+    val root = graft.util.Staging.exitScopedRoot("graft-rec-ret-")
+    def rows(v: org.apache.spark.sql.DataFrame) =
+      (v.columns.toSeq, v.collect().map(_.toSeq).sortBy(_.toString).toSeq)
+    // the three ledger paths of one batch: fresh, a committed skip, and
+    // a resume after a crash before the commit marker
+    def everyPath(table: String, out: String)(
+        ingest: => org.apache.spark.sql.DataFrame): Unit = {
+      def committed = rows(spark.read.parquet(out)
+        .filter(col("batch_id") === 0L).drop("batch_id"))
+      assert(rows(ingest) == committed, s"$table fresh")
+      assert(rows(ingest) == committed, s"$table skipped")
+      crashBeforeCommit(table, 0L)
+      assert(rows(ingest) == committed, s"$table resumed")
+      assert(IngestLedger.applied(spark, table, 0L))
+    }
+    try {
+      graft.ext.ExactDedup.writeFingerprintStore(store, "doc_id", "text",
+        "rec_ret_fp", 4)
+      everyPath("rec_ret_fp", s"$root/fp")(graft.ext.ExactDedup.ingestBatch(
+        shard, 0L, "doc_id", "text", "rec_ret_fp", 4, s"$root/fp"))
+      IncrementalDedup.writeSignatureStore(store, "doc_id", "text", 3, 16, 4,
+        "rec_ret_sig", 4)
+      everyPath("rec_ret_sig", s"$root/sig")(IncrementalDedup.ingestBatch(
+        shard, 0L, "doc_id", "text", 3, 16, 4, "rec_ret_sig", 4, 0.5,
+        s"$root/sig"))
+      val s = spark; import s.implicits._
+      VectorStore.writeVectorStore(Seq((1L, Seq(1f, 0f, 0f, 0f))).toDF("vec_id",
+          "embedding"), "vec_id", "embedding", nCentroids = 4, dim = 4,
+        seedOffset = 7L, table = "rec_ret_vec", buckets = 4)
+      val vecs = Seq((10L, Seq(0f, 0f, 1f, 0f)), (11L, Seq(0.99f, 0.1f, 0f, 0f)))
+        .toDF("vec_id", "embedding")
+      everyPath("rec_ret_vec", s"$root/vec")(VectorStore.ingestBatch(vecs, 0L,
+        "vec_id", "embedding", "rec_ret_vec", 4, minCosine = 0.9,
+        nCentroids = 4, nProbe = 4, dim = 4, seedOffset = 7L,
+        outPath = s"$root/vec"))
+    } finally Seq("rec_ret_fp", "rec_ret_sig", "rec_ret_vec").foreach { t =>
+      Seq(t, IncrementalDedup.countsTable(t), VectorStore.countsTable(t))
+        .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
+      IngestLedger.reset(spark, t)
+    }
+  }
+
   test("recluster crash between codebook write and assignment rewrite: the resumed trained loop repairs first") {
     val root = graft.util.Staging.exitScopedRoot("graft-rec-recl-")
     def vdf(rows: Seq[(Long, Seq[Float])]) = {
@@ -766,6 +809,90 @@ class CurationLoopRecoverySpec extends SparkSpec {
     } finally { dropStores("cl_c"); dropStores("cl_d") }
   }
 
+  private def storeCounts(s: CurationLoop.Stores): Seq[Long] =
+    Seq(s.fpTable, s.sigTable, s.vecTable).map(spark.table(_).count())
+
+  test("a failing next stage while an append is in flight: every job settles before the throw; a re-run matches a clean run") {
+    val clean = seedStores("cl_j")
+    val cleanRoot = graft.util.Staging.exitScopedRoot("graft-cl-j-").toString
+    val stores = seedStores("cl_h")
+    val root = graft.util.Staging.exitScopedRoot("graft-cl-h-").toString
+    try {
+      CurationLoop.ingestShard(corpus(shardRows), 0L, "doc_id", "text",
+        "embedding", clean, params, cleanRoot)
+      // stage 3's vector append is held in flight, and stage 4's first
+      // read of its benchmark store fails once it is held
+      val fault = new StageFault(append = stores.vecTable, failOn = stores.benchTable)
+      spark.experimental.extraOptimizations = Seq(fault)
+      val jobs = new StageFault.Jobs
+      val (failure, thrownAt) = try Listening.during(spark, jobs) {
+        val e = intercept[Exception](CurationLoop.ingestShard(corpus(shardRows),
+          0L, "doc_id", "text", "embedding", stores, params, root))
+        (e, System.currentTimeMillis())
+      } finally spark.experimental.extraOptimizations = Nil
+      assert(Iterator.iterate[Throwable](failure)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage.contains(StageFault.Message)), failure.toString)
+      assert(fault.sawAppend,
+        "the stage-4 failure must fire while stage 3's append is running")
+      // no job of the call starts after the call has thrown, and each has
+      // ended before the drain marker (submitted after the throw) starts:
+      // the scheduler posts a cancelled job's end before it takes the
+      // next submission, so a job still running at the throw would end
+      // after the marker's start
+      assert(jobs.started.nonEmpty)
+      jobs.started.foreach { case (id, t) =>
+        assert(t <= thrownAt, s"job $id started after the throw")
+        assert(jobs.endedBeforeMarker(id),
+          s"job $id had not ended when the drain marker started")
+      }
+      // and the status tracker, fed by its own listener queue, reports
+      // no active job once that queue catches up
+      val tracker = spark.sparkContext.statusTracker
+      val deadline = System.nanoTime() + 10e9.toLong
+      while (tracker.getActiveJobIds().nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(tracker.getActiveJobIds().isEmpty,
+        s"jobs still active: ${tracker.getActiveJobIds().mkString(",")}")
+      // commit after both: no stage recorded the batch, each can resume
+      Seq(stores.fpTable, stores.sigTable, stores.vecTable).foreach { t =>
+        assert(!graft.core.IngestLedger.applied(spark, t, 0L), t)
+        assert(graft.core.IngestLedger.intended(spark, t, 0L), t)
+      }
+      // the re-run resumes every stage to the clean run's state
+      CurationLoop.ingestShard(corpus(shardRows), 0L, "doc_id", "text",
+        "embedding", stores, params, root)
+      assert(verdictRows(root) == verdictRows(cleanRoot))
+      assert(storeCounts(stores) == storeCounts(clean))
+      // and a replay of the committed shard changes nothing
+      CurationLoop.ingestShard(corpus(shardRows), 0L, "doc_id", "text",
+        "embedding", stores, params, root)
+      assert(verdictRows(root) == verdictRows(cleanRoot))
+      assert(storeCounts(stores) == storeCounts(clean))
+    } finally { dropStores("cl_h"); dropStores("cl_j") }
+  }
+
+  test("one ingestShard scans each shard parquet record once and leaves no cache entry of its own") {
+    val stores = seedStores("cl_k")
+    val root = graft.util.Staging.exitScopedRoot("graft-cl-k-").toString
+    val in = graft.util.Staging.exitScopedRoot("graft-cl-kin-")
+      .resolve("shard").toString
+    try {
+      corpus(shardRows).write.parquet(in)
+      // other suites in this JVM may leave frames cached; the call must add none
+      spark.catalog.clearCache()
+      val shardScans = new Listening.ScanRecords(p =>
+        p.nodeName.toLowerCase.contains("scan parquet") &&
+          p.metadata.get("Location").exists(_.contains(in)))
+      Listening.during(spark, shardScans) {
+        CurationLoop.ingestShard(spark.read.parquet(in), 0L, "doc_id", "text",
+          "embedding", stores, params, root)
+      }
+      assert(shardScans.records == shardRows.size)
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "ingestShard left a cache entry of its own behind")
+    } finally dropStores("cl_k")
+  }
+
   // batch 1: a cross-batch twin (50 copies batch 0's kept doc 45 —
   // provable only through the stores grown by batch 0's appends) plus
   // a fresh doc drawn from the LM reference corpus
@@ -811,5 +938,65 @@ class CurationLoopRecoverySpec extends SparkSpec {
         && v50.getAs[String]("dropped_at") == "exact"
         && v50.getAs[Long]("dup_of") == 45L)
     } finally { dropStores("cl_e"); dropStores("cl_f") }
+  }
+}
+
+/** The injected failure of the failing-next-stage drill: an optimizer
+  * rule that holds the first append into store `append` at planning
+  * until the next stage has failed, and fails that stage's first read of
+  * store `failOn` once the append is held (each wait at most 30 s). Both
+  * waits sit on driver threads, so neither side can starve the other of
+  * task slots. Each instance fires once. */
+private final class StageFault(append: String, failOn: String)
+    extends org.apache.spark.sql.catalyst.rules.Rule[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
+  import java.util.concurrent.CountDownLatch
+  import java.util.concurrent.TimeUnit.SECONDS
+  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+  import org.apache.spark.sql.execution.command.CreateDataSourceTableAsSelectCommand
+  import org.apache.spark.sql.execution.datasources.LogicalRelation
+
+  private val held = new CountDownLatch(1)
+  private val fired = new CountDownLatch(1)
+  @volatile private var holding = false
+  @volatile var sawAppend = false
+
+  def apply(plan: LogicalPlan): LogicalPlan = {
+    val appends = plan.exists {
+      case c: CreateDataSourceTableAsSelectCommand => c.table.identifier.table == append
+      case _ => false
+    }
+    val reads = plan.exists {
+      case r: LogicalRelation => r.catalogTable.exists(_.identifier.table == failOn)
+      case _ => false
+    }
+    if (appends && held.getCount > 0) {
+      holding = true
+      held.countDown()
+      try fired.await(30, SECONDS) finally holding = false
+    }
+    if (reads && fired.getCount > 0) {
+      sawAppend = held.await(30, SECONDS) && holding
+      fired.countDown()
+      throw new IllegalStateException(StageFault.Message)
+    }
+    plan
+  }
+}
+
+private object StageFault {
+  val Message = "injected stage failure"
+
+  /** Submission times of every job but the drain marker, and the jobs
+    * whose end had arrived when the marker started. */
+  final class Jobs extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.scheduler._
+    val started = scala.collection.concurrent.TrieMap.empty[Int, Long]
+    private val ended = scala.collection.mutable.Set.empty[Int]
+    @volatile var endedBeforeMarker = Set.empty[Int]
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      if (Listening.isMarker(j)) endedBeforeMarker = ended.toSet
+      else started(j.jobId) = j.time
+    override def onJobEnd(j: SparkListenerJobEnd): Unit = ended += j.jobId
   }
 }
